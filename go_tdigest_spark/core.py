@@ -20,6 +20,21 @@ singletons (k has singularities at q=0,1), which preserves min/max —
 the same property the reference's TestSingletonInACrowd checks
 (tdigest_test.go:169-193).
 
+Segmented sweep: a Spark task builds or merges thousands of small
+digests at once (one per group).  ``_ksweep_segments`` runs the same
+greedy sweep for every group of a ``(group, value)``-sorted array in
+lockstep: each NumPy step closes one centroid of every still-open group,
+so the Python loop runs once per centroid of the largest group, not once
+per centroid summed over all groups.  Cluster limits are compared as
+integer prefix weights against ``floor(qlimit * n)``, which is exactly
+the float comparison ``_ksweep`` makes, so centroid counts are
+bit-identical; means are differences of per-segment prefix sums, added
+in the same order as ``_ksweep`` adds them, so they are bit-identical
+too (and a later sweep that sorts them sees the same ties).  ``_SegmentedBuild`` and
+``_merge_segments`` drive it for stage-1 partials and tree-merge levels;
+``_ksweep`` remains the single-digest kernel behind ``TDigest`` (the
+lockstep form is slower on one digest).
+
 Query semantics replicated exactly (see docstrings):
   - quantile: tdigest.go:93-140  (piecewise-linear over centroid ranks,
     with before-first / after-last linear extrapolation)
@@ -168,6 +183,377 @@ def _ksweep_dense(
     return np.asarray(out_m, dtype=np.float64), np.asarray(out_c, dtype=np.int64)
 
 
+def _is_dense(span, size):
+    """Whether integers spanning ``span`` take the bincount route."""
+    return span < np.maximum(1 << 16, size // 4)
+
+
+def _dense_int_centroids(
+    v: np.ndarray, vmin: int, span: int, compression: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """Centroids of unweighted integers over a dense domain (e.g. token
+    ids; ``_is_dense``), ``vmin``/``span`` being their minimum and range.
+
+    Duplicates collapse in one bincount pass — no sort at all.  The
+    dense sweep splits bins at rank boundaries, so the result matches
+    the singleton-stream sweep (exact tails included) at a fraction of
+    the cost.
+    """
+    cnt = np.bincount((v - vmin).astype(np.int64), minlength=span + 1)
+    nz = np.nonzero(cnt)[0]
+    return _ksweep_dense(
+        (nz + vmin).astype(np.float64), cnt[nz].astype(np.int64), compression
+    )
+
+
+def _efac(compression, n_segments: int) -> np.ndarray:
+    """``exp(4/delta)`` per segment, via ``math.exp`` so every segment's
+    limit is bit-identical to the one ``_ksweep`` computes."""
+    comp = np.asarray(compression, dtype=np.float64)
+    if comp.ndim == 0:
+        return np.full(n_segments, math.exp(4.0 / float(comp)))
+    uniq, inv = np.unique(comp, return_inverse=True)
+    return np.array([math.exp(4.0 / c) for c in uniq])[inv]
+
+
+def _segment_cumsum(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Inclusive cumsum restarting at every segment, bit-identical to
+    ``np.cumsum`` of each segment on its own (accumulate adds strictly
+    left to right; a global cumsum would carry other segments' rounding).
+    Segments are padded into 2-D blocks of lengths within a factor of 2
+    (at most twice the work), one ``cumsum(axis=1)`` per block."""
+    out = np.empty(x.size, dtype=np.float64)
+    lo, lens = offsets[:-1], np.diff(offsets)
+    width = np.frexp(np.maximum(lens - 1, 0))[1]  # 2**width >= len
+    for c in np.unique(width[lens > 0]):
+        rows = np.flatnonzero((width == c) & (lens > 0))
+        w = int(lens[rows].max())
+        idx = lo[rows, None] + np.arange(w)
+        valid = np.arange(w) < lens[rows, None]
+        block = np.where(valid, x[np.where(valid, idx, 0)], 0.0)
+        out[idx[valid]] = np.cumsum(block, axis=1)[valid]
+    return out
+
+
+def _ksweep_segments(
+    means: np.ndarray,
+    counts: np.ndarray | None,
+    offsets: np.ndarray,
+    compression,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``_ksweep`` over every segment ``means[offsets[s]:offsets[s+1]]``
+    at once (each segment sorted ascending; empty segments allowed).
+
+    ``compression`` is a scalar or one value per segment.  Returns
+    (means, counts, out_offsets): segment s's centroids are
+    ``[out_offsets[s], out_offsets[s+1])``.  Counts are bit-identical to
+    ``_ksweep`` per segment, and so are means: they are differences of
+    per-segment prefix sums, as in ``_ksweep``.
+    """
+    m = means.size
+    offsets = np.asarray(offsets, dtype=np.int64)
+    n_seg = offsets.size - 1
+    # cw[k] = integer prefix weight of the points before k, over the
+    # whole array; wx = per-point weighted value
+    cw = np.zeros(m + 1, dtype=np.int64)
+    if counts is None:
+        cw[1:] = np.arange(1, m + 1)
+        wx = means
+    else:
+        np.cumsum(counts, out=cw[1:])
+        wx = means * counts.astype(np.float64)
+    seg_lo, seg_hi = offsets[:-1], offsets[1:]
+    live = np.flatnonzero(seg_hi > seg_lo)
+    i = seg_lo[live]
+    end = seg_hi[live]
+    base = cw[i]
+    nf = (cw[end] - base).astype(np.float64)
+    efac = _efac(compression, n_seg)[live]
+    wprev = np.zeros(live.size, dtype=np.int64)
+    starts = []
+    incl = cw[1:]  # prefix weight through each point
+    while i.size:
+        # lockstep step: every open segment closes one centroid, exactly
+        # as one iteration of _ksweep's loop would (same float ops)
+        starts.append(i)
+        q0 = wprev / nf
+        qlimit = (q0 * efac) / (1.0 - q0 + q0 * efac)
+        # float(prefix) <= qlimit*n  <=>  prefix <= floor(qlimit*n)
+        lim = np.floor(qlimit * nf).astype(np.int64)
+        j = np.searchsorted(incl, base + lim, side="right")
+        j = np.minimum(np.maximum(j, i + 1), end)
+        wprev = cw[j] - base
+        i = j
+        more = j < end
+        if not more.all():
+            i, end, base, nf, efac, wprev = (
+                x[more] for x in (i, end, base, nf, efac, wprev)
+            )
+    if not starts:
+        return (
+            np.empty(0, dtype=np.float64),
+            np.empty(0, dtype=np.int64),
+            np.zeros(n_seg + 1, dtype=np.int64),
+        )
+    # clusters tile every non-empty segment, so the sorted starts are
+    # the boundaries of all of them
+    s = np.sort(np.concatenate(starts))
+    e = np.append(s[1:], m)
+    out_c = cw[e] - cw[s]
+    psum = _segment_cumsum(wx, offsets)
+    head = np.zeros(m, dtype=bool)
+    head[seg_lo[live]] = True
+    x = (psum[e - 1] - np.where(head[s], 0.0, psum[s - 1])) / out_c
+    # numeric safety clamp (parity with _ksweep / boundedWeightedAverage)
+    out_m = np.minimum(np.maximum(x, means[s]), means[e - 1])
+    seg = np.searchsorted(offsets, s, side="right") - 1
+    out_off = np.zeros(n_seg + 1, dtype=np.int64)
+    np.cumsum(np.bincount(seg, minlength=n_seg), out=out_off[1:])
+    return out_m, out_c, out_off
+
+
+# ------------------------------------------------- many digests per task
+#
+# A "segmented set" is (gids, offsets, a, b): segment k holds the points
+# a[offsets[k]:offsets[k+1]] (weights b, or None) of group id gids[k].
+
+
+def _subset(parts, sel: np.ndarray):
+    """Split segmented sets by a boolean mask over group ids: returns
+    (taken, kept) lists of segmented sets."""
+    taken, kept = [], []
+    for gids, off, a, b in parts:
+        s = sel[gids]
+        if s.all():
+            taken.append((gids, off, a, b))
+            continue
+        if not s.any():
+            kept.append((gids, off, a, b))
+            continue
+        lens = np.diff(off)
+        pv = np.repeat(s, lens)
+        for dst, keep, vals in ((taken, s, pv), (kept, ~s, ~pv)):
+            o = np.zeros(int(keep.sum()) + 1, dtype=np.int64)
+            np.cumsum(lens[keep], out=o[1:])
+            dst.append(
+                (gids[keep], o, a[vals], None if b is None else b[vals])
+            )
+    return taken, kept
+
+
+def _gid_order(g: np.ndarray, order: np.ndarray | None = None) -> np.ndarray:
+    """Stable argsort of group ids (of ``g[order]`` when given, composed
+    with ``order``); radix sort when the ids fit 16 bits."""
+    key = g if order is None else g[order]
+    if key.size and key.max() < 1 << 16:
+        key = key.astype(np.uint16)
+    o = np.argsort(key, kind="stable")
+    return o if order is None else order[o]
+
+
+def _group_value_order(g: np.ndarray, a: np.ndarray, stable: bool) -> np.ndarray:
+    """Argsort by (group id, value).  With ``stable``, equal pairs keep
+    index order, like ``np.lexsort`` but with the fast unstable value
+    sort and a fix-up of the (usually few) tied runs."""
+    o = _gid_order(g, np.argsort(a))
+    if stable:
+        ga, aa = g[o], a[o]
+        tie = (aa[1:] == aa[:-1]) & (ga[1:] == ga[:-1])
+        if tie.any():
+            run = np.cumsum(np.concatenate(([True], ~tie)))
+            idx = np.flatnonzero(
+                np.concatenate((tie, [False])) | np.concatenate(([False], tie))
+            )
+            sub = o[idx]
+            o[idx] = sub[np.lexsort((sub, run[idx]))]
+    return o
+
+
+def _regroup(parts, sort: bool, ordered: bool = True):
+    """Concatenate segmented sets into one with a single non-empty
+    segment per group id, in ascending gid order (any order when not
+    ``ordered``).  ``sort`` also sorts each segment by value.  Both
+    sorts are stable, so equal values keep arrival order (the tie order
+    a single digest's stable argsort gives)."""
+    if len(parts) == 1 and not sort:
+        # one set never repeats a gid: only empty segments to drop
+        gids, off, a, b = parts[0]
+        lens = np.diff(off)
+        if not (lens > 0).all():
+            gids, lens = gids[lens > 0], lens[lens > 0]
+            off = np.concatenate(([0], np.cumsum(lens)))
+        if not ordered or (np.diff(gids) > 0).all():
+            return gids, off, a, b
+    g = np.concatenate([np.repeat(p[0], np.diff(p[1])) for p in parts])
+    a = np.concatenate([p[2] for p in parts])
+    b = None if parts[0][3] is None else np.concatenate([p[3] for p in parts])
+    if sort:
+        # ties only matter when their weights can differ
+        order = _group_value_order(g, a, stable=b is not None)
+    else:
+        order = _gid_order(g)
+    g, a = g[order], a[order]
+    b = None if b is None else b[order]
+    head = np.flatnonzero(np.concatenate(([True], g[1:] != g[:-1])))
+    return g[head], np.append(head, g.size).astype(np.int64), a, b
+
+
+class _SegmentedBuild:
+    """One digest per group id, built for many groups at once.
+
+    Gives each group exactly the centroid counts of a ``TDigest`` fed
+    the same ``add_batch`` calls: a group's raw values are swept into
+    its centroids when its pending count reaches ``buffer_size`` (the
+    ``TDigest`` flush rule, so memory stays bounded per group), and at
+    ``finish``.  Unweighted integers over a dense domain keep the
+    per-group bincount route; everything else goes through one
+    segmented sweep per flush.
+    """
+
+    def __init__(
+        self, compression: float = DEFAULT_COMPRESSION,
+        buffer_size: int = DEFAULT_BUFFER_SIZE,
+    ) -> None:
+        self.compression = float(compression)
+        self.buffer_size = int(buffer_size)
+        self._raw: list = []  # pending raw values (segmented sets)
+        self._cent: list = []  # swept centroids, each gid in one set
+        self._pending = np.zeros(0, dtype=np.int64)
+
+    def add(self, gids, offsets, values, weights=None) -> None:
+        """Segment k (``values[offsets[k]:offsets[k+1]]``) is one
+        ``add_batch`` call for group ``gids[k]``, in segment order.
+        NaN values are dropped with their weights."""
+        gids = np.asarray(gids, dtype=np.int64)
+        offsets = np.asarray(offsets, dtype=np.int64)
+        if np.unique(gids).size < gids.size:
+            # a repeated gid (keys equal in Python but not in Arrow, e.g.
+            # 0.0 and -0.0) is a later add_batch call: one at a time
+            for k in range(gids.size):
+                lo, hi = offsets[k], offsets[k + 1]
+                self.add(gids[k:k + 1], [0, hi - lo], values[lo:hi],
+                         None if weights is None else weights[lo:hi])
+            return
+        # TDigest.add_batch's dtype rule: integers keep their dtype (for
+        # the dense route), everything else becomes float64
+        values = np.asarray(values)
+        if values.dtype.kind not in "iu":
+            values = values.astype(np.float64, copy=False)
+        if weights is not None:
+            weights = np.asarray(weights, dtype=np.int64)
+            if (weights <= 0).any():
+                raise ValueError("weights must be positive")
+        if values.dtype.kind == "f":
+            keep = ~np.isnan(values)
+            if not keep.all():
+                kept = np.concatenate(([0], np.cumsum(keep)))
+                offsets = kept[offsets]
+                values = values[keep]
+                weights = None if weights is None else weights[keep]
+        if gids.size and gids.max() >= self._pending.size:
+            grown = np.zeros(max(int(gids.max()) + 1, 2 * self._pending.size),
+                             dtype=np.int64)
+            grown[: self._pending.size] = self._pending
+            self._pending = grown
+        self._pending[gids] += np.diff(offsets)
+        self._raw.append((gids, offsets, values, weights))
+        full = gids[self._pending[gids] >= self.buffer_size]
+        if full.size:
+            self._flush(full)
+
+    def _flush(self, gids: np.ndarray) -> None:
+        sel = np.zeros(self._pending.size, dtype=bool)
+        sel[gids] = True
+        raw, self._raw = _subset(self._raw, sel)
+        old, self._cent = _subset(self._cent, sel)
+        self._pending[gids] = 0
+        if raw[0][3] is not None:
+            # weighted (TDigest._flush slow path): existing centroids
+            # first, then raw points in arrival order, one sweep
+            parts = old + [
+                (g, o, a.astype(np.float64, copy=False), b)
+                for g, o, a, b in raw
+            ]
+            g, o, a, b = _regroup(parts, sort=True)
+            m, c, oo = _ksweep_segments(a, b, o, self.compression)
+            self._cent.append((g, oo, m, c))
+            return
+        new = self._sweep_raw(raw)
+        if old:
+            # fold into the existing centroids (re-sweeping a group with
+            # no old centroids is exact: a sweep's output is a fixed point)
+            g, o, a, b = _regroup(old + new, sort=True)
+            m, c, oo = _ksweep_segments(a, b, o, self.compression)
+            new = [(g, oo, m, c)]
+        self._cent.extend(new)
+
+    def _sweep_raw(self, raw) -> list:
+        """Unweighted raw values -> centroid sets (TDigest._flush fast
+        path: dense-integer bincount per group, else sort + sweep)."""
+        out = []
+        if all(p[2].dtype.kind in "iu" for p in raw):
+            g, o, a, _ = _regroup(raw, sort=False, ordered=False)
+            vmin = np.minimum.reduceat(a, o[:-1])
+            # uint64 differences are exact for any integer span
+            span = np.maximum.reduceat(a, o[:-1]).astype(np.uint64) - vmin.astype(
+                np.uint64
+            )
+            sparse = np.ones(self._pending.size, dtype=bool)
+            for k in np.flatnonzero(_is_dense(span, np.diff(o))):
+                m, c = _dense_int_centroids(
+                    a[o[k]:o[k + 1]], int(vmin[k]), int(span[k]), self.compression
+                )
+                out.append((g[k:k + 1], np.array([0, m.size]), m, c))
+                sparse[g[k]] = False
+            raw = _subset([(g, o, a, None)], sparse)[0]
+        if raw:
+            g, o, a, _ = _regroup(raw, sort=True)
+            m, c, oo = _ksweep_segments(
+                a.astype(np.float64, copy=False), None, o, self.compression
+            )
+            out.append((g, oo, m, c))
+        return out
+
+    def finish(self, n_groups: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """Flush every group; returns (means, counts, offsets) with group
+        id g's centroids at ``[offsets[g], offsets[g+1])`` for g in
+        ``range(n_groups)`` (groups that never got a value are empty)."""
+        pending = np.flatnonzero(self._pending)
+        if pending.size:
+            self._flush(pending)
+        off = np.zeros(n_groups + 1, dtype=np.int64)
+        if not self._cent:
+            return np.empty(0), np.empty(0, dtype=np.int64), off
+        g, o, m, c = _regroup(self._cent, sort=False)
+        lens = np.zeros(n_groups, dtype=np.int64)
+        lens[g] = np.diff(o)
+        np.cumsum(lens, out=off[1:])
+        return m, c, off
+
+
+def _merge_segments(means, counts, offsets, gids, n_groups: int, compression):
+    """Merge many digests into one per group id: digest r (centroids
+    ``[offsets[r], offsets[r+1])``, compression ``compression[r]``)
+    belongs to group ``gids[r]``; every id in ``range(n_groups)`` occurs.
+
+    Per group this is ``TDigest.merge_all`` over its digests in row
+    order (same stable tie order, the first digest's compression), in
+    one segmented sweep.  Returns (means, counts, offsets, compression
+    per group).
+    """
+    gids = np.asarray(gids, dtype=np.int64)
+    lens = np.diff(offsets)
+    g = np.repeat(gids, lens)
+    order = _group_value_order(g, means, stable=True)
+    glen = np.bincount(g, minlength=n_groups)
+    goff = np.zeros(n_groups + 1, dtype=np.int64)
+    np.cumsum(glen, out=goff[1:])
+    first = np.unique(gids, return_index=True)[1]
+    comp = np.asarray(compression, dtype=np.float64)[first]
+    m, c, oo = _ksweep_segments(means[order], counts[order], goff, comp)
+    return m, c, oo, comp
+
+
 class TDigest:
     """A mergeable quantile sketch (merging-digest formulation).
 
@@ -255,21 +641,11 @@ class TDigest:
             v = bufs_v[0] if len(bufs_v) == 1 else np.concatenate(bufs_v)
             if v.dtype.kind in "iu":
                 vmin = int(v.min())
-                vmax = int(v.max())
-                span = vmax - vmin
-                if span < max(1 << 16, v.size // 4):
-                    # dense integer domain (e.g. token ids): collapse
-                    # duplicates with one bincount pass — no sort at all.
-                    # The dense sweep splits bins at rank boundaries, so
-                    # the result matches the singleton-stream sweep
-                    # (exact tails included) at a fraction of the cost.
-                    cnt = np.bincount(
-                        (v - vmin).astype(np.int64), minlength=span + 1
+                span = int(v.max()) - vmin
+                if _is_dense(span, v.size):
+                    new_m, new_c = _dense_int_centroids(
+                        v, vmin, span, self.compression
                     )
-                    nz = np.nonzero(cnt)[0]
-                    bm = (nz + vmin).astype(np.float64)
-                    bc = cnt[nz].astype(np.int64)
-                    new_m, new_c = _ksweep_dense(bm, bc, self.compression)
                 else:
                     v = np.sort(v, kind="stable")  # radix for ints
                     new_m, new_c = _ksweep(
@@ -299,8 +675,15 @@ class TDigest:
     def compress(self) -> None:
         """Force-compact (parity: Compress, tdigest.go:239-254; advised
         before serializing, tdigest.go:236-238). Count-preserving."""
-        self._flush()
-        self._means, self._counts = _ksweep(self._means, self._counts, self.compression)
+        if self._buf_len:
+            # a flush ends in a sweep, and a sweep's output is a fixed
+            # point of the sweep (no centroid can absorb its successor),
+            # so a second pass would change nothing
+            self._flush()
+        else:
+            self._means, self._counts = _ksweep(
+                self._means, self._counts, self.compression
+            )
 
     def merge(self, *others: "TDigest") -> "TDigest":
         """Fold other digests into self (parity: Merge, tdigest.go:262-272).

@@ -73,8 +73,9 @@ def group_codes(batch: pa.RecordBatch, n_by: int):
     first_rows = row_order[
         np.searchsorted(combined[row_order], uniq_codes, side="left")
     ]
-    keys = [
-        tuple(batch.column(j)[int(r)].as_py() for j in range(n_by))
-        for r in first_rows
-    ]
+    # one Arrow take + to_pylist per key column (exact python values)
+    take = pa.array(first_rows, type=pa.int64())
+    keys = list(
+        zip(*(batch.column(j).take(take).to_pylist() for j in range(n_by)))
+    )
     return combined, uniq_codes, row_counts, keys, row_order

@@ -23,80 +23,73 @@ from __future__ import annotations
 import math
 from typing import Callable, Sequence
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import DoubleType, FloatType, LongType, StructField, StructType
+
+_GKEY = "_gkey"
+# Default to_json truncates timestamps to MILLISECONDS (.SSS) — explicit
+# micro-precision formats keep the key rendering injective for
+# sub-millisecond-distinct timestamp keys (Spark timestamps are exactly
+# microsecond-precision, so 6 fractional digits are lossless).
+_KEY_JSON_OPTS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
+
+TaskMerge = Callable[[pa.Table, np.ndarray, int], list]
 
 
-def tree_merge(
-    partials: DataFrame,
-    by: Sequence[str],
-    schema: StructType,
-    merge_fn: Callable[[pd.DataFrame], pd.DataFrame],
-    fanin: int | None,
-    n_units: int | None = None,
+def group_sum(column, gids: np.ndarray, n_groups: int) -> pa.Array:
+    """Per-group sum of a non-null integer column (count columns)."""
+    vals = column.to_numpy()
+    return pa.array(
+        np.bincount(gids, weights=vals, minlength=n_groups).astype(np.int64),
+        type=pa.int64(),
+    )
+
+
+def _group_ids(keys: pa.Array) -> tuple[np.ndarray, int, np.ndarray]:
+    """(group id per row, group count, first row of each group) from the
+    rendered key column; ids number the groups in order of first row."""
+    gids = (
+        pc.dictionary_encode(keys).indices.to_numpy(zero_copy_only=False)
+        .astype(np.int64)
+    )
+    # ids are assigned in first-appearance order, so a group's first row
+    # is where the running maximum steps up
+    first = np.flatnonzero(np.diff(np.maximum.accumulate(gids), prepend=-1) > 0)
+    return gids, first.size, first
+
+
+def grouped_merge(
+    df: DataFrame,
+    group_cols: list[str],
+    out_schema: StructType,
+    merge: TaskMerge,
+    n_upstream: int | None = None,
 ) -> DataFrame:
-    """Merge partial rows to one row per group.
+    """One-row-per-group merge via repartition + one task-level merge.
 
-    ``merge_fn(pdf) -> list`` must return ONE plain row (a list of
-    values in ``schema`` column order) for the group slice it receives
-    (it may receive extra columns, e.g. the salt — select what it
-    needs).  Returning a list instead of a 1-row DataFrame lets the
-    merge stage assemble a SINGLE DataFrame per task: at fine groupings
-    (hourly windows — 720 groups) the per-group DataFrame construction
-    + concat was most of the merge stage's wall time.  ``fanin=None``
-    disables salting (single-level merge).
+    Same co-location guarantee as groupBy().applyInPandas (hash
+    partitioning on the group columns), but ONE python call per shuffle
+    partition instead of one per group, and no per-group work outside
+    ``merge``.  With no group columns every row goes to one partition
+    and forms one group.
 
-    ``n_units``: upper bound on partials per group.  The default (None)
-    assumes the stage-1 builder invariant — at most one partial per
-    (input partition, group), true for mapInArrow builder output — and
-    sizes/salts level 0 by partition id (hard bound).  Partials read
-    back FROM STORAGE break that invariant (the parquet reader packs
-    many small files into one partition), so those callers must pass the
-    actual partial row count: level 0 then salts by a hash of a unique
-    row id (uniform in expectation over >= fanin rows per salt), and
-    every later level re-buckets the carried salt deterministically
-    (hard bound again, since level 0 leaves one row per (group, salt)).
+    Exact-key discipline: group ids come from a JVM-computed JSON
+    rendering of the key tuple (injective over distinct key tuples,
+    rendered from exact values — a long key beside NULLs never passes
+    through lossy float64), and the output key columns are Arrow
+    ``take``s of each group's first row, so key values stay exact for
+    every type (int64 > 2^53, timestamps, decimals).
     """
-    by = list(by)
-    columns = [f.name for f in schema.fields]
-    if fanin is not None and fanin < 2:
-        raise ValueError("fanin must be >= 2")
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    def grouped_merge(
-        df: DataFrame, group_cols: list[str], out_schema: StructType,
-        fn: Callable[[pd.DataFrame], pd.DataFrame],
-        n_upstream: int | None = None,
-    ) -> DataFrame:
-        """One-row-per-group merge via repartition + mapInPandas.
-
-        Same co-location guarantee as groupBy().applyInPandas (hash
-        partitioning on the group columns), but ONE python call per
-        shuffle partition instead of one per group — Spark's per-group
-        pandas machinery costs ~2-4 ms/group, which dominates when a
-        fine-grained grouping (hourly windows, per-user keys) produces
-        thousands of tiny groups.  Per-group row order stays shuffle
-        arrival order either way (merge associativity makes it moot).
-
-        Exact-key discipline (advisor r3, medium): a long key column
-        with ANY null in a partition arrives from Arrow->pandas as lossy
-        float64 (the documented round-2 pandas trap), so distinct int64
-        keys beyond 2^53 could collide — silently merging two groups —
-        and the merged row's key VALUE itself could come back corrupted.
-        Two measures: (1) the pandas-side split groups on a JVM-computed
-        JSON encoding of the key tuple (injective over distinct key
-        tuples, rendered from exact values), never on pandas key
-        columns; (2) the stage runs as mapInArrow and key columns are
-        handed to ``fn`` as exact python objects (object dtype via
-        ``to_pylist``), so ``pdf[key].iloc[0]`` in every merge_fn reads
-        the true value.  Non-key columns (sketch bytes, counts —NOT
-        NULL by construction) keep the plain pandas conversion.
-        """
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        gkey = "_gkey"
+    if group_cols:
         # Float/double group keys: normalize -0.0 to +0.0 BEFORE both
         # the exchange and the JSON rendering.  Spark's own groupBy
         # folds them into one group (NormalizeFloatingNumbers), but
@@ -105,8 +98,6 @@ def tree_merge(
         # would emit two digest rows for one logical group.  The SQL
         # comparison -0.0 == 0.0 is TRUE, so the when() rewrites
         # exactly the two zeros; NaN/null fall through unchanged.
-        from pyspark.sql.types import DoubleType, FloatType
-
         for f in df.schema.fields:
             if f.name in group_cols and isinstance(
                 f.dataType, (FloatType, DoubleType)
@@ -128,11 +119,6 @@ def tree_merge(
         # size the exchange from the data, not the core count).
         # gkey is computed AFTER the exchange so the JSON rendering is
         # not serialized through the shuffle alongside the raw keys.
-        # Default to_json truncates timestamps to MILLISECONDS (.SSS) —
-        # explicit micro-precision formats keep the encoding injective
-        # for sub-millisecond-distinct timestamp keys (Spark timestamps
-        # are exactly microsecond-precision, so 6 fractional digits are
-        # lossless).
         try:
             n_shuffle = int(
                 df.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -145,69 +131,76 @@ def tree_merge(
         dist = df.repartition(
             n_target, *[F.col(c) for c in group_cols]
         ).withColumn(
-            gkey,
-            F.to_json(
-                F.struct(*[F.col(c) for c in group_cols]),
-                {
-                    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-                    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-                },
-            ),
+            _GKEY,
+            F.to_json(F.struct(*[F.col(c) for c in group_cols]), _KEY_JSON_OPTS),
         )
-        in_fields = dist.schema.fields
-        key_set = set(group_cols)
-        arrow_out = pa.schema(
-            [
-                pa.field(f.name, to_arrow_type(f.dataType))
-                for f in out_schema.fields
-            ]
-        )
+    else:
+        # one group on one task; no exchange when the input already is a
+        # single partition (e.g. the previous merge level's output), the
+        # case where a grouped exchange would have been elided too
+        one = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+        dist = df if one.numPartitions() == 1 else df.repartition(1)
+    arrow_out = pa.schema(
+        [pa.field(f.name, to_arrow_type(f.dataType)) for f in out_schema.fields]
+    )
+    key_set = set(group_cols)
+    value_names = [f.name for f in out_schema.fields if f.name not in key_set]
 
-        out_columns = [f.name for f in out_schema.fields]
+    def run(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        table = pa.Table.from_batches(batches).combine_chunks()
+        if group_cols:
+            gids, n_groups, first = _group_ids(table.column(_GKEY).chunk(0))
+        else:
+            gids = np.zeros(table.num_rows, dtype=np.int64)
+            n_groups, first = 1, np.zeros(1, dtype=np.int64)
+        values = dict(zip(value_names, merge(table, gids, n_groups)))
+        take = pa.array(first, type=pa.int64())
+        arrays = [
+            table.column(f.name).chunk(0).take(take).cast(f.type)
+            if f.name in key_set
+            else values[f.name]
+            for f in arrow_out
+        ]
+        yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
 
-        def run(batches):
-            chunks = []
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                cols = {}
-                for i, f in enumerate(in_fields):
-                    col = batch.column(i)
-                    if f.name in key_set:
-                        cols[f.name] = pd.Series(col.to_pylist(), dtype=object)
-                    else:
-                        cols[f.name] = col.to_pandas()
-                chunks.append(pd.DataFrame(cols))
-            if not chunks:
-                return
-            whole = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True)
-            )
-            # one plain row per group, ONE DataFrame per task (fn never
-            # reads gkey, so the group slice is passed as-is)
-            rows = [
-                fn(grp)
-                for _, grp in whole.groupby(gkey, dropna=False, sort=False)
-            ]
-            if rows:
-                # column-wise OBJECT-dtype assembly: pd.DataFrame(rows)
-                # would re-infer dtypes — int64 keys beyond 2^53 beside
-                # NULLs become lossy float64, timestamp/decimal keys
-                # fail the Arrow cast — while object columns convert
-                # through the explicit schema value-exactly
-                data = {
-                    name: pd.Series(col, dtype=object)
-                    for name, col in zip(out_columns, zip(*rows))
-                }
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame(data),
-                    schema=arrow_out,
-                    preserve_index=False,
-                )
+    return dist.mapInArrow(run, out_schema)
 
-        return dist.mapInArrow(run, out_schema)
+
+def tree_merge(
+    partials: DataFrame,
+    by: Sequence[str],
+    schema: StructType,
+    merge: TaskMerge,
+    fanin: int | None,
+    n_units: int | None = None,
+) -> DataFrame:
+    """Merge partial rows to one row per group.
+
+    ``schema`` is ``by`` columns + value columns.  ``merge(table, gids,
+    n_groups)`` is a task-level merge: it gets every partial row of one
+    reducer task as an Arrow table plus each row's group id (``0 ..
+    n_groups-1``, numbered in order of first row) and returns one Arrow
+    array per value column with one entry per group id.  Key columns are
+    filled in by the tree (exact Arrow values).  ``fanin=None`` disables
+    salting (single-level merge).
+
+    ``n_units``: upper bound on partials per group.  The default (None)
+    assumes the stage-1 invariant — at most one partial per (input
+    partition, group), true for the mapInArrow stage-1 output — and
+    sizes/salts level 0 by partition id (hard bound).  Partials read
+    back FROM STORAGE break that invariant (the parquet reader packs
+    many small files into one partition), so those callers must pass the
+    actual partial row count: level 0 then salts by a hash of a unique
+    row id (uniform in expectation over >= fanin rows per salt), and
+    every later level re-buckets the carried salt deterministically
+    (hard bound again, since level 0 leaves one row per (group, salt)).
+    """
+    by = list(by)
+    if fanin is not None and fanin < 2:
+        raise ValueError("fanin must be >= 2")
 
     if not fanin:
         n_parts = 0
@@ -219,10 +212,6 @@ def tree_merge(
         salted_schema = StructType(
             [StructField("_salt", LongType(), False)] + list(schema.fields)
         )
-
-        def merge_salted(pdf: pd.DataFrame) -> list:
-            return [pdf["_salt"].iloc[0]] + merge_fn(pdf[columns])
-
         first = True
         while n_parts > fanin:
             n_salts = int(math.ceil(n_parts / fanin))
@@ -247,20 +236,18 @@ def tree_merge(
                 partials.withColumn("_salt", salt),
                 by + ["_salt"],
                 salted_schema,
-                merge_salted,
+                merge,
                 n_upstream=n_parts,
             )
             n_parts = n_salts
 
-    if by:
-        return grouped_merge(
-            partials, by, schema, lambda pdf: merge_fn(pdf[columns]),
-            # after salt levels the upstream width is the last level's
-            # reducer count; fanin=None probes the plan directly
-            n_upstream=n_parts if fanin else None,
-        )
-    # global aggregate: single group (applyInPandas needs a DataFrame)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: pd.DataFrame([merge_fn(pdf[columns])], columns=columns),
+    # final level (a global aggregate is one group on one reducer); after
+    # salt levels the upstream width is the last level's reducer count,
+    # fanin=None probes the plan directly
+    return grouped_merge(
+        partials,
+        by,
         schema,
+        merge,
+        n_upstream=n_parts if fanin else None,
     )

@@ -6,16 +6,20 @@ get no Catalyst partial-aggregation split — whole groups are shuffled to
 a single python worker, which is exactly the skew trap the north rule
 names.  Instead we build one partial digest per (input partition x group)
 with ``mapInArrow`` (zero shuffle — this is the reference's "one digest
-per node" deployment, tdigest.go:3-8), then tree-merge partials through a
-salted ``applyInPandas`` stage so a group's fan-in is bounded no matter
-how many input partitions (or how skewed the group distribution) —
-digest mergeability (tdigest.go:262-272) makes tree depth irrelevant to
-correctness.
+per node" deployment, tdigest.go:3-8), then tree-merge partials through
+salted ``mapInArrow`` levels (``_tree.py``) so a group's fan-in is
+bounded no matter how many input partitions (or how skewed the group
+distribution) — digest mergeability (tdigest.go:262-272) makes tree
+depth irrelevant to correctness.
 
 Stage 1 is Arrow-native end to end: group keys are dictionary-encoded by
 Arrow, token arrays are flattened zero-copy (``ListArray.flatten``), and
 group partitioning is one stable radix argsort per batch — no per-row
-Python, no pandas materialization (the ``input_hint`` contract).
+Python, no pandas materialization (the ``input_hint`` contract).  Both
+stages work on all of a task's groups at once: one segmented k-sweep
+(``core._ksweep_segments``) builds or merges every digest, and
+``serde.encode_many`` / ``decode_many`` convert the whole digest column,
+so Python cost per task does not grow with the group count.
 
 Scale notes (100 TB / 1000 executors):
   - stage 1 is embarrassingly parallel and map-side only; its output is
@@ -38,8 +42,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from ..core import TDigest
+from ..core import _merge_segments, _SegmentedBuild
 from .. import serde
+from ._tree import _KEY_JSON_OPTS, group_sum, tree_merge
 
 DIGEST_COL = "digest"
 ROWS_COL = "n_rows"
@@ -102,134 +107,89 @@ def build_partials(
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ._batch import group_codes
 
-        # key (tuple of python group values) -> [TDigest, n_rows, weight]
-        accs: dict[tuple, list] = {}
+        gid_of: dict[tuple, int] = {}  # group key -> group id
+        row_counts_seen = []  # (gids, rows) per batch
+        build = _SegmentedBuild(compression)
 
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             combined, uniq_codes, row_counts, keys, row_order = group_codes(
                 batch, len(by)
             )
-
-            # ---- per-group value extraction: ONE stable sort of the
-            # value columns by group code per batch, then contiguous
-            # slices per group — O(N log N) total, not O(groups x N)
-            # masking (a 720-group hourly rollup was quadratic here).
-            # Stability keeps within-group row order identical to the
-            # masked form, so digests are bit-identical.  Arrays: pyarrow
-            # take on the list column + zero-copy flatten per group
-            # (token-level codes are never materialized).  Values keep
-            # their native dtype — the digest flush sorts int32 2x
-            # cheaper than float64.
+            gids = np.array(
+                [gid_of.setdefault(k, len(gid_of)) for k in keys], dtype=np.int64
+            )
+            row_counts_seen.append((gids, row_counts))
+            # ONE stable sort of the rows by group code per batch makes
+            # every group a contiguous segment (stability keeps each
+            # group's row order).  Values keep their native dtype — the
+            # flush sorts int32 2x cheaper than float64, and dense
+            # integer groups take the bincount route.
             multi = combined is not None and len(uniq_codes) > 1
-            if multi:
-                offsets = np.concatenate(
-                    ([0], np.cumsum(row_counts))
-                ).astype(np.int64)
+            offsets = np.zeros(len(keys) + 1, dtype=np.int64)
+            np.cumsum(row_counts, out=offsets[1:])
+            col = batch.column(value_idx)
+            w = (
+                batch.column(weight_idx).to_numpy(zero_copy_only=False).astype(np.int64)
+                if weight_col
+                else None
+            )
+            if multi and w is not None:
+                w = w[row_order]
             if explode_arrays:
-                if weight_col:
-                    w_rows = batch.column(weight_idx).to_numpy(
-                        zero_copy_only=False
-                    )
-                    lens = (
-                        pc.list_value_length(batch.column(value_idx))
-                        .fill_null(0)
-                        .to_numpy(zero_copy_only=False)
-                    )
-            else:
-                v_all = batch.column(value_idx).to_numpy(
+                # token arrays: one take of the list column + zero-copy
+                # flatten; segment bounds come from the list lengths
+                if multi:
+                    col = col.take(pa.array(row_order, type=pa.int64()))
+                lens = pc.list_value_length(col).fill_null(0).to_numpy(
                     zero_copy_only=False
                 )
-                w_all = (
-                    batch.column(weight_idx)
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                    if weight_col
-                    else None
-                )
+                if w is not None:
+                    w = np.repeat(w, lens)
+                ends = np.zeros(lens.size + 1, dtype=np.int64)
+                np.cumsum(lens, out=ends[1:])
+                offsets = ends[offsets]
+                v = col.flatten().to_numpy(zero_copy_only=False)
+            else:
+                v = col.to_numpy(zero_copy_only=False)
                 if multi:
-                    v_all = v_all[row_order]
-                    w_all = w_all[row_order] if w_all is not None else None
+                    v = v[row_order]
+            build.add(gids, offsets, v, w)
 
-            def group_values(g: int):
-                if explode_arrays:
-                    col = batch.column(value_idx)
-                    if multi:
-                        idx = row_order[offsets[g] : offsets[g + 1]]
-                        col = col.take(pa.array(idx, type=pa.int64()))
-                    v = col.flatten().to_numpy(zero_copy_only=False)
-                    if weight_col:
-                        if multi:
-                            w = np.repeat(
-                                w_rows[idx].astype(np.int64), lens[idx]
-                            )
-                        else:
-                            w = np.repeat(w_rows.astype(np.int64), lens)
-                        return v, w
-                    return v, None
-                if multi:
-                    sl = slice(offsets[g], offsets[g + 1])
-                    return v_all[sl], (
-                        w_all[sl] if w_all is not None else None
-                    )
-                return v_all, w_all
-
-            for g, (key, n_rows_g) in enumerate(zip(keys, row_counts)):
-                acc = accs.get(key)
-                if acc is None:
-                    acc = [TDigest(compression=compression), 0, 0]
-                    accs[key] = acc
-                v, w = group_values(g)
-                if v.dtype.kind == "f":
-                    nan = np.isnan(v)
-                    if nan.any():
-                        v = v[~nan]
-                        w = w[~nan] if w is not None else None
-                if v.size:
-                    if w is not None:
-                        acc[0].add_batch(v, w)
-                        acc[2] += int(w.sum())
-                    else:
-                        acc[0].add_batch(v)
-                        acc[2] += int(v.size)
-                acc[1] += int(n_rows_g)
-
-        if accs:
-            items = list(accs.items())
-            arrays = []
-            for j, f in enumerate(schema.fields[: len(by)]):
-                arrays.append(
-                    pa.array([k[j] for k, _ in items], type=out_schema.field(j).type)
-                )
-            digests = []
-            for _, (digest, _, _) in items:
-                digest.compress()  # pre-serialize compaction, tdigest.go:236-238
-                digests.append(serde.encode(digest))
-            arrays.append(pa.array(digests, type=pa.binary()))
-            arrays.append(pa.array([a[1] for _, a in items], type=pa.int64()))
-            arrays.append(pa.array([a[2] for _, a in items], type=pa.int64()))
+        if gid_of:
+            n_groups = len(gid_of)
+            means, counts, offsets = build.finish(n_groups)
+            n_rows = np.zeros(n_groups, dtype=np.int64)
+            for gids, rows in row_counts_seen:
+                np.add.at(n_rows, gids, rows)  # gids may repeat
+            cum = np.concatenate(([0], np.cumsum(counts)))
+            keys = list(gid_of)  # insertion order = group id order
+            arrays = [
+                pa.array([k[j] for k in keys], type=out_schema.field(j).type)
+                for j in range(len(by))
+            ]
+            arrays.append(serde.encode_many(means, counts, offsets, compression))
+            arrays.append(pa.array(n_rows, type=pa.int64()))
+            arrays.append(pa.array(cum[offsets[1:]] - cum[offsets[:-1]], type=pa.int64()))
             yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
     return pruned.mapInArrow(gen, schema)
 
 
-def _merge_partials_fn(by: Sequence[str], columns: list[str]):
-    # returns ONE plain row (column-order list) per group slice — the
-    # tree assembles a single DataFrame per task (_tree.py contract)
-    def merge(pdf: pd.DataFrame) -> list:
-        digests = [serde.decode(b) for b in pdf[DIGEST_COL]]
-        merged = TDigest.merge_all(digests)
-        merged.compress()
-        head = [pdf[c].iloc[0] for c in by]
-        return head + [
-            serde.encode(merged),
-            int(pdf[ROWS_COL].sum()),
-            int(pdf[WEIGHT_COL].sum()),
-        ]
-
-    return merge
+def _merge_digests(table: pa.Table, gids: np.ndarray, n_groups: int) -> list:
+    """Task-level t-digest merge (``_tree.tree_merge`` contract): every
+    digest of the task decoded at once, one segmented sweep, one
+    vectorized encode."""
+    means, counts, offsets, comp = serde.decode_many(table.column(DIGEST_COL))
+    means, counts, offsets, comp = _merge_segments(
+        means, counts, offsets, gids, n_groups, comp
+    )
+    return [
+        serde.encode_many(means, counts, offsets, comp),
+        group_sum(table.column(ROWS_COL), gids, n_groups),
+        group_sum(table.column(WEIGHT_COL), gids, n_groups),
+    ]
 
 
 def merge_partials(
@@ -249,8 +209,6 @@ def merge_partials(
     from storage (the <=1-partial-per-partition-per-group invariant does
     not survive the parquet reader's file packing; see _tree.py).
     """
-    from ._tree import tree_merge
-
     by = list(by)
     schema = StructType(
         [f for f in partials.schema.fields if f.name in set(by)]
@@ -260,9 +218,7 @@ def merge_partials(
             StructField(WEIGHT_COL, LongType(), False),
         ]
     )
-    columns = [f.name for f in schema.fields]
-    merge = _merge_partials_fn(by, columns)
-    return tree_merge(partials, by, schema, merge, fanin, n_units=n_units)
+    return tree_merge(partials, by, schema, _merge_digests, fanin, n_units=n_units)
 
 
 def tdigest_agg(
@@ -336,15 +292,6 @@ def tdigest_bucket(
     return joined.withColumn(
         "bucket", F.when(F.col(value_col).isNotNull(), fold)
     ).drop("_bounds")
-
-
-_KEY_JSON_OPTS = {
-    # micro-precision timestamps keep the rendering injective (Spark
-    # timestamps are exactly microsecond precision) — same contract as
-    # the tree-merge group encoding in _tree.py
-    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-}
 
 
 def _group_key_col(by: Sequence[str]):

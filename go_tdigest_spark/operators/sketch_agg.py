@@ -200,7 +200,7 @@ def _merge_stage(
     through any merge tree (pinned in tests) — do not assume bitwise
     reproducibility across partition counts for those two.
     """
-    from ._tree import tree_merge
+    from ._tree import group_sum, tree_merge
 
     by = list(by)
     schema = StructType(
@@ -210,18 +210,16 @@ def _merge_stage(
             StructField("n_rows", LongType(), False),
         ]
     )
-    columns = [f.name for f in schema.fields]
 
-    # one plain row per group slice — _tree.py assembles one DataFrame
-    # per task (per-group DataFrame construction dominated fine groupings)
-    def merge(pdf: pd.DataFrame) -> list:
-        sk = None
-        for b in pdf["sketch"]:
-            s = decode(bytes(b))
-            sk = s if sk is None else sk.merge(s)
-        return [pdf[c].iloc[0] for c in by] + [
-            sk.to_bytes(),
-            int(pdf["n_rows"].sum()),
+    def merge(table: pa.Table, gids: np.ndarray, n_groups: int) -> list:
+        # each sketch's own merge(), folded per group in row order
+        acc = [None] * n_groups
+        for g, b in zip(gids.tolist(), table.column("sketch").to_pylist()):
+            s = decode(b)
+            acc[g] = s if acc[g] is None else acc[g].merge(s)
+        return [
+            pa.array([s.to_bytes() for s in acc], type=pa.binary()),
+            group_sum(table.column("n_rows"), gids, n_groups),
         ]
 
     return tree_merge(partials, by, schema, merge, fanin, n_units=n_units)

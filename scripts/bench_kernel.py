@@ -19,7 +19,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from go_tdigest_spark import serde  # noqa: E402
-from go_tdigest_spark.core import TDigest  # noqa: E402
+from go_tdigest_spark.core import (  # noqa: E402
+    TDigest,
+    _merge_segments,
+    _SegmentedBuild,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 COMPRESSIONS = [1, 10, 20, 30, 50, 100]  # tdigest_test.go:681
@@ -32,6 +36,64 @@ def timeit(fn, reps=5):
         fn()
         best = min(best, time.perf_counter() - t0)
     return best
+
+
+def many_groups(rng, n_values: int = 600_000) -> dict:
+    """One task's worth of groups: 600k uniform values over 720 / 2000
+    groups, already grouped (as stage 1 sorts them).  Per-group
+    ``TDigest`` vs the segmented task-level kernels, for the stage-1
+    build and for merging two partials per group.  Milliseconds,
+    min-of-N, single thread."""
+    res = {}
+    for n_groups in (720, 2000):
+        gid = np.sort(rng.integers(0, n_groups, n_values))
+        vals = rng.random(n_values)
+        off = np.searchsorted(gid, np.arange(n_groups + 1))
+        gids = np.arange(n_groups)
+
+        def per_group_build(lo=0, step=1):
+            ds = []
+            for g in gids:
+                d = TDigest()
+                d.add_batch(vals[off[g] + lo : off[g + 1] : step])
+                d.compress()
+                ds.append(d)
+            return ds
+
+        def segmented_build():
+            b = _SegmentedBuild()
+            b.add(gids, off, vals)
+            return b.finish(n_groups)
+
+        halves = [per_group_build(0, 2), per_group_build(1, 2)]
+        pairs = [d for g in gids for d in (halves[0][g], halves[1][g])]
+        pm = np.concatenate([d.centroids()[0] for d in pairs])
+        pc = np.concatenate([d.centroids()[1] for d in pairs])
+        po = np.concatenate(([0], np.cumsum([len(d) for d in pairs])))
+        pg = np.repeat(gids, 2)
+
+        def per_group_merge():
+            for g in gids:
+                d = TDigest.merge_all([halves[0][g].clone(), halves[1][g].clone()])
+                d.compress()
+
+        def segmented_merge():
+            _merge_segments(pm, pc, po, pg, n_groups, np.full(pg.size, 100.0))
+
+        row = {
+            "per_group_build": timeit(per_group_build, reps=3),
+            "segmented_build": timeit(segmented_build, reps=3),
+            "per_group_merge": timeit(per_group_merge, reps=3),
+            "segmented_merge": timeit(segmented_merge, reps=3),
+        }
+        res[str(n_groups)] = {k: round(v * 1e3, 1) for k, v in row.items()}
+        res[str(n_groups)]["build_speedup"] = round(
+            row["per_group_build"] / row["segmented_build"], 2
+        )
+        res[str(n_groups)]["merge_speedup"] = round(
+            row["per_group_merge"] / row["segmented_merge"], 2
+        )
+    return res
 
 
 def main() -> None:
@@ -111,6 +173,8 @@ def main() -> None:
         d._flush()
 
     out["int_token_values_per_sec"] = int(toks.size / timeit(run_tok, reps=3))
+
+    out["many_groups_ms"] = many_groups(rng)
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "kernel_micro.json"), "w") as f:

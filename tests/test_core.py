@@ -253,6 +253,28 @@ def test_compress_preserves_count():
     assert d.count == before
 
 
+def test_compress_is_idempotent():
+    """compress() skips its second sweep after a flush: the sweep's
+    output is a fixed point, so compressing again changes nothing —
+    also for rehydrated centroids, which compress() does re-sweep."""
+    rng = np.random.default_rng(6)
+    for vals, w in (
+        (rng.random(5000), None),
+        (rng.normal(size=3000).round(1), rng.integers(1, 9, size=3000)),
+        (rng.integers(0, 300, size=4000).astype(np.int32), None),
+    ):
+        d = TDigest()
+        d.add_batch(vals, w)
+        d.compress()
+        once = tuple(a.copy() for a in d.centroids())
+        d.compress()
+        np.testing.assert_array_equal(d.centroids()[1], once[1])
+        np.testing.assert_array_equal(d.centroids()[0], once[0])
+        r = TDigest.from_centroids(*once)
+        r.compress()
+        np.testing.assert_array_equal(r.centroids()[1], once[1])
+
+
 def test_gamma_distribution():
     # tdigest_test.go:404-452 — heavy skew
     rng = np.random.default_rng(0xDEADBEE)

@@ -294,6 +294,180 @@ def test_ksweep_fast_path_matches_loop(values, weights, compression):
     np.testing.assert_array_equal(got_c, want_c)
 
 
+@st.composite
+def segment_layouts(draw):
+    """Many groups fed in arrival-ordered batches: 1-point groups,
+    all-singleton groups and groups over the flush size, weighted or
+    not, float (with NaNs) or integer values."""
+    n_groups = draw(st.integers(1, 10))
+    sizes = draw(
+        st.lists(
+            st.one_of(st.just(1), st.integers(2, 40), st.integers(150, 700)),
+            min_size=n_groups,
+            max_size=n_groups,
+        )
+    )
+    weighted = draw(st.booleans())
+    ints = not weighted and draw(st.booleans())
+    seed = draw(st.integers(0, 2**32 - 1))
+    rng = np.random.default_rng(seed)
+    groups = []
+    for size in sizes:
+        if ints:
+            hi = int(rng.choice([50, 10**6]))
+            v = rng.integers(-hi, hi, size=size)
+        else:
+            # few decimals: plenty of exact ties between equal values
+            v = np.round(rng.normal(size=size) * 10 ** rng.integers(0, 4), 2)
+            v[rng.random(size) < 0.05] = np.nan
+        w = rng.integers(1, 30, size=size) if weighted else None
+        groups.append((v, w))
+    n_batches = draw(st.integers(1, 4))
+    # each group's values split at random points over the batches
+    cuts = [
+        np.sort(rng.integers(0, v.size + 1, size=n_batches - 1))
+        for v, _ in groups
+    ]
+    batches = []
+    for b in range(n_batches):
+        gids = rng.permutation(n_groups)
+        segs = []
+        for g in gids:
+            bounds = np.concatenate(([0], cuts[g], [groups[g][0].size]))
+            segs.append((bounds[b], bounds[b + 1]))
+        lens = [hi - lo for lo, hi in segs]
+        off = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
+        v = np.concatenate([groups[g][0][lo:hi] for g, (lo, hi) in zip(gids, segs)])
+        w = None if not weighted else np.concatenate(
+            [groups[g][1][lo:hi] for g, (lo, hi) in zip(gids, segs)]
+        )
+        batches.append((gids, off, v, w))
+    return groups, batches
+
+
+def _reference_sweep():
+    """Patch TDigest's sweep to the fast-path-free reference loop."""
+    from unittest import mock
+
+    return mock.patch("go_tdigest_spark.core._ksweep", _ksweep_reference)
+
+
+def _oracle_digests(groups, batches, compression, buffer_size):
+    """Per-group TDigest over the same add_batch calls."""
+    ds = [TDigest(compression, buffer_size) for _ in groups]
+    with _reference_sweep():
+        for gids, off, v, w in batches:
+            for k, g in enumerate(gids):
+                vv = v[off[k]:off[k + 1]]
+                ww = None if w is None else w[off[k]:off[k + 1]]
+                if vv.dtype.kind == "f":
+                    keep = ~np.isnan(vv)
+                    vv, ww = vv[keep], None if ww is None else ww[keep]
+                if vv.size:
+                    ds[g].add_batch(vv, ww)
+        for d in ds:
+            d.compress()
+    return ds
+
+
+def _assert_segments_match(means, counts, offsets, oracle, groups):
+    """Centroids bit-identical to the oracle's (counts and means); tails
+    exact; every mean inside the group's value range."""
+    for g, d in enumerate(oracle):
+        om, oc = d.centroids()
+        m, c = means[offsets[g]:offsets[g + 1]], counts[offsets[g]:offsets[g + 1]]
+        np.testing.assert_array_equal(c, oc)
+        np.testing.assert_array_equal(m, om)
+        v = groups[g][0].astype(np.float64)
+        v = v[~np.isnan(v)]
+        if v.size:
+            assert m[0] == v.min() and m[-1] == v.max()
+            assert (m >= v.min()).all() and (m <= v.max()).all()
+
+
+@given(
+    layout=segment_layouts(),
+    compression=st.sampled_from([20.0, 100.0, 300.0]),
+    buffer_size=st.sampled_from([16, 200, 32768]),
+)
+@settings(max_examples=120, deadline=None)
+def test_segmented_build_and_merge_match_per_group(layout, compression, buffer_size):
+    """The task-level kernels (one segmented sweep for all groups) give
+    every group exactly the centroids (counts and means) a per-group
+    TDigest gets: for stage-1 builds (flush rule included) and for
+    merges."""
+    import math
+
+    from go_tdigest_spark.core import (
+        _SegmentedBuild,
+        _ksweep_segments,
+        _merge_segments,
+    )
+
+    groups, batches = layout
+    values = [v for v, _ in groups]
+    oracle = _oracle_digests(groups, batches, compression, buffer_size)
+    build = _SegmentedBuild(compression, buffer_size)
+    for b in batches:
+        build.add(*b)
+    means, counts, offsets = build.finish(len(groups))
+    _assert_segments_match(means, counts, offsets, oracle, groups)
+
+    # merge: every group's digest split into up to three partial rows
+    # (built from alternate batches), rows in shuffled order
+    rng = np.random.default_rng(len(batches))
+    parts = [
+        _oracle_digests(groups, batches[i::3], compression, buffer_size)
+        for i in range(min(3, len(batches)))
+    ]
+    rows = [(g, p[g]) for p in parts for g in range(len(groups))]
+    rows = [rows[i] for i in rng.permutation(len(rows))]
+    blob_means = [d.centroids()[0] for _, d in rows]
+    blob_counts = [d.centroids()[1] for _, d in rows]
+    col = serde.encode_many(
+        np.concatenate(blob_means),
+        np.concatenate(blob_counts),
+        np.concatenate(([0], np.cumsum([m.size for m in blob_means]))),
+        compression,
+    )
+    assert col.to_pylist() == [serde.encode(d) for _, d in rows]
+    dm, dc, doff, dcomp = serde.decode_many(col)
+    gids = np.array([g for g, _ in rows])
+    m, c, off, comp = _merge_segments(dm, dc, doff, gids, len(groups), dcomp)
+    assert (comp == compression).all()
+    want = []
+    with _reference_sweep():
+        for g in range(len(groups)):
+            merged = TDigest.merge_all([d.clone() for gg, d in rows if gg == g])
+            merged.compress()
+            want.append(merged)
+    _assert_segments_match(m, c, off, want, groups)
+
+    # the kernel itself: every centroid is a contiguous run of its
+    # segment's sorted points, its mean in the run's [min, max] and
+    # within the rounding bound of two sequential prefix sums of the
+    # exact (fsum) weighted mean
+    pts = [np.sort(v[~np.isnan(v.astype(np.float64))]).astype(np.float64) for v in values]
+    seg_off = np.concatenate(([0], np.cumsum([p.size for p in pts])))
+    flat = np.concatenate(pts)
+    wts = (np.arange(flat.size) % 5 + 1).astype(np.int64)
+    km, kc, ko = _ksweep_segments(flat, wts, seg_off, compression)
+    for g in range(len(groups)):
+        p, w = flat[seg_off[g]:seg_off[g + 1]], wts[seg_off[g]:seg_off[g + 1]]
+        ends = np.searchsorted(np.cumsum(w), np.cumsum(kc[ko[g]:ko[g + 1]]))
+        starts = np.concatenate(([0], ends[:-1] + 1))
+        ref_m, ref_c = _ksweep_reference(p, w, compression)
+        np.testing.assert_array_equal(kc[ko[g]:ko[g + 1]], ref_c)
+        np.testing.assert_array_equal(km[ko[g]:ko[g + 1]], ref_m)
+        eps = np.finfo(np.float64).eps
+        for x, s, e in zip(km[ko[g]:ko[g + 1]], starts, ends + 1):
+            run, rw = p[s:e], w[s:e]
+            exact = math.fsum(run * rw) / int(rw.sum())
+            prefix = float(np.sum(np.abs(p[:e] * w[:e])))
+            assert run.min() <= x <= run.max()
+            assert abs(x - exact) <= (2 * e * eps * prefix) / int(rw.sum()) + 2 * eps * abs(exact)
+
+
 # ----------------------------------------------------- sketch algebra
 
 hash_lists = st.lists(

@@ -44,6 +44,65 @@ def test_internal_empty():
     assert d.compression == 42.0
 
 
+def _digest_column(n_digests=40, seed=3):
+    rng = np.random.default_rng(seed)
+    ds = [
+        TDigest.from_values(rng.normal(size=int(k)), compression=float(c))
+        for k, c in zip(
+            rng.integers(0, 2000, n_digests), rng.choice([20, 100, 300], n_digests)
+        )
+    ]
+    return ds, [serde.encode(d) for d in ds]
+
+
+def test_encode_many_decode_many_roundtrip_byte_identical():
+    import pyarrow as pa
+
+    ds, blobs = _digest_column()
+    means = np.concatenate([d.centroids()[0] for d in ds])
+    counts = np.concatenate([d.centroids()[1] for d in ds])
+    offsets = np.concatenate(([0], np.cumsum([len(d) for d in ds])))
+    comp = np.array([d.compression for d in ds])
+    col = serde.encode_many(means, counts, offsets, comp)
+    assert col.type == pa.binary() and col.to_pylist() == blobs
+    # chunked and sliced inputs decode to the same flat arrays
+    chunked = pa.chunked_array([pa.array(blobs[:15], pa.binary()),
+                                pa.array(blobs[15:], pa.binary())])
+    for column, lo, hi in ((chunked, 0, len(ds)), (col.slice(5, 20), 5, 25)):
+        m, c, off, cp = serde.decode_many(column)
+        np.testing.assert_array_equal(m, means[offsets[lo]:offsets[hi]])
+        np.testing.assert_array_equal(c, counts[offsets[lo]:offsets[hi]])
+        np.testing.assert_array_equal(off, offsets[lo:hi + 1] - offsets[lo])
+        np.testing.assert_array_equal(cp, comp[lo:hi])
+    # a blob with trailing bytes (decode ignores them) unaligns the rest
+    m, _, _, _ = serde.decode_many(pa.array([blobs[0] + b"xyz"] + blobs[1:]))
+    np.testing.assert_array_equal(m, means)
+    m, c, off, cp = serde.decode_many(pa.array([], pa.binary()))
+    assert m.size == c.size == cp.size == 0 and list(off) == [0]
+
+
+@pytest.mark.parametrize(
+    "corrupt",
+    [
+        lambda b: b[:10],  # shorter than the header
+        lambda b: b"XX3\x00" + b[4:],  # wrong magic
+        lambda b: b[:-8],  # payload shorter than its centroid count
+        lambda b: b[:12] + (-1).to_bytes(4, "little", signed=True) + b[16:],
+        lambda b: b[:12] + (1 << 23).to_bytes(4, "little") + b[16:],
+    ],
+)
+def test_decode_many_rejects_one_corrupt_blob(corrupt):
+    import pyarrow as pa
+
+    _, blobs = _digest_column(8)
+    bad = corrupt(blobs[3])
+    with pytest.raises(ValueError) as per_blob:
+        serde.decode(bad)
+    with pytest.raises(ValueError) as column:
+        serde.decode_many(pa.array(blobs[:3] + [bad] + blobs[4:], pa.binary()))
+    assert str(column.value) == str(per_blob.value)
+
+
 def test_ref_roundtrip():
     # serialization_test.go roundtrip: counts exact, count preserved,
     # means within float32-delta accumulation error

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_tdigest_spark import serde
+from go_tdigest_spark.core import TDigest
 from go_tdigest_spark.functions import (
     register_sql_functions,
     td_cdf,
@@ -31,13 +32,13 @@ from test_core import oracle_quantile
 
 
 def _n_merge_levels(plan: str) -> int:
-    """Count tree-merge stages in an executed-plan string: keyed/salted
-    levels run as MapInArrow over the tree's ``run`` closure
-    (repartition + partition-wise merge with exact-key discipline,
-    _tree.py grouped_merge), the global final level as
-    FlatMapGroupsInPandas.  ``MapInArrow run(`` distinguishes merge
-    levels from the partial BUILDER's ``MapInArrow gen(`` nodes."""
-    return plan.count("MapInArrow run(") + plan.count("FlatMapGroupsInPandas")
+    """Count tree-merge stages in an executed-plan string: every level
+    (keyed, salted and the global final one) runs as MapInArrow over
+    the tree's ``run`` closure (repartition + task-level merge with
+    exact-key discipline, _tree.py grouped_merge).  ``MapInArrow run(``
+    distinguishes merge levels from stage 1's ``MapInArrow gen(``
+    nodes."""
+    return plan.count("MapInArrow run(")
 
 
 @pytest.fixture(scope="module")
@@ -320,8 +321,7 @@ def test_salted_merge_bounds_fanin_under_skew(spark):
     partials = build_partials(df, "v", ["k"])
     salted = merge_partials(partials, ["k"], fanin=4)
     plan = salted._jdf.queryExecution().executedPlan().toString()
-    # a merge level is MapInPandas (keyed/salted) or FlatMapGroupsInPandas
-    # (global final); count both so the assert tracks levels, not node kind
+    # every merge level (keyed/salted/global) is one MapInArrow node
     assert _n_merge_levels(plan) == 3  # 32 -> 8 -> 2 -> final
 
     out = {r["k"]: r for r in salted.collect()}
@@ -1187,3 +1187,47 @@ def test_exact_percentiles_matches_spark_percentile(spark, lineitem):
     # invalid q
     with pytest.raises(ValueError):
         exact_percentiles(li, "v", [1.5])
+
+
+def test_grouped_agg_matches_per_group_digests_across_partitions_and_batches(spark):
+    """tdigest_agg over several partitions, each read in several Arrow
+    batches, equals the per-group path: one TDigest per (partition,
+    group) merged with TDigest.merge_all — same centroid counts, n_rows
+    and total_weight for every group (the task-level kernels are exact
+    re-implementations, not approximations of it)."""
+    rng = np.random.default_rng(11)
+    sizes = {f"g{i}": int(s) for i, s in enumerate(rng.zipf(1.3, 60).clip(1, 4000))}
+    sizes["big"] = 6000
+    keys = np.repeat(list(sizes), list(sizes.values()))
+    vals = rng.lognormal(size=keys.size)
+    vals[rng.random(keys.size) < 0.01] = np.nan  # counted in n_rows only
+    pdf = pd.DataFrame({"k": keys, "v": vals, "p": rng.integers(0, 7, keys.size)})
+    df = (
+        spark.createDataFrame(pdf)
+        .repartition(4, "p")
+        .withColumn("pid", F.spark_partition_id())
+        .cache()
+    )
+    rows = df.toPandas()
+    assert rows["pid"].nunique() > 1
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "500")
+    try:
+        out = {r["k"]: r for r in tdigest_agg(df, "v", by=["k"]).collect()}
+    finally:
+        spark.conf.set(key, old)
+        df.unpersist()
+
+    assert set(out) == set(sizes)
+    for k, grp in rows.groupby("k"):
+        partials = []
+        for _, part in grp.groupby("pid"):
+            v = part["v"].to_numpy()
+            partials.append(TDigest.from_values(v[~np.isnan(v)]))
+        want = TDigest.merge_all(partials)
+        want.compress()
+        got = serde.decode(bytes(out[k]["digest"]))
+        np.testing.assert_array_equal(got.centroids()[1], want.centroids()[1])
+        assert out[k]["n_rows"] == len(grp)
+        assert out[k]["total_weight"] == want.count == int(grp["v"].notna().sum())
