@@ -1,10 +1,17 @@
-"""Shared Arrow-batch helpers for the partial-aggregation builders."""
+"""Shared Arrow-batch helpers, and the stage-1 driver every partial
+builder runs on (``partial_stage``)."""
 
 from __future__ import annotations
+
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructField, StructType
+
+ROWS_COL = "n_rows"
 
 
 def poly_hash_batch(
@@ -36,27 +43,19 @@ def poly_hash_batch(
 
 
 def group_codes(batch: pa.RecordBatch, n_by: int):
-    """Dictionary-encode the first ``n_by`` columns of the batch into one
-    combined mixed-radix row code, and resolve each distinct code back to
-    its python key tuple (NULL keys supported via the -1 sentinel).
+    """Group the rows of a batch by its first ``n_by`` columns.
 
-    Returns (combined int64 array | None, uniq_codes, row_counts, keys,
-    row_order): ``combined``/``row_order`` are None when ``n_by == 0``
-    (single implicit group).  ``row_order`` is the STABLE argsort of the
-    codes — kernels pre-sort their value columns with it once and slice
-    contiguous [offset, offset+count) runs per group, instead of an
-    O(groups x rows) boolean mask per group; stability keeps the
-    within-group row order identical to the masked form.
+    The key columns are dictionary-encoded by Arrow into one combined
+    mixed-radix row code (NULL keys via the -1 sentinel).  Returns
+    ``(row_order, row_counts, keys, first_rows)``: one entry of
+    ``row_counts``/``keys``/``first_rows`` per distinct code, in code
+    order, ``keys`` as exact python tuples.  ``row_order`` is the STABLE
+    argsort of the codes (so each group's rows keep their order and form
+    one contiguous run), or None when the batch is one group.
     """
     n = batch.num_rows
     if n_by == 0:
-        return (
-            None,
-            np.zeros(1, dtype=np.int64),
-            np.array([n], dtype=np.int64),
-            [()],
-            None,
-        )
+        return None, np.array([n], dtype=np.int64), [()], None
     combined = np.zeros(n, dtype=np.int64)
     mult = 1
     for j in range(n_by - 1, -1, -1):
@@ -69,13 +68,100 @@ def group_codes(batch: pa.RecordBatch, n_by: int):
         combined += (idx + 1) * mult
         mult *= len(enc.dictionary) + 1
     uniq_codes, row_counts = np.unique(combined, return_counts=True)
-    row_order = np.argsort(combined, kind="stable")
-    first_rows = row_order[
-        np.searchsorted(combined[row_order], uniq_codes, side="left")
-    ]
+    if uniq_codes.size == 1:
+        row_order, first_rows = None, np.zeros(1, dtype=np.int64)
+    else:
+        row_order = np.argsort(combined, kind="stable")
+        first_rows = row_order[
+            np.searchsorted(combined[row_order], uniq_codes, side="left")
+        ]
     # one Arrow take + to_pylist per key column (exact python values)
     take = pa.array(first_rows, type=pa.int64())
     keys = list(
         zip(*(batch.column(j).take(take).to_pylist() for j in range(n_by)))
     )
-    return combined, uniq_codes, row_counts, keys, row_order
+    return row_order, row_counts, keys, first_rows
+
+
+def _arrow_schema(schema: StructType) -> pa.Schema:
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in schema])
+
+
+def partial_stage(
+    pruned: DataFrame,
+    by: Sequence[str],
+    value_fields: Sequence[StructField],
+    new_builder: Callable[[], object],
+) -> DataFrame:
+    """Stage 1 of every two-phase aggregate: one partial row per (input
+    partition x group), built by ``mapInArrow`` with no shuffle.
+
+    ``pruned`` holds the ``by`` columns first, then the columns the
+    builder reads.  The output is the ``by`` fields + ``value_fields``.
+
+    Each task calls ``new_builder()`` once and then:
+
+    * ``builder.add(gids, offsets, cols)`` once per Arrow batch: ``cols``
+      are the batch's non-key columns (Arrow arrays), row-sorted so that
+      group ``gids[k]``'s rows are ``[offsets[k], offsets[k+1])``.  Group
+      ids number the task's groups ``0, 1, ...`` in order of first
+      appearance.  An id can own two segments of one batch when two keys
+      are equal in Python but not in Arrow (0.0 and -0.0).
+    * ``builder.finish(n_groups)`` once, returning one array per value
+      field with one entry per group id, except ``n_rows``: when
+      ``value_fields`` has an ``n_rows`` field it is filled in here with
+      each group's input row count.
+
+    Key columns are Arrow ``take``s of each group's first row, so key
+    values stay exact for every type, as in ``_tree.grouped_merge``.
+    """
+    n_by = len(by)
+    schema = StructType(pruned.schema.fields[:n_by] + list(value_fields))
+    arrow_out = _arrow_schema(schema)
+    value_names = [f.name for f in value_fields if f.name != ROWS_COL]
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        builder = new_builder()
+        gid_of: dict[tuple, int] = {}  # group key -> group id
+        key_rows = []  # per batch: key columns of its newly seen groups
+        rows_seen = []  # per batch: (gids, row counts)
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            row_order, row_counts, keys, first_rows = group_codes(batch, n_by)
+            gids = np.empty(len(keys), dtype=np.int64)
+            new = []
+            for i, k in enumerate(keys):
+                g = gid_of.get(k)
+                if g is None:
+                    g = gid_of[k] = len(gid_of)
+                    new.append(i)
+                gids[i] = g
+            if n_by and new:
+                take = pa.array(first_rows[new], type=pa.int64())
+                key_rows.append([batch.column(j).take(take) for j in range(n_by)])
+            rows_seen.append((gids, row_counts))
+            offsets = np.zeros(len(keys) + 1, dtype=np.int64)
+            np.cumsum(row_counts, out=offsets[1:])
+            cols = batch.columns[n_by:]
+            if row_order is not None:
+                take = pa.array(row_order, type=pa.int64())
+                cols = [c.take(take) for c in cols]
+            builder.add(gids, offsets, cols)
+        if not gid_of:
+            return
+        n_groups = len(gid_of)
+        values = dict(zip(value_names, builder.finish(n_groups)))
+        n_rows = np.zeros(n_groups, dtype=np.int64)
+        for gids, counts in rows_seen:
+            np.add.at(n_rows, gids, counts)  # gids may repeat
+        values[ROWS_COL] = pa.array(n_rows, type=pa.int64())
+        arrays = [
+            pa.concat_arrays([r[j] for r in key_rows]).cast(arrow_out.field(j).type)
+            for j in range(n_by)
+        ] + [values[f.name] for f in value_fields]
+        yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
+
+    return pruned.mapInArrow(gen, schema)

@@ -28,7 +28,9 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, FloatType, LongType, StructField, StructType
+from pyspark.sql.types import DoubleType, FloatType, StructField, StructType
+
+from ._batch import ROWS_COL, _arrow_schema
 
 _GKEY = "_gkey"
 # Default to_json truncates timestamps to MILLISECONDS (.SSS) — explicit
@@ -68,7 +70,7 @@ def _group_ids(keys: pa.Array) -> tuple[np.ndarray, int, np.ndarray]:
 def grouped_merge(
     df: DataFrame,
     group_cols: list[str],
-    out_schema: StructType,
+    value_fields: Sequence[StructField],
     merge: TaskMerge,
     n_upstream: int | None = None,
 ) -> DataFrame:
@@ -80,6 +82,11 @@ def grouped_merge(
     ``merge``.  With no group columns every row goes to one partition
     and forms one group.
 
+    The output is ``df``'s ``group_cols`` fields + ``value_fields``.
+    ``merge`` returns the value arrays except ``n_rows``: when
+    ``value_fields`` has it, it is the sum of the input ``n_rows`` per
+    group (as ``_batch.partial_stage`` fills it in stage 1).
+
     Exact-key discipline: group ids come from a JVM-computed JSON
     rendering of the key tuple (injective over distinct key tuples,
     rendered from exact values — a long key beside NULLs never passes
@@ -87,8 +94,10 @@ def grouped_merge(
     ``take``s of each group's first row, so key values stay exact for
     every type (int64 > 2^53, timestamps, decimals).
     """
-    from pyspark.sql.pandas.types import to_arrow_type
-
+    key_set = set(group_cols)
+    out_schema = StructType(
+        [f for f in df.schema.fields if f.name in key_set] + list(value_fields)
+    )
     if group_cols:
         # Float/double group keys: normalize -0.0 to +0.0 BEFORE both
         # the exchange and the JSON rendering.  Spark's own groupBy
@@ -140,11 +149,9 @@ def grouped_merge(
         # case where a grouped exchange would have been elided too
         one = df._jdf.queryExecution().sparkPlan().outputPartitioning()
         dist = df if one.numPartitions() == 1 else df.repartition(1)
-    arrow_out = pa.schema(
-        [pa.field(f.name, to_arrow_type(f.dataType)) for f in out_schema.fields]
-    )
-    key_set = set(group_cols)
-    value_names = [f.name for f in out_schema.fields if f.name not in key_set]
+    arrow_out = _arrow_schema(out_schema)
+    value_names = [f.name for f in value_fields if f.name != ROWS_COL]
+    sum_rows = len(value_names) < len(value_fields)
 
     def run(batches):
         batches = [b for b in batches if b.num_rows]
@@ -157,11 +164,13 @@ def grouped_merge(
             gids = np.zeros(table.num_rows, dtype=np.int64)
             n_groups, first = 1, np.zeros(1, dtype=np.int64)
         values = dict(zip(value_names, merge(table, gids, n_groups)))
+        if sum_rows:
+            values[ROWS_COL] = group_sum(table.column(ROWS_COL), gids, n_groups)
         take = pa.array(first, type=pa.int64())
         arrays = [
             table.column(f.name).chunk(0).take(take).cast(f.type)
             if f.name in key_set
-            else values[f.name]
+            else values[f.name].cast(f.type)
             for f in arrow_out
         ]
         yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
@@ -172,20 +181,21 @@ def grouped_merge(
 def tree_merge(
     partials: DataFrame,
     by: Sequence[str],
-    schema: StructType,
+    value_fields: Sequence[StructField],
     merge: TaskMerge,
     fanin: int | None,
     n_units: int | None = None,
 ) -> DataFrame:
     """Merge partial rows to one row per group.
 
-    ``schema`` is ``by`` columns + value columns.  ``merge(table, gids,
-    n_groups)`` is a task-level merge: it gets every partial row of one
-    reducer task as an Arrow table plus each row's group id (``0 ..
+    The output is the ``by`` columns + ``value_fields``.  ``merge(table,
+    gids, n_groups)`` is a task-level merge: it gets every partial row of
+    one reducer task as an Arrow table plus each row's group id (``0 ..
     n_groups-1``, numbered in order of first row) and returns one Arrow
-    array per value column with one entry per group id.  Key columns are
-    filled in by the tree (exact Arrow values).  ``fanin=None`` disables
-    salting (single-level merge).
+    array per value column (``n_rows`` excepted, see ``grouped_merge``)
+    with one entry per group id.  Key columns are filled in by the tree
+    (exact Arrow values).  ``fanin=None`` disables salting (single-level
+    merge).
 
     ``n_units``: upper bound on partials per group.  The default (None)
     assumes the stage-1 invariant — at most one partial per (input
@@ -209,9 +219,6 @@ def tree_merge(
     else:
         n_parts = partials.rdd.getNumPartitions()
     if fanin:
-        salted_schema = StructType(
-            [StructField("_salt", LongType(), False)] + list(schema.fields)
-        )
         first = True
         while n_parts > fanin:
             n_salts = int(math.ceil(n_parts / fanin))
@@ -235,7 +242,7 @@ def tree_merge(
             partials = grouped_merge(
                 partials.withColumn("_salt", salt),
                 by + ["_salt"],
-                salted_schema,
+                value_fields,
                 merge,
                 n_upstream=n_parts,
             )
@@ -247,7 +254,7 @@ def tree_merge(
     return grouped_merge(
         partials,
         by,
-        schema,
+        value_fields,
         merge,
         n_upstream=n_parts if fanin else None,
     )

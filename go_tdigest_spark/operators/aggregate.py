@@ -12,11 +12,13 @@ bounded no matter how many input partitions (or how skewed the group
 distribution) — digest mergeability (tdigest.go:262-272) makes tree
 depth irrelevant to correctness.
 
-Stage 1 is Arrow-native end to end: group keys are dictionary-encoded by
-Arrow, token arrays are flattened zero-copy (``ListArray.flatten``), and
-group partitioning is one stable radix argsort per batch — no per-row
-Python, no pandas materialization (the ``input_hint`` contract).  Both
-stages work on all of a task's groups at once: one segmented k-sweep
+Stage 1 runs on the stage-1 driver every partial builder shares
+(``_batch.partial_stage``: Arrow-encoded group keys, one stable argsort
+per batch, exact key columns); the t-digest supplies only a task-level
+builder (``_DigestBuilder``), which flattens token arrays zero-copy
+(``ListArray.flatten``) — no per-row Python, no pandas materialization
+(the ``input_hint`` contract).  Both stages work on all of a task's
+groups at once: one segmented k-sweep
 (``core._ksweep_segments``) builds or merges every digest, and
 ``serde.encode_many`` / ``decode_many`` convert the whole digest column,
 so Python cost per task does not grow with the group count.
@@ -32,7 +34,8 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from functools import partial, reduce
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -44,38 +47,58 @@ from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..core import _merge_segments, _SegmentedBuild
 from .. import serde
+from ._batch import ROWS_COL, partial_stage
 from ._tree import _KEY_JSON_OPTS, group_sum, tree_merge
 
 DIGEST_COL = "digest"
-ROWS_COL = "n_rows"
 WEIGHT_COL = "total_weight"
 
 
-def _group_fields(df: DataFrame, by: Sequence[str]) -> list[StructField]:
-    by_set = set(by)
-    fields = [f for f in df.schema.fields if f.name in by_set]
-    missing = by_set - {f.name for f in fields}
-    if missing:
-        raise ValueError(f"group columns not in DataFrame: {sorted(missing)}")
-    by_index = {name: i for i, name in enumerate(by)}
-    return sorted(fields, key=lambda f: by_index[f.name])
+_PARTIAL_FIELDS = [
+    StructField(DIGEST_COL, BinaryType(), False),
+    StructField(ROWS_COL, LongType(), False),
+    StructField(WEIGHT_COL, LongType(), False),
+]
 
 
-def _partial_schema(df: DataFrame, by: Sequence[str]) -> StructType:
-    return StructType(
-        _group_fields(df, by)
-        + [
-            StructField(DIGEST_COL, BinaryType(), False),
-            StructField(ROWS_COL, LongType(), False),
-            StructField(WEIGHT_COL, LongType(), False),
+class _DigestBuilder:
+    """Task-level t-digest builder for ``_batch.partial_stage``: one
+    ``_SegmentedBuild.add`` per batch and one ``encode_many`` per task.
+    Values keep their native dtype — the flush sorts int32 2x cheaper
+    than float64, and dense integer groups take the bincount route."""
+
+    def __init__(self, compression: float, explode_arrays: bool):
+        self.build = _SegmentedBuild(compression)
+        self.explode_arrays = explode_arrays
+
+    def add(self, gids, offsets, cols) -> None:
+        col, *weight = cols
+        w = (
+            weight[0].to_numpy(zero_copy_only=False).astype(np.int64)
+            if weight
+            else None
+        )
+        if self.explode_arrays:
+            # token arrays: zero-copy flatten; segment bounds come from
+            # the list lengths
+            lens = pc.list_value_length(col).fill_null(0).to_numpy(
+                zero_copy_only=False
+            )
+            if w is not None:
+                w = np.repeat(w, lens)
+            ends = np.zeros(lens.size + 1, dtype=np.int64)
+            np.cumsum(lens, out=ends[1:])
+            offsets = ends[offsets]
+            col = col.flatten()
+        self.build.add(gids, offsets, col.to_numpy(zero_copy_only=False), w)
+
+    def finish(self, n_groups: int) -> list:
+        means, counts, offsets = self.build.finish(n_groups)
+        cum = np.concatenate(([0], np.cumsum(counts)))
+        return [
+            serde.encode_many(means, counts, offsets, self.build.compression),
+            pa.array(cum[offsets[1:]] - cum[offsets[:-1]], type=pa.int64()),
         ]
-    )
-
-
-def _arrow_schema(schema: StructType) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    return pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in schema])
 
 
 def build_partials(
@@ -99,82 +122,12 @@ def build_partials(
         # a NULL weight would round-trip through NaN->INT64_MIN; rows
         # without a weight are dropped (same semantics as value nulls)
         pruned = pruned.where(F.col(weight_col).isNotNull())
-    schema = _partial_schema(df, by)
-    out_schema = _arrow_schema(schema)
-    value_idx = len(by)
-    weight_idx = len(by) + 1 if weight_col else None
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ._batch import group_codes
-
-        gid_of: dict[tuple, int] = {}  # group key -> group id
-        row_counts_seen = []  # (gids, rows) per batch
-        build = _SegmentedBuild(compression)
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            combined, uniq_codes, row_counts, keys, row_order = group_codes(
-                batch, len(by)
-            )
-            gids = np.array(
-                [gid_of.setdefault(k, len(gid_of)) for k in keys], dtype=np.int64
-            )
-            row_counts_seen.append((gids, row_counts))
-            # ONE stable sort of the rows by group code per batch makes
-            # every group a contiguous segment (stability keeps each
-            # group's row order).  Values keep their native dtype — the
-            # flush sorts int32 2x cheaper than float64, and dense
-            # integer groups take the bincount route.
-            multi = combined is not None and len(uniq_codes) > 1
-            offsets = np.zeros(len(keys) + 1, dtype=np.int64)
-            np.cumsum(row_counts, out=offsets[1:])
-            col = batch.column(value_idx)
-            w = (
-                batch.column(weight_idx).to_numpy(zero_copy_only=False).astype(np.int64)
-                if weight_col
-                else None
-            )
-            if multi and w is not None:
-                w = w[row_order]
-            if explode_arrays:
-                # token arrays: one take of the list column + zero-copy
-                # flatten; segment bounds come from the list lengths
-                if multi:
-                    col = col.take(pa.array(row_order, type=pa.int64()))
-                lens = pc.list_value_length(col).fill_null(0).to_numpy(
-                    zero_copy_only=False
-                )
-                if w is not None:
-                    w = np.repeat(w, lens)
-                ends = np.zeros(lens.size + 1, dtype=np.int64)
-                np.cumsum(lens, out=ends[1:])
-                offsets = ends[offsets]
-                v = col.flatten().to_numpy(zero_copy_only=False)
-            else:
-                v = col.to_numpy(zero_copy_only=False)
-                if multi:
-                    v = v[row_order]
-            build.add(gids, offsets, v, w)
-
-        if gid_of:
-            n_groups = len(gid_of)
-            means, counts, offsets = build.finish(n_groups)
-            n_rows = np.zeros(n_groups, dtype=np.int64)
-            for gids, rows in row_counts_seen:
-                np.add.at(n_rows, gids, rows)  # gids may repeat
-            cum = np.concatenate(([0], np.cumsum(counts)))
-            keys = list(gid_of)  # insertion order = group id order
-            arrays = [
-                pa.array([k[j] for k in keys], type=out_schema.field(j).type)
-                for j in range(len(by))
-            ]
-            arrays.append(serde.encode_many(means, counts, offsets, compression))
-            arrays.append(pa.array(n_rows, type=pa.int64()))
-            arrays.append(pa.array(cum[offsets[1:]] - cum[offsets[:-1]], type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    return pruned.mapInArrow(gen, schema)
+    return partial_stage(
+        pruned,
+        by,
+        _PARTIAL_FIELDS,
+        lambda: _DigestBuilder(compression, explode_arrays),
+    )
 
 
 def _merge_digests(table: pa.Table, gids: np.ndarray, n_groups: int) -> list:
@@ -187,7 +140,6 @@ def _merge_digests(table: pa.Table, gids: np.ndarray, n_groups: int) -> list:
     )
     return [
         serde.encode_many(means, counts, offsets, comp),
-        group_sum(table.column(ROWS_COL), gids, n_groups),
         group_sum(table.column(WEIGHT_COL), gids, n_groups),
     ]
 
@@ -209,16 +161,9 @@ def merge_partials(
     from storage (the <=1-partial-per-partition-per-group invariant does
     not survive the parquet reader's file packing; see _tree.py).
     """
-    by = list(by)
-    schema = StructType(
-        [f for f in partials.schema.fields if f.name in set(by)]
-        + [
-            StructField(DIGEST_COL, BinaryType(), False),
-            StructField(ROWS_COL, LongType(), False),
-            StructField(WEIGHT_COL, LongType(), False),
-        ]
+    return tree_merge(
+        partials, list(by), _PARTIAL_FIELDS, _merge_digests, fanin, n_units=n_units
     )
-    return tree_merge(partials, by, schema, _merge_digests, fanin, n_units=n_units)
 
 
 def tdigest_agg(
@@ -595,6 +540,21 @@ def tdigest_normalize(
     )
 
 
+def _with_level_nulls(
+    schema: StructType, by: list[str], d: DataFrame, present: list[str]
+) -> DataFrame:
+    """One rollup/cube level in the common layout: the ``by`` columns not
+    in ``present`` become typed NULLs, then the digest columns."""
+    cols = [
+        F.col(c)
+        if c in present
+        else F.lit(None).cast(schema[c].dataType).alias(c)
+        for c in by
+    ]
+    cols += [F.col(DIGEST_COL), F.col(ROWS_COL), F.col(WEIGHT_COL)]
+    return d.select(*cols)
+
+
 def _coarse_merge_bound(
     finest: DataFrame, fanin: int | None, n_units_hint: int | None
 ) -> tuple[DataFrame, int | None]:
@@ -647,18 +607,7 @@ def tdigest_cube(
     from itertools import combinations
 
     by = list(by)
-    by_fields = {f.name: f for f in df.schema.fields if f.name in set(by)}
-
-    def with_level_nulls(d: DataFrame, present: list[str]) -> DataFrame:
-        cols = [
-            F.col(c)
-            if c in present
-            else F.lit(None).cast(by_fields[c].dataType).alias(c)
-            for c in by
-        ]
-        cols += [F.col(DIGEST_COL), F.col(ROWS_COL), F.col(WEIGHT_COL)]
-        return d.select(*cols)
-
+    with_level_nulls = partial(_with_level_nulls, df.schema, by)
     finest = tdigest_agg(
         df, value_col, by, compression, weight_col=weight_col,
         explode_arrays=explode_arrays, fanin=fanin,
@@ -668,14 +617,14 @@ def tdigest_cube(
         finest, n_finest = _coarse_merge_bound(
             finest, fanin, finest_groups_hint
         )
-    out = with_level_nulls(finest, by)
+    levels = [with_level_nulls(finest, by)]
     for r in range(len(by) - 1, -1, -1):
         for subset in combinations(by, r):
             level = merge_partials(
                 finest, list(subset), fanin=fanin, n_units=n_finest
             )
-            out = out.unionByName(with_level_nulls(level, list(subset)))
-    return out
+            levels.append(with_level_nulls(level, list(subset)))
+    return reduce(DataFrame.unionByName, levels)
 
 
 def tdigest_rollup(
@@ -705,20 +654,7 @@ def tdigest_rollup(
     count is known to skip the persist+count sizing action.
     """
     by = list(by)
-    by_fields = {f.name: f for f in df.schema.fields if f.name in set(by)}
-
-    def with_level_nulls(d: DataFrame, present: list[str]) -> DataFrame:
-        cols = []
-        for c in by:
-            if c in present:
-                cols.append(F.col(c))
-            else:
-                cols.append(
-                    F.lit(None).cast(by_fields[c].dataType).alias(c)
-                )
-        cols += [F.col(DIGEST_COL), F.col(ROWS_COL), F.col(WEIGHT_COL)]
-        return d.select(*cols)
-
+    with_level_nulls = partial(_with_level_nulls, df.schema, by)
     finest = tdigest_agg(
         df, value_col, by, compression, weight_col=weight_col,
         explode_arrays=explode_arrays, fanin=fanin,
@@ -734,7 +670,4 @@ def tdigest_rollup(
         keys = by[:i]
         cur = merge_partials(cur, keys, fanin=fanin, n_units=n_finest)
         levels.append(with_level_nulls(cur, keys))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    return reduce(DataFrame.unionByName, levels)

@@ -7,12 +7,13 @@ arithmetic — Percentile.scala's formula replicated bit-for-bit) but
 through the library's partial->merge shape instead of the JVM's
 OpenHashMap-of-boxed-doubles aggregation buffer:
 
-  * stage 1 (``mapInArrow``, zero shuffle): per (input partition x
-    group), sort the partition's values with NumPy and emit ONE binary
-    blob of sorted float64 plus nothing else — the same radix-argsort
-    batch grouping as the digest builder (``_batch.group_codes``);
-  * stage 2: hash-repartition the O(partitions x groups) blob rows by
-    group, merge-sort the runs, and interpolate.
+  * stage 1 (zero shuffle): per (input partition x group), one binary
+    blob of the group's values as a sorted float64 run, built on the
+    stage-1 driver every partial builder shares
+    (``_batch.partial_stage``) by ``_SortedRuns``;
+  * stage 2: ``_tree.grouped_merge`` (hash exchange on the group
+    columns, exact keys) with one vectorized task-level merge: decode
+    every run, sort once by (group, value), and interpolate.
 
 Shuffle posture at scale: identical to Spark's own ``percentile`` — the
 per-partition pre-aggregation ships every distinct value to one reducer
@@ -29,10 +30,9 @@ tdigest_agg estimate arm, which also drops value-less groups.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,16 +41,58 @@ from pyspark.sql.types import (
     BinaryType,
     DoubleType,
     StructField,
-    StructType,
 )
 
+from ._batch import partial_stage
+from ._tree import grouped_merge
 
-def _arrow_schema(schema: StructType) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_type
+RUN_COL = "_blob"
 
-    return pa.schema(
-        [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema]
-    )
+
+def _sort_by_group(gids: np.ndarray, values: np.ndarray, n_groups: int):
+    """(values sorted by (group, value), start of each group's run)."""
+    values = values[np.lexsort((values, gids))]
+    starts = np.zeros(n_groups + 1, dtype=np.int64)
+    np.cumsum(np.bincount(gids, minlength=n_groups), out=starts[1:])
+    return values, starts
+
+
+class _SortedRuns:
+    """Task-level builder for ``_batch.partial_stage``: each group's
+    values as one sorted float64 run, packed in a binary blob."""
+
+    def __init__(self) -> None:
+        self.gids: list = []  # group id of every value, per batch
+        self.values: list = []
+
+    def add(self, gids, offsets, cols) -> None:
+        self.gids.append(np.repeat(gids, np.diff(offsets)))
+        self.values.append(
+            cols[0].to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+        )
+
+    def finish(self, n_groups: int) -> list:
+        values, starts = _sort_by_group(
+            np.concatenate(self.gids), np.concatenate(self.values), n_groups
+        )
+        byte_off = 8 * starts
+        if byte_off[-1] >= 1 << 31:
+            raise ValueError("sorted-run column exceeds 2 GiB")
+        return [
+            pa.Array.from_buffers(
+                pa.binary(),
+                n_groups,
+                [None, pa.py_buffer(byte_off.astype(np.int32)), pa.py_buffer(values)],
+            )
+        ]
+
+
+def _decode_runs(runs: pa.BinaryArray) -> tuple[np.ndarray, np.ndarray]:
+    """(all values, values per run) of a column of sorted-run blobs."""
+    _, off_buf, data_buf = runs.buffers()
+    off = np.frombuffer(off_buf, np.int32, len(runs) + 1, 4 * runs.offset)
+    lengths = np.diff(off) // 8
+    return np.frombuffer(data_buf, "<f8", lengths.sum(), off[0]), lengths
 
 
 def exact_percentiles(
@@ -70,139 +112,31 @@ def exact_percentiles(
         raise ValueError("percentile points must be in [0, 1]")
     by = list(by)
     pruned = df.select(*by, value_col).where(F.col(value_col).isNotNull())
-    by_set = set(by)
-    by_fields = [f for f in pruned.schema.fields if f.name in by_set]
-    s1_schema = StructType(
-        by_fields + [StructField("_blob", BinaryType(), False)]
+    partials = partial_stage(
+        pruned, by, [StructField(RUN_COL, BinaryType(), False)], _SortedRuns
     )
-    arrow1 = _arrow_schema(s1_schema)
-    v_idx = len(by)
 
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ._batch import group_codes
-
-        accs: dict[tuple, list] = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            combined, uniq_codes, row_counts, keys, row_order = group_codes(
-                batch, len(by)
-            )
-            v_all = (
-                batch.column(v_idx)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-            )
-            multi = combined is not None and len(uniq_codes) > 1
-            if multi:
-                v_all = v_all[row_order]
-                offsets = np.concatenate(([0], np.cumsum(row_counts)))
-            for g, key in enumerate(keys):
-                if multi:
-                    vals = v_all[offsets[g] : offsets[g + 1]]
-                else:
-                    vals = v_all
-                accs.setdefault(key, []).append(vals)
-        if accs:
-            items = list(accs.items())
-            arrays = []
-            for j in range(len(by)):
-                arrays.append(
-                    pa.array(
-                        [k[j] for k, _ in items], type=arrow1.field(j).type
-                    )
-                )
-            blobs = []
-            for _, chunks in items:
-                run = (
-                    chunks[0].copy()
-                    if len(chunks) == 1
-                    else np.concatenate(chunks)
-                )
-                run.sort()
-                blobs.append(run.tobytes())
-            arrays.append(pa.array(blobs, type=pa.binary()))
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow1)
-
-    partials = pruned.mapInArrow(build, s1_schema)
-    out_schema = StructType(
-        by_fields + [StructField(out_col, ArrayType(DoubleType()), False)]
-    )
-    arrow_out = _arrow_schema(out_schema)
-    out_cols = [f.name for f in out_schema.fields]
-    key_cols = [f.name for f in by_fields]
-
-    def interpolate(sorted_vals: np.ndarray) -> list[float]:
-        n = sorted_vals.size
-        pos = qarr * (n - 1)
+    def merge(table: pa.Table, gids: np.ndarray, n_groups: int) -> list:
+        values, lengths = _decode_runs(table.column(RUN_COL).chunk(0))
+        values, starts = _sort_by_group(
+            np.repeat(gids, lengths), values, n_groups
+        )
+        # Spark Percentile.scala at pos = q * (n - 1) within each group:
+        # (higher - pos) * lowerValue + (pos - lower) * higherValue, the
+        # exact value when higher == lower
+        pos = qarr * (np.diff(starts) - 1)[:, None]
         lo = np.floor(pos).astype(np.int64)
         hi = np.ceil(pos).astype(np.int64)
-        # Spark Percentile.scala: (higher - position) * lowerValue +
-        # (position - lower) * higherValue, exact value when hi == lo
-        res = np.where(
-            hi == lo,
-            sorted_vals[lo],
-            (hi - pos) * sorted_vals[lo] + (pos - lo) * sorted_vals[hi],
-        )
-        return [float(v) for v in res]
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        runs = [np.frombuffer(b, dtype=np.float64) for b in pdf["_blob"]]
-        allv = runs[0] if len(runs) == 1 else np.concatenate(runs)
-        allv = np.sort(allv)
-        head = [pdf[c].iloc[0] for c in key_cols]
-        return pd.DataFrame([head + [interpolate(allv)]], columns=out_cols)
-
-    if not by:
-        return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-            lambda pdf: merge_fn(pdf), out_schema
-        )
-
-    # same exact-key / co-location discipline as _tree.grouped_merge:
-    # hash exchange on the group columns (AQE sizes it from the actual
-    # blob bytes), JSON-keyed pandas split so int64/timestamp keys are
-    # never coerced through lossy float64
-    gkey = "_gkey"
-    dist = partials.repartition(*[F.col(c) for c in by]).withColumn(
-        gkey,
-        F.to_json(
-            F.struct(*[F.col(c) for c in by]),
-            {
-                "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-                "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-            },
-        ),
-    )
-    in_fields = dist.schema.fields
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        chunks = []
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cols = {}
-            for i, f in enumerate(in_fields):
-                col = batch.column(i)
-                if f.name in by_set:
-                    cols[f.name] = pd.Series(col.to_pylist(), dtype=object)
-                else:
-                    cols[f.name] = col.to_pandas()
-            chunks.append(pd.DataFrame(cols))
-        if not chunks:
-            return
-        whole = (
-            chunks[0]
-            if len(chunks) == 1
-            else pd.concat(chunks, ignore_index=True)
-        )
-        outs = [
-            merge_fn(grp.drop(columns=[gkey]))
-            for _, grp in whole.groupby(gkey, dropna=False, sort=False)
-        ]
-        if outs:
-            out_pdf = pd.concat(outs, ignore_index=True)
-            yield pa.RecordBatch.from_pandas(
-                out_pdf, schema=arrow_out, preserve_index=False
+        v_lo = values[starts[:-1, None] + lo]
+        v_hi = values[starts[:-1, None] + hi]
+        res = np.where(hi == lo, v_lo, (hi - pos) * v_lo + (pos - lo) * v_hi)
+        return [
+            pa.ListArray.from_arrays(
+                np.arange(0, res.size + 1, qarr.size, dtype=np.int32),
+                res.ravel(),
             )
+        ]
 
-    return dist.mapInArrow(run, out_schema)
+    return grouped_merge(
+        partials, by, [StructField(out_col, ArrayType(DoubleType()), False)], merge
+    )

@@ -1,6 +1,9 @@
 """Two-phase Spark aggregation for the auxiliary sketches (HLL / Bloom /
-CMS) — the same partial -> merge deployment as the t-digest, sharing one
-generic mapInArrow builder.
+CMS / KLL / Misra-Gries / Theta / Frequent Directions) — the same
+partial -> merge deployment as the t-digest: stage 1 runs on the shared
+stage-1 driver (``_batch.partial_stage``) with a per-group adapter
+(``_PerGroupBuilder``) around each sketch's ``update``, and the merge
+rides ``_tree.tree_merge`` with each sketch's own ``merge``.
 
 Values are hashed JVM-side with ``xxhash64`` before entering Python, so
 probe-side hashing (Bloom membership joins, CMS point queries) uses the
@@ -9,12 +12,11 @@ identical Spark expression and parity is structural.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Sequence
+from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -25,7 +27,6 @@ from pyspark.sql.types import (
     DoubleType,
     LongType,
     StructField,
-    StructType,
 )
 
 from ..sketches import (
@@ -36,6 +37,7 @@ from ..sketches import (
     MisraGries,
     ThetaSketch,
 )
+from ._batch import ROWS_COL, partial_stage
 
 
 def _hash_cols(cols: Sequence[str], seed_salt: int = 0):
@@ -57,19 +59,53 @@ def _notnull_cond(cols: Sequence[str]):
     return cond
 
 
+_PARTIAL_FIELDS = [
+    StructField("sketch", BinaryType(), False),
+    StructField(ROWS_COL, LongType(), False),
+]
+
+
+class _PerGroupBuilder:
+    """Task-level builder for ``_batch.partial_stage`` over the sketches
+    that update one group at a time: one sketch per group id, updated
+    with each of its row segments in order."""
+
+    def __init__(self, make_sketch, update, to_arrays):
+        self.make_sketch = make_sketch
+        self.update = update
+        self.to_arrays = to_arrays
+        self.sketches: list = []
+
+    def add(self, gids, offsets, cols) -> None:
+        arrays = self.to_arrays(cols)
+        for g, lo, hi in zip(
+            gids.tolist(), offsets[:-1].tolist(), offsets[1:].tolist()
+        ):
+            if g == len(self.sketches):  # ids are handed out in order
+                self.sketches.append(self.make_sketch())
+            self.update(self.sketches[g], [a[lo:hi] for a in arrays])
+
+    def finish(self, n_groups: int) -> list:
+        return [pa.array([s.to_bytes() for s in self.sketches], type=pa.binary())]
+
+
+def _update_hashes(sketch, arrays: list[np.ndarray]) -> None:
+    sketch.update_hashes(*arrays)
+
+
 def _generic_partials(
     df: DataFrame,
     by: Sequence[str],
-    hash_exprs: list[Column],
+    inputs: list[Column],
     make_sketch: Callable[[], object],
-    update: Callable[[object, list[np.ndarray]], None],
+    notnull_cols: Sequence[str],
+    update: Callable[[object, list[np.ndarray]], None] = _update_hashes,
     weight_col: str | None = None,
-    notnull_cols: Sequence[str] = (),
-    value_cols: Sequence[str] = (),
     batch_values: Callable | None = None,
 ) -> DataFrame:
-    """Stage 1: one sketch per (partition x group), built from one or
-    more pre-hashed int64 columns.
+    """Stage 1: one sketch per (partition x group), updated with the
+    values of the ``inputs`` columns (pre-hashed int64 for most
+    sketches), then the weights.
 
     ``notnull_cols``: rows with a NULL in any of these are dropped before
     hashing — xxhash64(NULL) returns the seed, which would otherwise
@@ -77,18 +113,13 @@ def _generic_partials(
     so we match it).  NULL weights are dropped too (NaN->int64 is
     INT64_MIN and silently corrupts counters).
 
-    ``value_cols`` + ``batch_values``: RAW-value mode for sketches that
-    consume something other than pre-hashed scalars (Frequent
-    Directions eats embedding matrices).  The named columns are
-    projected verbatim and ``batch_values(batch, by_len, n_rows)``
-    returns the row-aligned arrays handed to ``update`` — everything
-    else (group slicing, accumulation, emission) is this one shared
-    code path, so a fix here reaches every sketch.
+    ``batch_values(cols)`` replaces the default numpy conversion of the
+    (group-sorted) Arrow input columns for sketches that consume
+    something other than scalars (Frequent Directions eats embedding
+    matrices).  Grouping, slicing and emission are the stage-1 driver
+    every partial builder shares (``_batch.partial_stage``).
     """
     by = list(by)
-    if batch_values is not None and hash_exprs:
-        raise ValueError("pass hash_exprs or batch_values, not both")
-    n_h = len(hash_exprs)
     cond = _notnull_cond(
         list(notnull_cols) + ([weight_col] if weight_col else [])
     )
@@ -96,90 +127,28 @@ def _generic_partials(
         df = df.where(cond)
     proj = (
         [F.col(c) for c in by]
-        + [e.alias(f"_h{i}") for i, e in enumerate(hash_exprs)]
-        + [F.col(c).alias(f"_v{i}") for i, c in enumerate(value_cols)]
+        + [e.alias(f"_h{i}") for i, e in enumerate(inputs)]
         + ([F.col(weight_col).alias("_w")] if weight_col else [])
     )
-    pruned = df.select(*proj)
-    by_fields = [f for f in pruned.schema.fields if f.name in set(by)]
-    schema = StructType(
-        by_fields
-        + [
-            StructField("sketch", BinaryType(), False),
-            StructField("n_rows", LongType(), False),
-        ]
-    )
-    from pyspark.sql.pandas.types import to_arrow_type
+    n_in = len(inputs)
 
-    out_schema = pa.schema(
-        [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema]
-    )
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ._batch import group_codes
-
-        accs: dict[tuple, list] = {}
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            combined, uniq, counts, keys, row_order = group_codes(
-                batch, len(by)
-            )
-            if batch_values is not None:
-                hs = batch_values(batch, len(by), n)
-            else:
-                hs = [
-                    batch.column(len(by) + i).to_numpy(zero_copy_only=False)
-                    for i in range(n_h)
-                ]
-            w = (
-                batch.column(len(by) + n_h + len(value_cols))
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-                if weight_col
-                else None
-            )
-            # one stable sort per batch + contiguous slices per group
-            # (not an O(groups x rows) boolean mask per group)
-            multi = combined is not None and len(uniq) > 1
-            if multi:
-                hs = [h[row_order] for h in hs]
-                w = w[row_order] if w is not None else None
-                offsets = np.concatenate(([0], np.cumsum(counts))).astype(
-                    np.int64
-                )
-            for g, (key, cnt) in enumerate(zip(keys, counts)):
-                acc = accs.get(key)
-                if acc is None:
-                    acc = [make_sketch(), 0]
-                    accs[key] = acc
-                sel = (
-                    slice(offsets[g], offsets[g + 1])
-                    if multi
-                    else slice(None)
-                )
-                cols = [h[sel] for h in hs]
-                if w is not None:
-                    cols.append(w[sel])
-                update(acc[0], cols)
-                acc[1] += int(cnt)
-        if accs:
-            arrays = []
-            items = list(accs.items())
-            for j in range(len(by)):
-                arrays.append(
-                    pa.array(
-                        [k[j] for k, _ in items], type=out_schema.field(j).type
-                    )
-                )
+    def to_arrays(cols: list) -> list:
+        if batch_values is not None:
+            arrays = batch_values(cols[:n_in])
+        else:
+            arrays = [c.to_numpy(zero_copy_only=False) for c in cols[:n_in]]
+        if weight_col:
             arrays.append(
-                pa.array([a[0].to_bytes() for _, a in items], type=pa.binary())
+                cols[n_in].to_numpy(zero_copy_only=False).astype(np.int64)
             )
-            arrays.append(pa.array([a[1] for _, a in items], type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+        return arrays
 
-    return pruned.mapInArrow(gen, schema)
+    return partial_stage(
+        df.select(*proj),
+        by,
+        _PARTIAL_FIELDS,
+        lambda: _PerGroupBuilder(make_sketch, update, to_arrays),
+    )
 
 
 def _merge_stage(
@@ -200,16 +169,7 @@ def _merge_stage(
     through any merge tree (pinned in tests) — do not assume bitwise
     reproducibility across partition counts for those two.
     """
-    from ._tree import group_sum, tree_merge
-
-    by = list(by)
-    schema = StructType(
-        [f for f in partials.schema.fields if f.name in set(by)]
-        + [
-            StructField("sketch", BinaryType(), False),
-            StructField("n_rows", LongType(), False),
-        ]
-    )
+    from ._tree import tree_merge
 
     def merge(table: pa.Table, gids: np.ndarray, n_groups: int) -> list:
         # each sketch's own merge(), folded per group in row order
@@ -217,12 +177,11 @@ def _merge_stage(
         for g, b in zip(gids.tolist(), table.column("sketch").to_pylist()):
             s = decode(b)
             acc[g] = s if acc[g] is None else acc[g].merge(s)
-        return [
-            pa.array([s.to_bytes() for s in acc], type=pa.binary()),
-            group_sum(table.column("n_rows"), gids, n_groups),
-        ]
+        return [pa.array([s.to_bytes() for s in acc], type=pa.binary())]
 
-    return tree_merge(partials, by, schema, merge, fanin, n_units=n_units)
+    return tree_merge(
+        partials, list(by), _PARTIAL_FIELDS, merge, fanin, n_units=n_units
+    )
 
 
 # ------------------------------------------------------------------ HLL
@@ -233,14 +192,7 @@ def hll_partials(
 ) -> DataFrame:
     """Stage 1 only (one HLL per partition x group) — the building block
     for batch aggregation and streaming append-partials alike."""
-    return _generic_partials(
-        df,
-        by,
-        [_hash_cols(cols)],
-        lambda: HLL(p),
-        lambda s, c: s.update_hashes(c[0]),
-        notnull_cols=cols,
-    )
+    return _generic_partials(df, by, [_hash_cols(cols)], lambda: HLL(p), cols)
 
 
 def hll_agg(
@@ -394,8 +346,7 @@ def bloom_partials(
         by,
         [_hash_cols(cols), _hash_cols(cols, seed_salt=1)],
         lambda: BloomFilter(n_bits, k),
-        lambda s, c: s.update_hashes(c[0], c[1]),
-        notnull_cols=cols,
+        cols,
     )
 
 
@@ -511,8 +462,8 @@ def kll_partials(
         by,
         [v],
         lambda: KLL(k),
-        lambda s, c: s.update(c[0]),
-        notnull_cols=[value_col],
+        [value_col],
+        update=lambda s, c: s.update(c[0]),
     )
 
 
@@ -587,12 +538,7 @@ def mg_partials(
 ) -> DataFrame:
     """Stage 1 only — batch building block and streaming partials_fn."""
     return _generic_partials(
-        df,
-        by,
-        [_hash_cols(cols)],
-        lambda: MisraGries(k),
-        lambda s, c: s.update_hashes(c[0]),
-        notnull_cols=cols,
+        df, by, [_hash_cols(cols)], lambda: MisraGries(k), cols
     )
 
 
@@ -793,11 +739,8 @@ def cms_partials(
         by,
         [_hash_cols(cols)],
         lambda: CountMinSketch(d, w),
-        (lambda s, c: s.update_hashes(c[0], c[1]))
-        if weight_col
-        else (lambda s, c: s.update_hashes(c[0])),
+        cols,
         weight_col=weight_col,
-        notnull_cols=cols,
     )
 
 
@@ -857,8 +800,8 @@ def fd_partials(
     """Stage 1 for the Frequent Directions matrix sketch: one FD per
     (partition x group) over an ``array<float|double>`` embedding
     column.  Unlike the hashed-scalar sketches this consumes the raw
-    vectors, so it rides _generic_partials' raw-value mode (one shared
-    group-slice/accumulate/emit path for every sketch); ``dim`` is the
+    vectors, so it passes _generic_partials a ``batch_values`` (the
+    grouping/emission path is the one every sketch shares); ``dim`` is the
     fixed-width contract, validated per batch by the shared _vec_matrix
     guard.  NULL vectors are dropped (matching count(vec) semantics);
     rows with non-finite values fail loudly in the kernel."""
@@ -868,14 +811,11 @@ def fd_partials(
     return _generic_partials(
         df,
         by,
-        hash_exprs=[],
-        make_sketch=lambda: FrequentDirections(ell, dim),
-        update=lambda fd, cols: fd.update(cols[0]),
-        notnull_cols=[vec_col],
-        value_cols=[vec_col],
-        batch_values=lambda batch, by_len, n: [
-            _vec_matrix(batch.column(by_len), n, dim)
-        ],
+        [F.col(vec_col)],
+        lambda: FrequentDirections(ell, dim),
+        [vec_col],
+        update=lambda fd, c: fd.update(c[0]),
+        batch_values=lambda cols: [_vec_matrix(cols[0], len(cols[0]), dim)],
     )
 
 
@@ -992,12 +932,7 @@ def theta_partials(
     second cohort built with the same ``cols`` shape is directly
     algebra-compatible)."""
     return _generic_partials(
-        df,
-        by,
-        [_hash_cols(cols)],
-        lambda: ThetaSketch(k),
-        lambda s, c: s.update_hashes(c[0]),
-        notnull_cols=cols,
+        df, by, [_hash_cols(cols)], lambda: ThetaSketch(k), cols
     )
 
 

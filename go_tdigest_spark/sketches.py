@@ -300,7 +300,8 @@ class KLL:
     Complements the t-digest (the library's primary quantile sketch,
     north rule names both): KLL gives *worst-case* rank-error guarantees
     on any distribution, t-digest gives tighter tail accuracy.  Same
-    deployment shape: per-partition partials via _generic_partials,
+    deployment shape: per-partition partials via the shared stage-1 driver
+    (``_batch.partial_stage``, through ``sketch_agg._generic_partials``),
     associative merge, tree reduction.
 
     Implementation notes:

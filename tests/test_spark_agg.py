@@ -380,7 +380,10 @@ def test_grouped_merge_exotic_keys(spark):
     """Exact-key discipline edge cases: int64 extremes, JSON-hostile
     unicode strings (quotes, backslashes, braces), the literal string
     'null' vs a true NULL — each must stay its own group with exact
-    counts and key values through the salted merge tree."""
+    counts and key values through stage 1 and the salted merge tree,
+    for the t-digest, a per-group sketch (HLL) and exact_percentiles."""
+    from go_tdigest_spark.operators import exact_percentiles, hll_agg
+
     lkeys = [(-(1 << 63)), (1 << 63) - 1, None]
     skeys = ['he said "hi"', "back\\slash", "{\"j\":1}", "null", None]
     rows = []
@@ -398,6 +401,17 @@ def test_grouped_merge_exotic_keys(spark):
         assert out[(k, "s")] == 5
     for s in skeys:
         assert out[(0, s)] == 5
+    hll = {(r["k"], r["s"]): r["n_rows"] for r in
+           hll_agg(df, ["v"], by=["k", "s"], fanin=2).collect()}
+    assert hll == out
+    # each group's 5 values are base + 0..4, so the median is base + 2
+    med = {(r["k"], r["s"]): r["_pb"] for r in
+           exact_percentiles(df, "v", [0.5], by=["k", "s"]).collect()}
+    assert med == {
+        key: [float(v + 2)]
+        for key, v in [((k, "s"), i * 100) for i, k in enumerate(lkeys)]
+        + [((0, s), 1000 + i * 100) for i, s in enumerate(skeys)]
+    }
 
 
 def test_parquet_row_count_single_file_and_directory(tmp_path):
@@ -1113,6 +1127,19 @@ def test_tree_merge_negative_zero_group_key(spark):
     assert zero[0]["n_rows"] == 100  # both zero groups' rows merged
     d = serde.decode(bytes(zero[0]["digest"]))
     assert d.count == 100
+    # exact_percentiles too: one zero group, with Spark percentile()'s
+    # value over both zeros' rows
+    from go_tdigest_spark.operators import exact_percentiles
+
+    got = exact_percentiles(df, "v", [0.5], by=["g"]).collect()
+    want = df.groupBy("g").agg(
+        F.expr("percentile(v, array(0.5D))").alias("_pb")
+    ).collect()
+    assert sorted((r["g"], r["_pb"]) for r in got) == sorted(
+        (r["g"], r["_pb"]) for r in want
+    )
+    assert [r["_pb"] for r in got if r["g"] == 0.0] == [[74.5]]
+    assert all(math.copysign(1.0, r["g"]) == 1.0 for r in got)
 
 
 def test_annotator_single_row_guards(spark):
