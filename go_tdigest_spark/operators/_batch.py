@@ -13,6 +13,12 @@ from pyspark.sql.types import StructField, StructType
 
 ROWS_COL = "n_rows"
 
+# Stage 1 coalesces an input of at most this many bytes per core (see
+# partial_stage): ~2 s of stage-1 building per core (float t-digests
+# read ~7 MB/s of parquet per core on a 4-core x86 host), against
+# ~0.2 s of fixed cost for every Python task the coalesce saves.
+COALESCE_BYTES_PER_CORE = 16 << 20
+
 
 def poly_hash_batch(
     strings: list[str], base: int = 31, mod: int = 1_000_000_007
@@ -95,11 +101,43 @@ def partial_stage(
     value_fields: Sequence[StructField],
     new_builder: Callable[[], object],
 ) -> DataFrame:
-    """Stage 1 of every two-phase aggregate: one partial row per (input
-    partition x group), built by ``mapInArrow`` with no shuffle.
+    """Stage 1 of every two-phase aggregate: one partial row per
+    (stage-1 task x group), built by ``mapInArrow`` with no shuffle.
 
     ``pruned`` holds the ``by`` columns first, then the columns the
     builder reads.  The output is the ``by`` fields + ``value_fields``.
+
+    An input the plan knows to be small runs in at most one task per
+    core: when its estimated size (the analyzed plan's ``sizeInBytes``;
+    nothing is executed to get it) is at most ``defaultParallelism x
+    COALESCE_BYTES_PER_CORE``, it is coalesced (narrow, no shuffle) to
+    ``defaultParallelism`` partitions before ``mapInArrow``.  A coalesce
+    to more partitions than the input has leaves it as it is.  Every
+    Python task pays a fixed worker start-up cost before it reads a row
+    (PySpark's worker re-reads the ``pyspark.zip`` directory through
+    ``zipimport`` on each task, 0.17-0.23 s of CPU on a 4-core x86
+    host), so the gain is on inputs split into many partitions that each
+    cost little more than that, such as many small files read one per
+    partition.  Larger inputs, and inputs of unknown size (frames built
+    from pandas or an RDD, streaming inputs and their micro-batches),
+    keep their partitions.
+
+    The bound is on size because ``coalesce`` groups neighbouring input
+    partitions by count, not by size, and a file scan lists its
+    partitions largest first: one coalesced task can get the heaviest
+    ones, and the upstream narrow work (scan, filter, projections) runs
+    in the same tasks.  On a 4-core x86 host
+    (``scripts/bench_stage1_shapes.py``), coalescing two 8M-row files
+    and six 1M-row files (190 MB) to 4 tasks put both big files in one
+    task and took a query from 7.1-7.8 s to 9.8-11 s; under the bound an unlucky
+    grouping costs at most about the input's own build time (two 2.5M-
+    and six 250k-row files, 56 MB: 2.6-3.0 s to 3.5-3.8 s).
+
+    ``defaultParallelism`` is read when the plan is built: it is
+    ``spark.default.parallelism`` if set, else the executor cores
+    registered at that moment (at least 2).  Under dynamic allocation it
+    can be 2 right after the session starts, which also shrinks the
+    bound, so only an input of at most 32 MB is then coalesced.
 
     Each task calls ``new_builder()`` once and then:
 
@@ -164,4 +202,8 @@ def partial_stage(
         ] + [values[f.name] for f in value_fields]
         yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
 
+    cores = pruned.sparkSession.sparkContext.defaultParallelism
+    size = pruned._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    if size <= cores * COALESCE_BYTES_PER_CORE:
+        pruned = pruned.coalesce(cores)
     return pruned.mapInArrow(gen, schema)

@@ -1,14 +1,16 @@
 """Shared salted tree-merge for mergeable-sketch partials.
 
 One reduction shape serves every sketch in the library (t-digest, HLL,
-CMS, Bloom, KLL): stage-1 emits one partial row per (input partition x
-group); this helper merges them down to one row per group with *bounded
-reducer fan-in* at every level, which is what keeps a global or hot-key
-merge from funnelling 100k partials into a single python worker.
+CMS, Bloom, KLL): stage-1 emits one partial row per (stage-1 task x
+group), a small input in at most one task per core
+(``_batch.partial_stage``); this helper merges them down to one row per
+group with *bounded reducer fan-in* at every level, which is what keeps
+a global or hot-key merge from funnelling 100k partials into a single
+python worker.
 
 Salt derivation is deterministic at every level (advisor finding,
 round 1): level 0 uses ``spark_partition_id() % n_salts`` — a hard bound
-because each input partition contributes at most one partial per group —
+because each stage-1 partition contributes at most one partial per group —
 and each subsequent level re-buckets the *carried* salt via integer
 division by ``fanin``, so the per-reducer fan-in is exactly ``<= fanin``
 at every level, not just in expectation under hash partitioning.
@@ -198,7 +200,7 @@ def tree_merge(
     merge).
 
     ``n_units``: upper bound on partials per group.  The default (None)
-    assumes the stage-1 invariant — at most one partial per (input
+    assumes the stage-1 invariant — at most one partial per (stage-1
     partition, group), true for the mapInArrow stage-1 output — and
     sizes/salts level 0 by partition id (hard bound).  Partials read
     back FROM STORAGE break that invariant (the parquet reader packs
@@ -231,7 +233,7 @@ def tree_merge(
                 ).cast("long")
             elif first:
                 # hard bound: partition ids 0..P-1 map round-robin onto
-                # salts, and each input partition holds <=1 partial/group
+                # salts, and each stage-1 partition holds <=1 partial/group
                 salt = (F.spark_partition_id() % F.lit(n_salts)).cast("long")
             else:
                 # hard bound: previous level left exactly one row per

@@ -4,13 +4,14 @@ tree merge -> final) over Arrow batches.
 Why not ``groupBy().agg(pandas_udaf)``: PySpark GROUPED_AGG pandas UDAFs
 get no Catalyst partial-aggregation split — whole groups are shuffled to
 a single python worker, which is exactly the skew trap the north rule
-names.  Instead we build one partial digest per (input partition x group)
-with ``mapInArrow`` (zero shuffle — this is the reference's "one digest
-per node" deployment, tdigest.go:3-8), then tree-merge partials through
-salted ``mapInArrow`` levels (``_tree.py``) so a group's fan-in is
-bounded no matter how many input partitions (or how skewed the group
-distribution) — digest mergeability (tdigest.go:262-272) makes tree
-depth irrelevant to correctness.
+names.  Instead we build one partial digest per (stage-1 task x group)
+with ``mapInArrow`` (zero shuffle, a small input in at most one task
+per core — this is the reference's "one digest per node" deployment,
+tdigest.go:3-8), then tree-merge partials through salted
+``mapInArrow`` levels (``_tree.py``) so a group's fan-in is bounded no
+matter how many stage-1 tasks (or how skewed the group distribution) —
+digest mergeability (tdigest.go:262-272) makes tree depth irrelevant to
+correctness.
 
 Stage 1 runs on the stage-1 driver every partial builder shares
 (``_batch.partial_stage``: Arrow-encoded group keys, one stable argsort
@@ -25,7 +26,9 @@ so Python cost per task does not grow with the group count.
 
 Scale notes (100 TB / 1000 executors):
   - stage 1 is embarrassingly parallel and map-side only; its output is
-    ~(partitions x groups) rows of O(compression) bytes each;
+    ~(stage-1 tasks x groups) rows of O(compression) bytes each; only
+    an input under cores x 16 MB is coalesced to one task per core
+    (``_batch.partial_stage``), a larger one keeps its scan partitions;
   - stage 2 shuffles only digests, never raw data; with S salts a hot key
     is spread over S reducers before the final S-way merge;
   - the scan keeps Catalyst pushdown because we ``select``/``where``
@@ -109,7 +112,9 @@ def build_partials(
     weight_col: str | None = None,
     explode_arrays: bool = False,
 ) -> DataFrame:
-    """Stage 1: one digest row per (input partition x group). No shuffle.
+    """Stage 1: one digest row per (stage-1 task x group), a small
+    input in at most one task per core (see ``_batch.partial_stage``).
+    No shuffle.
 
     ``explode_arrays=True`` treats ``value_col`` as array<numeric> and
     digests every element — flattening is Arrow ``ListArray.flatten``
@@ -154,8 +159,11 @@ def merge_partials(
 
     ``fanin`` bounds how many partials any single reducer merges — a hard
     per-level bound at every level (level 0 via partition-id round-robin,
-    later levels via deterministic salt re-bucketing; see _tree.py).  At
-    100k input partitions and fanin=64 that is 100k -> 1563 -> 25 -> final.
+    later levels via deterministic salt re-bucketing; see _tree.py).
+    At 100k stage-1 tasks and fanin=64 that is 100k -> 1563 -> 25 ->
+    final; an input small enough to be coalesced to one task per core
+    (``_batch.partial_stage``) gives 8000 -> 125 -> 2 -> final on 8,000
+    cores.
 
     Pass ``n_units`` = partial row count when the partials were read back
     from storage (the <=1-partial-per-partition-per-group invariant does

@@ -7,10 +7,10 @@ arithmetic — Percentile.scala's formula replicated bit-for-bit) but
 through the library's partial->merge shape instead of the JVM's
 OpenHashMap-of-boxed-doubles aggregation buffer:
 
-  * stage 1 (zero shuffle): per (input partition x group), one binary
-    blob of the group's values as a sorted float64 run, built on the
-    stage-1 driver every partial builder shares
-    (``_batch.partial_stage``) by ``_SortedRuns``;
+  * stage 1 (zero shuffle): per (stage-1 task x group), a small input
+    in at most one task per core, one binary blob of the group's values as a sorted
+    float64 run, built on the stage-1 driver every partial builder
+    shares (``_batch.partial_stage``) by ``_SortedRuns``;
   * stage 2: ``_tree.grouped_merge`` (hash exchange on the group
     columns, exact keys) with one vectorized task-level merge: decode
     every run, sort once by (group, value), and interpolate.

@@ -103,9 +103,10 @@ def _generic_partials(
     weight_col: str | None = None,
     batch_values: Callable | None = None,
 ) -> DataFrame:
-    """Stage 1: one sketch per (partition x group), updated with the
-    values of the ``inputs`` columns (pre-hashed int64 for most
-    sketches), then the weights.
+    """Stage 1: one sketch per (stage-1 task x group), a small input
+    in at most one task per core (``_batch.partial_stage``), updated
+    with the values of the ``inputs`` columns (pre-hashed int64 for
+    most sketches), then the weights.
 
     ``notnull_cols``: rows with a NULL in any of these are dropped before
     hashing — xxhash64(NULL) returns the seed, which would otherwise
@@ -162,8 +163,8 @@ def _merge_stage(
 
     Same salted-level reduction as the t-digest path (_tree.py): without
     it, a global ``cms_agg(by=[])`` at d=5,w=4096 (~160 KB/partial) would
-    funnel ~16 GB into one reducer at 100k input partitions.  HLL/CMS/
-    Bloom merges are exact (register-max / counter-add / bit-or) and
+    funnel ~16 GB into one reducer at 100k stage-1 tasks.  HLL/CMS/Bloom
+    merges are exact (register-max / counter-add / bit-or) and
     byte-identical to a flat merge in any order; KLL and Misra-Gries are
     order-DEPENDENT in their bytes but carry their error guarantees
     through any merge tree (pinned in tests) — do not assume bitwise
@@ -190,7 +191,7 @@ def _merge_stage(
 def hll_partials(
     df: DataFrame, cols: Sequence[str], by: Sequence[str] = (), p: int = 12
 ) -> DataFrame:
-    """Stage 1 only (one HLL per partition x group) — the building block
+    """Stage 1 only (one HLL per stage-1 task x group) — the building block
     for batch aggregation and streaming append-partials alike."""
     return _generic_partials(df, by, [_hash_cols(cols)], lambda: HLL(p), cols)
 
@@ -798,7 +799,7 @@ def fd_partials(
     ell: int = 64,
 ) -> DataFrame:
     """Stage 1 for the Frequent Directions matrix sketch: one FD per
-    (partition x group) over an ``array<float|double>`` embedding
+    (stage-1 task x group) over an ``array<float|double>`` embedding
     column.  Unlike the hashed-scalar sketches this consumes the raw
     vectors, so it passes _generic_partials a ``batch_values`` (the
     grouping/emission path is the one every sketch shares); ``dim`` is the
@@ -927,7 +928,7 @@ def fd_singular_values(sketch: Column | str, k: int) -> Column:
 def theta_partials(
     df: DataFrame, cols: Sequence[str], by: Sequence[str] = (), k: int = 4096
 ) -> DataFrame:
-    """Stage 1: one ThetaSketch per (partition x group) over the tuple
+    """Stage 1: one ThetaSketch per (stage-1 task x group) over the tuple
     ``cols`` (same pre-hashed xxhash64 contract as HLL — a probe or a
     second cohort built with the same ``cols`` shape is directly
     algebra-compatible)."""

@@ -1,9 +1,9 @@
 """Structured Streaming t-digest aggregation.
 
 Design: *append partials, merge on read*.  Each micro-batch runs the
-same stage-1 partial build as the batch path (one digest per partition x
-group per trigger) and appends those rows — with trigger lineage — to a
-parquet state table.  Readers get exact, point-in-time correct digests
+same stage-1 partial build as the batch path (one digest per stage-1
+task x group per trigger) and appends those rows — with trigger
+lineage — to a parquet state table.  Readers get exact, point-in-time correct digests
 by tree-merging the partials.  This is the scale-correct shape for
 streams: state is O(triggers x groups x compression) bytes, appends are
 atomic with the file-commit protocol, there is no read-modify-write

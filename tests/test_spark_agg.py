@@ -6,6 +6,8 @@ tdigest_test.go:284-295) lifted to the distributed setting.
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -317,8 +319,17 @@ def test_salted_merge_bounds_fanin_under_skew(spark):
             "v": np.arange(100_000, dtype=float),
         }
     )
-    df = spark.createDataFrame(pdf).repartition(32)
-    partials = build_partials(df, "v", ["k"])
+    # stage 1 may coalesce a small input to one task per core, so the 32
+    # stage-1 partitions (at most one partial per partition and group)
+    # come from four builds over disjoint row slices of 8 partitions each
+    slices = [
+        build_partials(
+            spark.createDataFrame(pdf.iloc[i::4]).repartition(8), "v", ["k"]
+        )
+        for i in range(4)
+    ]
+    partials = reduce(lambda a, b: a.union(b), slices)
+    assert partials.rdd.getNumPartitions() == 32
     salted = merge_partials(partials, ["k"], fanin=4)
     plan = salted._jdf.queryExecution().executedPlan().toString()
     # every merge level (keyed/salted/global) is one MapInArrow node
@@ -347,6 +358,80 @@ def test_salted_merge_bounds_fanin_under_skew(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         merge_partials(partials, ["k"], fanin=1)
+
+
+def test_stage1_runs_at_most_one_task_per_core(spark):
+    """A small input with more partitions than cores is coalesced
+    before stage 1: one narrow Coalesce node (no Exchange), at most
+    defaultParallelism stage-1 partitions for every partial builder,
+    and the same per-group counts and extremes as a one-partition
+    build.  An input with at most one partition per core, an input
+    larger than cores x COALESCE_BYTES_PER_CORE and an input of unknown
+    size keep their partition counts."""
+    from go_tdigest_spark.operators import exact_percentiles, hll_partials
+    from go_tdigest_spark.operators._batch import COALESCE_BYTES_PER_CORE
+
+    cores = spark.sparkContext.defaultParallelism
+    n = 30_000
+
+    def src(parts):
+        return spark.range(0, n, 1, parts).selectExpr(
+            "id % 7 AS k", "CAST((id * 7919) % 10007 AS DOUBLE) AS v"
+        )
+
+    wide = src(3 * cores)
+    assert wide.rdd.getNumPartitions() == 3 * cores
+    partials = build_partials(wide, "v", ["k"])
+    assert partials.rdd.getNumPartitions() <= cores
+    before = wide._jdf.queryExecution().executedPlan().toString()
+    after = partials._jdf.queryExecution().executedPlan().toString()
+    assert after.count("Coalesce") == before.count("Coalesce") + 1
+    assert after.count("Exchange") == before.count("Exchange") == 0
+    # every stage-1 caller shares the cap
+    assert hll_partials(wide, ["v"], ["k"]).rdd.getNumPartitions() <= cores
+    exact = exact_percentiles(wide, "v", [0.5], by=["k"])
+    assert "Coalesce" in exact._jdf.queryExecution().executedPlan().toString()
+
+    def per_group(parts):
+        out = {}
+        for r in parts.withColumn("c", td_count("digest")).collect():
+            d = serde.decode(bytes(r["digest"]))
+            n_rows, weight, count, lo, hi = out.get(
+                r["k"], (0, 0, 0, np.inf, -np.inf)
+            )
+            out[r["k"]] = (
+                n_rows + r["n_rows"],
+                weight + r["total_weight"],
+                count + int(r["c"]),
+                min(lo, d.quantile(0.0)),
+                max(hi, d.quantile(1.0)),
+            )
+        return out
+
+    one = build_partials(src(1), "v", ["k"])
+    assert one.rdd.getNumPartitions() == 1
+    expect = per_group(one)
+    assert len(expect) == 7
+    assert sum(e[0] for e in expect.values()) == n
+    assert per_group(partials) == expect
+
+    # coalescing to as many partitions as the input has keeps them all
+    fits = build_partials(src(cores), "v", ["k"])
+    assert fits.rdd.getNumPartitions() == cores
+    # an input the plan sizes above the bound is left alone (not run here)
+    big = spark.range(0, 10**9, 1, 3 * cores).selectExpr("id % 7 AS k", "id AS v")
+    big_size = big._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    assert big_size > cores * COALESCE_BYTES_PER_CORE
+    assert build_partials(big, "v", ["k"]).rdd.getNumPartitions() == 3 * cores
+    # so is an input of unknown size
+    pdf = pd.DataFrame({"k": np.arange(n) % 7, "v": np.arange(n, dtype=float)})
+    unsized = spark.createDataFrame(pdf).repartition(3 * cores)
+    assert build_partials(unsized, "v", ["k"]).rdd.getNumPartitions() == 3 * cores
+    # a streaming input (unknown size too) still builds
+    stream = spark.readStream.format("rate").load().selectExpr(
+        "value % 7 AS k", "CAST(value AS DOUBLE) AS v"
+    )
+    assert build_partials(stream, "v", ["k"]).isStreaming
 
 
 def test_grouped_merge_exact_keys_beyond_2_53_with_nulls(spark):
