@@ -152,14 +152,18 @@ def _generic_partials(
     )
 
 
-def _merge_stage(
+def merge_sketches(
     partials: DataFrame,
     by: Sequence[str],
     decode: Callable[[bytes], object],
     fanin: int | None = 64,
     n_units: int | None = None,
 ) -> DataFrame:
-    """Tree-merge sketch partials with bounded reducer fan-in.
+    """Tree-merge sketch partials (``by..., sketch binary, n_rows long``,
+    as every ``*_partials`` builder emits) with bounded reducer fan-in;
+    ``decode`` turns the bytes back into a mergeable sketch.  The
+    generic twin of ``aggregate.merge_partials``, with the same
+    ``n_units`` for partials read back from storage.
 
     Same salted-level reduction as the t-digest path (_tree.py): without
     it, a global ``cms_agg(by=[])`` at d=5,w=4096 (~160 KB/partial) would
@@ -204,7 +208,7 @@ def hll_agg(
     fanin: int | None = 64,
 ) -> DataFrame:
     """Distinct-count sketch of the tuple ``cols`` per group."""
-    return _merge_stage(hll_partials(df, cols, by, p), by, HLL.from_bytes, fanin=fanin)
+    return merge_sketches(hll_partials(df, cols, by, p), by, HLL.from_bytes, fanin=fanin)
 
 
 @pandas_udf(DoubleType())
@@ -359,7 +363,7 @@ def bloom_agg(
     k: int = 5,
     fanin: int | None = 64,
 ) -> DataFrame:
-    return _merge_stage(
+    return merge_sketches(
         bloom_partials(df, cols, by, n_bits, k),
         by,
         BloomFilter.from_bytes,
@@ -447,7 +451,7 @@ def kll_agg(
     on insert, summary.go:27-29) — so ``n_rows`` equals the sketch count
     and count/min/max stay oracle-exact over the non-NaN values.
     """
-    return _merge_stage(
+    return merge_sketches(
         kll_partials(df, value_col, by, k), by, KLL.from_bytes, fanin=fanin
     )
 
@@ -553,7 +557,7 @@ def mg_agg(
     """Frequent-items summary of the tuple ``cols`` per group
     (Misra-Gries, mergeable; counters undercount by at most the
     sketch's ``err`` <= N/(k+1))."""
-    return _merge_stage(
+    return merge_sketches(
         mg_partials(df, cols, by, k), by, MisraGries.from_bytes, fanin=fanin
     )
 
@@ -684,7 +688,7 @@ def cms_agg(
     weight_col: str | None = None,
     fanin: int | None = 64,
 ) -> DataFrame:
-    return _merge_stage(
+    return merge_sketches(
         cms_partials(df, cols, by, d, w, weight_col),
         by,
         CountMinSketch.from_bytes,
@@ -837,7 +841,7 @@ def fd_agg(
     oracle-checkable against count(*) / sum of squares."""
     from ..sketches import FrequentDirections
 
-    return _merge_stage(
+    return merge_sketches(
         fd_partials(df, vec_col, dim, by, ell),
         by,
         FrequentDirections.from_bytes,
@@ -951,7 +955,7 @@ def theta_agg(
     HLL estimates cannot bound a small overlap.  Partial size is
     O(k) = 32 KB at k=4096, constant in row count, so the salted tree's
     per-reducer fan-in bound carries the same 100-TB posture as HLL."""
-    return _merge_stage(
+    return merge_sketches(
         theta_partials(df, cols, by, k), by, ThetaSketch.from_bytes, fanin=fanin
     )
 

@@ -1,8 +1,7 @@
-from .checkpoint import CheckpointedAnySketchJob, CheckpointedSketchJob
+from .checkpoint import CheckpointedSketchJob
 from .sink import write_partitioned
 
 __all__ = [
-    "CheckpointedAnySketchJob",
     "CheckpointedSketchJob",
     "write_partitioned",
 ]

@@ -7,14 +7,15 @@ lineage + metrics".  Mechanics:
     chunks (sorted file list, round-robin) — at 100 TB an epoch is a
     bounded, independently-scannable slice, so a restart never rescans
     committed work;
-  - each epoch writes its *partial digests* plus lineage columns
-    (epoch, input partition id, row/weight counts, wall-clock) to
+  - each epoch writes its *partial sketches* plus lineage columns
+    (epoch, input partition id, wall-clock) to
     ``<dir>/partials/epoch=K/``; the parquet ``_SUCCESS`` marker is the
-    commit record (atomic with Spark's file-commit protocol);
+    commit record (atomic with Spark's file-commit protocol; read
+    through plans/commit.py);
   - ``run(resume=True)`` skips committed epochs, processes the rest, and
-    tree-merges all partials into final per-group digests — digest
+    merges all committed partials into final per-group sketches — sketch
     mergeability (reference: tdigest.go:262-272) is what makes
-    epoch-level restart sound;
+    epoch-level restart sound, and it holds for every sketch alike;
   - ``lineage()`` exposes the audit table; ``metrics()`` aggregates it.
 """
 
@@ -22,48 +23,77 @@ from __future__ import annotations
 
 import os
 import time
-from typing import Sequence
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.aggregate import build_partials, merge_partials
+from . import commit
+
+# the columns the job adds to every partial row; `epoch` is carried by
+# the epoch=K directory (Spark partition discovery re-derives it on read)
+_LINEAGE_COLS = ("partition_id", "wall_started", "epoch")
 
 
 class CheckpointedSketchJob:
+    """Epoch-committed, resumable build of ANY mergeable sketch.  The job
+    owns the epoch split, the pinned manifest, the commits, lineage and
+    metrics; the sketch comes in as two callables:
+
+      - ``partials_fn(df)`` builds stage-1 partial rows (``by...`` plus
+        the sketch's data columns: ``build_partials`` or any
+        ``*_partials`` builder);
+      - ``merge_fn(partials, n_units)`` merges the committed partials
+        (lineage columns dropped) to one row per group.  ``n_units`` is
+        the partial row count: storage-read partials must size the merge
+        tree by count, not scan partitions (see operators/_tree.py).
+
+    A t-digest job::
+
+        by = ["l_returnflag"]
+        job = CheckpointedSketchJob(
+            spark, path, ckpt,
+            partials_fn=lambda df: build_partials(df, "l_extendedprice", by),
+            merge_fn=lambda p, n: merge_partials(p, by, fanin=64, n_units=n))
+        digests = job.run(resume=True)
+
+    A theta job::
+
+        by = ["event_type"]
+        job = CheckpointedSketchJob(
+            spark, path, ckpt,
+            partials_fn=lambda df: theta_partials(df, ["user_id"], by),
+            merge_fn=lambda p, n: merge_sketches(
+                p, by, ThetaSketch.from_bytes, n_units=n))
+        sketches = job.run(resume=True)
+    """
+
     def __init__(
         self,
         spark: SparkSession,
         input_path: str,
-        value_col: str,
-        by: Sequence[str],
         checkpoint_dir: str,
-        compression: float = 100.0,
+        partials_fn: Callable[[DataFrame], DataFrame],
+        merge_fn: Callable[[DataFrame, int], DataFrame],
         n_epochs: int = 4,
-        explode_arrays: bool = False,
-        fanin: int | None = 64,
     ) -> None:
         self.spark = spark
         self.input_path = input_path
-        self.value_col = value_col
-        self.by = list(by)
         self.dir = checkpoint_dir
-        self.compression = compression
+        self.partials_fn = partials_fn
+        self.merge_fn = merge_fn
         self.n_epochs = n_epochs
-        self.explode_arrays = explode_arrays
-        self.fanin = fanin
 
     # ------------------------------------------------------------ layout
 
+    def _partials_root(self) -> str:
+        return os.path.join(self.dir, "partials")
+
     def _epoch_dir(self, epoch: int) -> str:
-        return os.path.join(self.dir, "partials", f"epoch={epoch}")
+        return os.path.join(self._partials_root(), f"epoch={epoch}")
 
-    def _live_epoch_files(self) -> list[list[str]]:
-        files = sorted(self.spark.read.parquet(self.input_path).inputFiles())
-        return [files[e :: self.n_epochs] for e in range(self.n_epochs)]
-
-    def _manifest_path(self) -> str:
-        return os.path.join(self.dir, "manifest.json")
+    def _empty_input(self) -> DataFrame:
+        return self.spark.read.parquet(self.input_path).limit(0)
 
     def _epoch_files(self) -> list[list[str]]:
         """File-to-epoch assignment, pinned by a persisted manifest.
@@ -74,39 +104,17 @@ class CheckpointedSketchJob:
         diverged — otherwise committed epochs would silently no longer
         correspond to their original file slices (double-count or drop).
         """
-        import json
-
-        jvm = self.spark.sparkContext._jvm
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        mpath = jvm.org.apache.hadoop.fs.Path(self._manifest_path())
-        fs = mpath.getFileSystem(conf)
-        live = self._live_epoch_files()
-        if not fs.exists(mpath):
-            # write-then-rename: a crash mid-write must never leave a
-            # truncated manifest at the final path (rename is atomic on
-            # HDFS; on object stores it still publishes a complete object)
-            payload = json.dumps({"n_epochs": self.n_epochs, "epochs": live})
-            tpath = jvm.org.apache.hadoop.fs.Path(
-                self._manifest_path() + ".tmp"
+        path = os.path.join(self.dir, "manifest.json")
+        files = sorted(self.spark.read.parquet(self.input_path).inputFiles())
+        live = [files[e :: self.n_epochs] for e in range(self.n_epochs)]
+        if not commit.exists(self.spark, path):
+            commit.write_json(
+                self.spark, path, {"n_epochs": self.n_epochs, "epochs": live}
             )
-            out = fs.create(tpath, True)
-            out.write(bytearray(payload.encode("utf-8")))
-            out.close()
-            if not fs.rename(tpath, mpath):
-                raise IOError(f"failed to publish manifest at {mpath}")
             return live
-        stream = fs.open(mpath)
-        try:
-            text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        try:
-            stored = json.loads(text)
-        except ValueError as e:
-            raise ValueError(
-                f"corrupt checkpoint manifest {self._manifest_path()} "
-                f"({e}); delete the checkpoint dir to restart from scratch"
-            ) from e
+        stored = commit.read_json(
+            self.spark, path, "checkpoint manifest", "the checkpoint dir"
+        )
         if stored["n_epochs"] != self.n_epochs:
             raise ValueError(
                 f"checkpoint manifest was written with n_epochs="
@@ -117,158 +125,81 @@ class CheckpointedSketchJob:
             live_set = {f for ep in live for f in ep}
             raise ValueError(
                 "input file listing diverged from the checkpoint manifest "
-                f"({self._manifest_path()}); added="
+                f"({path}); added="
                 f"{sorted(live_set - manifest_set)[:5]} removed="
                 f"{sorted(manifest_set - live_set)[:5]} — delete the "
                 "checkpoint dir to restart from scratch"
             )
         return stored["epochs"]
 
-    def _fs_exists(self, path: str) -> bool:
-        # Hadoop FileSystem API so commit markers work on any scheme
-        # (file://, hdfs://, s3a://) — never driver-local os.path
-        jvm = self.spark.sparkContext._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(
-            self.spark.sparkContext._jsc.hadoopConfiguration()
-        )
-        return bool(fs.exists(hpath))
+    def completed_epochs(self) -> list[int]:
+        return [
+            e
+            for e, _, _ in commit.committed_dirs(
+                self.spark, self._partials_root(), "epoch"
+            )
+        ]
 
     def epoch_committed(self, epoch: int) -> bool:
-        return self._fs_exists(
-            os.path.join(self._epoch_dir(epoch), "_SUCCESS")
-        )
+        return commit.is_committed(self.spark, self._epoch_dir(epoch))
 
     # -------------------------------------------------------------- run
 
-    def _build(self, df: DataFrame) -> DataFrame:
-        """Stage-1 partials for one epoch slice (digest flavor; the
-        generic subclass overrides this with any sketch's builder)."""
-        return build_partials(
-            df,
-            self.value_col,
-            self.by,
-            self.compression,
-            explode_arrays=self.explode_arrays,
+    def _with_lineage(self, df: DataFrame, t0: float) -> DataFrame:
+        return (
+            self.partials_fn(df)
+            .withColumn("partition_id", F.spark_partition_id())
+            .withColumn("wall_started", F.lit(t0))
         )
 
-    # partial data columns persisted per epoch (beyond `by` + lineage)
-    _data_cols = ("digest", "n_rows", "total_weight")
-
-    def _merge(self, sel: DataFrame, n_units: int | None) -> DataFrame:
-        """Final tree-merge over committed partials (digest flavor)."""
-        return merge_partials(sel, self.by, fanin=self.fanin, n_units=n_units)
-
     def run_epoch(self, epoch: int, files: list[str]) -> None:
-        if not files:
-            # empty epoch: write an empty partials table through Spark's
-            # committer so the _SUCCESS marker lands on any filesystem
-            src = self.spark.read.parquet(self.input_path).limit(0)
-            self._build(src).withColumn(
-                "partition_id", F.spark_partition_id()
-            ).withColumn(
-                "wall_started", F.lit(0.0)
-            ).write.mode("overwrite").parquet(self._epoch_dir(epoch))
-            return
-        t0 = time.time()
-        df = self.spark.read.parquet(*files)
-        partials = self._build(df)
-        # NB: `epoch` is carried by the epoch=K directory (Spark partition
-        # discovery re-derives it on read) — not duplicated in the data
-        lineage = partials.withColumn(
-            "partition_id", F.spark_partition_id()
-        ).withColumn("wall_started", F.lit(t0))
+        # an empty epoch still writes (an empty partials table) through
+        # Spark's committer, so its _SUCCESS marker lands on any filesystem
+        t0 = time.time() if files else 0.0
+        df = self.spark.read.parquet(*files) if files else self._empty_input()
         # the parquet commit (_SUCCESS) is the atomic checkpoint record
-        lineage.write.mode("overwrite").parquet(self._epoch_dir(epoch))
+        self._with_lineage(df, t0).write.mode("overwrite").parquet(
+            self._epoch_dir(epoch)
+        )
 
     def run(self, resume: bool = True, max_epochs: int | None = None) -> DataFrame:
-        """Process (remaining) epochs, return final merged digests."""
+        """Process (remaining) epochs, return final merged sketches."""
         epoch_files = self._epoch_files()
-        done = 0
-        for epoch, files in enumerate(epoch_files):
-            if max_epochs is not None and done >= max_epochs:
-                break
-            if resume and self.epoch_committed(epoch):
-                continue
+        done = set(self.completed_epochs()) if resume else set()
+        todo = [(e, f) for e, f in enumerate(epoch_files) if e not in done]
+        for epoch, files in todo[:max_epochs]:
             self.run_epoch(epoch, files)
-            done += 1
         return self.merged()
-
-    def _committed_dirs(self) -> list[str]:
-        dirs = [
-            self._epoch_dir(e)
-            for e in range(self.n_epochs)
-            if self.epoch_committed(e)
-        ]
-        if not dirs:
-            raise FileNotFoundError(
-                f"no committed epochs under {self.dir}/partials"
-            )
-        return dirs
-
-    def _committed_files(self) -> list[str]:
-        """Data files of committed epochs, captured list-then-reverify:
-        a crash-resume in ANOTHER process rewrites an epoch dir with
-        mode('overwrite') (delete first, _SUCCESS last), so a marker
-        still present AFTER the listing proves no rewrite started
-        mid-listing; a rewrite completing later makes the downstream
-        read fail loudly on the now-missing files instead of silently
-        merging a partially-rewritten epoch (same protocol as
-        streaming/stream_agg._committed_batch_dirs)."""
-        jvm = self.spark.sparkContext._jvm
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        out: list[str] = []
-        for d in self._committed_dirs():
-            hdir = jvm.org.apache.hadoop.fs.Path(d)
-            fs = hdir.getFileSystem(conf)
-            marker = jvm.org.apache.hadoop.fs.Path(hdir, "_SUCCESS")
-            files = [
-                f.getPath().toString()
-                for f in fs.listStatus(hdir)
-                if not f.isDirectory()
-                and not f.getPath().getName().startswith(("_", "."))
-            ]
-            if files and fs.exists(marker):
-                out.extend(files)
-        # may legitimately be empty: every committed epoch can contain
-        # zero data files (all-empty input writes only _SUCCESS) — the
-        # "no committed epochs at all" error belongs to _committed_dirs
-        return out
 
     def _committed_partials(self) -> DataFrame:
         """Partials of all committed epochs.  When at least one epoch is
         committed but every one is empty (all-empty input), returns an
         EMPTY DataFrame with the partials schema — callers see the same
-        shape a normal run yields, not FileNotFoundError (that error is
-        reserved for 'no committed epochs at all', raised by
-        _committed_dirs inside _committed_files)."""
-        files = self._committed_files()
-        if not files:
-            # synthesize the schema the same way run_epoch writes it;
-            # `epoch` mirrors the partition-discovery column of the
-            # non-empty read path (discovery infers int)
-            src = self.spark.read.parquet(self.input_path).limit(0)
-            return (
-                self._build(src)
-                .withColumn("partition_id", F.spark_partition_id())
-                .withColumn("wall_started", F.lit(0.0))
-                .withColumn("epoch", F.lit(0).cast("int"))
-                .limit(0)
-            )
-        return self.spark.read.option(
-            "basePath", os.path.join(self.dir, "partials")
-        ).parquet(*files)
+        shape a normal run yields; FileNotFoundError is reserved for 'no
+        committed epochs at all'."""
+        root = self._partials_root()
+        committed = commit.committed_dirs(self.spark, root, "epoch")
+        if not committed:
+            raise FileNotFoundError(f"no committed epochs under {root}")
+        # read the EXPLICIT file list captured at commit-check time
+        files = [f for _, _, fl in committed for f in fl]
+        if files:
+            return self.spark.read.option("basePath", root).parquet(*files)
+        # the schema run_epoch writes; `epoch` mirrors the
+        # partition-discovery column (discovery infers int)
+        return (
+            self._with_lineage(self._empty_input(), 0.0)
+            .withColumn("epoch", F.lit(0).cast("int"))
+            .limit(0)
+        )
 
     def merged(self) -> DataFrame:
         # read only COMMITTED epochs: an interrupted overwrite leaves an
         # uncommitted directory whose partial contents must never leak
         # into results (_SUCCESS is the commit record on the read path too)
-        partials = self._committed_partials()
-        sel = partials.select(*(self.by + list(self._data_cols)))
-        # storage-read partials: size the tree by partial count, not scan
-        # partitions (see _tree.py); parquet count() is metadata-only
-        n_units = sel.count() if self.fanin else None
-        return self._merge(sel, n_units)
+        partials = self._committed_partials().drop(*_LINEAGE_COLS)
+        # parquet count() is metadata-only
+        return self.merge_fn(partials, partials.count())
 
     # ----------------------------------------------------------- lineage
 
@@ -285,65 +216,3 @@ class CheckpointedSketchJob:
         if "total_weight" in lin.columns:
             aggs.insert(2, F.sum("total_weight").alias("weight"))
         return lin.groupBy("epoch").agg(*aggs).orderBy("epoch")
-
-    def completed_epochs(self) -> list[int]:
-        return [e for e in range(self.n_epochs) if self.epoch_committed(e)]
-
-
-class CheckpointedAnySketchJob(CheckpointedSketchJob):
-    """Checkpoint/resume for ANY mergeable sketch in the family (HLL /
-    CMS / Bloom / KLL / Misra-Gries / Theta / Frequent Directions) —
-    the digest job's epoch mechanics (pinned manifest, _SUCCESS commit
-    records, committed-only reads, lineage + metrics) with the builder
-    and merger injected:
-
-        job = CheckpointedAnySketchJob(
-            spark, path,
-            partials_fn=lambda df: theta_partials(df, ["user_id"],
-                                                  ["event_type"]),
-            by=["event_type"], checkpoint_dir=ckpt,
-            decode=ThetaSketch.from_bytes)
-        sketches = job.run(resume=True)
-
-    ``partials_fn(df)`` must emit stage-1 rows ``by..., sketch binary,
-    n_rows long`` (every ``*_partials`` builder in sketch_agg.py does);
-    ``decode`` turns the bytes back into a mergeable object.  Epoch
-    restart is sound for exactly the same reason as the digest job:
-    merge associativity makes (re)merge order irrelevant, and partials
-    are only ever read from committed epochs.
-    """
-
-    _data_cols = ("sketch", "n_rows")
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        input_path: str,
-        partials_fn,
-        by: Sequence[str],
-        checkpoint_dir: str,
-        decode,
-        n_epochs: int = 4,
-        fanin: int | None = 64,
-    ) -> None:
-        super().__init__(
-            spark,
-            input_path,
-            value_col="",  # unused: _build is fully delegated
-            by=by,
-            checkpoint_dir=checkpoint_dir,
-            n_epochs=n_epochs,
-            fanin=fanin,
-        )
-        self.partials_fn = partials_fn
-        self.decode = decode
-
-    def _build(self, df: DataFrame) -> DataFrame:
-        return self.partials_fn(df)
-
-    def _merge(self, sel: DataFrame, n_units: int | None) -> DataFrame:
-        from ..operators.sketch_agg import _merge_stage
-
-        return _merge_stage(
-            sel, self.by, self.decode, fanin=self.fanin, n_units=n_units
-        )

@@ -9,11 +9,12 @@ from .pipeline_stream import (
 from .joins import (
     streaming_interval_join,
 )
-from .sketch_stream import read_stream_sketches, sketch_stream_writer
 from .stream_agg import (
     compact_stream_state,
     read_stream_digests,
+    read_stream_sketches,
     read_windowed_digests,
+    sketch_stream_writer,
     tdigest_stateful_stream,
     tdigest_stream_writer,
     tdigest_windowed_stream_writer,

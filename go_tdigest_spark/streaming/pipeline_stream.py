@@ -18,7 +18,7 @@ Three shapes, chosen per operator by what state the semantics need:
   - **Append state, join on read** (near-dup / MinHash-LSH): signatures
     are computed once per document per trigger and appended to a parquet
     state table (the same exactly-once per-batch-overwrite machinery as
-    every sketch stream, sketch_stream.py); candidate pairs come from
+    every sketch stream, stream_agg.py); candidate pairs come from
     the identical banded bucket join as the batch path, run at read
     time over all committed signatures.  Signature computation — the
     expensive text-shingling stage — is incremental; the cheap
@@ -30,8 +30,8 @@ Three shapes, chosen per operator by what state the semantics need:
     re-join: ``read_stream_lsh_pairs_since`` returns only the pairs
     introduced since a given batch (new-self ∪ new-vs-index).
 
-The mergeable-sketch streams (t-digest family) live in stream_agg.py /
-sketch_stream.py; this module is the document-pipeline side.
+The mergeable-sketch streams (t-digest and the other sketches) live in
+stream_agg.py; this module is the document-pipeline side.
 """
 
 from __future__ import annotations
@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dedup import lsh_pairs_from_sigs, minhash_signatures
 from ..operators.sample import sample_fraction
+from .stream_agg import read_committed_partials, sketch_stream_writer
 
 
 def streaming_exact_dedup(
@@ -133,12 +134,10 @@ def minhash_signature_stream_writer(
     the vectorized mapInArrow kernel), so each document's text is
     shingled exactly once over the stream's lifetime.  State is
     O(docs x n_hashes x 8) bytes in object storage, not executor memory.
-    Delegates to the generic append-partials writer (sketch_stream.py) —
-    ONE copy of the exactly-once per-batch-overwrite machinery serves
-    every state table.
+    Delegates to the generic append-partials writer
+    (``stream_agg.sketch_stream_writer``) — ONE copy of the exactly-once
+    per-batch-overwrite machinery serves every state table.
     """
-    from .sketch_stream import sketch_stream_writer
-
     return sketch_stream_writer(
         stream_df,
         lambda b: minhash_signatures(b, text_col, id_col, n, n_hashes, seed),
@@ -167,8 +166,6 @@ def read_stream_lsh_pairs(
     trigger doc ids must be unique (the usual id contract).
     """
     from pyspark.sql import functions as F
-
-    from .stream_agg import read_committed_partials
 
     sigs, _ = read_committed_partials(
         spark, state_path, ["doc", "sig", "batch_id"], count_units=False
@@ -224,7 +221,6 @@ def read_stream_lsh_pairs_since(
     from pyspark.sql import functions as F
 
     from ..operators.dedup import lsh_pairs_vs_index
-    from .stream_agg import read_committed_partials
 
     sigs, _ = read_committed_partials(
         spark, state_path, ["doc", "sig", "batch_id"], count_units=False

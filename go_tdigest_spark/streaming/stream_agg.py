@@ -1,15 +1,25 @@
-"""Structured Streaming t-digest aggregation.
+"""Structured Streaming for every mergeable sketch (t-digest, HLL, CMS,
+Bloom, KLL, Misra-Gries, Theta, Frequent Directions).
 
 Design: *append partials, merge on read*.  Each micro-batch runs the
-same stage-1 partial build as the batch path (one digest per stage-1
-task x group per trigger) and appends those rows — with trigger
-lineage — to a parquet state table.  Readers get exact, point-in-time correct digests
-by tree-merging the partials.  This is the scale-correct shape for
-streams: state is O(triggers x groups x compression) bytes, appends are
-atomic with the file-commit protocol, there is no read-modify-write
-race, and compaction (re-merging old partials into one row) is a
-trivially safe background job because merge is associative
+same stage-1 partial build as the batch path (one sketch per stage-1
+task x group per trigger) and overwrites its own ``batch_id=N``
+directory of a parquet state table (exactly-once under foreachBatch's
+at-least-once replay).  Readers get exact, point-in-time correct
+sketches by tree-merging the partials of committed batches only
+(``_SUCCESS``-marked, listed through plans/commit.py).  This is the
+scale-correct shape for streams: state is O(triggers x groups x sketch
+size) bytes, appends are atomic with the file-commit protocol, there is
+no read-modify-write race, and compaction (``compact_stream_state``)
+is a trivially safe background job because merge is associative
 (reference: tdigest.go:262-272).
+
+One writer, ``sketch_stream_writer``, takes the stage-1 builder as a
+callable, so any sketch drops into this shape: e.g. streaming distinct
+users are ``sketch_stream_writer(stream, lambda b: hll_partials(b,
+["user_id"], ["event_type"]), ...)`` with ``read_stream_sketches(...,
+HLL.from_bytes)`` at query time.  The t-digest entry points
+(``tdigest_stream_writer``, ``read_stream_digests``) are thin wrappers.
 
 The digest is explicitly "parallel streaming friendly" (reference
 README.md:3-4); mergeability is what lets a streaming sketch avoid
@@ -18,12 +28,41 @@ per-key mutable state entirely.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import build_partials, merge_partials
+from ..operators.sketch_agg import merge_sketches
+from ..plans import commit
+
+
+def sketch_stream_writer(
+    stream_df: DataFrame,
+    partials_fn: Callable[[DataFrame], DataFrame],
+    state_path: str,
+    checkpoint_path: str,
+):
+    """Returns a DataStreamWriter maintaining an append-partials state
+    table; start with ``.start()`` / ``.trigger(availableNow=True)``.
+
+    ``partials_fn(batch_df)`` must return stage-1 partial rows (e.g.
+    ``build_partials`` or any ``*_partials`` builder).
+    """
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        partials = partials_fn(batch_df)
+        # per-batch directory: crash replays overwrite, never double-count
+        partials.write.mode("overwrite").parquet(
+            f"{state_path}/batch_id={batch_id}"
+        )
+
+    return (
+        stream_df.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("update")
+    )
 
 
 def tdigest_stream_writer(
@@ -36,13 +75,7 @@ def tdigest_stream_writer(
     explode_arrays: bool = False,
 ):
     """Returns a DataStreamWriter that maintains the partial-digest state
-    table; start it with ``.start()`` (or trigger(availableNow=True)).
-
-    Delegates to the generic append-partials writer (sketch_stream.py) —
-    ONE copy of the exactly-once per-batch-overwrite machinery serves
-    every mergeable sketch."""
-    from .sketch_stream import sketch_stream_writer
-
+    table; start it with ``.start()`` (or trigger(availableNow=True))."""
     by = list(by)
     return sketch_stream_writer(
         stream_df,
@@ -52,55 +85,6 @@ def tdigest_stream_writer(
         state_path,
         checkpoint_path,
     )
-
-
-def _committed_batch_dirs(
-    spark: SparkSession, state_path: str
-) -> list[tuple[str, list[str]]]:
-    """(batch dir, its data files) for every batch_id=N subdirectory
-    holding a _SUCCESS commit marker — files are captured under a
-    list-then-reverify protocol (see inline comment).
-
-    A reader concurrent with a crash-replay overwrite of batch N (mode
-    'overwrite' deletes the directory before rewriting) must never see
-    that batch's partially-written files — _SUCCESS is the commit record
-    on the read path, exactly as in plans/checkpoint.py.  Hadoop FS API
-    so the check works on any scheme (file://, hdfs://, s3a://).
-    """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):
-        return []
-    out = []
-    for status in fs.listStatus(root):
-        if not status.isDirectory():
-            continue
-        p = status.getPath()
-        if not p.getName().startswith("batch_id="):
-            continue
-        marker = jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")
-        if not fs.exists(marker):
-            continue
-        # list the DATA FILES now, then re-verify the commit marker:
-        # a crash-replay overwrite (delete + rewrite of the whole dir,
-        # sketch_stream mode='overwrite') deletes _SUCCESS first, so a
-        # marker still present AFTER the listing proves no rewrite
-        # started mid-listing.  If a full rewrite completed in between,
-        # the listed (old) files no longer exist and the downstream
-        # read fails LOUDLY (ignoreMissingFiles is off) instead of
-        # silently merging a partial batch — the race the plain
-        # check-then-list had.
-        files = [
-            f.getPath().toString()
-            for f in fs.listStatus(p)
-            if not f.isDirectory()
-            and not f.getPath().getName().startswith(("_", "."))
-        ]
-        if files and fs.exists(marker):
-            out.append((p.toString(), files))
-    return sorted(out)
 
 
 def read_committed_partials(
@@ -113,13 +97,16 @@ def read_committed_partials(
     batches only, plus the partial count for merge-tree sizing
     (storage-read partitions pack many partials per group; parquet
     count() is footer-metadata only)."""
-    committed = _committed_batch_dirs(spark, state_path)
-    if not committed:
-        raise FileNotFoundError(f"no committed batches under {state_path}")
     # read the EXPLICIT file list captured at commit-check time (not
     # the directories): files written by a later replay-overwrite can
     # never leak into this read, and files deleted by one fail loudly
-    files = [f for _, fl in committed for f in fl]
+    files = [
+        f
+        for _, _, fl in commit.committed_dirs(spark, state_path, "batch_id")
+        for f in fl
+    ]
+    if not files:
+        raise FileNotFoundError(f"no committed batches under {state_path}")
     partials = (
         spark.read.option("basePath", state_path).parquet(*files).select(*cols)
     )
@@ -127,11 +114,27 @@ def read_committed_partials(
     return partials, n_units
 
 
+def read_stream_sketches(
+    spark: SparkSession,
+    state_path: str,
+    by: Sequence[str],
+    decode: Callable[[bytes], object],
+    fanin: int | None = 64,
+) -> DataFrame:
+    """Merge-on-read: current sketches from a ``sketch_stream_writer``
+    state table (committed batches only)."""
+    by = list(by)
+    partials, n_units = read_committed_partials(
+        spark, state_path, by + ["sketch", "n_rows"], count_units=fanin is not None
+    )
+    return merge_sketches(partials, by, decode, fanin=fanin, n_units=n_units)
+
+
 def read_stream_digests(
     spark: SparkSession, state_path: str, by: Sequence[str], fanin: int | None = 64
 ) -> DataFrame:
     """Merge-on-read: current digests from the streaming state table
-    (committed batches only — see _committed_batch_dirs)."""
+    (committed batches only)."""
     by = list(by)
     partials, n_units = read_committed_partials(
         spark,
@@ -171,8 +174,6 @@ def tdigest_windowed_stream_writer(
     watermark-free shape that scales, since state is O(windows x groups x
     compression) in cheap object storage rather than executor memory.
     """
-    from .sketch_stream import sketch_stream_writer
-
     by = list(by)
 
     def window_partials(batch_df: DataFrame) -> DataFrame:
@@ -318,8 +319,10 @@ def compact_stream_state(
 
     Crash-safety protocol (each step idempotent; re-running resumes):
       1. write the compacted rows to ``_compact_tmp`` (ignored by
-         readers; Spark's _SUCCESS is the commit record) and a
-         _MANIFEST.json naming the source directories;
+         readers; Spark's _SUCCESS is the commit record), then publish
+         a _MANIFEST.json naming the source directories by
+         write-then-rename (a crash before the rename leaves no
+         manifest, and the next call redoes step 1);
       2. delete the source directories;
       3. rename the tmp to ``batch_id=<target>``.
     A crash between 2 and 3 leaves the data in the committed tmp — the
@@ -337,76 +340,41 @@ def compact_stream_state(
     Returns the number of directories compacted away (0 = nothing to
     do; needs at least 2 compactable sources to be worth a rewrite).
     """
-    import json as _json
-
     if keep_last < 0:
         raise ValueError("keep_last must be >= 0")
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    root = HPath(state_path)
-    fs = root.getFileSystem(conf)
-    tmp = HPath(root, "_compact_tmp")
-    manifest_p = HPath(tmp, "_MANIFEST.json")
+    tmp = f"{state_path}/_compact_tmp"
+    manifest_path = f"{tmp}/_MANIFEST.json"
 
     def _finish(manifest: dict) -> None:
         for d in manifest["sources"]:
-            p = HPath(d)
-            if fs.exists(p):
-                fs.delete(p, True)
-        final = HPath(root, f"batch_id={manifest['target_id']}")
-        if fs.exists(final):  # defensive: crash mid-rename re-run
-            fs.delete(final, True)
-        if not fs.rename(tmp, final):
-            raise IOError(f"rename {tmp} -> {final} failed")
+            commit.delete(spark, d)
+        final = f"{state_path}/batch_id={manifest['target_id']}"
+        commit.delete(spark, final)  # defensive: crash mid-rename re-run
+        commit.rename(spark, tmp, final)
         # drop the now-stale manifest from the final dir (underscore
         # prefix hides it from readers, but leaving it would confuse a
         # human and checksum-mismatch any future copy); AFTER the
         # rename — deleting it earlier would make a crash between
         # delete and rename unresumable (the resume path needs it)
-        for leftover in ("_MANIFEST.json", "._MANIFEST.json.crc"):
-            lp = HPath(final, leftover)
-            if fs.exists(lp):
-                fs.delete(lp, False)
+        commit.delete(spark, f"{final}/_MANIFEST.json")
 
     # resume a crashed finish step first
-    if fs.exists(HPath(tmp, "_SUCCESS")) and fs.exists(manifest_p):
-        # line-reader through the Hadoop FS stream (spark.read.text
-        # cannot: the default path filter hides _-prefixed files — the
-        # same convention that hides the manifest from the parquet
-        # reader once the dir is renamed into place)
-        br = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(fs.open(manifest_p), "UTF-8")
+    if commit.is_committed(spark, tmp) and commit.exists(spark, manifest_path):
+        manifest = commit.read_json(
+            spark, manifest_path, "compaction manifest", tmp
         )
-        lines = []
-        try:
-            while True:
-                line = br.readLine()
-                if line is None:
-                    break
-                lines.append(line)
-        finally:
-            br.close()
-        manifest = _json.loads("\n".join(lines))
         _finish(manifest)
         return len(manifest["sources"])
-    if fs.exists(tmp):  # uncommitted leftover from a crashed write
-        fs.delete(tmp, True)
+    # an uncommitted leftover from a crashed write, or a committed one
+    # whose manifest never got published: redo the rewrite
+    commit.delete(spark, tmp)
 
-    committed = _committed_batch_dirs(spark, state_path)
-
-    def _bid(d: str) -> int:
-        return int(d.rsplit("batch_id=", 1)[1])
-
-    # NUMERIC order — the lexicographic sort of the reader would put
-    # batch_id=10 before batch_id=2 and "keep newest" would be wrong
-    committed = sorted(committed, key=lambda t: _bid(t[0]))
+    # numeric batch order, so "keep the newest" keeps batch_id=10 over 2
+    committed = commit.committed_dirs(spark, state_path, "batch_id")
     sources = committed[: max(0, len(committed) - keep_last)]
-    if len(sources) < 2:
+    src_files = [f for _, _, fl in sources for f in fl]
+    if len(sources) < 2 or not src_files:
         return 0
-    src_dirs = [d for d, _ in sources]
-    src_files = [f for _, fl in sources for f in fl]
-    target_id = _bid(src_dirs[-1])
     n_out = target_partitions or max(
         1, min(len(src_files), spark.sparkContext.defaultParallelism)
     )
@@ -417,14 +385,8 @@ def compact_stream_state(
         .parquet(*src_files)
         .drop("batch_id")
     )
-    df.repartition(n_out).write.mode("overwrite").parquet(
-        f"{state_path}/_compact_tmp"
-    )
-    manifest = {"sources": src_dirs, "target_id": target_id}
-    out = fs.create(manifest_p, True)
-    try:
-        out.write(bytearray(_json.dumps(manifest).encode("utf-8")))
-    finally:
-        out.close()
+    df.repartition(n_out).write.mode("overwrite").parquet(tmp)
+    manifest = {"sources": [d for _, d, _ in sources], "target_id": sources[-1][0]}
+    commit.write_json(spark, manifest_path, manifest)
     _finish(manifest)
-    return len(src_dirs)
+    return len(sources)

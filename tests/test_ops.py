@@ -15,6 +15,7 @@ from go_tdigest_spark import serde
 from go_tdigest_spark.functions import text as T
 from go_tdigest_spark.operators import (
     binary_features,
+    build_partials,
     cosine_topk,
     decode_media,
     dedup_exact_keep_first,
@@ -24,11 +25,12 @@ from go_tdigest_spark.operators import (
     lsh_ann_topk,
     minhash_lsh_pairs,
     minhash_signatures,
+    merge_partials,
     ngram_jaccard_pairs,
     simhash_candidate_pairs,
     simhash_signatures,
 )
-from go_tdigest_spark.plans import CheckpointedSketchJob
+from go_tdigest_spark.plans import CheckpointedSketchJob, commit
 from go_tdigest_spark.sources import table
 from go_tdigest_spark.streaming import read_stream_digests, tdigest_stream_writer
 
@@ -308,6 +310,19 @@ def test_multimodal_plumbing(spark, docs):
     assert f0 == t0.encode()[::4]
 
 
+def _digest_job(spark, src, ckpt, n_epochs):
+    """A t-digest CheckpointedSketchJob: l_extendedprice by l_returnflag."""
+    by = ["l_returnflag"]
+    return CheckpointedSketchJob(
+        spark,
+        src,
+        ckpt,
+        partials_fn=lambda df: build_partials(df, "l_extendedprice", by),
+        merge_fn=lambda p, n: merge_partials(p, by, fanin=64, n_units=n),
+        n_epochs=n_epochs,
+    )
+
+
 def test_checkpoint_resume(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     # multi-file input so epochs are non-trivial
@@ -315,9 +330,7 @@ def test_checkpoint_resume(spark, tmp_path):
     li = table(spark, SF_TINY, "lineitem").select("l_returnflag", "l_extendedprice")
     li.repartition(8).write.parquet(src)
 
-    job = CheckpointedSketchJob(
-        spark, src, "l_extendedprice", ["l_returnflag"], ckpt, n_epochs=4
-    )
+    job = _digest_job(spark, src, ckpt, n_epochs=4)
     # simulate a crash after 2 epochs
     job.run(max_epochs=2)
     assert job.completed_epochs() == [0, 1]
@@ -365,9 +378,7 @@ def test_checkpoint_all_empty_input(spark, tmp_path):
     )
     li.limit(0).repartition(4).write.parquet(src)
 
-    job = CheckpointedSketchJob(
-        spark, src, "l_extendedprice", ["l_returnflag"], ckpt, n_epochs=2
-    )
+    job = _digest_job(spark, src, ckpt, n_epochs=2)
     final = job.run()
     assert final.count() == 0
     assert job.completed_epochs() == [0, 1]
@@ -378,7 +389,13 @@ def test_checkpoint_all_empty_input(spark, tmp_path):
     for f in glob.glob(os.path.join(ckpt, "partials", "epoch=*", "*")):
         if not os.path.basename(f).startswith(("_", ".")):
             os.remove(f)
-    assert job._committed_files() == []
+    assert [
+        f
+        for _, _, fl in commit.committed_dirs(
+            spark, os.path.join(ckpt, "partials"), "epoch"
+        )
+        for f in fl
+    ] == []
 
     lin = job.lineage()
     assert lin.count() == 0
@@ -389,10 +406,7 @@ def test_checkpoint_all_empty_input(spark, tmp_path):
     assert job.metrics().count() == 0
 
     # 'no committed epochs at all' still raises
-    job2 = CheckpointedSketchJob(
-        spark, src, "l_extendedprice", ["l_returnflag"],
-        str(tmp_path / "ckpt_none"), n_epochs=2,
-    )
+    job2 = _digest_job(spark, src, str(tmp_path / "ckpt_none"), n_epochs=2)
     with pytest.raises(FileNotFoundError):
         job2.merged()
 
@@ -621,23 +635,17 @@ def test_checkpoint_manifest_pins_input_listing(spark, tmp_path):
     li = table(spark, SF_TINY, "lineitem").select("l_returnflag", "l_extendedprice")
     li.repartition(8).write.parquet(src)
 
-    job = CheckpointedSketchJob(
-        spark, src, "l_extendedprice", ["l_returnflag"], ckpt, n_epochs=4
-    )
+    job = _digest_job(spark, src, ckpt, n_epochs=4)
     job.run(max_epochs=2)  # "crash" after two committed epochs
 
     # input mutates between crash and resume
     li.limit(10).write.mode("append").parquet(src)
-    job2 = CheckpointedSketchJob(
-        spark, src, "l_extendedprice", ["l_returnflag"], ckpt, n_epochs=4
-    )
+    job2 = _digest_job(spark, src, ckpt, n_epochs=4)
     with pytest.raises(ValueError, match="diverged"):
         job2.run(resume=True)
 
     # a different n_epochs on resume is also a config error
-    job3 = CheckpointedSketchJob(
-        spark, src, "l_extendedprice", ["l_returnflag"], ckpt, n_epochs=8
-    )
+    job3 = _digest_job(spark, src, ckpt, n_epochs=8)
     with pytest.raises(ValueError, match="n_epochs"):
         job3.run(resume=True)
 
@@ -835,9 +843,7 @@ def test_corrupt_manifest_fails_with_guidance(spark, tmp_path):
     os.makedirs(ckpt, exist_ok=True)
     with open(os.path.join(ckpt, "manifest.json"), "w") as f:
         f.write('{"n_epochs": 2, "epo')  # torn write
-    job = CheckpointedSketchJob(
-        spark, src, "l_extendedprice", ["l_returnflag"], ckpt, n_epochs=2
-    )
+    job = _digest_job(spark, src, ckpt, n_epochs=2)
     with pytest.raises(ValueError, match="corrupt checkpoint manifest"):
         job.run()
 
@@ -2557,14 +2563,18 @@ def test_sketch_streaming_theta(spark, tmp_path):
 
 
 def test_checkpoint_any_sketch_resume_theta_and_hll(spark, tmp_path):
-    """CheckpointedAnySketchJob: the digest job's epoch mechanics with
-    an injected builder — theta run resumes across a simulated crash
+    """CheckpointedSketchJob with a non-digest sketch injected — theta
+    run resumes across a simulated crash
     and the final sketch is BITWISE equal to a one-shot batch build
     (theta's merge is order-insensitive in its bytes); HLL variant
     checks the generic metrics()/lineage() surface without the
     digest-only total_weight column."""
-    from go_tdigest_spark.operators import hll_partials, theta_agg, theta_partials
-    from go_tdigest_spark.plans import CheckpointedAnySketchJob
+    from go_tdigest_spark.operators import (
+        hll_partials,
+        merge_sketches,
+        theta_agg,
+        theta_partials,
+    )
     from go_tdigest_spark.sketches import HLL, ThetaSketch
 
     src = str(tmp_path / "input")
@@ -2572,15 +2582,16 @@ def test_checkpoint_any_sketch_resume_theta_and_hll(spark, tmp_path):
     ev.repartition(8).write.parquet(src)
 
     ckpt = str(tmp_path / "ckpt_theta")
-    job = CheckpointedAnySketchJob(
+    job = CheckpointedSketchJob(
         spark,
         src,
+        ckpt,
         partials_fn=lambda df: theta_partials(
             df, ["user_id"], ["event_type"], k=128
         ),
-        by=["event_type"],
-        checkpoint_dir=ckpt,
-        decode=ThetaSketch.from_bytes,
+        merge_fn=lambda p, n: merge_sketches(
+            p, ["event_type"], ThetaSketch.from_bytes, n_units=n
+        ),
         n_epochs=4,
     )
     job.run(max_epochs=2)
@@ -2598,13 +2609,14 @@ def test_checkpoint_any_sketch_resume_theta_and_hll(spark, tmp_path):
         assert final.loc[et]["n_rows"] == batch.loc[et]["n_rows"]
 
     ckpt2 = str(tmp_path / "ckpt_hll")
-    job2 = CheckpointedAnySketchJob(
+    job2 = CheckpointedSketchJob(
         spark,
         src,
+        ckpt2,
         partials_fn=lambda df: hll_partials(df, ["user_id"], ["event_type"]),
-        by=["event_type"],
-        checkpoint_dir=ckpt2,
-        decode=HLL.from_bytes,
+        merge_fn=lambda p, n: merge_sketches(
+            p, ["event_type"], HLL.from_bytes, n_units=n
+        ),
         n_epochs=3,
     )
     merged = job2.run().toPandas().set_index("event_type")
@@ -2995,6 +3007,147 @@ def test_compact_stream_state(spark, tmp_path):
         for r in read_stream_digests(spark, state, ["l_returnflag"]).collect()
     }
     assert resumed == before
+
+
+def test_stream_batches_listed_in_numeric_order(spark, tmp_path):
+    """The shared listing returns committed dirs in numeric id order
+    (batch_id=10 after batch_id=2) and skips unmarked ones."""
+    root = tmp_path / "state"
+    for b in (10, 2, 1, 3):
+        d = root / f"batch_id={b}"
+        d.mkdir(parents=True)
+        (d / "part-0.parquet").write_bytes(b"x")
+        if b != 3:
+            (d / "_SUCCESS").write_text("")
+    got = commit.committed_dirs(spark, str(root), "batch_id")
+    assert [n for n, _, _ in got] == [1, 2, 10]
+    assert [len(fl) for _, _, fl in got] == [1, 1, 1]
+    assert commit.committed_dirs(spark, str(tmp_path / "none"), "batch_id") == []
+
+
+@pytest.mark.parametrize("torn", ["stray_manifest_tmp", "torn_manifest"])
+def test_compact_survives_crash_while_publishing_manifest(spark, tmp_path, torn):
+    """A crash while the compaction manifest is written: a committed
+    ``_compact_tmp`` holding only a stray ``_MANIFEST.json.tmp`` is redone
+    (merge-on-read stays byte-equal); a torn ``_MANIFEST.json`` fails with
+    a ValueError naming the file and the directory to delete, and
+    touches no source batch."""
+    from go_tdigest_spark.streaming import compact_stream_state
+
+    state = str(tmp_path / "state")
+    li = table(spark, SF_TINY, "lineitem").select("l_returnflag", "l_extendedprice")
+    partials = build_partials(li, "l_extendedprice", ["l_returnflag"])
+    for b in range(4):
+        partials.write.parquet(f"{state}/batch_id={b}")
+
+    def digests():
+        return {
+            r["l_returnflag"]: bytes(r["digest"])
+            for r in read_stream_digests(spark, state, ["l_returnflag"]).collect()
+        }
+
+    before = digests()
+    tmp_dir = os.path.join(state, "_compact_tmp")
+    shutil.copytree(os.path.join(state, "batch_id=0"), tmp_dir)
+    assert os.path.exists(os.path.join(tmp_dir, "_SUCCESS"))
+    name = "_MANIFEST.json.tmp" if torn == "stray_manifest_tmp" else "_MANIFEST.json"
+    with open(os.path.join(tmp_dir, name), "w") as f:
+        f.write('{"sources": ["')
+
+    if torn == "stray_manifest_tmp":
+        assert compact_stream_state(spark, state, keep_last=1) == 3
+        assert sorted(os.listdir(state)) == ["batch_id=2", "batch_id=3"]
+        assert digests() == before
+    else:
+        with pytest.raises(
+            ValueError,
+            match=r"corrupt compaction manifest .*_compact_tmp/_MANIFEST\.json"
+            r".*delete .*_compact_tmp to restart",
+        ):
+            compact_stream_state(spark, state, keep_last=1)
+        assert sorted(os.listdir(state)) == [
+            "_compact_tmp", "batch_id=0", "batch_id=1", "batch_id=2", "batch_id=3",
+        ]
+        assert digests() == before
+
+
+@pytest.mark.parametrize("sketch", ["tdigest", "theta"])
+def test_checkpoint_epoch_killed_mid_write_resumes(spark, tmp_path, sketch):
+    """An epoch killed mid-write leaves data files and no _SUCCESS: it
+    is not committed, merged() ignores it, and run(resume=True) rewrites
+    it without touching committed epochs; the final sketches equal a
+    one-shot batch build (count/min/max for the digest, bytes for
+    theta).  Both sketches run through the one job class."""
+    from go_tdigest_spark.operators import (
+        merge_sketches,
+        tdigest_agg,
+        theta_agg,
+        theta_partials,
+    )
+    from go_tdigest_spark.sketches import ThetaSketch
+
+    src = str(tmp_path / "input")
+    ckpt = str(tmp_path / "ckpt")
+    if sketch == "tdigest":
+        by, value = ["l_returnflag"], "l_extendedprice"
+        data = table(spark, SF_TINY, "lineitem").select(*by, value)
+        job = _digest_job(spark, src, ckpt, n_epochs=4)
+    else:
+        by, value = ["event_type"], "user_id"
+        data = table(spark, SF_TINY, "events").select(*by, value)
+        job = CheckpointedSketchJob(
+            spark,
+            src,
+            ckpt,
+            partials_fn=lambda df: theta_partials(df, [value], by, k=128),
+            merge_fn=lambda p, n: merge_sketches(
+                p, by, ThetaSketch.from_bytes, n_units=n
+            ),
+            n_epochs=4,
+        )
+    data.repartition(8).write.parquet(src)
+
+    job.run(max_epochs=2)
+    epoch_dir = {e: os.path.join(ckpt, "partials", f"epoch={e}") for e in (0, 1)}
+    os.remove(os.path.join(epoch_dir[1], "_SUCCESS"))  # crash before commit
+    stale = set(os.listdir(epoch_dir[1]))
+    assert any(not f.startswith(("_", ".")) for f in stale)
+    assert job.completed_epochs() == [0]
+
+    import json
+
+    with open(os.path.join(ckpt, "manifest.json")) as f:
+        epoch0_files = json.load(f)["epochs"][0]
+    epoch0_rows = spark.read.parquet(*epoch0_files).where(
+        F.col(value).isNotNull()
+    ).count()
+    assert int(job.merged().toPandas()["n_rows"].sum()) == epoch0_rows
+
+    mtime0 = os.path.getmtime(os.path.join(epoch_dir[0], "_SUCCESS"))
+    final = job.run(resume=True).toPandas().set_index(by[0])
+    assert job.completed_epochs() == [0, 1, 2, 3]
+    assert os.path.getmtime(os.path.join(epoch_dir[0], "_SUCCESS")) == mtime0
+    rewritten = set(os.listdir(epoch_dir[1]))
+    assert "_SUCCESS" in rewritten
+    assert not {f for f in stale if not f.startswith(("_", "."))} & rewritten
+
+    inp = spark.read.parquet(src)
+    if sketch == "tdigest":
+        one = tdigest_agg(inp, value, by).toPandas().set_index(by[0])
+        assert set(final.index) == set(one.index)
+        for k, row in final.iterrows():
+            d = serde.decode(bytes(row["digest"]))
+            e = serde.decode(bytes(one.loc[k]["digest"]))
+            assert d.count == e.count == row["total_weight"]
+            assert row["n_rows"] == one.loc[k]["n_rows"]
+            assert d.quantile(0.0) == e.quantile(0.0)
+            assert d.quantile(1.0) == e.quantile(1.0)
+    else:
+        one = theta_agg(inp, [value], by=by, k=128).toPandas().set_index(by[0])
+        assert set(final.index) == set(one.index)
+        for k in final.index:
+            assert bytes(final.loc[k]["sketch"]) == bytes(one.loc[k]["sketch"])
+            assert final.loc[k]["n_rows"] == one.loc[k]["n_rows"]
 
 
 def test_sliding_windowed_streaming(spark, tmp_path):

@@ -244,7 +244,7 @@ def test_sketch_tree_merge_equals_flat(spark):
     byte-identical sketches vs the flat (single-reducer) merge — HLL
     register-max / CMS counter-add / Bloom bit-or are exact under any
     merge order, so equality (not bounds) is the assert."""
-    from go_tdigest_spark.operators.sketch_agg import _merge_stage
+    from go_tdigest_spark.operators.sketch_agg import merge_sketches
 
     rng = np.random.default_rng(3)
     n_partials = 1000
@@ -270,12 +270,12 @@ def test_sketch_tree_merge_equals_flat(spark):
         partials = spark.createDataFrame(
             rows[kind], "sketch binary, n_rows long"
         ).repartition(n_partials)
-        tree = _merge_stage(partials, [], decode, fanin=8)
+        tree = merge_sketches(partials, [], decode, fanin=8)
         # 1000 -> 125 -> 16 -> 2 -> final: three salted levels + final
         plan = tree._jdf.queryExecution().executedPlan().toString()
         from test_spark_agg import _n_merge_levels
         assert _n_merge_levels(plan) == 4, kind
-        flat = _merge_stage(partials, [], decode, fanin=None)
+        flat = merge_sketches(partials, [], decode, fanin=None)
         t = tree.collect()[0]
         f = flat.collect()[0]
         assert bytes(t["sketch"]) == bytes(f["sketch"]), kind
@@ -772,7 +772,7 @@ def test_mg_guarantees_survive_salted_tree(spark):
     """MG is not byte-deterministic across merge-tree shapes (prune
     order differs), so the salted-tree assert is the GUARANTEE, not
     equality: never overcount, undercount <= err, recall above err."""
-    from go_tdigest_spark.operators.sketch_agg import _merge_stage
+    from go_tdigest_spark.operators.sketch_agg import merge_sketches
     from go_tdigest_spark.sketches import MisraGries
 
     rng = np.random.default_rng(13)
@@ -790,7 +790,7 @@ def test_mg_guarantees_survive_salted_tree(spark):
         rows, "sketch binary, n_rows long"
     ).repartition(200)
 
-    merged = _merge_stage(partials, [], MisraGries.from_bytes, fanin=8)
+    merged = merge_sketches(partials, [], MisraGries.from_bytes, fanin=8)
     plan = merged._jdf.queryExecution().executedPlan().toString()
     from test_spark_agg import _n_merge_levels
     assert _n_merge_levels(plan) >= 3  # >=2 salted levels
