@@ -1,4 +1,4 @@
-"""Scalar pandas UDFs over digest (binary) columns.
+"""Reads over digest (binary) columns.
 
 These run on *final* digests — a handful of rows, one per group — so the
 per-row Python here is off the hot path by construction; the heavy lifting
@@ -7,6 +7,9 @@ NumPy.  Exposes the reference's read API (Quantile/CDF/TrimmedMean,
 tdigest.go:93-140/295-333/411-455) as Spark expressions so
 ``SELECT source, td_quantile(digest, 0.99) FROM digests`` works
 distributed, plus codecs to exchange digests with go/Java implementations.
+
+Every read is one ``sketch_udf`` (``_udf.py``), and each SQL name
+registers the same object its Column-API function calls.
 """
 
 from __future__ import annotations
@@ -14,174 +17,30 @@ from __future__ import annotations
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from .. import serde
+from .._udf import sketch_udf, unit_interval
+from ..core import TDigest
 
 
-def _map_digests(series: pd.Series, fn):
-    return series.map(lambda b: None if b is None else fn(serde.decode(bytes(b))))
+def _is_list(v) -> bool:
+    return isinstance(v, Iterable) and not isinstance(v, (str, bytes))
 
 
-def td_quantile(digest: Column | str, q) -> Column:
-    """Quantile(s) of a digest column. ``q`` may be a float or a list of
-    floats (returns array<double>)."""
-    if isinstance(q, Iterable) and not isinstance(q, (str, bytes)):
-        qs = [float(x) for x in q]
-
-        @pandas_udf("array<double>")
-        def _f(s: pd.Series) -> pd.Series:
-            arr = np.asarray(qs)
-            return _map_digests(s, lambda d: d.quantile(arr).tolist())
-
-        return _f(digest)
-
-    qf = float(q)
-
-    @pandas_udf("double")
-    def _f(s: pd.Series) -> pd.Series:
-        return _map_digests(s, lambda d: d.quantile(qf))
-
-    return _f(digest)
-
-
-def td_cdf(digest: Column | str, x) -> Column:
-    if isinstance(x, Iterable) and not isinstance(x, (str, bytes)):
-        xs = [float(v) for v in x]
-
-        @pandas_udf("array<double>")
-        def _f(s: pd.Series) -> pd.Series:
-            arr = np.asarray(xs)
-            return _map_digests(s, lambda d: d.cdf(arr).tolist())
-
-        return _f(digest)
-
-    xf = float(x)
-
-    @pandas_udf("double")
-    def _f(s: pd.Series) -> pd.Series:
-        return _map_digests(s, lambda d: d.cdf(xf))
-
-    return _f(digest)
-
-
-# DataType instance, not the "double" DDL string: module-level
-# decoration runs at import time, before any SparkSession exists, and
-# the string form needs the JVM parser
-@pandas_udf(DoubleType())
-def _td_cdf_col_udf(s: pd.Series, x: pd.Series) -> pd.Series:
-    # one decode per DISTINCT digest per batch, vectorized evaluation
-    # over each digest's row slice: the per-row-argument hot path (e.g.
-    # tdigest_rank joins one digest against millions of fact rows — a
-    # decode per row would dominate).  NULL digest or NULL x -> NULL.
-    out = pd.Series([None] * len(s), index=s.index, dtype=object)
-    live = (~s.isna()) & (~pd.isna(x))
-    if live.any():
-        sl = s[live]
-        xl = pd.to_numeric(x[live]).astype(float)
-        for buf, idx in sl.groupby(sl.map(bytes)).groups.items():
-            d = serde.decode(buf)
-            vals = np.atleast_1d(d.cdf(xl.loc[idx].to_numpy()))
-            out.loc[idx] = [float(v) for v in vals]
-    return out
-
-
-@pandas_udf(DoubleType())
-def _td_quantile_col_udf(s: pd.Series, q: pd.Series) -> pd.Series:
-    # same grouped-decode discipline as _td_cdf_col_udf
-    out = pd.Series([None] * len(s), index=s.index, dtype=object)
-    live = (~s.isna()) & (~pd.isna(q))
-    if live.any():
-        sl = s[live]
-        ql = pd.to_numeric(q[live]).astype(float)
-        for buf, idx in sl.groupby(sl.map(bytes)).groups.items():
-            d = serde.decode(buf)
-            vals = np.atleast_1d(d.quantile(ql.loc[idx].to_numpy()))
-            out.loc[idx] = [float(v) for v in vals]
-    return out
-
-
-def td_cdf_col(digest: Column | str, x: Column) -> Column:
-    """CDF evaluated at a PER-ROW ``x`` column (td_cdf takes a scalar).
-    One decode per distinct digest per batch — safe to call on a fact
-    table that repeats a group digest across millions of rows."""
-    return _td_cdf_col_udf(digest, x)
-
-
-def td_quantile_col(digest: Column | str, q: Column) -> Column:
-    """Quantile at a PER-ROW ``q`` column; see td_cdf_col."""
-    return _td_quantile_col_udf(digest, q)
-
-
-def td_trimmed_mean(digest: Column | str, p1: float, p2: float) -> Column:
-    p1f, p2f = float(p1), float(p2)
-
-    @pandas_udf("double")
-    def _f(s: pd.Series) -> pd.Series:
-        return _map_digests(s, lambda d: d.trimmed_mean(p1f, p2f))
-
-    return _f(digest)
-
-
-def td_count(digest: Column | str) -> Column:
-    @pandas_udf("long")
-    def _f(s: pd.Series) -> pd.Series:
-        return _map_digests(s, lambda d: d.count)
-
-    return _f(digest)
-
-
-def td_ncentroids(digest: Column | str) -> Column:
-    @pandas_udf("int")
-    def _f(s: pd.Series) -> pd.Series:
-        return _map_digests(s, lambda d: len(d))
-
-    return _f(digest)
-
-
-def td_centroids(digest: Column | str) -> Column:
-    """Explodable lineage view of a digest (parity: ForEachCentroid,
-    tdigest.go:360-362)."""
-
-    @pandas_udf("array<struct<mean: double, count: long>>")
-    def _f(s: pd.Series) -> pd.Series:
-        def conv(d):
-            means, counts = d.centroids()
-            return [
-                {"mean": float(m), "count": int(c)} for m, c in zip(means, counts)
-            ]
-
-        return _map_digests(s, conv)
-
-    return _f(digest)
-
-
-# Module-level pandas UDFs (DataType objects, not DDL strings — the
-# module-level @pandas_udf gotcha) so the Column API and
-# spark.udf.register share ONE implementation each — same convention as
-# _bloom_might_contain_udf in sketch_agg.py, no SQL twin to drift.
-from pyspark.sql.types import BinaryType as _BinaryType
-from pyspark.sql.types import DoubleType as _DoubleType
-
-
-@pandas_udf(_BinaryType())
-def _td_merge_pair_udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
-    out = []
-    for ba, bb in zip(sa, sb):
-        if ba is None and bb is None:
-            out.append(None)
-        elif ba is None:
-            out.append(bytes(bb))
-        elif bb is None:
-            out.append(bytes(ba))
-        else:
-            merged = serde.decode(bytes(ba)).merge(serde.decode(bytes(bb)))
-            out.append(serde.encode(merged))
-    return pd.Series(out)
+def _centroid_structs(d) -> list:
+    means, counts = d.centroids()
+    return [{"mean": float(m), "count": int(c)} for m, c in zip(means, counts)]
 
 
 def _cdf_knots(d) -> np.ndarray:
@@ -198,28 +57,94 @@ def _cdf_knots(d) -> np.ndarray:
     return np.concatenate(([lo0], mids))
 
 
-@pandas_udf(_DoubleType())
-def _td_ks_distance_udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
-    out = []
-    for ba, bb in zip(sa, sb):
-        if ba is None or bb is None:
-            out.append(None)
-            continue
-        da = serde.decode(bytes(ba))
-        db = serde.decode(bytes(bb))
-        if da.count == 0 or db.count == 0:
-            # an empty digest has no CDF (core.cdf returns NaN) — a
-            # degenerate comparison is NULL, never a silent NaN that
-            # makes every drift threshold evaluate False
-            out.append(None)
-            continue
-        # sup of |F_a - F_b| for two piecewise-linear CDFs is attained
-        # at a breakpoint of EITHER function; nextafter points capture
-        # the left limits of the terminal jumps
-        knots = np.union1d(_cdf_knots(da), _cdf_knots(db))
-        xs = np.union1d(knots, np.nextafter(knots, -np.inf))
-        out.append(float(np.max(np.abs(da.cdf(xs) - db.cdf(xs)))))
-    return pd.Series(out)
+def _ks_distance(da, db):
+    if da.count == 0 or db.count == 0:
+        # an empty digest has no CDF (core.cdf returns NaN) — a
+        # degenerate comparison is NULL, never a silent NaN that
+        # makes every drift threshold evaluate False
+        return None
+    # sup of |F_a - F_b| for two piecewise-linear CDFs is attained
+    # at a breakpoint of EITHER function; nextafter points capture
+    # the left limits of the terminal jumps
+    knots = np.union1d(_cdf_knots(da), _cdf_knots(db))
+    xs = np.union1d(knots, np.nextafter(knots, -np.inf))
+    return float(np.max(np.abs(da.cdf(xs) - db.cdf(xs))))
+
+
+# per-row q/x reads decode each distinct digest once per batch: tdigest_rank
+# and friends repeat one group digest over millions of fact rows
+_td_quantile_udf = sketch_udf(serde.decode, TDigest.quantile, DoubleType(), per_distinct=True)
+_td_cdf_udf = sketch_udf(serde.decode, TDigest.cdf, DoubleType(), per_distinct=True)
+_td_trimmed_mean_udf = sketch_udf(
+    serde.decode, lambda d, p1, p2: d.trimmed_mean(float(p1), float(p2)), DoubleType()
+)
+_td_count_udf = sketch_udf(serde.decode, lambda d: d.count, LongType())
+_td_ncentroids_udf = sketch_udf(serde.decode, len, IntegerType())
+_td_centroids_udf = sketch_udf(
+    serde.decode,
+    _centroid_structs,
+    ArrayType(StructType([StructField("mean", DoubleType()), StructField("count", LongType())])),
+)
+_td_to_ref_bytes_udf = sketch_udf(serde.decode, serde.to_ref_bytes, BinaryType())
+_td_from_ref_bytes_udf = sketch_udf(serde.from_ref_bytes, serde.encode, BinaryType())
+_td_merge_pair_udf = sketch_udf(
+    serde.decode, lambda a, b: serde.encode(a.merge(b)), BinaryType(),
+    n_sketches=2, nulls="identity",
+)
+_td_ks_distance_udf = sketch_udf(serde.decode, _ks_distance, DoubleType(), n_sketches=2)
+
+
+def td_quantile(digest: Column | str, q) -> Column:
+    """Quantile(s) of a digest column. ``q`` may be a float or a list of
+    floats (returns array<double>); each must lie in [0, 1]."""
+    if _is_list(q):
+        qs = np.array([unit_interval(v) for v in q])
+        return sketch_udf(
+            serde.decode, lambda d: d.quantile(qs).tolist(), ArrayType(DoubleType())
+        )(digest)
+    return _td_quantile_udf(digest, F.lit(unit_interval(q)))
+
+
+def td_cdf(digest: Column | str, x) -> Column:
+    if _is_list(x):
+        xs = np.array([float(v) for v in x])
+        return sketch_udf(
+            serde.decode, lambda d: d.cdf(xs).tolist(), ArrayType(DoubleType())
+        )(digest)
+    return _td_cdf_udf(digest, F.lit(float(x)))
+
+
+def td_cdf_col(digest: Column | str, x: Column) -> Column:
+    """CDF evaluated at a PER-ROW ``x`` column (td_cdf takes a scalar).
+    One decode per distinct digest per batch — safe to call on a fact
+    table that repeats a group digest across millions of rows."""
+    return _td_cdf_udf(digest, x)
+
+
+def td_quantile_col(digest: Column | str, q: Column) -> Column:
+    """Quantile at a PER-ROW ``q`` column; see td_cdf_col."""
+    return _td_quantile_udf(digest, q)
+
+
+def td_trimmed_mean(digest: Column | str, p1: float, p2: float) -> Column:
+    p1f, p2f = float(p1), float(p2)
+    if not 0.0 <= p1f < p2f <= 1.0:
+        raise ValueError(f"need 0 <= p1 < p2 <= 1, got p1={p1!r}, p2={p2!r}")
+    return _td_trimmed_mean_udf(digest, F.lit(p1f), F.lit(p2f))
+
+
+def td_count(digest: Column | str) -> Column:
+    return _td_count_udf(digest)
+
+
+def td_ncentroids(digest: Column | str) -> Column:
+    return _td_ncentroids_udf(digest)
+
+
+def td_centroids(digest: Column | str) -> Column:
+    """Explodable lineage view of a digest (parity: ForEachCentroid,
+    tdigest.go:360-362)."""
+    return _td_centroids_udf(digest)
 
 
 def td_merge_pair(a: Column | str, b: Column | str) -> Column:
@@ -246,55 +171,27 @@ def td_ks_distance(a: Column | str, b: Column | str) -> Column:
 
 def td_to_ref_bytes(digest: Column | str) -> Column:
     """Re-encode to the go/Java-compatible smallEncoding v2 wire format."""
-
-    @pandas_udf("binary")
-    def _f(s: pd.Series) -> pd.Series:
-        return _map_digests(s, serde.to_ref_bytes)
-
-    return _f(digest)
+    return _td_to_ref_bytes_udf(digest)
 
 
 def td_from_ref_bytes(buf: Column | str) -> Column:
     """Ingest digests serialized by go-tdigest / Java t-digest."""
+    return _td_from_ref_bytes_udf(buf)
 
-    @pandas_udf("binary")
-    def _f(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda b: None if b is None else serde.encode(serde.from_ref_bytes(bytes(b)))
-        )
 
-    return _f(buf)
+# SQL name -> the UDF its Column-API function calls (q/x/p as columns)
+_SQL_READS = {
+    "td_quantile": _td_quantile_udf,
+    "td_cdf": _td_cdf_udf,
+    "td_trimmed_mean": _td_trimmed_mean_udf,
+    "td_count": _td_count_udf,
+    "td_merge_pair": _td_merge_pair_udf,
+    "td_ks_distance": _td_ks_distance_udf,
+}
 
 
 def register_sql_functions(spark: SparkSession) -> None:
-    """Register SQL-callable variants (q/x/p as columns, e.g.
-    ``td_quantile(digest, 0.99)`` inside spark.sql)."""
-
-    # q/x-as-column variants share the module-level grouped-decode UDFs
-    # (one decode per distinct digest per batch; NULL-arg -> NULL)
-    td_quantile_sql = _td_quantile_col_udf
-    td_cdf_sql = _td_cdf_col_udf
-
-    @pandas_udf("double")
-    def td_trimmed_mean_sql(s: pd.Series, p1: pd.Series, p2: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None
-                if b is None
-                else serde.decode(bytes(b)).trimmed_mean(float(a), float(z))
-                for b, a, z in zip(s, p1, p2)
-            ]
-        )
-
-    @pandas_udf("long")
-    def td_count_sql(s: pd.Series) -> pd.Series:
-        return _map_digests(s, lambda d: d.count)
-
-    spark.udf.register("td_quantile", td_quantile_sql)
-    spark.udf.register("td_cdf", td_cdf_sql)
-    spark.udf.register("td_trimmed_mean", td_trimmed_mean_sql)
-    spark.udf.register("td_count", td_count_sql)
-    # shared module-level implementations — Column API and SQL are the
-    # same function object, nothing to drift
-    spark.udf.register("td_merge_pair", _td_merge_pair_udf)
-    spark.udf.register("td_ks_distance", _td_ks_distance_udf)
+    """Register the SQL reads, e.g. ``td_quantile(digest, 0.99)`` inside
+    spark.sql."""
+    for name, udf in _SQL_READS.items():
+        spark.udf.register(name, udf)

@@ -41,15 +41,15 @@ from functools import partial, reduce
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
 
-from ..core import _merge_segments, _SegmentedBuild
 from .. import serde
+from .._udf import sketch_udf
+from ..core import TDigest, _merge_segments, _SegmentedBuild
 from ._batch import ROWS_COL, partial_stage
 from ._tree import _KEY_JSON_OPTS, group_sum, tree_merge
 
@@ -277,46 +277,27 @@ def _collect_digest_map(digests: DataFrame, by: Sequence[str]) -> dict:
 
 
 def _make_lookup_udf(bc, mode: str, target_blob: bytes | None = None):
-    """pandas UDF (key string, value) -> double, decoding each DISTINCT
-    digest once per batch from the broadcast map.
+    """Read (key string, value) -> double over the broadcast digest map,
+    decoding each distinct group's digest once per batch; a key missing
+    from the map reads NULL.
 
     mode='cdf'       -> CDF_group(x)
     mode='quantile'  -> Quantile_group(x)
     mode='normalize' -> Q_target(CDF_group(x)) fused in one pass
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
+    # a NULL target digest reads as empty: every quantile is NaN -> NULL
+    target = TDigest() if target_blob is None else serde.decode(target_blob)
+    fn = {
+        "cdf": TDigest.cdf,
+        "quantile": TDigest.quantile,
+        "normalize": lambda d, x: target.quantile(d.cdf(x)),
+    }[mode]
 
-    from .. import serde
+    def decode(key: str):
+        blob = bc.value.get(key)
+        return None if blob is None else serde.decode(blob)
 
-    @pandas_udf(DoubleType())
-    def _f(k: pd.Series, x: pd.Series) -> pd.Series:
-        mapping = bc.value
-        target = (
-            serde.decode(target_blob) if target_blob is not None else None
-        )
-        out = pd.Series([None] * len(k), index=k.index, dtype=object)
-        live = ~pd.isna(x)
-        if live.any():
-            kl = k[live]
-            xl = pd.to_numeric(x[live]).astype(float)
-            for key, idx in kl.groupby(kl, sort=False).groups.items():
-                blob = mapping.get(key)
-                if blob is None or (mode == "normalize" and target is None):
-                    continue
-                d = serde.decode(blob)
-                xs = xl.loc[idx].to_numpy()
-                if mode == "cdf":
-                    vals = np.atleast_1d(d.cdf(xs))
-                elif mode == "quantile":
-                    vals = np.atleast_1d(d.quantile(xs))
-                else:  # normalize
-                    vals = np.atleast_1d(target.quantile(d.cdf(xs)))
-                out.loc[idx] = [float(v) for v in vals]
-        return out
-
-    return _f
+    return sketch_udf(decode, fn, DoubleType(), per_distinct=True)
 
 
 def _require_single_row(d: DataFrame, what: str) -> None:

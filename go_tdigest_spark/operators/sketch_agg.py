@@ -29,11 +29,13 @@ from pyspark.sql.types import (
     StructField,
 )
 
+from .._udf import sketch_udf, unit_interval
 from ..sketches import (
     HLL,
     KLL,
     BloomFilter,
     CountMinSketch,
+    FrequentDirections,
     MisraGries,
     ThetaSketch,
 )
@@ -211,11 +213,7 @@ def hll_agg(
     return merge_sketches(hll_partials(df, cols, by, p), by, HLL.from_bytes, fanin=fanin)
 
 
-@pandas_udf(DoubleType())
-def _hll_estimate_udf(s: pd.Series) -> pd.Series:
-    return s.map(
-        lambda b: None if b is None else HLL.from_bytes(bytes(b)).estimate()
-    )
+_hll_estimate_udf = sketch_udf(HLL.from_bytes, HLL.estimate, DoubleType())
 
 
 def hll_estimate(sketch: Column | str) -> Column:
@@ -231,50 +229,28 @@ def hll_estimate(sketch: Column | str) -> Column:
 # NULL propagates (an unknown set has an unknown overlap).
 
 
-def _pair_udf(ret_type, fn, null_identity: bool):
-    @pandas_udf(ret_type)
-    def _f(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = []
-        for ba, bb in zip(sa, sb):
-            if ba is None and bb is None:
-                out.append(None)
-            elif ba is None:
-                out.append(bytes(bb) if null_identity else None)
-            elif bb is None:
-                out.append(bytes(ba) if null_identity else None)
-            else:
-                out.append(fn(bytes(ba), bytes(bb)))
-        return pd.Series(out)
-
-    return _f
+def _merge_pair_udf(from_bytes):
+    """NULL-identity merge of two sketches of one family."""
+    return sketch_udf(
+        from_bytes, lambda a, b: a.merge(b).to_bytes(), BinaryType(),
+        n_sketches=2, nulls="identity",
+    )
 
 
-def _hll_union_bytes(ba: bytes, bb: bytes) -> bytes:
-    return HLL.from_bytes(ba).merge(HLL.from_bytes(bb)).to_bytes()
+def _hll_intersect(a: HLL, b: HLL) -> float:
+    # take both standalone estimates BEFORE the in-place merge, then
+    # reuse a as the union — one decode per side
+    ea, eb = a.estimate(), b.estimate()
+    return max(0.0, ea + eb - a.merge(b).estimate())
 
 
-_hll_union_pair_udf = _pair_udf(BinaryType(), _hll_union_bytes, True)
+_hll_union_pair_udf = _merge_pair_udf(HLL.from_bytes)
+_hll_intersect_udf = sketch_udf(HLL.from_bytes, _hll_intersect, DoubleType(), n_sketches=2)
 
 
 def hll_union_pair(a: Column | str, b: Column | str) -> Column:
     """Union of two HLL sketches (register-wise max) — NULL identity."""
     return _hll_union_pair_udf(a, b)
-
-
-@pandas_udf(DoubleType())
-def _hll_intersect_udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
-    out = []
-    for ba, bb in zip(sa, sb):
-        if ba is None or bb is None:
-            out.append(None)
-            continue
-        a = HLL.from_bytes(bytes(ba))
-        b = HLL.from_bytes(bytes(bb))
-        # take both standalone estimates BEFORE the in-place merge, then
-        # reuse a as the union — one decode per side
-        ea, eb = a.estimate(), b.estimate()
-        out.append(max(0.0, ea + eb - a.merge(b).estimate()))
-    return pd.Series(out)
 
 
 def hll_intersect_estimate(a: Column | str, b: Column | str) -> Column:
@@ -285,21 +261,10 @@ def hll_intersect_estimate(a: Column | str, b: Column | str) -> Column:
     return _hll_intersect_udf(a, b)
 
 
-def _bloom_union_bytes(ba: bytes, bb: bytes) -> bytes:
-    return BloomFilter.from_bytes(ba).merge(BloomFilter.from_bytes(bb)).to_bytes()
-
-
-def _bloom_intersect_bytes(ba: bytes, bb: bytes) -> bytes:
-    return (
-        BloomFilter.from_bytes(ba)
-        .intersect(BloomFilter.from_bytes(bb))
-        .to_bytes()
-    )
-
-
-_bloom_union_pair_udf = _pair_udf(BinaryType(), _bloom_union_bytes, True)
-_bloom_intersect_pair_udf = _pair_udf(
-    BinaryType(), _bloom_intersect_bytes, False
+_bloom_union_pair_udf = _merge_pair_udf(BloomFilter.from_bytes)
+_bloom_intersect_pair_udf = sketch_udf(
+    BloomFilter.from_bytes, lambda a, b: a.intersect(b).to_bytes(), BinaryType(),
+    n_sketches=2,
 )
 
 
@@ -317,15 +282,7 @@ def bloom_intersect_pair(a: Column | str, b: Column | str) -> Column:
     return _bloom_intersect_pair_udf(a, b)
 
 
-def _cms_merge_bytes(ba: bytes, bb: bytes) -> bytes:
-    return (
-        CountMinSketch.from_bytes(ba)
-        .merge(CountMinSketch.from_bytes(bb))
-        .to_bytes()
-    )
-
-
-_cms_merge_pair_udf = _pair_udf(BinaryType(), _cms_merge_bytes, True)
+_cms_merge_pair_udf = _merge_pair_udf(CountMinSketch.from_bytes)
 
 
 def cms_merge_pair(a: Column | str, b: Column | str) -> Column:
@@ -371,7 +328,7 @@ def bloom_agg(
     )
 
 
-def _probe_hashes(h: pd.Series, fn_name: str) -> np.ndarray:
+def _probe_hashes(h: np.ndarray, fn_name: str) -> np.ndarray:
     """int64 probe hashes, guarded against the pandas NULL trap: a hash
     column containing ANY null arrives from Arrow as float64, which
     rounds every other ~2^63 xxhash64 value in the batch (float64 has a
@@ -379,8 +336,6 @@ def _probe_hashes(h: pd.Series, fn_name: str) -> np.ndarray:
     wrong positions for all rows.  Refuse loudly instead; the Column API
     wrappers coalesce NULLs JVM-side so they never hit this path."""
     if h.dtype.kind == "f":
-        if h.isna().all():
-            return np.zeros(len(h), dtype=np.int64)  # caller NULL-masks all
         raise RuntimeError(
             f"{fn_name}: NULL probe hashes reached the vectorized kernel "
             "(pandas converts a nullable int64 column to lossy float64). "
@@ -388,30 +343,19 @@ def _probe_hashes(h: pd.Series, fn_name: str) -> np.ndarray:
             f"{fn_name}(sketch, coalesce(h, 0)) END — the Column API does "
             "this automatically."
         )
-    return h.to_numpy(dtype=np.int64)
+    return h.astype(np.int64, copy=False)
 
 
-@pandas_udf(BooleanType())
-def _bloom_might_contain_udf(s: pd.Series, a: pd.Series, b: pd.Series) -> pd.Series:
-    # probe joins repeat the same (broadcast) sketch across many rows:
-    # decode each distinct sketch ONCE per batch, then probe all of
-    # its rows through the vectorized kernel.  NULL sketch -> NULL.
-    # Module-level so the Column API and spark.udf.register share ONE
-    # implementation (no per-row-decode SQL twin drifting beside it).
-    out = pd.Series(np.zeros(len(s), dtype=object), index=s.index)
-    nulls = s.isna() | a.isna() | b.isna()
-    out[nulls] = None
-    live = s[~nulls]
-    groups = live.groupby(live.map(bytes)).groups
-    h1v = _probe_hashes(a, "bloom_might_contain")
-    h2v = _probe_hashes(b, "bloom_might_contain")
-    pos = {ix: i for i, ix in enumerate(s.index)}
-    for buf, idx in groups.items():
-        bf = BloomFilter.from_bytes(buf)
-        rows = np.fromiter((pos[i] for i in idx), dtype=np.int64)
-        hits = bf.might_contain_hashes(h1v[rows], h2v[rows])
-        out.iloc[rows] = [bool(x) for x in hits]
-    return out
+# probe joins repeat the same (broadcast) sketch across many rows
+_bloom_might_contain_udf = sketch_udf(
+    BloomFilter.from_bytes,
+    lambda bf, h1, h2: bf.might_contain_hashes(
+        _probe_hashes(h1, "bloom_might_contain"),
+        _probe_hashes(h2, "bloom_might_contain"),
+    ),
+    BooleanType(),
+    per_distinct=True,
+)
 
 
 def bloom_might_contain(sketch: Column | str, h1: Column, h2: Column) -> Column:
@@ -472,41 +416,15 @@ def kll_partials(
     )
 
 
-@pandas_udf(DoubleType())
-def _kll_quantile_udf(s: pd.Series, q: pd.Series) -> pd.Series:
-    # NULL q arrives as NaN in the numeric pandas column — pd.isna, not
-    # `is None`, is the correct null test for SQL params
-    return pd.Series(
-        [
-            None
-            if b is None or pd.isna(qv)
-            else KLL.from_bytes(bytes(b)).quantile(float(qv))
-            for b, qv in zip(s, q)
-        ]
-    )
-
-
-@pandas_udf(DoubleType())
-def _kll_cdf_udf(s: pd.Series, x: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None
-            if b is None or pd.isna(xv)
-            else KLL.from_bytes(bytes(b)).cdf(float(xv))
-            for b, xv in zip(s, x)
-        ]
-    )
-
-
-@pandas_udf(LongType())
-def _kll_count_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda b: None if b is None else KLL.from_bytes(bytes(b)).count)
+_kll_quantile_udf = sketch_udf(KLL.from_bytes, lambda s, q: s.quantile(float(q)), DoubleType())
+_kll_cdf_udf = sketch_udf(KLL.from_bytes, lambda s, x: s.cdf(float(x)), DoubleType())
+_kll_count_udf = sketch_udf(KLL.from_bytes, lambda s: s.count, LongType())
 
 
 def kll_quantile(sketch: Column | str, q: float) -> Column:
     """Quantile estimate; q=0/1 are the exact tracked min/max (which is
-    what makes kll_agg oracle-checkable end to end)."""
-    return _kll_quantile_udf(sketch, F.lit(float(q)))
+    what makes kll_agg oracle-checkable end to end); ``q`` must lie in [0, 1]."""
+    return _kll_quantile_udf(sketch, F.lit(unit_interval(q)))
 
 
 def kll_cdf(sketch: Column | str, x: float) -> Column:
@@ -517,11 +435,7 @@ def kll_count(sketch: Column | str) -> Column:
     return _kll_count_udf(sketch)
 
 
-def _kll_merge_bytes(ba: bytes, bb: bytes) -> bytes:
-    return KLL.from_bytes(ba).merge(KLL.from_bytes(bb)).to_bytes()
-
-
-_kll_merge_pair_udf = _pair_udf(BinaryType(), _kll_merge_bytes, True)
+_kll_merge_pair_udf = _merge_pair_udf(KLL.from_bytes)
 
 
 def kll_merge_pair(a: Column | str, b: Column | str) -> Column:
@@ -749,23 +663,12 @@ def cms_partials(
     )
 
 
-@pandas_udf(LongType())
-def _cms_point_query_udf(s: pd.Series, hh: pd.Series) -> pd.Series:
-    # one decode per distinct sketch per batch, vectorized probes;
-    # NULL sketch or NULL probe hash -> NULL (SQL semantics)
-    out = pd.Series(np.zeros(len(s), dtype=object), index=s.index)
-    nulls = s.isna() | hh.isna()
-    out[nulls] = None
-    live = s[~nulls]
-    groups = live.groupby(live.map(bytes)).groups
-    hv = _probe_hashes(hh, "cms_point_query")
-    pos = {ix: i for i, ix in enumerate(s.index)}
-    for buf, idx in groups.items():
-        cms = CountMinSketch.from_bytes(buf)
-        rows = np.fromiter((pos[i] for i in idx), dtype=np.int64)
-        ests = cms.point_query_hashes(hv[rows])
-        out.iloc[rows] = [int(x) for x in ests]
-    return out
+_cms_point_query_udf = sketch_udf(
+    CountMinSketch.from_bytes,
+    lambda cms, h: cms.point_query_hashes(_probe_hashes(h, "cms_point_query")),
+    LongType(),
+    per_distinct=True,
+)
 
 
 def cms_point_query(sketch: Column | str, h: Column) -> Column:
@@ -776,11 +679,7 @@ def cms_point_query(sketch: Column | str, h: Column) -> Column:
     return F.when(~anynull, _cms_point_query_udf(sk, F.coalesce(h, F.lit(0))))
 
 
-@pandas_udf(LongType())
-def _cms_total_udf(s: pd.Series) -> pd.Series:
-    return s.map(
-        lambda b: None if b is None else CountMinSketch.from_bytes(bytes(b)).total
-    )
+_cms_total_udf = sketch_udf(CountMinSketch.from_bytes, lambda s: s.total, LongType())
 
 
 def cms_total(sketch: Column | str) -> Column:
@@ -810,7 +709,6 @@ def fd_partials(
     fixed-width contract, validated per batch by the shared _vec_matrix
     guard.  NULL vectors are dropped (matching count(vec) semantics);
     rows with non-finite values fail loudly in the kernel."""
-    from ..sketches import FrequentDirections
     from .ann import _vec_matrix
 
     return _generic_partials(
@@ -839,8 +737,6 @@ def fd_agg(
     sketch certifies its own spectral error (fd_spectral_bound) and its
     exact row count / Frobenius mass (fd_rows / fd_fnorm2) stay
     oracle-checkable against count(*) / sum of squares."""
-    from ..sketches import FrequentDirections
-
     return merge_sketches(
         fd_partials(df, vec_col, dim, by, ell),
         by,
@@ -849,37 +745,9 @@ def fd_agg(
     )
 
 
-@pandas_udf(LongType())
-def _fd_rows_udf(s: pd.Series) -> pd.Series:
-    from ..sketches import FrequentDirections
-
-    return s.map(
-        lambda b: None
-        if b is None
-        else FrequentDirections.from_bytes(bytes(b)).n_rows
-    )
-
-
-@pandas_udf(DoubleType())
-def _fd_fnorm2_udf(s: pd.Series) -> pd.Series:
-    from ..sketches import FrequentDirections
-
-    return s.map(
-        lambda b: None
-        if b is None
-        else FrequentDirections.from_bytes(bytes(b)).fnorm2
-    )
-
-
-@pandas_udf(DoubleType())
-def _fd_bound_udf(s: pd.Series) -> pd.Series:
-    from ..sketches import FrequentDirections
-
-    return s.map(
-        lambda b: None
-        if b is None
-        else FrequentDirections.from_bytes(bytes(b)).shrink_total
-    )
+_fd_rows_udf = sketch_udf(FrequentDirections.from_bytes, lambda s: s.n_rows, LongType())
+_fd_fnorm2_udf = sketch_udf(FrequentDirections.from_bytes, lambda s: s.fnorm2, DoubleType())
+_fd_bound_udf = sketch_udf(FrequentDirections.from_bytes, lambda s: s.shrink_total, DoubleType())
 
 
 def fd_rows(sketch: Column | str) -> Column:
@@ -900,24 +768,11 @@ def fd_spectral_bound(sketch: Column | str) -> Column:
     return _fd_bound_udf(sketch)
 
 
-@pandas_udf(ArrayType(DoubleType()))
-def _fd_singular_values_udf(s: pd.Series, k: pd.Series) -> pd.Series:
-    from ..sketches import FrequentDirections
-
-    kv = k.to_numpy()
-    out = []
-    for b, ki in zip(s, kv):
-        # pd.isna, not `is None`: a SQL NULL k arrives as float64 NaN
-        # through the pandas conversion and int(NaN) raises (the
-        # _kll_quantile_udf convention)
-        if b is None or pd.isna(ki):
-            out.append(None)
-        else:
-            sv = FrequentDirections.from_bytes(bytes(b)).singular_values(
-                int(ki)
-            )
-            out.append([float(x) for x in sv])
-    return pd.Series(out, index=s.index)
+_fd_singular_values_udf = sketch_udf(
+    FrequentDirections.from_bytes,
+    lambda s, k: s.singular_values(int(k)).tolist(),
+    ArrayType(DoubleType()),
+)
 
 
 def fd_singular_values(sketch: Column | str, k: int) -> Column:
@@ -960,11 +815,8 @@ def theta_agg(
     )
 
 
-@pandas_udf(DoubleType())
-def _theta_estimate_udf(s: pd.Series) -> pd.Series:
-    return s.map(
-        lambda b: None if b is None else ThetaSketch.from_bytes(bytes(b)).estimate()
-    )
+_theta_estimate_udf = sketch_udf(ThetaSketch.from_bytes, ThetaSketch.estimate, DoubleType())
+_theta_n_retained_udf = sketch_udf(ThetaSketch.from_bytes, ThetaSketch.n_retained, LongType())
 
 
 def theta_estimate(sketch: Column | str) -> Column:
@@ -973,32 +825,18 @@ def theta_estimate(sketch: Column | str) -> Column:
     return _theta_estimate_udf(sketch)
 
 
-@pandas_udf(LongType())
-def _theta_n_retained_udf(s: pd.Series) -> pd.Series:
-    return s.map(
-        lambda b: None
-        if b is None
-        else ThetaSketch.from_bytes(bytes(b)).n_retained()
-    )
-
-
 def theta_n_retained(sketch: Column | str) -> Column:
     """Retained-sample size — the quantity that governs the error of a
     derived (intersection/difference) sketch."""
     return _theta_n_retained_udf(sketch)
 
 
-@pandas_udf(DoubleType())
-def _theta_rse_bound_udf(s: pd.Series, n_std: pd.Series) -> pd.Series:
-    out = []
-    for b, ns in zip(s, n_std):
-        # pd.isna: a SQL NULL n_std arrives as NaN, never None
-        if b is None or pd.isna(ns):
-            out.append(None)
-        else:
-            v = ThetaSketch.from_bytes(bytes(b)).rse_bound(float(ns))
-            out.append(None if v == float("inf") else v)
-    return pd.Series(out, dtype="float64")
+def _rse_bound(s: ThetaSketch, n_std) -> float | None:
+    v = s.rse_bound(float(n_std))
+    return None if v == float("inf") else v
+
+
+_theta_rse_bound_udf = sketch_udf(ThetaSketch.from_bytes, _rse_bound, DoubleType())
 
 
 def theta_rse_bound(sketch: Column | str, n_std: float = 3.0) -> Column:
@@ -1008,35 +846,15 @@ def theta_rse_bound(sketch: Column | str, n_std: float = 3.0) -> Column:
     return _theta_rse_bound_udf(sketch, F.lit(float(n_std)))
 
 
-def _theta_union_bytes(ba: bytes, bb: bytes) -> bytes:
-    return (
-        ThetaSketch.from_bytes(ba)
-        .merge(ThetaSketch.from_bytes(bb))
-        .to_bytes()
-    )
-
-
-def _theta_intersect_bytes(ba: bytes, bb: bytes) -> bytes:
-    return (
-        ThetaSketch.from_bytes(ba)
-        .intersect(ThetaSketch.from_bytes(bb))
-        .to_bytes()
-    )
-
-
-def _theta_a_not_b_bytes(ba: bytes, bb: bytes) -> bytes:
-    return (
-        ThetaSketch.from_bytes(ba)
-        .a_not_b(ThetaSketch.from_bytes(bb))
-        .to_bytes()
-    )
-
-
-_theta_union_pair_udf = _pair_udf(BinaryType(), _theta_union_bytes, True)
-_theta_intersect_pair_udf = _pair_udf(
-    BinaryType(), _theta_intersect_bytes, False
+_theta_union_pair_udf = _merge_pair_udf(ThetaSketch.from_bytes)
+_theta_intersect_pair_udf = sketch_udf(
+    ThetaSketch.from_bytes, lambda a, b: a.intersect(b).to_bytes(), BinaryType(),
+    n_sketches=2,
 )
-_theta_a_not_b_pair_udf = _pair_udf(BinaryType(), _theta_a_not_b_bytes, False)
+_theta_a_not_b_pair_udf = sketch_udf(
+    ThetaSketch.from_bytes, lambda a, b: a.a_not_b(b).to_bytes(), BinaryType(),
+    n_sketches=2,
+)
 
 
 def theta_union_pair(a: Column | str, b: Column | str) -> Column:

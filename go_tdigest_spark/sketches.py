@@ -412,11 +412,13 @@ class KLL:
         return v[order], w[order]
 
     def quantile(self, q: float) -> float:
+        if not 0.0 <= q <= 1.0:
+            raise ValueError("q must be between 0 and 1 (inclusive)")
         if self.count == 0:
             return float("nan")
-        if q <= 0.0:
+        if q == 0.0:
             return float(self.min)
-        if q >= 1.0:
+        if q == 1.0:
             return float(self.max)
         v, w = self._weighted_items()
         cw = np.cumsum(w)

@@ -1562,13 +1562,132 @@ def test_cms_seed_in_wire_format_and_merge_guard():
         CountMinSketch.from_bytes(c7.to_bytes() + b"\x00")
 
 
-def test_sketch_read_udfs_null_args(spark):
-    """SQL NULL numeric args arrive as NaN in pandas UDFs — fd_singular_values
-    and theta_rse_bound must return NULL, not crash / return 0.0."""
-    import numpy as np
+_NULL_CASES = ("null_sketch", "null_arg", "empty", "empty_null_arg")
+_NA = "n/a"  # the read takes no argument: its NULL-argument rows read normally
 
+
+def _null_table():
+    """One row per public read: (read, SQL expression or None, Column-API
+    expression, does the Column API take the argument as a Column,
+    expected value per _NULL_CASES).  Pair reads take the second sketch
+    as their argument.  "x" / "empty" stand for bytes equal to the
+    non-empty / empty input sketch."""
+    from go_tdigest_spark.functions import tdigest_fns as T
+    from go_tdigest_spark.operators import sketch_agg as S
+
+    h = F.col("h")
+    n4, merged, meet = (None,) * 4, ("x", "x", "empty", "empty"), (None, None, "empty", None)
+    return [
+        ("td_quantile", "td_quantile(td, q)", lambda: T.td_quantile("td", 0.5), False, n4),
+        ("td_quantile[list]", None, lambda: T.td_quantile("td", [0.0, 0.5]), False,
+         (None, _NA, [None, None], _NA)),
+        ("td_quantile_col", "td_quantile(td, q)", lambda: T.td_quantile_col("td", F.col("q")), True, n4),
+        ("td_cdf", "td_cdf(td, x)", lambda: T.td_cdf("td", 4.5), False, n4),
+        ("td_cdf[list]", None, lambda: T.td_cdf("td", [4.5]), False, (None, _NA, [None], _NA)),
+        ("td_cdf_col", "td_cdf(td, x)", lambda: T.td_cdf_col("td", F.col("x")), True, n4),
+        ("td_trimmed_mean", "td_trimmed_mean(td, p1, p2)",
+         lambda: T.td_trimmed_mean("td", 0.1, 0.9), False, (None, None, 0.0, None)),
+        ("td_count", "td_count(td)", lambda: T.td_count("td"), True, (None, _NA, 0, _NA)),
+        ("td_ncentroids", None, lambda: T.td_ncentroids("td"), True, (None, _NA, 0, _NA)),
+        ("td_centroids", None, lambda: T.td_centroids("td"), True, (None, _NA, [], _NA)),
+        ("td_to_ref_bytes", None, lambda: T.td_to_ref_bytes("td"), True, (None, _NA, "empty", _NA)),
+        ("td_from_ref_bytes", None, lambda: T.td_from_ref_bytes("ref"), True,
+         (None, _NA, "empty", _NA)),
+        ("td_merge_pair", "td_merge_pair(td, td_b)", lambda: T.td_merge_pair("td", "td_b"), True, merged),
+        ("td_ks_distance", "td_ks_distance(td, td_b)", lambda: T.td_ks_distance("td", "td_b"), True, n4),
+        ("kll_quantile", "kll_quantile(kll, q)", lambda: S.kll_quantile("kll", 0.5), False, n4),
+        ("kll_cdf", "kll_cdf(kll, x)", lambda: S.kll_cdf("kll", 4.5), False, n4),
+        ("kll_count", "kll_count(kll)", lambda: S.kll_count("kll"), True, (None, _NA, 0, _NA)),
+        ("kll_merge_pair", "kll_merge_pair(kll, kll_b)", lambda: S.kll_merge_pair("kll", "kll_b"), True, merged),
+        ("hll_estimate", "hll_estimate(hll)", lambda: S.hll_estimate("hll"), True, (None, _NA, 0.0, _NA)),
+        ("hll_union_pair", "hll_union_pair(hll, hll_b)", lambda: S.hll_union_pair("hll", "hll_b"), True, merged),
+        ("hll_intersect_estimate", "hll_intersect_estimate(hll, hll_b)",
+         lambda: S.hll_intersect_estimate("hll", "hll_b"), True, (None, None, 0.0, None)),
+        ("bloom_might_contain", "bloom_might_contain(bloom, h, h + 1)",
+         lambda: S.bloom_might_contain("bloom", h, h + 1), True, (None, None, False, None)),
+        ("bloom_union_pair", "bloom_union_pair(bloom, bloom_b)",
+         lambda: S.bloom_union_pair("bloom", "bloom_b"), True, merged),
+        ("bloom_intersect_pair", "bloom_intersect_pair(bloom, bloom_b)",
+         lambda: S.bloom_intersect_pair("bloom", "bloom_b"), True, meet),
+        ("cms_point_query", "cms_point_query(cms, h)", lambda: S.cms_point_query("cms", h), True,
+         (None, None, 0, None)),
+        ("cms_total", "cms_total(cms)", lambda: S.cms_total("cms"), True, (None, _NA, 0, _NA)),
+        ("cms_merge_pair", "cms_merge_pair(cms, cms_b)", lambda: S.cms_merge_pair("cms", "cms_b"), True, merged),
+        ("fd_rows", "fd_rows(fd)", lambda: S.fd_rows("fd"), True, (None, _NA, 0, _NA)),
+        ("fd_fnorm2", "fd_fnorm2(fd)", lambda: S.fd_fnorm2("fd"), True, (None, _NA, 0.0, _NA)),
+        ("fd_spectral_bound", "fd_spectral_bound(fd)", lambda: S.fd_spectral_bound("fd"), True,
+         (None, _NA, 0.0, _NA)),
+        ("fd_singular_values", "fd_singular_values(fd, k)", lambda: S.fd_singular_values("fd", 2), False,
+         (None, None, [], None)),
+        ("theta_estimate", "theta_estimate(theta)", lambda: S.theta_estimate("theta"), True,
+         (None, _NA, 0.0, _NA)),
+        ("theta_n_retained", "theta_n_retained(theta)", lambda: S.theta_n_retained("theta"), True,
+         (None, _NA, 0, _NA)),
+        ("theta_rse_bound", "theta_rse_bound(theta, n_std)", lambda: S.theta_rse_bound("theta", 3.0), False,
+         (None, None, 0.0, None)),
+        ("theta_union_pair", "theta_union_pair(theta, theta_b)",
+         lambda: S.theta_union_pair("theta", "theta_b"), True, merged),
+        ("theta_intersect_pair", "theta_intersect_pair(theta, theta_b)",
+         lambda: S.theta_intersect_pair("theta", "theta_b"), True, meet),
+        ("theta_a_not_b_pair", "theta_a_not_b_pair(theta, theta_b)",
+         lambda: S.theta_a_not_b_pair("theta", "theta_b"), True, meet),
+    ]
+
+
+def _null_frame(spark):
+    """Rows "value" + _NULL_CASES over one non-empty (10 values) and one
+    empty sketch per family; returns (frame, non-empty bytes, empty bytes)."""
+    from go_tdigest_spark import TDigest, serde
+    from go_tdigest_spark.sketches import KLL, FrequentDirections, ThetaSketch
+
+    v = np.arange(10, dtype=np.float64)
+    h = np.arange(1, 11, dtype=np.int64) * 0x9E3779B97F4A7C15 % (1 << 62)
+    makers = {
+        "td": (TDigest, lambda s: s.add_batch(v)),
+        "kll": (KLL, lambda s: s.update(v)),
+        "hll": (lambda: HLL(10), lambda s: s.update_hashes(h)),
+        "cms": (lambda: CountMinSketch(3, 64), lambda s: s.update_hashes(h)),
+        "bloom": (lambda: BloomFilter(1024, 3), lambda s: s.update_hashes(h, h + 1)),
+        "fd": (lambda: FrequentDirections(4, 2), lambda s: s.update(np.c_[v, np.ones(10)])),
+        "theta": (lambda: ThetaSketch(64), lambda s: s.update_hashes(h)),
+    }
+    full, empty = {}, {}
+    for fam, (new, update) in makers.items():
+        sk = new()
+        empty[fam] = serde.encode(sk) if fam == "td" else sk.to_bytes()
+        update(sk)
+        full[fam] = serde.encode(sk) if fam == "td" else sk.to_bytes()
+    full["ref"] = serde.to_ref_bytes(serde.decode(full["td"]))
+    empty["ref"] = serde.to_ref_bytes(TDigest())
+    fams = list(full)
+    rows = []
+    for case in ("value",) + _NULL_CASES:
+        a = {"null_sketch": None, "empty": empty, "empty_null_arg": empty}.get(case, full)
+        b = {"null_arg": None, "empty": empty, "empty_null_arg": None}.get(case, full)
+        args = (None,) * 7 if case.endswith("null_arg") else (0.5, 4.5, 0.1, 0.9, 2, 3.0, int(h[0]))
+        rows.append((case, *[a and a[f] for f in fams], *[b and b[f] for f in fams], *args))
+    schema = ", ".join(
+        ["case string"] + [f"{f} binary" for f in fams] + [f"{f}_b binary" for f in fams]
+        + ["q double", "x double", "p1 double", "p2 double", "k int", "n_std double", "h bigint"]
+    )
+    return spark.createDataFrame(rows, schema), full, empty
+
+
+def test_sketch_read_udfs_null_args(spark):
+    """The NULL contract of every public read, through the Column API and
+    its SQL name: a NULL sketch or a NULL argument reads NULL (a SQL NULL
+    number arrives as NaN in pandas), the pair merges treat NULL as the
+    identity, and an empty sketch reads its documented value.  The two
+    surfaces return the same row wherever they see the same arguments."""
+    from go_tdigest_spark.functions import (
+        register_sketch_sql_functions,
+        register_sql_functions,
+    )
     from go_tdigest_spark.operators.sketch_agg import fd_agg, theta_agg
 
+    register_sql_functions(spark)
+    register_sketch_sql_functions(spark)
+    # the first two cases: sketches from the Spark aggregations, SQL NULL args
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(20)], "id long, v array<double>"
     )
@@ -1577,9 +1696,6 @@ def test_sketch_read_udfs_null_args(spark):
     ev = spark.createDataFrame([(i,) for i in range(50)], "u long")
     th = theta_agg(ev, ["u"], k=64).select("sketch")
     th.createOrReplaceTempView("_th_null_t")
-    from go_tdigest_spark.functions import register_sketch_sql_functions
-
-    register_sketch_sql_functions(spark)
     r = spark.sql(
         "select fd_singular_values(sketch, CAST(NULL AS INT)) as sv "
         "from _fd_null_t"
@@ -1590,3 +1706,62 @@ def test_sketch_read_udfs_null_args(spark):
         "from _th_null_t"
     ).collect()
     assert r2[0]["b"] is None
+
+    df, full, empty = _null_frame(spark)
+    df.createOrReplaceTempView("_null_reads")
+    table = _null_table()
+    api = {
+        r["case"]: r
+        for r in df.select("case", *[c().alias(f"c{i}") for i, (_, _, c, _, _) in enumerate(table)]).collect()
+    }
+    sql_cols = ", ".join(f"{e} AS s{i}" for i, (_, e, _, _, _) in enumerate(table) if e)
+    sql = {r["case"]: r for r in spark.sql(f"select `case`, {sql_cols} from _null_reads").collect()}
+
+    def tag(v):
+        if isinstance(v, (bytes, bytearray)):
+            return "x" if bytes(v) in full.values() else "empty" if bytes(v) in empty.values() else v
+        if isinstance(v, list):
+            return [tag(e) for e in v]
+        return v
+
+    bad = []
+    for i, (read, expr, _, arg_col, want) in enumerate(table):
+        for case in ("value",) + _NULL_CASES:
+            got_api = api[case][f"c{i}"]
+            got = sql[case][f"s{i}"] if expr else got_api
+            if expr and (arg_col or not case.endswith("null_arg")) and got_api != got:
+                bad.append(f"{read}/{case}: Column API {got_api!r} != SQL {got!r}")
+            exp = dict(zip(_NULL_CASES, want)).get(case, _NA)
+            if exp != _NA and tag(got) != exp:
+                bad.append(f"{read}/{case}: {tag(got)!r}, expected {exp!r}")
+    assert not bad, "\n".join(bad)
+
+
+def test_out_of_range_read_args_raise_early(spark):
+    """A q outside [0, 1] (or trimmed-mean bounds out of order) fails
+    when the Column is built, before any action; SQL literals reach the
+    kernel, which raises the same error instead of clamping."""
+    from go_tdigest_spark.functions import register_sketch_sql_functions, td_quantile, td_trimmed_mean
+    from go_tdigest_spark.operators.sketch_agg import kll_quantile
+    from go_tdigest_spark.sketches import KLL
+
+    bad_calls = [
+        lambda: td_quantile("digest", 1.5),
+        lambda: td_quantile("digest", float("nan")),
+        lambda: td_quantile("digest", [0.5, -0.1]),
+        lambda: kll_quantile("sketch", 1.5),
+        lambda: td_trimmed_mean("digest", 0.9, 0.1),
+        lambda: td_trimmed_mean("digest", -0.1, 0.5),
+        lambda: td_trimmed_mean("digest", 0.1, 1.5),
+    ]
+    for call in bad_calls:
+        with pytest.raises(ValueError):
+            call()
+    kll = KLL(200)
+    kll.update(np.arange(10, dtype=np.float64))
+    with pytest.raises(ValueError, match="between 0 and 1"):
+        kll.quantile(1.5)
+    register_sketch_sql_functions(spark)
+    spark.createDataFrame([(kll.to_bytes(),)], "sketch binary").createOrReplaceTempView("_kll_q_range")
+    with pytest.raises(Exception, match="between 0 and 1"):
+        spark.sql("select kll_quantile(sketch, 1.5) from _kll_q_range").collect()
