@@ -1,11 +1,15 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Benchmark harness: the driver queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE COMPACT JSON line as the LAST stdout line (the driver's tail
-capture truncates long lines head-first, which made the r3/r4 artifacts
-unparseable — so the per-query map is NOT inlined).  The full per-query
-map, including the prod_sec/gate_sec split, is written to
-BENCH/bench_full_<round>.json and referenced from the headline line.
+    python bench.py                       # all 50 queries
+    python bench.py td_cdf_events ...     # a subset, by query name
+
+Prints ONE JSON line as the LAST stdout line: the suite totals and
+``queries``, each query's gated seconds (2 decimals).  The full record
+goes to BENCH/bench_full.json (key ``full`` on the line): per query the
+min-of-reps ``gate_sec``/``prod_sec``, the raw rep lists ``gate_all``/
+``prod_all`` and the Spark job count of every rep (``jobs``/
+``prod_jobs``).  Job counts are the number host noise cannot move.
 
 Per-query timing is split where the driver query carries verification
 arms (exact companions / bound certificates added for the correctness
@@ -27,51 +31,58 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-ROUND = os.environ.get("SPARK_GRAFT_ROUND", "r5")
 REPO = os.path.dirname(os.path.abspath(__file__))
+# the digest-building queries behind sketch_values_per_sec, and the
+# table each one scans
+SKETCH_QUERIES = {
+    "td_quantiles_lineitem": "lineitem",
+    "td_cdf_events": "events",
+    "td_mean_documents": "documents",
+}
 
 
 def build_session():
     from pyspark.sql import SparkSession
 
+    from go_tdigest_spark.session import session_config
+
     return (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("go_tdigest_spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(CPUS), 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.adaptive.enabled", "true")
+        SparkSession.builder.appName("go_tdigest_spark-bench")
+        .config(map=session_config(int(CPUS)))
         .getOrCreate()
     )
 
 
-def _time_reps(spark, fn, reps: int) -> tuple[float, int]:
-    """Min-of-reps wall time for one queries()-style callable, each rep
-    building the DataFrame FRESH (a re-collect of the same DF reuses
-    prior shuffle map outputs and understates cost): the sandbox host
-    throttles under sustained load with 3-25x single-shot spikes, so a
-    one-shot timing mistakes throttle for regression; the min
-    approximates unthrottled cost comparably for every query (protocol
-    per BENCH/BASELINE.md)."""
-    best, n_rows = None, 0
+def _time_reps(spark, fn, reps: int, group: str):
+    """Wall time and Spark job count of every rep of one queries()-style
+    callable, plus the first rep's row count.  Each rep builds the
+    DataFrame FRESH (a re-collect of the same DF reuses prior shuffle
+    map outputs and understates cost) and runs in its own job group, so
+    its jobs are counted exactly however many the status store keeps.
+    Callers report the min of the times: a host that throttles under
+    sustained load shows 3-25x single-shot spikes, so a one-shot timing
+    mistakes throttle for regression; the min approximates unthrottled
+    cost comparably for every query (protocol per BENCH/BASELINE.md)."""
+    sc = spark.sparkContext
+    times, jobs, n_rows = [], [], 0
     for rep in range(reps):
+        rep_group = f"{group}:{rep}"
+        sc.setJobGroup(rep_group, rep_group)
         t0 = time.time()
         df = fn(spark, SF_DIR)
         rows = df.collect()
-        took = time.time() - t0
-        if best is None or took < best:
-            best = took
+        times.append(round(time.time() - t0, 3))
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(rep_group)))
         if rep == 0:
             n_rows = len(rows)
         # drop intra-query persisted tables (LSH signatures, shingle
         # index, banded sims, fused-cohort caches): the next rep must
         # pay the full cost, not hit the previous rep's cache entry
         spark.catalog.clearCache()
-    return best, n_rows
+    return times, jobs, n_rows
 
 
-def main() -> None:
+def main() -> int:
     spark = build_session()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -79,6 +90,14 @@ def main() -> None:
 
     qs = entrymod.queries()
     prods = entrymod.prod_queries()
+    only = sys.argv[1:]
+    if only:
+        unknown = set(only) - set(qs)
+        if unknown:
+            print(f"unknown query names: {sorted(unknown)}")
+            spark.stop()
+            return 2
+        qs = {k: v for k, v in qs.items() if k in only}
     # force JVM + python-worker (pandas/arrow) warmup outside the timed
     # section — the first UDF query otherwise pays ~3s of worker spawn
     t_warm = time.time()
@@ -105,12 +124,16 @@ def main() -> None:
     per_query: dict[str, dict] = {}
     total_rows = 0
     for name, fn in qs.items():
-        gate_sec, n_rows = _time_reps(spark, fn, reps)
+        gate_all, jobs, n_rows = _time_reps(spark, fn, reps, f"gate:{name}")
         total_rows += n_rows
-        entry = {"gate_sec": round(gate_sec, 3)}
+        entry = {"gate_sec": min(gate_all), "gate_all": gate_all, "jobs": jobs}
         if name in prods:
-            prod_sec, _ = _time_reps(spark, prods[name], reps)
-            entry["prod_sec"] = round(prod_sec, 3)
+            prod_all, prod_jobs, _ = _time_reps(
+                spark, prods[name], reps, f"prod:{name}"
+            )
+            entry.update(
+                prod_sec=min(prod_all), prod_all=prod_all, prod_jobs=prod_jobs
+            )
         per_query[name] = entry
 
     gate_total = round(sum(e["gate_sec"] for e in per_query.values()), 3)
@@ -121,31 +144,18 @@ def main() -> None:
     )
 
     # sketch-build throughput: values digested per second across the
-    # three digest-building queries, measured on their PRODUCTION reads
-    # (one scan + digest build each) — absolute and comparable across
-    # rounds, unlike the r3/r4 metric whose scan multiplier changed as
-    # gate arms were added
+    # digest-building queries in this run, measured on their PRODUCTION
+    # reads (one scan + digest build each) — absolute and comparable
+    # across rounds, unlike the r3/r4 metric whose scan multiplier
+    # changed as gate arms were added
     from go_tdigest_spark.sources import table
 
-    n_li = table(spark, SF_DIR, "lineitem").count()
-    n_ev = table(spark, SF_DIR, "events").count()
-    n_doc = table(spark, SF_DIR, "documents").count()
-    sketch_secs = sum(
-        per_query[k]["prod_sec"]
-        for k in ("td_quantiles_lineitem", "td_cdf_events", "td_mean_documents")
-    )
-    sketch_values = n_li + n_ev + n_doc
+    sketch = {k: t for k, t in SKETCH_QUERIES.items() if k in per_query}
+    sketch_values = sum(table(spark, SF_DIR, t).count() for t in sketch.values())
+    sketch_secs = sum(per_query[k]["prod_sec"] for k in sketch)
     spark.stop()
 
-    slowest = dict(
-        sorted(
-            ((k, v["gate_sec"]) for k, v in per_query.items()),
-            key=lambda kv: -kv[1],
-        )[:5]
-    )
-
     full = {
-        "round": ROUND,
         "sf": SF_DIR,
         "cpus": int(CPUS),
         "reps": reps,
@@ -157,13 +167,13 @@ def main() -> None:
         "result_rows": total_rows,
         "queries": per_query,
     }
+    full_rel = os.path.join("BENCH", "bench_full.json")
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    full_path = os.path.join(REPO, "BENCH", f"bench_full_{ROUND}.json")
-    with open(full_path, "w") as f:
+    with open(os.path.join(REPO, full_rel), "w") as f:
         json.dump(full, f, indent=2)
 
     result = {
-        "metric": "driver query suite wall time (50 gated queries)",
+        "metric": f"driver query suite wall time ({len(per_query)} gated queries)",
         "value": gate_total,
         "unit": "sec",
         "sf": SF_DIR,
@@ -175,39 +185,15 @@ def main() -> None:
         "sketch_values_per_sec": int(sketch_values / sketch_secs)
         if sketch_secs
         else 0,
-        "slowest_gate_sec": slowest,
-        "queries": f"BENCH/bench_full_{ROUND}.json",
+        "queries": {k: round(v["gate_sec"], 2) for k, v in per_query.items()},
+        "full": full_rel,
+        # the N -> 4N evidence of scripts/bench_scaling.py, by reference:
+        # that file was measured elsewhere and is not re-run here
+        "scaling": "BENCH/scaling_results.json (2026-08-22, 32 CPUs, not this host)",
     }
-    # carry the north-rule scaling/accuracy evidence (produced by
-    # scripts/bench_scaling.py on the ~2B-token fixture) in compact form
-    scaling_path = os.path.join(REPO, "BENCH", "scaling_results.json")
-    try:
-        with open(scaling_path) as f:
-            sc = json.load(f)
-        result["scaling"] = {
-            "eff_tokens_N1_to_4N4": sc.get(
-                "scaling_efficiency_tokens_N1_to_4N4"
-            ),
-            "eff_sequences_N1_to_4N4": sc.get(
-                "scaling_efficiency_sequences_N1_to_4N4"
-            ),
-            "eff_lsh_shuffle_N1_to_4N4": sc.get(
-                "scaling_efficiency_lsh_N1_to_4N4"
-            ),
-            "gate": sc.get("gate"),
-            "pass": sc.get("pass"),
-            "max_rank_error_vs_exact": sc.get("accuracy", {}).get(
-                "max_rank_error"
-            ),
-            "detail": "BENCH/scaling_results.json + BENCH/BASELINE.md",
-        }
-    except (OSError, ValueError, TypeError, AttributeError, KeyError):
-        # enrichment only — a missing/drifted scaling file (wrong shape,
-        # null sub-objects, non-dict top level) must never discard the
-        # just-measured query timings
-        pass
     print(json.dumps(result))
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -215,7 +215,8 @@ def tdigest_bucket(
     deviates from n/n_buckets only by t-digest rank error
     (~1/compression interior — bounds pinned in tests).  Boundary
     semantics: a value equal to a boundary goes to the HIGHER bucket.
-    NULL values (and groups absent from the digest) get NULL bucket.
+    NULL values (and groups absent from the digest) get NULL bucket; a
+    NULL group key is its own group, as in tdigest_agg.
     """
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
@@ -235,16 +236,38 @@ def tdigest_bucket(
             td_quantile("digest", qs) if qs else F.array().cast("array<double>")
         ).alias("_bounds"),
     )
-    if by:
-        joined = df.join(F.broadcast(bounds), by, "left")
-    else:
-        joined = df.crossJoin(F.broadcast(bounds))
+    joined = _join_group_bounds(df, bounds, by)
     fold = F.expr(
         f"aggregate(_bounds, 0, (acc, b) -> acc + if(b <= {value_col}, 1, 0))"
     )
     return joined.withColumn(
         "bucket", F.when(F.col(value_col).isNotNull(), fold)
     ).drop("_bounds")
+
+
+def _join_group_bounds(
+    df: DataFrame, bounds: DataFrame, by: Sequence[str]
+) -> DataFrame:
+    """Left-join the O(groups)-row ``bounds`` table (``by...`` plus read
+    columns) onto every fact row as a broadcast: NULL group keys match
+    (``eqNullSafe``), so a NULL key reads its own group's row, as in
+    tdigest_agg and the rank/normalize lookups.  Ungrouped: a crossJoin
+    of the single row.  Columns come out as a USING join lays them out:
+    ``by...``, the other ``df`` columns, then the read columns."""
+    if not by:
+        return df.crossJoin(F.broadcast(bounds))
+    keys = [f"_bk{i}" for i in range(len(by))]
+    for c in keys:
+        if c in df.columns:
+            raise ValueError(f"input column {c!r} collides with output")
+    reads = [c for c in bounds.columns if c not in by]
+    b = bounds.select(
+        *[F.col(c).alias(k) for c, k in zip(by, keys)], *reads
+    )
+    cond = [F.col(c).eqNullSafe(b[k]) for c, k in zip(by, keys)]
+    return df.join(F.broadcast(b), cond, "left").select(
+        *by, *[c for c in df.columns if c not in by], *reads
+    )
 
 
 def _group_key_col(by: Sequence[str]):
@@ -398,8 +421,9 @@ def tdigest_winsorize(
     percentile needs.  Clip points are within t-digest rank error of the
     exact percentiles; values BETWEEN the clip points pass through
     bit-identical.  NULL values (and rows whose group has no digest)
-    stay NULL/unclipped respectively; ``digests=`` reuses a stored
-    digest table exactly as in tdigest_rank.
+    stay NULL/unclipped respectively; a NULL group key is its own group,
+    as in tdigest_agg; ``digests=`` reuses a stored digest table exactly
+    as in tdigest_rank.
 
     Plan: the quantile reads run on the O(groups)-row digest table,
     broadcast back, one map-side join, JVM-side clamp
@@ -429,11 +453,7 @@ def tdigest_winsorize(
         td_quantile("digest", p_lo).alias("_w_lo"),
         td_quantile("digest", p_hi).alias("_w_hi"),
     )
-    joined = (
-        df.join(F.broadcast(bounds), by, "left")
-        if by
-        else df.crossJoin(F.broadcast(bounds))
-    )
+    joined = _join_group_bounds(df, bounds, by)
     clipped = F.least(F.greatest(F.col(value_col), F.col("_w_lo")), F.col("_w_hi"))
     return joined.withColumn(
         out_col,

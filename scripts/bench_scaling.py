@@ -64,23 +64,22 @@ def lsh_fixture_path() -> str:
 def build_session(cores: int):
     from pyspark.sql import SparkSession
 
+    from go_tdigest_spark.session import session_config
+
     # GC parallelism must scale with the measured core count, otherwise
     # the JVM quietly borrows all host cores for GC at local[2] and the
     # low-parallelism baseline is inflated
     gc_threads = max(2, cores)
     return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"tdigest-scaling-{cores}")
-        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        SparkSession.builder.appName(f"tdigest-scaling-{cores}")
+        .config(map=session_config(cores))
+        # the GC-thread cap and split size are part of what this script
+        # measures (N -> 4N scaling), so they ride on top of the shared config
         .config(
             "spark.driver.extraJavaOptions",
             f"-XX:ParallelGCThreads={gc_threads} "
             f"-XX:ConcGCThreads={max(1, gc_threads // 4)}",
         )
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "32m")
         .getOrCreate()
     )

@@ -16,7 +16,10 @@ from __future__ import annotations
 
 import argparse
 import os
+import runpy
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 QUERIES = [
     "td_quantiles_lineitem",
@@ -59,14 +62,18 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    # this tree's config, loaded by path: --repo may name an older tree
+    # whose package has no session module, and importing this tree's
+    # package would shadow the one --repo selects
+    session_config = runpy.run_path(
+        os.path.join(REPO, "go_tdigest_spark", "session.py")
+    )["session_config"]
     spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("dump-plans-r06")
+        SparkSession.builder.appName("dump-plans-r06")
+        .config(map=session_config(8))
+        # the committed plans/r06 dumps were taken at 32 shuffle
+        # partitions; keep it so a re-run reproduces them
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.adaptive.enabled", "true")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -52,13 +52,12 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
+    from go_tdigest_spark.session import session_config
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .appName("mini-verify")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
+        SparkSession.builder.appName("mini-verify")
+        .config(map=session_config(cpus))
         .getOrCreate()
     )
     con = duckdb.connect()

@@ -15,13 +15,11 @@ SF_SMALL = "/root/testdata/sf0.01"
 def spark():
     from pyspark.sql import SparkSession
 
+    from go_tdigest_spark.session import session_config
+
     session = (
-        SparkSession.builder.master("local[8]")
-        .appName("go_tdigest_spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
+        SparkSession.builder.appName("go_tdigest_spark-tests")
+        .config(map=session_config(8))
         .getOrCreate()
     )
     yield session

@@ -1260,6 +1260,41 @@ def test_annotator_single_row_guards(spark):
     )
 
 
+@pytest.mark.parametrize("op", ["rank", "normalize", "winsorize", "bucket"])
+def test_annotators_read_null_group_key_as_its_own_group(spark, op):
+    """A NULL group key is its own group for every annotator, as in
+    tdigest_agg: its rows read exactly what they read once the key is
+    relabelled to a fresh value (NULL never equals NULL in a plain
+    equi-join, which left those rows unclipped / unbucketed)."""
+    from go_tdigest_spark.operators import (
+        tdigest_bucket,
+        tdigest_normalize,
+        tdigest_rank,
+        tdigest_winsorize,
+    )
+
+    annotate = {
+        "rank": lambda d: tdigest_rank(d, "v", by=["g"]),
+        "normalize": lambda d: tdigest_normalize(d, "v", by=["g"]),
+        "winsorize": lambda d: tdigest_winsorize(d, "v", 0.1, 0.9, by=["g"]),
+        "bucket": lambda d: tdigest_bucket(d, "v", 4, by=["g"]),
+    }[op]
+    df = spark.createDataFrame(
+        [("a", float(v)) for v in range(10)]
+        + [(None, float(100 + v)) for v in range(10)],
+        "g string, v double",
+    )
+    relabelled = df.withColumn("g", F.coalesce("g", F.lit("fresh")))
+
+    def rows(out, key):
+        return sorted(tuple(r) for r in out.where(key).drop("g").collect())
+
+    got = rows(annotate(df), F.col("g").isNull())
+    want = rows(annotate(relabelled), F.col("g") == "fresh")
+    assert len(got) == 10 and all(x is not None for r in got for x in r)
+    assert got == want
+
+
 def test_exact_percentiles_matches_spark_percentile(spark, lineitem):
     """The Arrow sorted-run kernel (operators/exactq.py) must be
     VALUE-IDENTICAL to Spark's percentile() aggregate — grouped and
