@@ -912,6 +912,9 @@ def _q_repetition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source has many splits and this is a no-op).  Every consumer
     # shares the one exchange (ReusedExchange).
     par = spark.sparkContext.defaultParallelism
+    # docs is a plain parquet scan, so reading its partition count only
+    # plans it; were there an exchange upstream, AQE would run that
+    # stage here, at build time
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
     rep = dedup.repetition_stats(docs, "text", "doc_id", n=2)

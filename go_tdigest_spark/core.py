@@ -422,18 +422,10 @@ class _SegmentedBuild:
 
     def add(self, gids, offsets, values, weights=None) -> None:
         """Segment k (``values[offsets[k]:offsets[k+1]]``) is one
-        ``add_batch`` call for group ``gids[k]``, in segment order.
-        NaN values are dropped with their weights."""
+        ``add_batch`` call for group ``gids[k]``; the ids of one call
+        are distinct.  NaN values are dropped with their weights."""
         gids = np.asarray(gids, dtype=np.int64)
         offsets = np.asarray(offsets, dtype=np.int64)
-        if np.unique(gids).size < gids.size:
-            # a repeated gid (keys equal in Python but not in Arrow, e.g.
-            # 0.0 and -0.0) is a later add_batch call: one at a time
-            for k in range(gids.size):
-                lo, hi = offsets[k], offsets[k + 1]
-                self.add(gids[k:k + 1], [0, hi - lo], values[lo:hi],
-                         None if weights is None else weights[lo:hi])
-            return
         # TDigest.add_batch's dtype rule: integers keep their dtype (for
         # the dense route), everything else becomes float64
         values = np.asarray(values)

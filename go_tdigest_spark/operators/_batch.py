@@ -8,8 +8,9 @@ from typing import Callable, Iterator, Sequence
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType, StructField, StructType
 
 ROWS_COL = "n_rows"
 
@@ -18,6 +19,8 @@ ROWS_COL = "n_rows"
 # read ~7 MB/s of parquet per core on a 4-core x86 host), against
 # ~0.2 s of fixed cost for every Python task the coalesce saves.
 COALESCE_BYTES_PER_CORE = 16 << 20
+
+_INT64_MAX = np.iinfo(np.int64).max
 
 
 def poly_hash_batch(
@@ -48,45 +51,66 @@ def poly_hash_batch(
     return h
 
 
-def group_codes(batch: pa.RecordBatch, n_by: int):
-    """Group the rows of a batch by its first ``n_by`` columns.
+def group_keys(df: DataFrame, by: Sequence[str]) -> list[Column]:
+    """The ``by`` columns of ``df`` as group keys, one column per name:
+    the key rule of stage 1 (``partial_stage``), every merge level
+    (``_tree.grouped_merge``) and the annotators' lookup key.  Float
+    keys are normalized as Spark's own ``groupBy`` does
+    (NormalizeFloatingNumbers): -0.0 becomes +0.0 and every NaN one NaN,
+    since Arrow (``group_ids``) and the exchange's hash compare floats
+    by their bits and ``to_json`` renders -0.0 as ``-0.0``.  NULL and
+    every other type pass through unchanged."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    cols = []
+    for c in by:
+        col, t = F.col(c), types[c]
+        if isinstance(t, (FloatType, DoubleType)):
+            col = (
+                F.when(col == 0.0, F.lit(0.0).cast(t))
+                .when(F.isnan(col), F.lit(float("nan")).cast(t))
+                .otherwise(col)
+            )
+        cols.append(col.alias(c))
+    return cols
 
-    The key columns are dictionary-encoded by Arrow into one combined
-    mixed-radix row code (NULL keys via the -1 sentinel).  Returns
-    ``(row_order, row_counts, keys, first_rows)``: one entry of
-    ``row_counts``/``keys``/``first_rows`` per distinct code, in code
-    order, ``keys`` as exact python tuples.  ``row_order`` is the STABLE
-    argsort of the codes (so each group's rows keep their order and form
-    one contiguous run), or None when the batch is one group.
-    """
-    n = batch.num_rows
-    if n_by == 0:
-        return None, np.array([n], dtype=np.int64), [()], None
-    combined = np.zeros(n, dtype=np.int64)
-    mult = 1
-    for j in range(n_by - 1, -1, -1):
-        enc = pc.dictionary_encode(batch.column(j))
-        idx = (
-            enc.indices.fill_null(-1)
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-        )
-        combined += (idx + 1) * mult
-        mult *= len(enc.dictionary) + 1
-    uniq_codes, row_counts = np.unique(combined, return_counts=True)
-    if uniq_codes.size == 1:
-        row_order, first_rows = None, np.zeros(1, dtype=np.int64)
-    else:
-        row_order = np.argsort(combined, kind="stable")
-        first_rows = row_order[
-            np.searchsorted(combined[row_order], uniq_codes, side="left")
-        ]
-    # one Arrow take + to_pylist per key column (exact python values)
-    take = pa.array(first_rows, type=pa.int64())
-    keys = list(
-        zip(*(batch.column(j).take(take).to_pylist() for j in range(n_by)))
-    )
-    return row_order, row_counts, keys, first_rows
+
+def _first_seen(codes: np.ndarray) -> np.ndarray:
+    """Renumber int64 codes 0, 1, ... in order of first appearance."""
+    enc = pc.dictionary_encode(pa.array(codes, type=pa.int64()))
+    return enc.indices.to_numpy().astype(np.int64)
+
+
+def group_ids(keys: Sequence[pa.Array]) -> tuple[np.ndarray, int, np.ndarray]:
+    """(group id per row, group count, first row of each group) of the
+    key tuples in ``keys`` (Arrow columns of one length), ids ``0, 1,
+    ...`` in order of first row.  Each column is dictionary-encoded by
+    Arrow (a NULL is its own key, floats compare by their bits) and the
+    codes are combined mixed-radix into one exact int64 per row; when
+    the radix product could pass 2^63 the codes so far are renumbered
+    densely first.  No Python values and no row sort."""
+    codes = np.zeros(len(keys[0]), dtype=np.int64)
+    radix = 1
+    for col in reversed(keys):
+        enc = pc.dictionary_encode(col)
+        size = len(enc.dictionary) + 1
+        if radix * size > _INT64_MAX:
+            codes = _first_seen(codes)
+            radix = int(codes.max()) + 1
+        idx = enc.indices.fill_null(-1).to_numpy(zero_copy_only=False)
+        codes += (idx.astype(np.int64) + 1) * radix
+        radix *= size
+    gids = _first_seen(codes)
+    # a group's first row is where the running maximum id steps up
+    first = np.flatnonzero(np.diff(np.maximum.accumulate(gids), prepend=-1) > 0)
+    return gids, first.size, first
+
+
+def _bits(col: pa.Array) -> pa.Array:
+    """A float key column as its bits, so Python keys are equal exactly
+    when Arrow's are (NaN == NaN, as in ``group_ids``)."""
+    if pa.types.is_floating(col.type):
+        return col.view(pa.int64() if col.type.bit_width == 64 else pa.int32())
+    return col
 
 
 def _arrow_schema(schema: StructType) -> pa.Schema:
@@ -143,19 +167,21 @@ def partial_stage(
 
     * ``builder.add(gids, offsets, cols)`` once per Arrow batch: ``cols``
       are the batch's non-key columns (Arrow arrays), row-sorted so that
-      group ``gids[k]``'s rows are ``[offsets[k], offsets[k+1])``.  Group
-      ids number the task's groups ``0, 1, ...`` in order of first
-      appearance.  An id can own two segments of one batch when two keys
-      are equal in Python but not in Arrow (0.0 and -0.0).
+      group ``gids[k]``'s rows are ``[offsets[k], offsets[k+1])``, one
+      segment per group, each in row order.  Group ids number the
+      task's groups ``0, 1, ...`` in order of first appearance.
     * ``builder.finish(n_groups)`` once, returning one array per value
       field with one entry per group id, except ``n_rows``: when
       ``value_fields`` has an ``n_rows`` field it is filled in here with
       each group's input row count.
 
-    Key columns are Arrow ``take``s of each group's first row, so key
-    values stay exact for every type, as in ``_tree.grouped_merge``.
+    Groups follow the key rule of the merge levels (``group_keys``, then
+    ``group_ids`` per batch; across batches, key values, floats by their
+    bits).  Key columns are Arrow ``take``s of each group's first row, so
+    key values stay exact for every type.
     """
     n_by = len(by)
+    pruned = pruned.withColumns(dict(zip(by, group_keys(pruned, by))))
     schema = StructType(pruned.schema.fields[:n_by] + list(value_fields))
     arrow_out = _arrow_schema(schema)
     value_names = [f.name for f in value_fields if f.name != ROWS_COL]
@@ -168,25 +194,30 @@ def partial_stage(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            row_order, row_counts, keys, first_rows = group_codes(batch, n_by)
-            gids = np.empty(len(keys), dtype=np.int64)
-            new = []
-            for i, k in enumerate(keys):
-                g = gid_of.get(k)
-                if g is None:
-                    g = gid_of[k] = len(gid_of)
-                    new.append(i)
-                gids[i] = g
-            if n_by and new:
-                take = pa.array(first_rows[new], type=pa.int64())
-                key_rows.append([batch.column(j).take(take) for j in range(n_by)])
-            rows_seen.append((gids, row_counts))
-            offsets = np.zeros(len(keys) + 1, dtype=np.int64)
-            np.cumsum(row_counts, out=offsets[1:])
+            seen = len(gid_of)
+            if n_by:
+                local, n, first = group_ids(batch.columns[:n_by])
+                take = pa.array(first, type=pa.int64())
+                heads = [batch.column(j).take(take) for j in range(n_by)]
+                keys = zip(*(_bits(h).to_pylist() for h in heads))
+            else:
+                local, n, heads, keys = None, 1, [], [()]
+            gids = np.fromiter(
+                (gid_of.setdefault(k, len(gid_of)) for k in keys), np.int64, n
+            )
+            if heads and len(gid_of) > seen:
+                new = pa.array(gids >= seen)
+                key_rows.append([h.filter(new) for h in heads])
             cols = batch.columns[n_by:]
-            if row_order is not None:
-                take = pa.array(row_order, type=pa.int64())
+            if n > 1:
+                counts = np.bincount(local, minlength=n)
+                take = pa.array(np.argsort(local, kind="stable"), type=pa.int64())
                 cols = [c.take(take) for c in cols]
+            else:
+                counts = np.array([batch.num_rows], dtype=np.int64)
+            rows_seen.append((gids, counts))
+            offsets = np.zeros(n + 1, dtype=np.int64)
+            np.cumsum(counts, out=offsets[1:])
             builder.add(gids, offsets, cols)
         if not gid_of:
             return
@@ -194,7 +225,7 @@ def partial_stage(
         values = dict(zip(value_names, builder.finish(n_groups)))
         n_rows = np.zeros(n_groups, dtype=np.int64)
         for gids, counts in rows_seen:
-            np.add.at(n_rows, gids, counts)  # gids may repeat
+            n_rows[gids] += counts
         values[ROWS_COL] = pa.array(n_rows, type=pa.int64())
         arrays = [
             pa.concat_arrays([r[j] for r in key_rows]).cast(arrow_out.field(j).type)

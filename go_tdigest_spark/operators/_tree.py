@@ -15,6 +15,12 @@ and each subsequent level re-buckets the *carried* salt via integer
 division by ``fanin``, so the per-reducer fan-in is exactly ``<= fanin``
 at every level, not just in expectation under hash partitioning.
 
+Every level agrees with stage 1 on what a group is: float keys are
+normalized before the exchange (``_batch.group_keys``) and each task
+numbers its groups with Arrow dictionary codes of the exact key values
+(``_batch.group_ids``), the rule ``partial_stage`` follows — no key is
+rendered to JSON or read into Python.
+
 Merge associativity (reference: tdigest.go:262-272 for the digest; HLL
 register-max / CMS counter-add / Bloom bit-or are trivially associative)
 is what makes tree depth irrelevant to correctness.
@@ -27,22 +33,11 @@ from typing import Callable, Sequence
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, FloatType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
-from ._batch import ROWS_COL, _arrow_schema
-
-_GKEY = "_gkey"
-# Default to_json truncates timestamps to MILLISECONDS (.SSS) — explicit
-# micro-precision formats keep the key rendering injective for
-# sub-millisecond-distinct timestamp keys (Spark timestamps are exactly
-# microsecond-precision, so 6 fractional digits are lossless).
-_KEY_JSON_OPTS = {
-    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-}
+from ._batch import ROWS_COL, _arrow_schema, group_ids, group_keys
 
 TaskMerge = Callable[[pa.Table, np.ndarray, int], list]
 
@@ -54,19 +49,6 @@ def group_sum(column, gids: np.ndarray, n_groups: int) -> pa.Array:
         np.bincount(gids, weights=vals, minlength=n_groups).astype(np.int64),
         type=pa.int64(),
     )
-
-
-def _group_ids(keys: pa.Array) -> tuple[np.ndarray, int, np.ndarray]:
-    """(group id per row, group count, first row of each group) from the
-    rendered key column; ids number the groups in order of first row."""
-    gids = (
-        pc.dictionary_encode(keys).indices.to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-    # ids are assigned in first-appearance order, so a group's first row
-    # is where the running maximum steps up
-    first = np.flatnonzero(np.diff(np.maximum.accumulate(gids), prepend=-1) > 0)
-    return gids, first.size, first
 
 
 def grouped_merge(
@@ -89,36 +71,23 @@ def grouped_merge(
     ``value_fields`` has it, it is the sum of the input ``n_rows`` per
     group (as ``_batch.partial_stage`` fills it in stage 1).
 
-    Exact-key discipline: group ids come from a JVM-computed JSON
-    rendering of the key tuple (injective over distinct key tuples,
-    rendered from exact values — a long key beside NULLs never passes
-    through lossy float64), and the output key columns are Arrow
-    ``take``s of each group's first row, so key values stay exact for
-    every type (int64 > 2^53, timestamps, decimals).
+    Exact-key discipline: keys follow the one rule stage 1 follows.
+    Float keys are normalized before the exchange
+    (``_batch.group_keys``: -0.0 is +0.0, every NaN one NaN, as in
+    Spark's own ``groupBy``), and each task numbers its rows' key tuples
+    with Arrow dictionary codes (``_batch.group_ids``), the codes stage 1
+    uses: exact values for every type, so int64 > 2^53 beside NULLs,
+    sub-millisecond timestamps and decimals stay distinct, with no key
+    rendering and no Python key values.  Ids number the groups in order
+    of first row, and the output key columns are Arrow ``take``s of each
+    group's first row.
     """
     key_set = set(group_cols)
     out_schema = StructType(
         [f for f in df.schema.fields if f.name in key_set] + list(value_fields)
     )
     if group_cols:
-        # Float/double group keys: normalize -0.0 to +0.0 BEFORE both
-        # the exchange and the JSON rendering.  Spark's own groupBy
-        # folds them into one group (NormalizeFloatingNumbers), but
-        # to_json renders them differently ({"k":0.0} vs {"k":-0.0}),
-        # so without this a double `by` column containing both zeros
-        # would emit two digest rows for one logical group.  The SQL
-        # comparison -0.0 == 0.0 is TRUE, so the when() rewrites
-        # exactly the two zeros; NaN/null fall through unchanged.
-        for f in df.schema.fields:
-            if f.name in group_cols and isinstance(
-                f.dataType, (FloatType, DoubleType)
-            ):
-                df = df.withColumn(
-                    f.name,
-                    F.when(
-                        F.col(f.name) == 0.0, F.lit(0.0).cast(f.dataType)
-                    ).otherwise(F.col(f.name)),
-                )
+        df = df.withColumns(dict(zip(group_cols, group_keys(df, group_cols))))
         # Merge-exchange width is DERIVED from the upstream partition
         # count instead of pinned to spark.sql.shuffle.partitions: the
         # partial tables carry at most (upstream partitions x groups)
@@ -128,8 +97,6 @@ def grouped_merge(
         # input stops scheduling one python-worker task per configured
         # shuffle partition for a handful of partial rows (guide §2.2:
         # size the exchange from the data, not the core count).
-        # gkey is computed AFTER the exchange so the JSON rendering is
-        # not serialized through the shuffle alongside the raw keys.
         try:
             n_shuffle = int(
                 df.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -139,12 +106,7 @@ def grouped_merge(
         if n_upstream is None:
             n_upstream = df.rdd.getNumPartitions()
         n_target = max(1, min(n_shuffle, n_upstream))
-        dist = df.repartition(
-            n_target, *[F.col(c) for c in group_cols]
-        ).withColumn(
-            _GKEY,
-            F.to_json(F.struct(*[F.col(c) for c in group_cols]), _KEY_JSON_OPTS),
-        )
+        dist = df.repartition(n_target, *[F.col(c) for c in group_cols])
     else:
         # one group on one task; no exchange when the input already is a
         # single partition (e.g. the previous merge level's output), the
@@ -161,7 +123,9 @@ def grouped_merge(
             return
         table = pa.Table.from_batches(batches).combine_chunks()
         if group_cols:
-            gids, n_groups, first = _group_ids(table.column(_GKEY).chunk(0))
+            gids, n_groups, first = group_ids(
+                [table.column(c).chunk(0) for c in group_cols]
+            )
         else:
             gids = np.zeros(table.num_rows, dtype=np.int64)
             n_groups, first = 1, np.zeros(1, dtype=np.int64)

@@ -37,7 +37,8 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from functools import partial, reduce
+from functools import reduce
+from itertools import combinations
 from typing import Sequence
 
 import numpy as np
@@ -50,11 +51,18 @@ from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, Str
 from .. import serde
 from .._udf import sketch_udf
 from ..core import TDigest, _merge_segments, _SegmentedBuild
-from ._batch import ROWS_COL, partial_stage
-from ._tree import _KEY_JSON_OPTS, group_sum, tree_merge
+from ._batch import ROWS_COL, group_keys, partial_stage
+from ._tree import group_sum, tree_merge
 
 DIGEST_COL = "digest"
 WEIGHT_COL = "total_weight"
+
+# to_json truncates timestamps to milliseconds by default; microsecond
+# formats (Spark's own precision) keep the annotators' lookup key exact
+_KEY_JSON_OPTS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
 
 
 _PARTIAL_FIELDS = [
@@ -193,6 +201,27 @@ def tdigest_agg(
     return merge_partials(partials, by, fanin=fanin)
 
 
+def _annotator_digests(
+    df: DataFrame, value_col: str, by: list[str], compression: float,
+    fanin: int | None, digests: DataFrame | None, outputs: Sequence[str],
+) -> DataFrame:
+    """The annotators' shared preamble: refuse input columns named like
+    one of ``outputs``, then return the per-group digest table — built
+    from ``df`` by tdigest_agg, or the stored ``digests=`` table once it
+    is checked for the ``by`` and ``digest`` columns."""
+    for c in outputs:
+        if c in df.columns:
+            raise ValueError(f"input column {c!r} collides with output")
+    if digests is None:
+        return tdigest_agg(
+            df, value_col, by=by, compression=compression, fanin=fanin
+        )
+    missing = {*by, DIGEST_COL} - set(digests.columns)
+    if missing:
+        raise ValueError(f"digests is missing columns {sorted(missing)}")
+    return digests
+
+
 def tdigest_bucket(
     df: DataFrame,
     value_col: str,
@@ -220,14 +249,11 @@ def tdigest_bucket(
     """
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
-    for c in ("_bounds", "bucket"):
-        if c in df.columns:
-            raise ValueError(f"input column {c!r} collides with output")
     from ..functions.tdigest_fns import td_quantile
 
     by = list(by)
-    digests = tdigest_agg(
-        df, value_col, by=by, compression=compression, fanin=fanin
+    digests = _annotator_digests(
+        df, value_col, by, compression, fanin, None, ("_bounds", "bucket")
     )
     qs = [i / n_buckets for i in range(1, n_buckets)]
     bounds = digests.select(
@@ -270,13 +296,15 @@ def _join_group_bounds(
     )
 
 
-def _group_key_col(by: Sequence[str]):
-    """Injective JSON rendering of the group-key tuple (one small string
-    per row) — the join/lookup key the annotator kernels use instead of
-    carrying an O(compression)-byte digest blob on every fact row."""
+def _group_key_col(df: DataFrame, by: Sequence[str]):
+    """Injective JSON rendering of the group-key tuple of ``df`` (one
+    small string per row) — the lookup key the annotator kernels use
+    instead of carrying an O(compression)-byte digest blob on every
+    fact row.  Keys follow ``_batch.group_keys`` inside the rendering
+    only; ``df``'s own columns keep their values."""
     if not by:
         return F.lit("{}")
-    return F.to_json(F.struct(*[F.col(c) for c in by]), _KEY_JSON_OPTS)
+    return F.to_json(F.struct(*group_keys(df, by)), _KEY_JSON_OPTS)
 
 
 def _collect_digest_map(digests: DataFrame, by: Sequence[str]) -> dict:
@@ -291,7 +319,7 @@ def _collect_digest_map(digests: DataFrame, by: Sequence[str]) -> dict:
     the rank/normalize annotators at any scale).
     """
     rows = digests.select(
-        _group_key_col(by).alias("_k"), F.col(DIGEST_COL).alias("_d")
+        _group_key_col(digests, by).alias("_k"), F.col(DIGEST_COL).alias("_d")
     ).collect()
     mapping = {
         r["_k"]: (None if r["_d"] is None else bytes(r["_d"])) for r in rows
@@ -372,20 +400,15 @@ def tdigest_rank(
     through the python boundary (the r5 plan shipped digest x rows
     bytes through Arrow, which dominated the annotator's cost).  Same
     NULL convention as before: NULL values and groups absent from the
-    digest table get NULL rank.
+    digest table get NULL rank.  Group keys match as in tdigest_agg: a
+    NULL key is its own group, and float keys fold (-0.0 reads the +0.0
+    group, every NaN one group) while ``df``'s key column keeps its
+    values.
     """
-    for c in (rank_col, "_rank_key"):
-        if c in df.columns:
-            raise ValueError(f"input column {c!r} collides with output")
     by = list(by)
-    if digests is None:
-        digests = tdigest_agg(
-            df, value_col, by=by, compression=compression, fanin=fanin
-        )
-    else:
-        missing = {*by, "digest"} - set(digests.columns)
-        if missing:
-            raise ValueError(f"digests is missing columns {sorted(missing)}")
+    digests = _annotator_digests(
+        df, value_col, by, compression, fanin, digests, (rank_col,)
+    )
     mapping, n_rows = _collect_digest_map(digests, by)
     if not by and n_rows != 1:
         raise ValueError(
@@ -399,7 +422,7 @@ def tdigest_rank(
         rank_col,
         F.when(
             F.col(value_col).isNotNull(),
-            rank_udf(_group_key_col(by), F.col(value_col)),
+            rank_udf(_group_key_col(df, by), F.col(value_col)),
         ),
     )
 
@@ -432,22 +455,16 @@ def tdigest_winsorize(
     if not 0.0 <= p_lo < p_hi <= 1.0:
         raise ValueError("need 0 <= p_lo < p_hi <= 1")
     out_col = out_col or f"{value_col}_winsorized"
-    for c in (out_col, "_w_lo", "_w_hi"):
-        if c in df.columns:
-            raise ValueError(f"input column {c!r} collides with output")
     from ..functions.tdigest_fns import td_quantile
 
     by = list(by)
-    if digests is None:
-        digests = tdigest_agg(
-            df, value_col, by=by, compression=compression, fanin=fanin
-        )
-    else:
-        missing = {*by, "digest"} - set(digests.columns)
-        if missing:
-            raise ValueError(f"digests is missing columns {sorted(missing)}")
-        if not by:
-            _require_single_row(digests, "digests")
+    stored = digests is not None
+    digests = _annotator_digests(
+        df, value_col, by, compression, fanin, digests,
+        (out_col, "_w_lo", "_w_hi"),
+    )
+    if stored and not by:
+        _require_single_row(digests, "digests")
     bounds = digests.select(
         *by,
         td_quantile("digest", p_lo).alias("_w_lo"),
@@ -486,7 +503,9 @@ def tdigest_normalize(
     scan).  ``target_digest``: any single-row digest table (column
     ``digest``), e.g. a reference corpus' stored distribution.
     Monotone within each group, so group-internal ranking order is
-    preserved (ties at t-digest resolution).  NULL -> NULL.
+    preserved (ties at t-digest resolution).  NULL -> NULL.  Group keys
+    match as in tdigest_rank: a NULL key is its own group, and float
+    keys fold as in tdigest_agg.
 
     Plan: per-group digests (salted tree) and the pooled/target digest
     are collected (O(groups x compression) bytes, the same driver
@@ -503,18 +522,10 @@ def tdigest_normalize(
             "single distribution onto itself is the identity)"
         )
     out_col = out_col or f"{value_col}_normalized"
-    for c in (out_col, "_n_key"):
-        if c in df.columns:
-            raise ValueError(f"input column {c!r} collides with output")
     by = list(by)
-    if digests is None:
-        digests = tdigest_agg(
-            df, value_col, by=by, compression=compression, fanin=fanin
-        )
-    else:
-        missing = {*by, "digest"} - set(digests.columns)
-        if missing:
-            raise ValueError(f"digests is missing columns {sorted(missing)}")
+    digests = _annotator_digests(
+        df, value_col, by, compression, fanin, digests, (out_col,)
+    )
     if target_digest is None:
         need = {"digest", ROWS_COL, WEIGHT_COL}
         if not need <= set(digests.columns):
@@ -544,24 +555,9 @@ def tdigest_normalize(
         out_col,
         F.when(
             F.col(value_col).isNotNull(),
-            norm_udf(_group_key_col(by), F.col(value_col)),
+            norm_udf(_group_key_col(df, by), F.col(value_col)),
         ),
     )
-
-
-def _with_level_nulls(
-    schema: StructType, by: list[str], d: DataFrame, present: list[str]
-) -> DataFrame:
-    """One rollup/cube level in the common layout: the ``by`` columns not
-    in ``present`` become typed NULLs, then the digest columns."""
-    cols = [
-        F.col(c)
-        if c in present
-        else F.lit(None).cast(schema[c].dataType).alias(c)
-        for c in by
-    ]
-    cols += [F.col(DIGEST_COL), F.col(ROWS_COL), F.col(WEIGHT_COL)]
-    return d.select(*cols)
 
 
 def _coarse_merge_bound(
@@ -592,6 +588,40 @@ def _coarse_merge_bound(
     return finest, finest.count()
 
 
+def _digest_grouping_sets(
+    df: DataFrame, value_col: str, by: list[str], subsets: list[list[str]],
+    chained: bool, compression: float, fanin: int | None,
+    weight_col: str | None, explode_arrays: bool, finest_groups_hint: int | None,
+) -> DataFrame:
+    """The body of tdigest_rollup and tdigest_cube: the finest level
+    (``by``) from one scan, then one level per key subset, in order,
+    merged from the finest level or, when ``chained``, from the level
+    before it.  Every level comes out in one layout (the ``by`` columns
+    it does not group by as typed NULLs, then the digest columns) and
+    the levels are unioned."""
+    finest = tdigest_agg(
+        df, value_col, by, compression, weight_col=weight_col,
+        explode_arrays=explode_arrays, fanin=fanin,
+    )
+    n_finest = None
+    if by:  # no coarse levels exist for by=[], so never size/persist
+        finest, n_finest = _coarse_merge_bound(
+            finest, fanin, finest_groups_hint
+        )
+
+    def with_level_nulls(d: DataFrame, present: list[str]) -> DataFrame:
+        nulls = {c: F.lit(None).cast(df.schema[c].dataType) for c in by}
+        keys = [F.col(c) if c in present else nulls[c].alias(c) for c in by]
+        return d.select(*keys, DIGEST_COL, ROWS_COL, WEIGHT_COL)
+
+    levels, src = [with_level_nulls(finest, by)], finest
+    for keys in subsets:
+        level = merge_partials(src, keys, fanin=fanin, n_units=n_finest)
+        src = level if chained else finest
+        levels.append(with_level_nulls(level, keys))
+    return reduce(DataFrame.unionByName, levels)
+
+
 def tdigest_cube(
     df: DataFrame,
     value_col: str,
@@ -613,27 +643,14 @@ def tdigest_cube(
     bound for every subset's row count), so a high-cardinality ``by``
     cannot funnel all finest digests into one grand-total reducer.
     """
-    from itertools import combinations
-
     by = list(by)
-    with_level_nulls = partial(_with_level_nulls, df.schema, by)
-    finest = tdigest_agg(
-        df, value_col, by, compression, weight_col=weight_col,
-        explode_arrays=explode_arrays, fanin=fanin,
+    subsets = [
+        list(s) for r in range(len(by) - 1, -1, -1) for s in combinations(by, r)
+    ]
+    return _digest_grouping_sets(
+        df, value_col, by, subsets, False, compression, fanin, weight_col,
+        explode_arrays, finest_groups_hint,
     )
-    n_finest = None
-    if by:  # no coarse levels exist for by=[], so never size/persist
-        finest, n_finest = _coarse_merge_bound(
-            finest, fanin, finest_groups_hint
-        )
-    levels = [with_level_nulls(finest, by)]
-    for r in range(len(by) - 1, -1, -1):
-        for subset in combinations(by, r):
-            level = merge_partials(
-                finest, list(subset), fanin=fanin, n_units=n_finest
-            )
-            levels.append(with_level_nulls(level, list(subset)))
-    return reduce(DataFrame.unionByName, levels)
 
 
 def tdigest_rollup(
@@ -663,20 +680,8 @@ def tdigest_rollup(
     count is known to skip the persist+count sizing action.
     """
     by = list(by)
-    with_level_nulls = partial(_with_level_nulls, df.schema, by)
-    finest = tdigest_agg(
-        df, value_col, by, compression, weight_col=weight_col,
-        explode_arrays=explode_arrays, fanin=fanin,
+    subsets = [by[:i] for i in range(len(by) - 1, -1, -1)]
+    return _digest_grouping_sets(
+        df, value_col, by, subsets, True, compression, fanin, weight_col,
+        explode_arrays, finest_groups_hint,
     )
-    n_finest = None
-    if by:  # no coarse levels exist for by=[], so never size/persist
-        finest, n_finest = _coarse_merge_bound(
-            finest, fanin, finest_groups_hint
-        )
-    levels = [with_level_nulls(finest, by)]
-    cur = finest
-    for i in range(len(by) - 1, -1, -1):
-        keys = by[:i]
-        cur = merge_partials(cur, keys, fanin=fanin, n_units=n_finest)
-        levels.append(with_level_nulls(cur, keys))
-    return reduce(DataFrame.unionByName, levels)

@@ -439,8 +439,8 @@ def test_grouped_merge_exact_keys_beyond_2_53_with_nulls(spark):
     group on EXACT key values.  A long group column containing ANY null
     arrives in pandas as lossy float64, where 2^53 and 2^53+1 collide —
     grouping on the pandas column would silently merge those two groups'
-    digests.  The JVM-side JSON key encoding keeps them distinct, and
-    the NULL group stays its own group (not folded with NaN-keyed
+    digests.  Arrow key codes of the exact values keep them distinct,
+    and the NULL group stays its own group (not folded with NaN-keyed
     rows)."""
     base = 1 << 53
     rows = (
@@ -497,6 +497,21 @@ def test_grouped_merge_exotic_keys(spark):
         for key, v in [((k, "s"), i * 100) for i, k in enumerate(lkeys)]
         + [((0, s), 1000 + i * 100) for i, s in enumerate(skeys)]
     }
+    # the Arrow key codes every level numbers groups with stay exact
+    # when the per-column radix product passes 2^63 (eight columns of
+    # 1000 distinct values, every tuple twice): ids match a
+    # Python-tuple numbering
+    import pyarrow as pa
+
+    from go_tdigest_spark.operators._batch import group_ids
+
+    half = np.random.default_rng(0).integers(0, 1 << 40, (8, 1000))
+    cols = [pa.array(np.tile(c, 2)) for c in half]
+    tuples = list(zip(*(c.to_pylist() for c in cols)))
+    gids, n_groups, first = group_ids(cols)
+    ref = {}
+    assert gids.tolist() == [ref.setdefault(t, len(ref)) for t in tuples]
+    assert n_groups == len(ref) == 1000 and first.tolist() == list(range(1000))
 
 
 def test_parquet_row_count_single_file_and_directory(tmp_path):
@@ -939,10 +954,10 @@ def test_td_ks_distance_empty_digest_is_null(spark):
 
 
 def test_grouped_merge_submillisecond_timestamp_keys(spark):
-    """Default to_json renders timestamps with millisecond precision
-    (.SSS), which would silently merge groups whose timestamp keys
-    differ only below the millisecond; the merge stage's key encoding
-    must use the full microsecond precision Spark timestamps carry."""
+    """Group keys keep the full microsecond precision Spark timestamps
+    carry: a millisecond rendering (to_json's default .SSS) would
+    silently merge groups whose timestamp keys differ only below the
+    millisecond."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0, 123)     # .000123
@@ -1197,8 +1212,11 @@ def test_tree_merge_negative_zero_group_key(spark):
     """A double group key containing BOTH 0.0 and -0.0 must merge into
     ONE group (Spark groupBy folds them via NormalizeFloatingNumbers;
     the tree's to_json gkey rendered them differently pre-fix) and the
-    emitted key must be +0.0."""
+    emitted key must be +0.0.  NaN keys of any bit pattern are one
+    group too, and stage 1 emits one partial per Spark group even when
+    those keys arrive over many Arrow batches of one task."""
     import math
+    import struct
 
     rows = [(0.0, float(i)) for i in range(50)]
     rows += [(-0.0, float(i + 100)) for i in range(50)]
@@ -1225,6 +1243,28 @@ def test_tree_merge_negative_zero_group_key(spark):
     )
     assert [r["_pb"] for r in got if r["g"] == 0.0] == [[74.5]]
     assert all(math.copysign(1.0, r["g"]) == 1.0 for r in got)
+
+    # one partition read in 5-row batches: <= 1 partial per (stage-1
+    # task, group) is what the level-0 salt's fan-in bound rests on
+    nan2 = struct.unpack("<d", struct.pack("<Q", 0x7FF8000000000001))[0]
+    keyed = spark.createDataFrame(
+        rows
+        + [(math.nan, float(200 + i)) for i in range(10)]
+        + [(nan2, float(300 + i)) for i in range(10)],
+        "g double, v double",
+    ).repartition(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        parts = build_partials(keyed, "v", ["g"]).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert len(parts) == keyed.select("g").distinct().count() == 3
+    n_rows = {
+        "nan" if math.isnan(r["g"]) else r["g"]: r["n_rows"] for r in parts
+    }
+    assert n_rows == {0.0: 100, "nan": 20, 2.5: 1}
 
 
 def test_annotator_single_row_guards(spark):
@@ -1265,7 +1305,10 @@ def test_annotators_read_null_group_key_as_its_own_group(spark, op):
     """A NULL group key is its own group for every annotator, as in
     tdigest_agg: its rows read exactly what they read once the key is
     relabelled to a fresh value (NULL never equals NULL in a plain
-    equi-join, which left those rows unclipped / unbucketed)."""
+    equi-join, which left those rows unclipped / unbucketed).  A -0.0
+    key is the +0.0 group, as in tdigest_agg."""
+    import math
+
     from go_tdigest_spark.operators import (
         tdigest_bucket,
         tdigest_normalize,
@@ -1291,6 +1334,24 @@ def test_annotators_read_null_group_key_as_its_own_group(spark, op):
 
     got = rows(annotate(df), F.col("g").isNull())
     want = rows(annotate(relabelled), F.col("g") == "fresh")
+    assert len(got) == 10 and all(x is not None for r in got for x in r)
+    assert got == want
+
+    # a double key: rows at -0.0 read what the same rows read at +0.0
+    # (float keys fold as in tdigest_agg), and keep their own -0.0
+    def zeros(z):
+        return spark.createDataFrame(
+            [(0.0, float(v)) for v in range(10)]
+            + [(z, float(10 + v)) for v in range(10)]
+            + [(1.0, float(100 + v)) for v in range(5)],
+            "g double, v double",
+        )
+
+    band = F.col("v").between(10, 19)
+    neg = annotate(zeros(-0.0)).where(band)
+    assert {math.copysign(1.0, r["g"]) for r in neg.collect()} == {-1.0}
+    got = rows(neg, F.lit(True))
+    want = rows(annotate(zeros(0.0)), band)
     assert len(got) == 10 and all(x is not None for r in got for x in r)
     assert got == want
 
