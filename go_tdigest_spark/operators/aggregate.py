@@ -160,7 +160,7 @@ def _merge_digests(table: pa.Table, gids: np.ndarray, n_groups: int) -> list:
 def merge_partials(
     partials: DataFrame,
     by: Sequence[str] = (),
-    fanin: int | None = None,
+    fanin: int | None = 64,
     n_units: int | None = None,
 ) -> DataFrame:
     """Stage 2: tree-merge partial digests down to one row per group.
@@ -581,10 +581,10 @@ def _coarse_merge_bound(
         return finest, None
     if n_units_hint is not None:
         return finest, n_units_hint
-    # NB: the persist is never explicitly released (the returned plan
-    # still references it); it is one O(compression)-byte row per group
-    # and Spark evicts LRU — pass finest_groups_hint to avoid it
-    finest = finest.persist()
+    from .dedup import _register_persisted
+
+    # released by release_dedup_caches; finest_groups_hint avoids it
+    finest = _register_persisted(finest.persist())
     return finest, finest.count()
 
 

@@ -41,7 +41,7 @@ FP_BASE = 31
 SH_MOD = 144_115_188_075_855_881
 
 
-# Registry of every table persisted by this module's operators.  The
+# Registry of every table persisted by the library's operators.  The
 # per-result attribute handles (result.persisted_sigs / _bands /
 # _grams) are plain python attributes on the DataFrame OBJECT — any
 # subsequent transformation (.where/.select) returns a new DataFrame
@@ -60,10 +60,19 @@ _PERSISTED_LOCK = threading.Lock()
 
 
 def release_dedup_caches() -> int:
-    """Unpersist every signature/band/gram/index table persisted by
-    this module's operators in this process; returns how many were
-    released.  Safe to call at any time — later actions on a released
-    plan recompute instead of reading cache.  Call this between
+    """Unpersist every table the library's operators persisted in this
+    process (dedup signature/band/gram/index tables, the range-sorted
+    tables of ``pack_chunks(method="range")``, ``deterministic_shuffle``
+    and ``sample_token_budget``, rollup/cube's finest level); returns
+    how many were released.  Later actions on a released plan recompute
+    instead of reading cache.  For the dedup and rollup/cube tables that
+    is only slower; the range-sorted tables are different: their phase-1
+    offsets are fixed in the phase-2 closure, and a recompute can
+    re-sample the range boundaries, which duplicates or skips positions
+    without an error.  So release only after the results of
+    ``pack_chunks(method="range")``, ``deterministic_shuffle`` and
+    ``sample_token_budget`` are consumed (written or collected), unless
+    their input is deterministic end to end.  Call this between
     corpus-loop iterations in long-lived sessions: the registry (and
     the executor storage behind it) otherwise grows without bound."""
     n = 0
@@ -323,8 +332,8 @@ def ngram_jaccard_pairs(
     re-execute the scan + hashing kernel because the index is map-only
     (no exchange for Spark to reuse).  Persisting the (id, int64) index
     — tiny relative to the text — computes it once.  MEMORY_AND_DISK,
-    never explicitly released; disable when composing into a job that
-    manages its own caching."""
+    released by :func:`release_dedup_caches`; disable when composing
+    into a job that manages its own caching."""
     inv = shingle_hashes(df, text_col, id_col, n)
     if persist_index:
         inv = _register_persisted(inv.persist())
@@ -601,6 +610,61 @@ def cap_lsh_buckets(
     )
 
 
+def _lsh_rows(n_hashes: int, bands: int) -> int:
+    """Rows per band; ``bands`` must divide ``n_hashes``."""
+    if bands < 1 or n_hashes % bands != 0:
+        raise ValueError(
+            f"bands must divide n_hashes (got n_hashes={n_hashes}, "
+            f"bands={bands}): a trailing remainder would silently drop "
+            "signature positions from banding (recall loss)"
+        )
+    return n_hashes // bands
+
+
+def _width_checked(
+    sigs: DataFrame, n_hashes: int, what: str = "signature"
+) -> DataFrame:
+    """``sigs`` with a per-row assert that ``sig`` holds ``n_hashes``
+    elements: a table banded with the wrong width would otherwise
+    degenerate silently (see :func:`lsh_pairs_from_sigs`)."""
+    return sigs.withColumn(
+        "sig",
+        F.when(
+            F.assert_true(
+                F.size("sig") == F.lit(n_hashes),
+                F.lit(f"{what} width != n_hashes={n_hashes}"),
+            ).isNull(),
+            F.col("sig"),
+        ),
+    )
+
+
+def _est_jaccard(n_hashes: int) -> Column:
+    """Signature agreement of the ``sig_a``/``sig_b`` columns, rounded to
+    4 places, as ``est_jaccard``.  The agreement count is UNROLLED into
+    n_hashes codegen'd element comparisons — zip_with/filter lambdas are
+    interpreted by Catalyst and this expression runs once per unique
+    candidate pair.  Unrolling is linear in expression-tree size, so
+    very wide signatures fall back to the O(1)-sized (interpreted)
+    zip_with form instead of risking codegen splits / deep-tree
+    blowups."""
+    if n_hashes <= 64:
+        agree = sum(
+            F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
+            for i in range(n_hashes)
+        )
+    else:
+        agree = F.size(
+            F.filter(
+                F.zip_with(
+                    F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y
+                ),
+                lambda v: v,
+            )
+        )
+    return F.round(agree / F.lit(n_hashes), 4).alias("est_jaccard")
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -663,27 +727,12 @@ def lsh_pairs_from_sigs(
     DataFrame transformations (it is a python attribute on the object,
     not the plan).  Disable when composing into a job that manages its
     own caching (the streaming readers do)."""
-    if bands < 1 or n_hashes % bands != 0:
-        raise ValueError(
-            f"bands must divide n_hashes (got n_hashes={n_hashes}, "
-            f"bands={bands}): a trailing remainder would silently drop "
-            "signature positions from banding (recall loss)"
-        )
+    rows = _lsh_rows(n_hashes, bands)
     persisted = None
     if persist_sigs:
         sigs = _register_persisted(sigs.persist())
         persisted = sigs
-    rows = n_hashes // bands
-    sigs = sigs.withColumn(
-        "sig",
-        F.when(
-            F.assert_true(
-                F.size("sig") == F.lit(n_hashes),
-                F.lit(f"signature width != n_hashes={n_hashes}"),
-            ).isNull(),
-            F.col("sig"),
-        ),
-    )
+    sigs = _width_checked(sigs, n_hashes)
     # narrow banded rows: band keys are computed FROM sig, but sig
     # itself stays out of the exchange (ids-only; see the plan note
     # below).  Keys are native int64 columns k0..k{rows-1}, not a
@@ -726,26 +775,6 @@ def lsh_pairs_from_sigs(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
-    # The agreement count is UNROLLED into n_hashes codegen'd element
-    # comparisons — zip_with/filter lambdas are interpreted by Catalyst
-    # and this expression runs once per unique candidate pair.
-    # Unrolling is linear in expression-tree size, so very wide
-    # signatures fall back to the O(1)-sized (interpreted) zip_with
-    # form instead of risking codegen splits / deep-tree blowups.
-    if n_hashes <= 64:
-        agree = sum(
-            F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-            for i in range(n_hashes)
-        )
-    else:
-        agree = F.size(
-            F.filter(
-                F.zip_with(
-                    F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y
-                ),
-                lambda v: v,
-            )
-        )
     sig_a = sigs.select(
         F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a")
     )
@@ -755,11 +784,7 @@ def lsh_pairs_from_sigs(
     out = (
         cand.join(sig_a, "doc_a")
         .join(sig_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(agree / F.lit(n_hashes), 4).alias("est_jaccard"),
-        )
+        .select("doc_a", "doc_b", _est_jaccard(n_hashes))
         .where(F.col("est_jaccard") >= threshold)
     )
     # cache-release handle (see docstring); None when persist_sigs=False
@@ -846,30 +871,9 @@ def lsh_pairs_vs_index(
     persist through the module registry — release with
     :func:`release_dedup_caches` between shards in a long-lived loop.
     """
-    if bands < 1 or n_hashes % bands != 0:
-        raise ValueError(
-            f"bands must divide n_hashes (got n_hashes={n_hashes}, "
-            f"bands={bands}): a trailing remainder would silently drop "
-            "signature positions from banding (recall loss)"
-        )
-    rows = n_hashes // bands
-
-    def _checked(sigs: DataFrame, side: str) -> DataFrame:
-        return sigs.withColumn(
-            "sig",
-            F.when(
-                F.assert_true(
-                    F.size("sig") == F.lit(n_hashes),
-                    F.lit(
-                        f"{side} signature width != n_hashes={n_hashes}"
-                    ),
-                ).isNull(),
-                F.col("sig"),
-            ),
-        )
-
-    new_sigs = _checked(new_sigs, "shard")
-    index_sigs = _checked(index_sigs, "index")
+    rows = _lsh_rows(n_hashes, bands)
+    new_sigs = _width_checked(new_sigs, n_hashes, "shard signature")
+    index_sigs = _width_checked(index_sigs, n_hashes, "index signature")
     if persist:
         new_sigs = _register_persisted(new_sigs.persist())
         index_sigs = _register_persisted(index_sigs.persist())
@@ -899,20 +903,6 @@ def lsh_pairs_vs_index(
         )
         .distinct()
     )
-    if n_hashes <= 64:
-        agree = sum(
-            F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-            for i in range(n_hashes)
-        )
-    else:
-        agree = F.size(
-            F.filter(
-                F.zip_with(
-                    F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y
-                ),
-                lambda v: v,
-            )
-        )
     sig_a = new_sigs.select(
         F.col("doc").alias("doc_new"), F.col("sig").alias("sig_a")
     )
@@ -922,11 +912,7 @@ def lsh_pairs_vs_index(
     return (
         cand.join(sig_a, "doc_new")
         .join(sig_b, "doc_idx")
-        .select(
-            "doc_new",
-            "doc_idx",
-            F.round(agree / F.lit(n_hashes), 4).alias("est_jaccard"),
-        )
+        .select("doc_new", "doc_idx", _est_jaccard(n_hashes))
         .where(F.col("est_jaccard") >= threshold)
     )
 

@@ -35,9 +35,20 @@ Two physical strategies for the prefix sum, identical output:
   parallelism you want there — the two methods are complementary, not
   interchangeable defaults.
 
+The two phases are :func:`_range_phase1` (range sort, ``_pid`` tag,
+persist, totals collect, base offsets) and :func:`_with_prefix` (the
+Arrow pass appending a group-local exclusive prefix column).  They are
+the one home of the range strategy: ``sample.deterministic_shuffle``
+(prefix over one per row = position) and ``sample.sample_token_budget``
+(prefix + size within the cap = kept) run on them too.
+
 Sizes must be positive (a zero/negative token count is upstream
-corruption); the range path validates per batch, the window path by the
-same arithmetic contract pinned in tests.
+corruption).  Both paths check it in the JVM where ``end_pos`` is
+computed, which Catalyst skips when no selected column reads
+``end_pos`` or ``n_bins``.  The range path also rejects a NULL or
+negative size on the driver in phase 1, before any prefix task runs and
+whatever columns are read, so a bad size never shifts its start
+positions silently.
 """
 
 from __future__ import annotations
@@ -56,9 +67,8 @@ _RESERVED = ("_pid", "start_pos", "end_pos", "bin_id", "bin_offset", "n_bins")
 
 
 def _finalize(df: DataFrame, size_col: str, capacity: int) -> DataFrame:
-    # runtime size validation on BOTH paths (the range kernel also
-    # checks batch-side): a NULL/non-positive size would silently shift
-    # every later row's start_pos on the window path
+    # runtime size validation on BOTH paths: a NULL/non-positive size
+    # would silently shift every later row's start_pos
     checked = F.expr(
         f"CASE WHEN {size_col} IS NULL OR {size_col} <= 0 "
         f"THEN raise_error('pack_chunks: size_col must be positive') "
@@ -93,6 +103,9 @@ def pack_chunks(
     start positions would depend on partitioning — the same uniqueness
     contract as ``sample_topk_per_group``, not validated for the same
     cost reason.
+
+    ``num_partitions`` and ``persist`` apply to ``method="range"``
+    only; see :func:`_range_phase1` for when ``persist=False`` is safe.
     """
     by = list(by or [])
     if capacity < 1:
@@ -132,98 +145,140 @@ def pack_chunks(
         )
         return _finalize(started, size_col, capacity)
 
-    # ---- two-phase distributed prefix sum --------------------------------
-    import numpy as np
-    import pyarrow as pa
+    ctx = "pack_chunks"
+    parts, base = _range_phase1(
+        df, by, [key_col], size_col, num_partitions, persist, ctx
+    )
+    started = _with_prefix(parts, by, size_col, base, "start_pos", ctx)
+    return _finalize(started.drop("_pid"), size_col, capacity)
 
-    sort_cols = by + [key_col]
+
+# ---- two-phase distributed prefix sum ------------------------------------
+
+
+def _range_phase1(
+    df: DataFrame,
+    by: list[str],
+    order: list[str],
+    size_col: str | None,
+    num_partitions: int | None,
+    persist: bool,
+    ctx: str,
+) -> tuple[DataFrame, dict[tuple, int]]:
+    """Phase 1 of the distributed prefix sum: range-partition and sort
+    ``df`` by ``(by..., order...)``, tag each row with its ``_pid`` and
+    return ``(parts, base)``.  ``base[(pid, *group)]`` is the total
+    ``size_col`` of the group's rows in every earlier partition (groups
+    are contiguous across pid order because the range key leads with
+    ``by``).  ``size_col=None`` counts one per row.  A NULL or negative
+    size raises here, on the driver, before any phase-2 task runs and
+    whatever columns the result's consumer reads.
+
+    ``persist``: ``parts`` is consumed twice (these totals, then phase
+    2); without the persist the range sort runs twice AND phase 2's
+    layout could disagree with these offsets, because
+    ``repartitionByRange`` samples its boundaries.  ``persist=False``
+    therefore requires an input that is deterministic end to end.  The
+    table is released by ``release_dedup_caches``."""
+    from .dedup import _register_persisted
+
+    keys = [F.col(c) for c in (*by, *order)]
     nparts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     parts = (
-        df.repartitionByRange(nparts, *[F.col(c) for c in sort_cols])
-        .sortWithinPartitions(*[F.asc(c) for c in sort_cols])
+        df.repartitionByRange(nparts, *keys)
+        .sortWithinPartitions(*keys)
         .withColumn("_pid", F.spark_partition_id())
     )
     if persist:
-        # consumed twice (totals agg + prefix pass); without the persist
-        # the range-sort runs twice AND the phase-1 base offsets could
-        # disagree with phase 2's layout (repartitionByRange samples its
-        # boundaries — recomputation is not guaranteed to reproduce
-        # them).  Library persist, never unpersisted (same knob/caveat
-        # as the shingle inverted index); only disable when the input's
-        # partitioning is already deterministic end to end.
-        parts = parts.persist()
-    # phase 1: per-(partition, group) totals — O(partitions) rows, cheap
+        parts = _register_persisted(parts.persist())
+    size = F.col(size_col) if size_col else F.lit(1)
+    # O(partitions + groups) rows, not data rows
     totals = (
         parts.groupBy("_pid", *by)
-        .agg(F.sum(size_col).alias("_tot"))
+        .agg(
+            F.sum(size).cast("long").alias("_tot"),
+            (F.count(F.lit(1)) - F.count(size)).alias("_nulls"),
+            F.count(F.when(size < 0, 1)).alias("_neg"),
+        )
         .collect()
     )
+    if any(row["_nulls"] > 0 for row in totals):
+        raise ValueError(f"{ctx}: size_col must not contain NULLs")
+    if any(row["_neg"] > 0 for row in totals):
+        raise ValueError(f"{ctx}: size_col must not contain negative values")
     base: dict[tuple, int] = {}
     acc: dict[tuple, int] = {}
-    for row in sorted(totals, key=lambda r: (tuple(str(r[c]) for c in by), r["_pid"])):
+    for row in sorted(totals, key=lambda r: r["_pid"]):
         g = tuple(row[c] for c in by)
         base[(row["_pid"], *g)] = acc.get(g, 0)
-        acc[g] = acc.get(g, 0) + int(row["_tot"])
+        acc[g] = acc.get(g, 0) + row["_tot"]
+    return parts, base
 
-    size_idx = parts.columns.index(size_col)
-    pid_idx = parts.columns.index("_pid")
-    by_idx = [parts.columns.index(c) for c in by]
+
+def _with_prefix(
+    parts: DataFrame,
+    by: list[str],
+    size_col: str | None,
+    base: dict[tuple, int],
+    out_col: str,
+    ctx: str,
+) -> DataFrame:
+    """Phase 2: one map-only Arrow pass over :func:`_range_phase1`'s
+    ``parts`` that appends ``out_col``, the group-local EXCLUSIVE prefix
+    sum of ``size_col`` (one per row when None) in the sorted order:
+    the phase-1 base offset plus a segment-vectorized cumsum, carried
+    across the partition's batches."""
+    import numpy as np
+    import pyarrow as pa
     from pyspark.sql.types import LongType, StructField, StructType
 
+    size_idx = parts.columns.index(size_col) if size_col else None
+    pid_idx = parts.columns.index("_pid")
+    by_idx = [parts.columns.index(c) for c in by]
     out_schema = StructType(
-        list(parts.schema.fields) + [StructField("start_pos", LongType(), False)]
+        list(parts.schema.fields) + [StructField(out_col, LongType(), False)]
     )
 
-    def gen(batches):
+    def prefix(batches):
         carry: dict[tuple, int] = {}
         for batch in batches:
-            if batch.num_rows == 0:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            sizes = batch.column(size_idx).to_numpy(zero_copy_only=False)
-            sizes = sizes.astype(np.int64)
-            if (sizes <= 0).any():
-                raise ValueError("pack_chunks: size_col must be positive")
-            pid = batch.column(pid_idx)[0].as_py()
-            # segment boundaries where the group tuple changes (groups
-            # are contiguous: partition data is sorted by by+key)
-            if by_idx:
-                cols = [
-                    batch.column(i).to_numpy(zero_copy_only=False)
-                    for i in by_idx
-                ]
-                for c in cols:
-                    # an integral group column with NULLs arrives as
-                    # float64/NaN: NaN != NaN fragments segments and
-                    # misses every dict key — corrupt silently, so fail
-                    if c.dtype.kind == "f":
-                        raise ValueError(
-                            "pack_chunks: integral group columns must "
-                            "not contain NULLs (use a string column or "
-                            "filter/fill first)"
-                        )
-                change = np.zeros(len(sizes), dtype=bool)
-                for c in cols:
-                    change[1:] |= c[1:] != c[:-1]
-                bounds = np.flatnonzero(change)
-                starts_at = np.concatenate(([0], bounds, [len(sizes)]))
+            if size_idx is None:
+                sizes = np.ones(n, dtype=np.int64)
             else:
-                starts_at = np.array([0, len(sizes)])
-            prefix = np.concatenate(([0], np.cumsum(sizes[:-1])))
-            out = np.empty(len(sizes), dtype=np.int64)
-            for s, e in zip(starts_at[:-1], starts_at[1:]):
-                g = tuple(c[s] for c in cols) if by_idx else ()
+                sizes = batch.column(size_idx).to_numpy(zero_copy_only=False)
+                sizes = sizes.astype(np.int64)
+            pid = batch.column(pid_idx)[0].as_py()
+            cols = [
+                batch.column(i).to_numpy(zero_copy_only=False) for i in by_idx
+            ]
+            # an integral group column with NULLs arrives as float64/NaN:
+            # NaN != NaN fragments segments and misses every base key
+            if any(c.dtype.kind == "f" for c in cols):
+                raise ValueError(
+                    f"{ctx}: integral group columns must not contain "
+                    "NULLs (use a string column or filter/fill first)"
+                )
+            # groups are contiguous: the partition is sorted by by+order
+            change = np.zeros(n, dtype=bool)
+            for c in cols:
+                change[1:] |= c[1:] != c[:-1]
+            bounds = np.concatenate(([0], np.flatnonzero(change), [n]))
+            before = np.cumsum(sizes) - sizes  # batch-global, rebased below
+            out = np.empty(n, dtype=np.int64)
+            for s, e in zip(bounds[:-1], bounds[1:]):
+                g = tuple(c[s] for c in cols)
                 seg_base = carry.get(g, base.get((pid, *g), 0))
-                # prefix[] is the batch-global cumsum; rebase per segment
-                out[s:e] = prefix[s:e] - prefix[s] + seg_base
+                out[s:e] = before[s:e] - before[s] + seg_base
                 carry[g] = int(out[e - 1] + sizes[e - 1])
             yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)]
-                + [pa.array(out, type=pa.int64())],
-                names=list(batch.schema.names) + ["start_pos"],
+                [*batch.columns, pa.array(out, type=pa.int64())],
+                names=[*batch.schema.names, out_col],
             )
 
-    started = parts.mapInArrow(gen, out_schema).drop("_pid")
-    return _finalize(started, size_col, capacity)
+    return parts.mapInArrow(prefix, out_schema)
 
 
 def pack_fragments(

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .dedup import FP_BASE, SH_MOD, shingle_hash_frag
+from .pack import _range_phase1, _with_prefix
 
 # sampling uses the 57-bit modulus: the 30-bit FP_MOD would make the
 # acceptance ratio granular to ~1e-9 of itself only, fine, but SH_MOD
@@ -122,6 +123,33 @@ def _batch_key_hashes(batch, key_idx: int, seed: int) -> np.ndarray:
     return _hash_strings_batch(vals, seed)
 
 
+def _with_key_hash(
+    df: DataFrame, key_col: str, seed: int, out_col: str = "_h"
+) -> DataFrame:
+    """``df`` plus ``out_col``, the seeded key hash (int64), computed per
+    Arrow batch map-side — the order key of the top-k sample, the
+    deterministic shuffle and the token budget."""
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    key_idx = df.columns.index(key_col)
+    schema = StructType(
+        list(df.schema.fields) + [StructField(out_col, LongType(), False)]
+    )
+
+    def add_hash(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            h = _batch_key_hashes(batch, key_idx, seed)
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, pa.array(h, type=pa.int64())],
+                names=[*batch.schema.names, out_col],
+            )
+
+    return df.mapInArrow(add_hash, schema)
+
+
 def sample_hash_frag(col: str, dialect: str, seed: int = 1) -> str:
     """SQL twin of the sampling hash: poly hash of 's{seed}:' || key."""
     cast = (
@@ -204,28 +232,7 @@ def sample_topk_per_group(
         raise ValueError(
             f"input columns collide with reserved names: {sorted(reserved)}"
         )
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    key_idx = df.columns.index(key_col)
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema_with_hash = StructType(
-        list(df.schema.fields) + [StructField("_sh", LongType(), False)]
-    )
-
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h = _batch_key_hashes(batch, key_idx, seed)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)]
-                + [pa.array(h, type=pa.int64())],
-                names=list(batch.schema.names) + ["_sh"],
-            )
-
-    hashed = df.mapInArrow(gen, schema_with_hash)
+    hashed = _with_key_hash(df, key_col, seed, "_sh")
     if not by:
         # global top-k: TakeOrderedAndProject (per-partition partial
         # top-k, one k-row merge) — the sample_weighted shape.  An
@@ -696,8 +703,9 @@ def deterministic_shuffle(
     engine's NULL placement — use unique non-NULL keys (the doc-id
     contract) when cross-engine positional equality matters.
 
-    Scale shape (same two-phase distributed prefix sum as
-    ``pack_chunks(method='range')``): hash per Arrow batch (map-only) ->
+    Scale shape: hash per Arrow batch (map-only), then the package's
+    two-phase distributed prefix sum (``pack._range_phase1`` and
+    ``pack._with_prefix``) over a size of one per row:
     ``repartitionByRange`` on (hash, key) + in-partition sort -> phase 1
     collects one COUNT per partition (O(partitions) driver rows) ->
     phase 2 assigns ``base[pid] + local_index`` map-only.  No global
@@ -709,13 +717,12 @@ def deterministic_shuffle(
     is deterministic even though ``repartitionByRange`` samples.
 
     ``persist``: the range-partitioned table is consumed twice (count
-    pass + position pass); without it the range-sort runs twice AND
-    phase 2's layout could disagree with phase 1's boundaries — with a
-    NONDETERMINISTIC input plan (or re-sampled range boundaries) that
-    disagreement silently produces duplicate/skipped positions, so
-    ``persist=False`` REQUIRES a deterministic input (ADVICE r5
-    item 3).  Library persist, released via ``release_dedup_caches``
-    (module registry) — same posture as the dedup signature tables.
+    pass + position pass); without it phase 2's layout could disagree
+    with phase 1's boundaries, which silently produces duplicate or
+    skipped positions, so ``persist=False`` REQUIRES a deterministic
+    input (see ``pack._range_phase1``).  Released by
+    ``release_dedup_caches``, which must run only after the result is
+    consumed unless the input is deterministic.
 
     SQL twin: :func:`deterministic_shuffle_sql`.
     """
@@ -724,71 +731,12 @@ def deterministic_shuffle(
         raise ValueError(
             f"deterministic_shuffle: pos_col {pos_col!r} already in DataFrame"
         )
-    import pyarrow as pa
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from .dedup import _register_persisted
-
-    key_idx = df.columns.index(key_col)
-    hashed_schema = StructType(
-        list(df.schema.fields) + [StructField("_h", LongType(), False)]
+    ctx = "deterministic_shuffle"
+    parts, base = _range_phase1(
+        _with_key_hash(df, key_col, seed), [], ["_h", key_col], None,
+        num_partitions, persist, ctx,
     )
-
-    def add_hash(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h = _batch_key_hashes(batch, key_idx, seed)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)]
-                + [pa.array(h, type=pa.int64())],
-                names=list(batch.schema.names) + ["_h"],
-            )
-
-    nparts = (
-        num_partitions
-        or df.sparkSession.sparkContext.defaultParallelism
-    )
-    parts = (
-        df.mapInArrow(add_hash, hashed_schema)
-        .repartitionByRange(nparts, F.col("_h"), F.col(key_col))
-        .sortWithinPartitions(F.asc("_h"), F.asc(key_col))
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    if persist:
-        parts = _register_persisted(parts.persist())
-    counts = (
-        parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
-    )
-    base: dict[int, int] = {}
-    acc = 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        base[row["_pid"]] = acc
-        acc += int(row["_n"])
-
-    pid_idx = parts.columns.index("_pid")
-    out_schema = StructType(
-        list(parts.schema.fields) + [StructField(pos_col, LongType(), False)]
-    )
-
-    def add_pos(batches):
-        seen = 0
-        cur_base = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if cur_base is None:
-                cur_base = base.get(batch.column(pid_idx)[0].as_py(), 0)
-            pos = np.arange(seen, seen + batch.num_rows, dtype=np.int64)
-            pos += cur_base
-            seen += batch.num_rows
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)]
-                + [pa.array(pos, type=pa.int64())],
-                names=list(batch.schema.names) + [pos_col],
-            )
-
-    return parts.mapInArrow(add_pos, out_schema).drop("_h", "_pid")
+    return _with_prefix(parts, [], None, base, pos_col, ctx).drop("_h", "_pid")
 
 
 def deterministic_shuffle_sql(
@@ -832,14 +780,18 @@ def sample_token_budget(
     unbounded); a scalar applies the same cap to every group.  Dict
     budgets require ``len(by) == 1``.
 
-    Scale shape: seeded hash per Arrow batch -> ``repartitionByRange``
-    on (by..., hash, key) -> phase 1 collects one SUM(size) per
-    (partition, group) (O(partitions + groups) driver rows) ->
-    partitions where every group's base offset already exceeds its
-    budget are PRUNED (at 100 TB with a 1% budget, ~99% of partitions
-    never reach phase 2) -> phase 2 cumsums map-only over contiguous
-    group segments.  Exact int64 arithmetic end to end; never a global
-    single-partition window.
+    Scale shape: seeded hash per Arrow batch, then the package's
+    two-phase distributed prefix sum (``pack._range_phase1`` and
+    ``pack._with_prefix``): ``repartitionByRange`` on (by..., hash,
+    key) -> phase 1 collects one SUM(size) per (partition, group)
+    (O(partitions + groups) driver rows) -> partitions where every
+    group's base offset already exceeds its budget are PRUNED (at
+    100 TB with a 1% budget, ~99% of partitions never reach phase 2) ->
+    phase 2 adds each document's group-local start offset map-only ->
+    a JVM filter keeps ``start + size <= cap`` (the SQL twin's cap
+    expression).  Exact int64 arithmetic end to end; never a global
+    single-partition window.  ``persist`` as in
+    :func:`deterministic_shuffle`.
 
     SQL twin: :func:`sample_token_budget_sql` (the running-sum window
     form — the semantic definition the scale path must equal exactly).
@@ -848,17 +800,13 @@ def sample_token_budget(
     _check_key_type(df, key_col, "sample_token_budget")
     for c in by:
         _check_key_type(df, c, "sample_token_budget")
+    cap = _budget_cap(budget, by, "spark")
     if isinstance(budget, dict):
-        if len(by) != 1:
-            raise ValueError(
-                "sample_token_budget: dict budget requires exactly one "
-                "by column (keys are that column's values)"
-            )
         if any(v < 0 for v in budget.values()):
             raise ValueError("sample_token_budget: budgets must be >= 0")
     elif budget < 0:
         raise ValueError("sample_token_budget: budget must be >= 0")
-    for c in ("_h", "_pid"):
+    for c in ("_h", "_pid", "_pos"):
         if c in df.columns:
             raise ValueError(
                 f"sample_token_budget: input column {c!r} is reserved"
@@ -876,132 +824,48 @@ def sample_token_budget(
             return int(budget.get(g[0], 0))
         return int(budget)
 
-    import pyarrow as pa
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from .dedup import _register_persisted
-
-    key_idx = df.columns.index(key_col)
-    hashed_schema = StructType(
-        list(df.schema.fields) + [StructField("_h", LongType(), False)]
+    ctx = "sample_token_budget"
+    parts, base = _range_phase1(
+        _with_key_hash(df, key_col, seed), by, ["_h", key_col], size_col,
+        num_partitions, persist, ctx,
     )
-
-    def add_hash(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h = _batch_key_hashes(batch, key_idx, seed)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)]
-                + [pa.array(h, type=pa.int64())],
-                names=list(batch.schema.names) + ["_h"],
-            )
-
-    nparts = (
-        num_partitions
-        or df.sparkSession.sparkContext.defaultParallelism
-    )
-    sort_cols = [*by, "_h", key_col]
-    parts = (
-        df.mapInArrow(add_hash, hashed_schema)
-        .repartitionByRange(nparts, *[F.col(c) for c in sort_cols])
-        .sortWithinPartitions(*[F.asc(c) for c in sort_cols])
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    if persist:
-        # consumed twice (totals + cumsum pass); recomputation could
-        # also re-sample range boundaries — same caveat as pack_chunks
-        parts = _register_persisted(parts.persist())
-    totals = (
-        parts.groupBy("_pid", *by)
-        .agg(
-            F.sum(size_col).cast("long").alias("_tot"),
-            (F.count(F.lit(1)) - F.count(size_col)).alias("_nulls"),
-        )
-        .collect()
-    )
-    if any(row["_nulls"] > 0 for row in totals):
-        raise ValueError(
-            "sample_token_budget: size_col must not contain NULLs"
-        )
-    # per-group base offsets: groups are contiguous across pid order
-    # (range partitioning leads with the group columns), so the
-    # cumulative-by-(group, pid) walk mirrors pack_chunks' range path
-    base: dict[tuple, int] = {}
-    acc: dict[tuple, int] = {}
-    for row in sorted(
-        totals, key=lambda r: (tuple(str(r[c]) for c in by), r["_pid"])
-    ):
-        g = tuple(row[c] for c in by)
-        base[(row["_pid"], *g)] = acc.get(g, 0)
-        acc[g] = acc.get(g, 0) + int(row["_tot"])
     # prune partitions where EVERY group present already starts at or
     # past its budget: only each group's prefix reaches phase 2
-    live_set = set()
-    for (pid, *g), b in base.items():
-        if b < budget_of(tuple(g)):
-            live_set.add(pid)
-    live = sorted(live_set)
+    live = sorted({pid for (pid, *g), b in base.items() if b < budget_of(g)})
     parts = parts.where(F.col("_pid").isin(live) if live else F.lit(False))
+    return (
+        _with_prefix(parts, by, size_col, base, "_pos", ctx)
+        .where(F.col("_pos") + F.col(size_col) <= cap)
+        .drop("_h", "_pid", "_pos")
+    )
 
-    size_idx = parts.columns.index(size_col)
-    pid_idx = parts.columns.index("_pid")
-    by_idx = [parts.columns.index(c) for c in by]
 
-    def take_budget(batches):
-        carry: dict[tuple, int] = {}
-        pid = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if pid is None:
-                pid = batch.column(pid_idx)[0].as_py()
-            sizes = batch.column(size_idx).to_numpy(zero_copy_only=False)
-            # an integral column with NULLs arrives as float64/NaN (the
-            # pack_chunks trap): corrupting the running sum silently is
-            # worse than failing, so fail
-            if sizes.dtype.kind == "f" and np.isnan(sizes).any():
-                raise ValueError(
-                    "sample_token_budget: size_col must not contain NULLs"
-                )
-            sizes = sizes.astype(np.int64)
-            if (sizes < 0).any():
-                raise ValueError(
-                    "sample_token_budget: size_col must be non-negative"
-                )
-            if by_idx:
-                cols = [
-                    batch.column(i).to_numpy(zero_copy_only=False)
-                    for i in by_idx
-                ]
-                for c in cols:
-                    # float arrival of an integral group column means
-                    # NULLs: NaN != NaN would fragment segments — fail
-                    if c.dtype.kind == "f":
-                        raise ValueError(
-                            "sample_token_budget: group columns must "
-                            "not contain NULLs"
-                        )
-                change = np.zeros(len(sizes), dtype=bool)
-                for c in cols:
-                    change[1:] |= c[1:] != c[:-1]
-                bounds = np.flatnonzero(change)
-                starts_at = np.concatenate(([0], bounds, [len(sizes)]))
-            else:
-                cols = []
-                starts_at = np.array([0, len(sizes)])
-            prefix = np.concatenate(([0], np.cumsum(sizes[:-1])))
-            keep = np.zeros(len(sizes), dtype=bool)
-            for s, e in zip(starts_at[:-1], starts_at[1:]):
-                g = tuple(c[s] for c in cols) if by_idx else ()
-                seg_base = carry.get(g, base.get((pid, *g), 0))
-                cum = (prefix[s:e] - prefix[s] + seg_base) + sizes[s:e]
-                keep[s:e] = cum <= budget_of(g)
-                carry[g] = int(cum[-1])
-            if keep.any():
-                yield batch.filter(pa.array(keep))
-
-    return parts.mapInArrow(take_budget, parts.schema).drop("_h", "_pid")
+def _budget_cap(budget: int | dict, by: list[str], dialect: str):
+    """The per-row token cap: the scalar budget, or for a dict budget
+    ``CASE <by[0]> WHEN key THEN cap ... ELSE 0 END`` (an unlisted group
+    gets 0).  ``dialect="spark"`` builds it as a Column from literal
+    values, so a key matches its group exactly whatever characters it
+    holds (Spark SQL text would unescape backslashes and quotes
+    differently from DuckDB); ``"duck"`` renders the SQL twin's text."""
+    if not isinstance(budget, dict):
+        return str(int(budget)) if dialect == "duck" else F.lit(int(budget))
+    if len(by) != 1:
+        raise ValueError(
+            "sample_token_budget: dict budget requires exactly one by "
+            "column (keys are that column's values)"
+        )
+    if dialect == "duck":
+        whens = " ".join(
+            f"WHEN {_sql_lit(k)} THEN {int(v)}" for k, v in budget.items()
+        )
+        return f"CASE {by[0]} {whens} ELSE 0 END"
+    cases = [(F.col(by[0]) == F.lit(k), int(v)) for k, v in budget.items()]
+    if not cases:
+        return F.lit(0)
+    cap = F.when(*cases[0])
+    for cond, v in cases[1:]:
+        cap = cap.when(cond, v)
+    return cap.otherwise(0)
 
 
 def sample_token_budget_sql(
@@ -1015,18 +879,7 @@ def sample_token_budget_sql(
     by = list(by or [])
     h = sample_hash_frag(key_col, "duck", seed)
     part = f"PARTITION BY {', '.join(by)} " if by else ""
-    if isinstance(budget, dict):
-        if len(by) != 1:
-            raise ValueError(
-                "sample_token_budget_sql: dict budget requires exactly "
-                "one by column"
-            )
-        whens = " ".join(
-            f"WHEN {_sql_lit(k)} THEN {int(v)}" for k, v in budget.items()
-        )
-        cap = f"CASE {by[0]} {whens} ELSE 0 END"
-    else:
-        cap = str(int(budget))
+    cap = _budget_cap(budget, by, "duck")
     return f"""
         SELECT * EXCLUDE (_cum) FROM (
             SELECT *, sum({size_col}) OVER (

@@ -2674,6 +2674,22 @@ def test_release_dedup_caches(spark):
     assert release_dedup_caches() >= 1
     assert release_dedup_caches() == 0  # drained, idempotent
 
+    # the registry holds every library persist, not only dedup's: the
+    # range-path pack table and rollup's finest level (no hint)
+    from go_tdigest_spark.operators import pack_chunks, tdigest_rollup
+
+    jsc = spark.sparkContext._jsc
+    n_before = jsc.getPersistentRDDs().size()
+    docs = spark.createDataFrame(
+        [(f"d{i}", i % 2, i + 1) for i in range(20)],
+        "doc_id string, grp int, n_tok int",
+    )
+    pack_chunks(docs, "n_tok", "doc_id", 8, by=["grp"], method="range").count()
+    tdigest_rollup(docs, "n_tok", ["grp", "doc_id"]).count()
+    assert jsc.getPersistentRDDs().size() == n_before + 2
+    assert release_dedup_caches() == 2
+    assert jsc.getPersistentRDDs().size() == n_before
+
 
 def test_duplicate_span_consumers_share_spans(spark):
     """spans= reuse contract: passing a precomputed duplicate_spans

@@ -111,6 +111,23 @@ def test_nonpositive_size_raises_on_range_path(spark):
         pack_chunks(
             df, "n_tok", "doc_id", 4, method="range", num_partitions=1
         ).collect()
+    # a NULL size fails phase 1 on the driver: no action on the result
+    nulls = spark.createDataFrame(
+        [("d1", 3), ("d2", None)], "doc_id string, n_tok int"
+    )
+    with pytest.raises(ValueError, match="must not contain NULLs"):
+        pack_chunks(
+            nulls, "n_tok", "doc_id", 4, method="range", num_partitions=1
+        )
+    # so does a negative size, even when the result's consumer reads no
+    # column that carries the JVM check (end_pos, n_bins)
+    neg = spark.createDataFrame(
+        [("d1", 3), ("d2", -2), ("d3", 4)], ["doc_id", "n_tok"]
+    )
+    with pytest.raises(ValueError, match="must not contain negative"):
+        pack_chunks(
+            neg, "n_tok", "doc_id", 4, method="range", num_partitions=1
+        ).select("doc_id", "bin_id").collect()
     spark.catalog.clearCache()
 
 
@@ -716,6 +733,9 @@ def test_sample_token_budget(spark):
     )
     with pytest.raises(Exception, match="NULL"):
         sample_token_budget(ndf, "k", "sz", 10).count()
+    neg = spark.createDataFrame([("a", 1), ("b", -1)], "k string, sz long")
+    with pytest.raises(ValueError, match="negative"):
+        sample_token_budget(neg, "k", "sz", 10).count()
     release_dedup_caches()
 
 
@@ -771,6 +791,26 @@ def test_sample_token_budget_grouped(spark):
     assert "src3" not in sums
     for g, cap in caps.items():
         assert sums.get(g, 0) <= cap
+
+    # dict keys match their group exactly, whatever characters they
+    # hold (a quote or a backslash reads differently in each SQL dialect)
+    odd = pdf.assign(
+        g=pdf["g"].map(
+            {"src0": "it's", "src1": "a\\b", "src2": "src2", "src3": "src3"}
+        )
+    )
+    odd_caps = {"it's": 9_000, "a\\b": 4_000, "src2": 1_000}
+    got_o = sample_token_budget(
+        spark.createDataFrame(odd), "k", "sz", odd_caps, seed=3, by=["g"]
+    ).toPandas()
+    con.register("o", odd)
+    want_o = con.execute(
+        sample_token_budget_sql("o", "k", "sz", odd_caps, seed=3, by=["g"])
+    ).df()
+    assert set(zip(got_o["g"], got_o["k"])) == set(
+        zip(want_o["g"], want_o["k"])
+    )
+    assert set(got_o["g"]) == set(odd_caps)
 
     # guards: dict budget without exactly one by column; negative cap
     with pytest.raises(ValueError, match="exactly one"):

@@ -360,6 +360,21 @@ def test_salted_merge_bounds_fanin_under_skew(spark):
         merge_partials(partials, ["k"], fanin=1)
 
 
+def test_merge_entry_points_share_fanin_default():
+    """A bare ``merge_partials(partials, by)`` gets the salted tree like
+    ``tdigest_agg`` and ``merge_sketches``; ``fanin=None`` is the
+    one-reducer funnel."""
+    import inspect
+
+    from go_tdigest_spark.operators import merge_sketches
+
+    defaults = {
+        f.__name__: inspect.signature(f).parameters["fanin"].default
+        for f in (merge_partials, merge_sketches, tdigest_agg)
+    }
+    assert set(defaults.values()) == {64}, defaults
+
+
 def test_stage1_runs_at_most_one_task_per_core(spark):
     """A small input with more partitions than cores is coalesced
     before stage 1: one narrow Coalesce node (no Exchange), at most
