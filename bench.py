@@ -6,10 +6,13 @@
 
 Prints ONE JSON line as the LAST stdout line: the suite totals and
 ``queries``, each query's gated seconds (2 decimals).  The full record
-goes to BENCH/bench_full.json (key ``full`` on the line): per query the
+(key ``full`` on the line names the file) holds per query the
 min-of-reps ``gate_sec``/``prod_sec``, the raw rep lists ``gate_all``/
 ``prod_all`` and the Spark job count of every rep (``jobs``/
-``prod_jobs``).  Job counts are the number host noise cannot move.
+``prod_jobs``).  Job counts are the number host noise cannot move.  A
+full-suite run writes the tracked BENCH/bench_full.json; a run with
+query names writes the git-ignored .benchdata/bench_subset.json, so a
+measurement never overwrites the committed full-suite record.
 
 Per-query timing is split where the driver query carries verification
 arms (exact companions / bound certificates added for the correctness
@@ -167,8 +170,12 @@ def main() -> int:
         "result_rows": total_rows,
         "queries": per_query,
     }
-    full_rel = os.path.join("BENCH", "bench_full.json")
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    full_rel = (
+        os.path.join(".benchdata", "bench_subset.json")
+        if only
+        else os.path.join("BENCH", "bench_full.json")
+    )
+    os.makedirs(os.path.join(REPO, os.path.dirname(full_rel)), exist_ok=True)
     with open(os.path.join(REPO, full_rel), "w") as f:
         json.dump(full, f, indent=2)
 

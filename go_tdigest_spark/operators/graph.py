@@ -46,8 +46,8 @@ Scale design notes (100 TB shape):
 - edges shuffle on the node id every round — hash-partitioned both
   sides; large-star specifically hooks HIGH-degree nodes' neighbors
   onto minima first, which is what breaks up degree skew instead of
-  amplifying it (hot nodes were also capped upstream by
-  ``cap_lsh_buckets``).
+  amplifying it (hot nodes were also capped upstream by the LSH
+  operators' ``max_bucket_size``).
 """
 
 from __future__ import annotations

@@ -68,14 +68,18 @@ _RESERVED = ("_pid", "start_pos", "end_pos", "bin_id", "bin_offset", "n_bins")
 
 def _finalize(df: DataFrame, size_col: str, capacity: int) -> DataFrame:
     # runtime size validation on BOTH paths: a NULL/non-positive size
-    # would silently shift every later row's start_pos
+    # would silently shift every later row's start_pos.  The check sits
+    # on start_pos, which every other output column is derived from, so
+    # Catalyst cannot prune it while any of them is read; the coalesce
+    # keeps start_pos non-nullable (raise_error never returns)
     checked = F.expr(
-        f"CASE WHEN {size_col} IS NULL OR {size_col} <= 0 "
+        f"coalesce(CASE WHEN {size_col} IS NULL OR {size_col} <= 0 "
         f"THEN raise_error('pack_chunks: size_col must be positive') "
-        f"ELSE {size_col} END"
+        f"ELSE start_pos END, 0)"
     )
     return (
-        df.withColumn("end_pos", F.col("start_pos") + checked)
+        df.withColumn("start_pos", checked)
+        .withColumn("end_pos", F.col("start_pos") + F.col(size_col))
         .withColumn("bin_id", F.expr(f"start_pos div {capacity}"))
         .withColumn("bin_offset", F.col("start_pos") % capacity)
         .withColumn(

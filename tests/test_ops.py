@@ -4,6 +4,7 @@ analysis, multimodal plumbing, checkpoint/lineage, streaming."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import numpy as np
@@ -189,22 +190,27 @@ def test_simhash(spark, docs):
     assert ham02 < ham05  # near dup closer than unrelated
     assert ham02 <= 16
 
+    from go_tdigest_spark.operators import release_dedup_caches
+
+    release_dedup_caches()  # drain anything earlier tests left behind
     cands = simhash_candidate_pairs(
         simhash_signatures(docs, "text", "doc_id"), max_hamming=16
     )
     pdf = cands.toPandas()
     got = {(a, b) for a, b, _ in pdf.itertuples(index=False)}
     assert (0, 1) in got
-    # cache-release handle: the banded table is persisted by default and
-    # the caller can release it after the consuming action
-    assert cands.persisted_bands is not None
-    cands.persisted_bands.unpersist()
+    # the banded table is persisted by default and released through the
+    # module registry after the consuming action
+    assert release_dedup_caches() >= 1
     nocache = simhash_candidate_pairs(
         simhash_signatures(docs, "text", "doc_id"),
         max_hamming=16,
         persist_bands=False,
     )
-    assert nocache.persisted_bands is None
+    assert {tuple(r) for r in nocache.collect()} == {
+        tuple(r) for r in pdf.itertuples(index=False)
+    }
+    assert release_dedup_caches() == 0
 
 
 def test_embedding_similar_and_ann(spark):
@@ -777,6 +783,95 @@ def test_embedding_lsh_neardup_recall(spark):
     assert len(e) >= 15
     assert g <= e  # verification: no false positives vs exact semantics
     assert len(g & e) / len(e) >= 0.8  # banded recall on near-identical pairs
+
+    # bands are validated as on the MinHash paths, not by a
+    # ZeroDivisionError (0) or a negative shift count (-4)
+    for bands in (0, -4):
+        with pytest.raises(ValueError, match="bands must divide"):
+            embedding_lsh_neardup(
+                df, "embedding", "vec_id", n_planes=32, dim=64, bands=bands
+            )
+
+
+def _banded_join_inputs(df):
+    """Column names of both inputs of every join on ``band`` in the
+    optimized plan of ``df``."""
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    inputs, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        kids = seq(node.children())
+        if node.nodeName() == "Join" and "band" in node.condition().toString():
+            inputs += [{a.name() for a in seq(k.output())} for k in kids]
+        todo += kids
+    return inputs
+
+
+@pytest.mark.parametrize("path", ["minhash", "vs_index", "simhash", "embedding"])
+def test_banded_lsh_paths(spark, docs, path):
+    """The four banded-LSH operators share one candidate join: a bucket
+    cap of 0 empties the result with its columns intact, a cap at or
+    above the corpus size changes nothing, and the banded join's inputs
+    carry ids and bucket keys only (SimHash may carry its signature)."""
+    from go_tdigest_spark.operators import (
+        embedding_lsh_neardup,
+        lsh_pairs_vs_index,
+        release_dedup_caches,
+    )
+    from go_tdigest_spark.operators.dedup import lsh_pairs_from_sigs
+
+    sig = lambda d: minhash_signatures(d, "text", "doc_id", n=2, n_hashes=16)
+    shard = F.col("doc_id").isin(1, 4, 7)
+    rng = np.random.default_rng(5)
+    vecs = rng.standard_normal((24, 16))
+    vecs[1::2] = vecs[::2] + 0.02 * rng.standard_normal((12, 16))
+    emb = [(i, list(map(float, v))) for i, v in enumerate(vecs)]
+    run, cols, n_rows, payload = {
+        "minhash": (
+            lambda cap: lsh_pairs_from_sigs(
+                sig(docs), 16, 4, threshold=0.3, max_bucket_size=cap
+            ),
+            ["doc_a", "doc_b", "est_jaccard"], 8, set(),
+        ),
+        "vs_index": (
+            lambda cap: lsh_pairs_vs_index(
+                sig(docs.where(shard)), sig(docs.where(~shard)), 16, 4,
+                threshold=0.3, max_bucket_size=cap,
+            ),
+            ["doc_new", "doc_idx", "est_jaccard"], 8, set(),
+        ),
+        "simhash": (
+            lambda cap: simhash_candidate_pairs(
+                simhash_signatures(docs, "text", "doc_id"),
+                max_hamming=16, max_bucket_size=cap,
+            ),
+            ["doc_a", "doc_b", "hamming"], 8, {"simhash"},
+        ),
+        "embedding": (
+            lambda cap: embedding_lsh_neardup(
+                spark.createDataFrame(emb, "vec_id long, embedding array<float>"),
+                "embedding", "vec_id", threshold=0.9, n_planes=16,
+                dim=16, bands=4, max_bucket_size=cap,
+            ),
+            ["doc_a", "doc_b", "cosine"], 24, set(),
+        ),
+    }[path]
+
+    uncapped = run(None)
+    want = sorted(tuple(r) for r in uncapped.collect())
+    assert want  # a vacuous equality would prove nothing
+    assert sorted(tuple(r) for r in run(n_rows).collect()) == want
+    empty = run(0)
+    assert empty.columns == cols and empty.count() == 0
+
+    inputs = _banded_join_inputs(uncapped)
+    assert len(inputs) == 2
+    for names in inputs:
+        extra = {c for c in names if not re.fullmatch(r"doc|band|k\d+", c)}
+        assert extra <= payload, extra
+    release_dedup_caches()
 
 
 def _iceberg_available(spark) -> bool:
@@ -2657,8 +2752,7 @@ def test_cut_duplicate_spans_doc_id_col(spark):
 
 def test_release_dedup_caches(spark):
     """The module registry releases persisted tables even after the
-    caller transformed the returned DataFrame (the attribute handle is
-    lost there by construction)."""
+    caller transformed the returned DataFrame."""
     from go_tdigest_spark.operators import release_dedup_caches
     from go_tdigest_spark.operators.dedup import minhash_lsh_pairs
 
@@ -2668,8 +2762,7 @@ def test_release_dedup_caches(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = minhash_lsh_pairs(df, "text", "doc_id", n_hashes=16, bands=4)
-    filtered = pairs.where(F.col("est_jaccard") > 0)  # attribute handle lost
-    assert not hasattr(filtered, "persisted_sigs")
+    filtered = pairs.where(F.col("est_jaccard") > 0)
     filtered.count()
     assert release_dedup_caches() >= 1
     assert release_dedup_caches() == 0  # drained, idempotent

@@ -213,12 +213,21 @@ def test_pack_null_int_group_raises_on_range_path(spark):
 
 
 def test_pack_window_path_rejects_null_size(spark):
-    # review fix: the window path now validates sizes too (assert_true)
+    # the window path validates sizes too
     df = spark.createDataFrame(
         [("d1", 3), ("d2", None)], "doc_id string, n_tok int"
     )
     with pytest.raises(Exception, match="must be positive"):
         pack_chunks(df, "n_tok", "doc_id", 4).collect()
+    # also when the consumer reads no end_pos / n_bins (the window twin
+    # of the range path's negative case)
+    neg = spark.createDataFrame(
+        [("d1", 3), ("d2", -2), ("d3", 4)], ["doc_id", "n_tok"]
+    )
+    with pytest.raises(Exception, match="must be positive"):
+        pack_chunks(neg, "n_tok", "doc_id", 4).select(
+            "doc_id", "bin_id"
+        ).collect()
 
 
 def test_split_reserved_internal_name(spark):
