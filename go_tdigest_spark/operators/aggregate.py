@@ -37,8 +37,6 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from functools import reduce
-from itertools import combinations
 from typing import Sequence
 
 import numpy as np
@@ -307,7 +305,9 @@ def _group_key_col(df: DataFrame, by: Sequence[str]):
     return F.to_json(F.struct(*group_keys(df, by)), _KEY_JSON_OPTS)
 
 
-def _collect_digest_map(digests: DataFrame, by: Sequence[str]) -> dict:
+def _collect_digest_map(
+    digests: DataFrame, by: Sequence[str]
+) -> tuple[dict, int]:
     """Collect an O(groups)-row digest table into ({json_key: bytes},
     row_count).
 
@@ -563,19 +563,19 @@ def tdigest_normalize(
 def _coarse_merge_bound(
     finest: DataFrame, fanin: int | None, n_units_hint: int | None
 ) -> tuple[DataFrame, int | None]:
-    """Bound the coarse-level merge fan-in for rollup/cube.
+    """Bound the grouping-set merge fan-in for rollup/cube.
 
     The finest level is post-shuffle output (one row per group, packed
     arbitrarily across partitions), so the <=1-partial-per-partition
     invariant tree_merge's level-0 partition-id salting relies on does
-    NOT hold — coarse merges must use the storage-read salting path,
-    which needs the partial row count (``n_units``).  Callers that know
-    the finest group count pass it as a hint; otherwise we persist the
-    finest level (it is small: one O(compression)-byte row per group,
-    and it is reused by every coarse level anyway) and count it once.
-    Without this bound a high-cardinality finest grouping would funnel
-    every digest into ONE grand-total reducer — the exact failure mode
-    mergeability (tdigest.go:262-272) exists to avoid.
+    NOT hold — the grouping-set merge must use the storage-read salting
+    path, which needs the partial row count (``n_units``).  Callers that
+    know the finest group count pass it as a hint; otherwise we persist
+    the finest level (it is small: one O(compression)-byte row per
+    group) and count it once.  Without this bound a high-cardinality
+    finest grouping would funnel every digest into ONE grand-total
+    reducer — the exact failure mode mergeability (tdigest.go:262-272)
+    exists to avoid.
     """
     if fanin is None:
         return finest, None
@@ -589,37 +589,40 @@ def _coarse_merge_bound(
 
 
 def _digest_grouping_sets(
-    df: DataFrame, value_col: str, by: list[str], subsets: list[list[str]],
-    chained: bool, compression: float, fanin: int | None,
-    weight_col: str | None, explode_arrays: bool, finest_groups_hint: int | None,
+    df: DataFrame, value_col: str, by: list[str], masks: list[int],
+    compression: float, fanin: int | None, weight_col: str | None,
+    explode_arrays: bool, finest_groups_hint: int | None,
 ) -> DataFrame:
-    """The body of tdigest_rollup and tdigest_cube: the finest level
-    (``by``) from one scan, then one level per key subset, in order,
-    merged from the finest level or, when ``chained``, from the level
-    before it.  Every level comes out in one layout (the ``by`` columns
-    it does not group by as typed NULLs, then the digest columns) and
-    the levels are unioned."""
+    """The body of tdigest_rollup and tdigest_cube, planned as Spark
+    plans its own CUBE and ROLLUP (one expand, one aggregate): the
+    finest level (``by``) from one scan, each finest row expanded into
+    one row per coarser grouping set in ``masks``, and one tree merge of
+    them all, output beside the finest level.  A mask's bit i set means
+    ``by[i]`` is rolled up (NULL); the mask rides as a ``_gset`` key, so
+    a real NULL key stays apart from a rolled-up one.  ``n_units`` =
+    finest group count bounds the rows of every group.  The finest rows
+    stay out of the expansion: each would be alone in its group, and
+    re-merging a million lone digests through every salted level costs
+    more than the merges it replaces."""
+    if "_gset" in by:
+        raise ValueError("by column '_gset' collides with the grouping-set key")
     finest = tdigest_agg(
         df, value_col, by, compression, weight_col=weight_col,
         explode_arrays=explode_arrays, fanin=fanin,
     )
-    n_finest = None
-    if by:  # no coarse levels exist for by=[], so never size/persist
-        finest, n_finest = _coarse_merge_bound(
-            finest, fanin, finest_groups_hint
-        )
-
-    def with_level_nulls(d: DataFrame, present: list[str]) -> DataFrame:
-        nulls = {c: F.lit(None).cast(df.schema[c].dataType) for c in by}
-        keys = [F.col(c) if c in present else nulls[c].alias(c) for c in by]
-        return d.select(*keys, DIGEST_COL, ROWS_COL, WEIGHT_COL)
-
-    levels, src = [with_level_nulls(finest, by)], finest
-    for keys in subsets:
-        level = merge_partials(src, keys, fanin=fanin, n_units=n_finest)
-        src = level if chained else finest
-        levels.append(with_level_nulls(level, keys))
-    return reduce(DataFrame.unionByName, levels)
+    if not by:  # no coarser grouping set
+        return finest
+    finest, n_finest = _coarse_merge_bound(finest, fanin, finest_groups_hint)
+    gset = F.col("_gset")
+    expanded = finest.withColumn(
+        "_gset", F.explode(F.array(*[F.lit(m) for m in masks]))
+    ).select(
+        *[F.when(gset.bitwiseAND(1 << i) == 0, F.col(c)).alias(c)
+          for i, c in enumerate(by)],
+        gset, DIGEST_COL, ROWS_COL, WEIGHT_COL,
+    )
+    merged = merge_partials(expanded, by + ["_gset"], fanin, n_units=n_finest)
+    return finest.unionByName(merged.drop("_gset"))
 
 
 def tdigest_cube(
@@ -633,23 +636,20 @@ def tdigest_cube(
     finest_groups_hint: int | None = None,
 ) -> DataFrame:
     """CUBE over digests: one row per grouping combination (every subset
-    of ``by``), rolled-up keys as NULL.  Like tdigest_rollup, every
-    non-finest level is derived by merging finest-level digests — the
-    input is scanned exactly once regardless of 2^len(by) levels (the
-    finest level is persisted unless ``finest_groups_hint`` is given).
-
-    Coarse levels merge through the same bounded-fan-in salted tree as
-    the finest aggregation (``n_units`` = finest group count, an upper
-    bound for every subset's row count), so a high-cardinality ``by``
-    cannot funnel all finest digests into one grand-total reducer.
+    of ``by``), rolled-up keys as NULL.  The input is scanned once to
+    build the finest-level digests, which are output as they are; every
+    finest row is expanded into its 2^len(by) - 1 coarser grouping sets
+    and one bounded-fan-in salted tree merges them all (``n_units`` =
+    finest group count, an upper bound for every grouping set's rows),
+    so a high-cardinality ``by`` cannot funnel all finest digests into
+    one grand-total reducer.  Pass
+    ``finest_groups_hint`` if the finest group count is known to skip
+    the persist+count sizing action.
     """
     by = list(by)
-    subsets = [
-        list(s) for r in range(len(by) - 1, -1, -1) for s in combinations(by, r)
-    ]
     return _digest_grouping_sets(
-        df, value_col, by, subsets, False, compression, fanin, weight_col,
-        explode_arrays, finest_groups_hint,
+        df, value_col, by, list(range(1, 1 << len(by))), compression, fanin,
+        weight_col, explode_arrays, finest_groups_hint,
     )
 
 
@@ -668,11 +668,9 @@ def tdigest_rollup(
 
     This is where sketch mergeability pays off structurally: the input is
     scanned ONCE to build the finest-level digests, and every coarser
-    level is derived by merging child digests (tdigest.go:262-272) — no
-    rescan, no extra shuffle of raw rows.  An exact aggregate would need
-    Spark's rollup to rescan-or-expand each level.
-
-    Every coarse level merges through the bounded-fan-in salted tree
+    level is merged from them (tdigest.go:262-272) — no rescan, no
+    shuffle of raw rows.  Each finest row is expanded into one row per
+    coarser level and one bounded-fan-in salted tree merges them all
     (``n_units`` = finest group count, an upper bound for each prefix
     level since dropping keys only coarsens the grouping) — the grand
     total is NOT a single-reducer funnel even when ``by`` is
@@ -680,8 +678,8 @@ def tdigest_rollup(
     count is known to skip the persist+count sizing action.
     """
     by = list(by)
-    subsets = [by[:i] for i in range(len(by) - 1, -1, -1)]
+    k = len(by)
     return _digest_grouping_sets(
-        df, value_col, by, subsets, True, compression, fanin, weight_col,
-        explode_arrays, finest_groups_hint,
+        df, value_col, by, [(1 << k) - (1 << i) for i in range(k - 1, -1, -1)],
+        compression, fanin, weight_col, explode_arrays, finest_groups_hint,
     )

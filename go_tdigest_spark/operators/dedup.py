@@ -416,29 +416,6 @@ def ngram_jaccard_pairs_sql(
 # ------------------------------------------------------------- minhash
 
 
-def minhash_signature_col(
-    text_col: str, n: int, n_hashes: int, seed: int = 7
-) -> Column:
-    """MinHash signature as array<long>: per permutation i,
-    min over shingles of (a_i * h(s) + b_i) mod p.
-
-    Shingle hashes are computed once and threaded through a named lambda
-    argument (a single ``transform`` over a wrapping array) so the 16+
-    permutations reuse them instead of re-hashing per permutation."""
-    a, b = minhash_params(n_hashes, seed)
-    sh = shingles_frag(text_col, n, "spark")
-    hs = f"transform({sh}, s -> ({shingle_hash_frag('s', 'spark')}))"
-    mins = ", ".join(
-        f"array_min(transform(hs, h -> (({ai}L * h + {bi}L) % {MH_PRIME})))"
-        for ai, bi in zip(a, b)
-    )
-    # element_at(transform(array(hs), ...), 1): binds `hs` once per row
-    return F.expr(
-        f"CASE WHEN size({sh}) = 0 THEN NULL ELSE "
-        f"element_at(transform(array({hs}), hs -> array({mins})), 1) END"
-    )
-
-
 def minhash_signature_sql(
     table: str,
     text_col: str,

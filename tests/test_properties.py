@@ -468,6 +468,139 @@ def test_segmented_build_and_merge_match_per_group(layout, compression, buffer_s
             assert abs(x - exact) <= (2 * e * eps * prefix) / int(rw.sum()) + 2 * eps * abs(exact)
 
 
+# ------------------------------------------------ merge trees (Spark shape)
+#
+# A digest table is a list of (group, means, counts) rows; a merge task
+# is one _merge_segments call over many groups, as every tree-merge
+# level (``_tree.grouped_merge``) runs it.
+
+
+def _stage1_rows(layout, compression, buffer_size):
+    """One stage-1 task per batch: a _SegmentedBuild over the batch, one
+    partial row per group the batch holds (empty when all its values
+    were NaN)."""
+    from go_tdigest_spark.core import _SegmentedBuild
+
+    groups, batches = layout
+    rows = []
+    for gids, off, v, w in batches:
+        build = _SegmentedBuild(compression, buffer_size)
+        build.add(gids, off, v, w)
+        m, c, o = build.finish(len(groups))
+        rows += [(g, m[o[g]:o[g + 1]], c[o[g]:o[g + 1]]) for g in gids]
+    return rows
+
+
+def _merge_task(rows, node, compression):
+    """Merge ``rows`` into one digest per ``node`` id (0..n-1) through
+    the serde and the segmented sweep, as one merge task does; returns
+    (means, counts, offsets) with node k's centroids at
+    ``[offsets[k], offsets[k+1])``."""
+    from go_tdigest_spark.core import _merge_segments
+
+    off = np.concatenate(([0], np.cumsum([r[1].size for r in rows])))
+    col = serde.encode_many(
+        np.concatenate([r[1] for r in rows]),
+        np.concatenate([r[2] for r in rows]).astype(np.int64),
+        off, compression,
+    )
+    dm, dc, doff, dcomp = serde.decode_many(col)
+    m, c, o, _ = _merge_segments(dm, dc, doff, node, int(node.max()) + 1, dcomp)
+    return m, c, o
+
+
+def _assert_k_limit(inputs, counts, compression):
+    """A merge never splits an input centroid, and every output centroid
+    made of two or more inputs keeps the sweep's limit
+    q1 <= sigmoid(logit(q0) + 4/delta) (``core._ksweep``)."""
+    import math
+
+    means = np.concatenate([r[1] for r in inputs])
+    order = np.argsort(means, kind="stable")  # the merge's tie order
+    incl = np.cumsum(np.concatenate([r[2] for r in inputs])[order])
+    end = np.cumsum(counts)
+    assert end.size == 0 or end[-1] == incl[-1]
+    idx = np.searchsorted(incl, end)
+    np.testing.assert_array_equal(incl[idx], end)
+    n_in = np.diff(np.concatenate(([-1], idx)))
+    n = float(end[-1]) if end.size else 0.0
+    efac = math.exp(4.0 / compression)
+    q0 = (end - counts)[n_in >= 2] / n
+    qlimit = (q0 * efac) / (1.0 - q0 + q0 * efac)
+    assert (end[n_in >= 2] <= np.floor(qlimit * n)).all()
+
+
+@given(
+    layout=segment_layouts(),
+    compression=st.sampled_from([20.0, 100.0, 300.0]),
+    buffer_size=st.sampled_from([16, 200, 32768]),
+)
+@settings(max_examples=80, deadline=None)
+def test_lone_digest_remerges_to_its_own_bytes(layout, compression, buffer_size):
+    """A digest alone in its merge group comes out of the task-level
+    merge byte for byte: true of stage-1 partials and of merged digests
+    (a salted tree level merges a (group, salt) with one row alone)."""
+    leaves = _stage1_rows(layout, compression, buffer_size)
+    g = np.array([r[0] for r in leaves])
+    m, c, o = _merge_task(leaves, g, compression)
+    rows = leaves + [
+        (k, m[o[k]:o[k + 1]], c[o[k]:o[k + 1]]) for k in range(o.size - 1)
+    ]
+    node = np.random.default_rng(len(rows)).permutation(len(rows))
+    m, c, o = _merge_task(rows, node, compression)
+    want = [
+        serde.encode_many(r[1], r[2].astype(np.int64), [0, r[1].size], compression)
+        for r in rows
+    ]
+    got = serde.encode_many(m, c, o, compression)
+    for r, k in enumerate(node):
+        assert got[int(k)].as_py() == want[r][0].as_py()
+
+
+@given(
+    layout=segment_layouts(),
+    compression=st.sampled_from([20.0, 100.0, 300.0]),
+    buffer_size=st.sampled_from([16, 200, 32768]),
+    seed=st.integers(0, 2**32 - 1),
+)
+@settings(max_examples=80, deadline=None)
+def test_random_merge_trees_keep_count_min_max_and_k_limit(
+    layout, compression, buffer_size, seed
+):
+    """Stage-1 partials merged through a random tree (random fan-in per
+    node, lone pass-throughs, every level one task over all groups):
+    each group ends with its exact total weight, min and max, and every
+    merge respects the k-size limit."""
+    groups, _ = layout
+    rng = np.random.default_rng(seed)
+    rows = _stage1_rows(layout, compression, buffer_size)
+    while len(rows) > len({r[0] for r in rows}):
+        rows = [rows[i] for i in rng.permutation(len(rows))]
+        node, parent = np.empty(len(rows), dtype=np.int64), []
+        for g in sorted({r[0] for r in rows}):
+            mine = [i for i, r in enumerate(rows) if r[0] == g]
+            lo = 2  # a group's first node merges >= 2 rows: the tree shrinks
+            while mine:
+                k = int(rng.integers(lo, 5))
+                node[mine[:k]] = len(parent)
+                parent.append((g, mine[:k]))
+                mine, lo = mine[k:], 1
+        m, c, o = _merge_task(rows, node, compression)
+        for k, (g, take) in enumerate(parent):
+            _assert_k_limit([rows[i] for i in take], c[o[k]:o[k + 1]], compression)
+        rows = [
+            (g, m[o[k]:o[k + 1]], c[o[k]:o[k + 1]])
+            for k, (g, _) in enumerate(parent)
+        ]
+    for g, means, counts in rows:
+        v, w = groups[g]
+        keep = ~np.isnan(v.astype(np.float64))
+        total = keep.sum() if w is None else w[keep].sum()
+        assert counts.sum() == total
+        if total:
+            assert means[0] == v[keep].min() and means[-1] == v[keep].max()
+
+
 # ----------------------------------------------------- sketch algebra
 
 hash_lists = st.lists(

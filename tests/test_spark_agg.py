@@ -735,43 +735,123 @@ def test_plan_discipline_no_rowwise_python_and_pruned_scans(spark):
     assert "BroadcastHashJoin" in jplan
 
 
-def test_weighted_rollup_exact_vs_sql(spark):
-    """weight_col threads through rollup levels: every level's count and
-    weighted mean stay exact vs GROUP BY ROLLUP with weights."""
+@pytest.mark.parametrize(
+    "op, null_keys",
+    [("rollup", False), ("cube", False), ("rollup", True), ("cube", True)],
+    ids=["rollup", "cube", "rollup-null-key", "cube-null-key"],
+)
+def test_weighted_rollup_exact_vs_sql(spark, op, null_keys):
+    """weight_col threads through every grouping set of tdigest_rollup /
+    tdigest_cube: as a multiset, the rows' keys, weighted count, exact
+    min and max and weighted mean equal GROUP BY ROLLUP / CUBE with
+    weights.  With real NULLs in the first key, the finest NULL-key
+    rows and the rolled-up NULL rows must both appear, apart."""
     import duckdb
 
     from go_tdigest_spark.functions import td_count, td_trimmed_mean
-    from go_tdigest_spark.operators import tdigest_rollup
+    from go_tdigest_spark.operators import tdigest_cube, tdigest_rollup
 
-    li = table(spark, SF_TINY, "lineitem").withColumn(
-        "qty_w", F.floor("l_quantity").cast("long")
-    )
-    d = tdigest_rollup(
-        li, "l_extendedprice", ["l_returnflag", "l_linestatus"],
-        weight_col="qty_w",
-    )
+    fn = {"rollup": tdigest_rollup, "cube": tdigest_cube}[op]
+    flag = "l_returnflag"
+    if null_keys:
+        flag = "CASE WHEN l_orderkey % 5 = 0 THEN NULL ELSE l_returnflag END"
+    li = table(spark, SF_TINY, "lineitem").withColumns({
+        "qty_w": F.floor("l_quantity").cast("long"),
+        "l_returnflag": F.expr(flag),
+    })
+    key = ["l_returnflag", "l_linestatus"]
+    d = fn(li, "l_extendedprice", key, weight_col="qty_w")
+    # a weighted digest's q=0/1 estimate extrapolates past a heavy tail
+    # point; the tail centroids themselves are the exact min and max
+    cents = td_centroids("digest")
     got = d.select(
-        "l_returnflag",
-        "l_linestatus",
+        *key,
         td_count("digest").alias("w"),
+        F.element_at(cents, 1)["mean"].alias("lo"),
+        F.element_at(cents, -1)["mean"].alias("hi"),
         F.round(td_trimmed_mean("digest", 0.0, 1.0), 4).alias("w_mean"),
     ).toPandas()
     want = duckdb.sql(
-        """
+        f"""
         SELECT l_returnflag, l_linestatus,
                CAST(sum(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS w,
+               min(l_extendedprice) AS lo, max(l_extendedprice) AS hi,
                round(sum(l_extendedprice * floor(l_quantity))
                      / sum(floor(l_quantity)), 4) AS w_mean
-        FROM read_parquet('/root/testdata/sf0.001/lineitem.parquet')
-        GROUP BY ROLLUP(l_returnflag, l_linestatus)
+        FROM (
+            SELECT {flag} AS l_returnflag, l_linestatus, l_quantity,
+                   l_extendedprice
+            FROM read_parquet('{SF_TINY}/lineitem.parquet')
+        )
+        GROUP BY {op.upper()}(l_returnflag, l_linestatus)
         """
     ).fetchdf()
-    key = ["l_returnflag", "l_linestatus"]
-    g = got.fillna("~").sort_values(key).reset_index(drop=True)
-    w = want.fillna("~").sort_values(key).reset_index(drop=True)
+    order = key + ["w", "lo", "hi"]
+    g = got.fillna("~").sort_values(order).reset_index(drop=True)
+    w = want.fillna("~").sort_values(order).reset_index(drop=True)
     assert len(g) == len(w)
-    assert (g["w"].to_numpy() == w["w"].to_numpy()).all()
+    assert (g[key] == w[key]).all().all()
+    for c in ("w", "lo", "hi"):
+        assert (g[c].to_numpy() == w[c].to_numpy()).all(), c
     assert np.allclose(g["w_mean"].astype(float), w["w_mean"].astype(float))
+    if null_keys:  # the real NULL key's own (NULL, NULL) row and the total
+        assert (got["l_returnflag"].isna() & got["l_linestatus"].isna()).sum() >= 2
+
+
+@pytest.mark.parametrize("op", ["rollup", "cube"])
+def test_grouping_sets_of_no_keys_equal_tdigest_agg(spark, op):
+    """by=[] has one grouping set, the global one: one row, equal to
+    tdigest_agg's (digest bytes included)."""
+    from go_tdigest_spark.operators import tdigest_cube, tdigest_rollup
+
+    fn = {"rollup": tdigest_rollup, "cube": tdigest_cube}[op]
+    li = table(spark, SF_TINY, "lineitem")
+    got = fn(li, "l_extendedprice", []).collect()
+    want = tdigest_agg(li, "l_extendedprice").collect()
+    assert len(got) == 1
+    assert got[0].asDict() == want[0].asDict()
+
+
+@pytest.mark.parametrize("op", ["rollup", "cube"])
+def test_grouping_sets_merge_in_one_tree(spark, op):
+    """Rollup and cube expand the finest digests into every coarser
+    grouping set and merge them in ONE tree, output beside the finest
+    level: with finest_groups_hint <= fanin the pre-AQE plan has one
+    two-branch Union and three merge levels (the finest one in each
+    branch and the grouping-set one), not one merge (and one union
+    branch) per grouping set."""
+    from go_tdigest_spark.operators import (
+        release_dedup_caches,
+        tdigest_cube,
+        tdigest_rollup,
+    )
+
+    fn = {"rollup": tdigest_rollup, "cube": tdigest_cube}[op]
+    release_dedup_caches()
+    df = spark.range(3000).select(
+        (F.col("id") % 3).cast("string").alias("a"),
+        (F.col("id") % 7).alias("b"),
+        (F.col("id") * 0.5).alias("v"),
+    )
+    d = fn(df, "v", ["a", "b"], fanin=64, finest_groups_hint=21)
+    plan = d._jdf.queryExecution().sparkPlan().toString()
+    assert plan.count("Union") == 1
+    assert _n_merge_levels(plan) == 3
+    assert d.count() == {"rollup": 21 + 3 + 1, "cube": 21 + 3 + 7 + 1}[op]
+
+
+@pytest.mark.parametrize("op", ["rollup", "cube"])
+def test_grouping_sets_reject_gset_key(spark, op):
+    """A `by` column named like the grouping-set key would be replaced
+    by the mask and give wrong keys; it raises instead."""
+    from go_tdigest_spark.operators import tdigest_cube, tdigest_rollup
+
+    fn = {"rollup": tdigest_rollup, "cube": tdigest_cube}[op]
+    df = spark.range(10).select(
+        (F.col("id") % 2).alias("_gset"), F.col("id").cast("double").alias("v")
+    )
+    with pytest.raises(ValueError, match="_gset"):
+        fn(df, "v", ["_gset"])
 
 
 def test_rollup_coarse_levels_use_bounded_salted_tree(spark):
