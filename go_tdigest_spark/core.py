@@ -36,8 +36,9 @@ too (and a later sweep that sorts them sees the same ties).  ``_SegmentedBuild``
 lockstep form is slower on one digest).
 
 Query semantics replicated exactly (see docstrings):
-  - quantile: tdigest.go:93-140  (piecewise-linear over centroid ranks,
-    with before-first / after-last linear extrapolation)
+  - quantile: tdigest.go:93-140  (piecewise-linear over centroid ranks;
+    the tails are held flat, not extrapolated, which differs from the
+    reference only at a weighted tail point)
   - cdf:      tdigest.go:295-333 (half-distance spans, terminal jump)
   - trimmed_mean: tdigest.go:411-455 (boundary clipping)
 """
@@ -765,13 +766,18 @@ class TDigest:
     # ---------------------------------------------------------------- queries
 
     def quantile(self, q):
-        """Quantile estimate; exact parity with tdigest.go:93-140.
+        """Quantile estimate; parity with tdigest.go:93-140 but for the tails.
 
         The estimator is piecewise-linear interpolation through the points
-        (rank_i, mean_i) with rank_i = headsum_i + (count_i - 1)/2, plus
-        linear extrapolation of the first/last segment down to rank 0 and
-        up to rank count-1.  q outside [0,1] raises; empty digest -> NaN;
-        single centroid -> its mean.
+        (rank_i, mean_i) with rank_i = headsum_i + (count_i - 1)/2, held
+        flat at the first/last mean down to rank 0 and up to rank
+        count-1.  The k-bound sweep makes each tail centroid one input
+        point, so its whole weight sits at its mean, which is the exact
+        min/max.  go-tdigest extrapolates the first/last segment there
+        instead; the two differ only when a tail centroid's count is
+        above 1 (a weighted point), where extrapolating reads past the
+        data.  q outside [0,1] raises; empty digest -> NaN; single
+        centroid -> its mean.
         """
         q_arr = np.atleast_1d(np.asarray(q, dtype=np.float64))
         if ((q_arr < 0) | (q_arr > 1)).any():
@@ -792,20 +798,8 @@ class TDigest:
         pos = head + (c - 1.0) / 2.0
         index = q_arr * (n - 1.0)
 
-        xs = pos
-        ys = self._means
-        if pos[0] > 0.0:
-            # extrapolate the first segment back to rank 0
-            y0 = (pos[1] * ys[0] - pos[0] * ys[1]) / (pos[1] - pos[0])
-            xs = np.concatenate(([0.0], xs))
-            ys = np.concatenate(([y0], ys))
-        if pos[-1] < n - 1.0:
-            # extrapolate the last segment forward to rank n-1
-            slope = (self._means[-1] - self._means[-2]) / (pos[-1] - pos[-2])
-            yn = self._means[-1] + (n - 1.0 - pos[-1]) * slope
-            xs = np.concatenate((xs, [n - 1.0]))
-            ys = np.concatenate((ys, [yn]))
-        out = np.interp(index, xs, ys)
+        # np.interp holds the end values flat outside [pos[0], pos[-1]]
+        out = np.interp(index, pos, self._means)
         return float(out[0]) if scalar else out
 
     def cdf(self, x):

@@ -63,10 +63,6 @@ def _stop_hits_frag(col: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def stop_hits(col: str) -> Column:
-    return F.expr(_stop_hits_frag(col))
-
-
 # ---------------------------------------------------------- quality score
 
 

@@ -333,14 +333,12 @@ def _make_lookup_udf(bc, mode: str, target_blob: bytes | None = None):
     from the map reads NULL.
 
     mode='cdf'       -> CDF_group(x)
-    mode='quantile'  -> Quantile_group(x)
     mode='normalize' -> Q_target(CDF_group(x)) fused in one pass
     """
     # a NULL target digest reads as empty: every quantile is NaN -> NULL
     target = TDigest() if target_blob is None else serde.decode(target_blob)
     fn = {
         "cdf": TDigest.cdf,
-        "quantile": TDigest.quantile,
         "normalize": lambda d, x: target.quantile(d.cdf(x)),
     }[mode]
 

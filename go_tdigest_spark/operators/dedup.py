@@ -8,8 +8,9 @@ LSH band buckets), never a cross join — the shapes that survive 100 TB:
     shingle -> per-pair intersection counts (the classic inverted-index
     similarity join; shuffle keys are shingles, so hot shingles can be
     frequency-capped via ``max_doc_freq``);
-  - MinHash + LSH: per-doc signature (pure Spark expressions), banded
-    bucket join for candidates, signature-agreement estimate as filter;
+  - MinHash + LSH: per-doc signature (the mapInArrow gram kernel),
+    banded bucket join for candidates, signature-agreement estimate as
+    filter;
   - SimHash: vectorized numpy (mapInArrow) 64-bit signatures, banded by
     16-bit chunks for candidate pairs, hamming distance via bit_count;
   - embedding near-dup: cosine over normalized vectors (see ann.py for
@@ -17,7 +18,7 @@ LSH band buckets), never a cross join — the shapes that survive 100 TB:
 
 MinHash / shingle / fingerprint hashing is plain integer arithmetic so a
 DuckDB oracle can replicate it bit-for-bit; the SQL generators live
-beside the Spark expressions.
+beside the kernels they twin.
 """
 
 from __future__ import annotations
@@ -107,8 +108,9 @@ def minhash_params(n_hashes: int, seed: int = 7) -> tuple[list[int], list[int]]:
 # identical rule — Java/RE2 regex \s is ASCII-only, so the Python regex
 # uses re.ASCII; empty-token filtering (rather than trim()) makes
 # leading/trailing whitespace of ANY kind behave the same on all three
-# engines.  Every dedup kernel MUST tokenize via py_words/py_shingles so
-# the rule cannot fork (round-2 review finding).
+# engines.  Every Arrow text kernel tokenizes in ONE place, _gram_kernel
+# (the grams callable each kernel passes it is built on py_words /
+# py_shingles), so the rule cannot fork.
 
 _WS_RE = re.compile(r"\s+", re.ASCII)
 
@@ -186,6 +188,55 @@ def shingle_hash_frag(var: str, dialect: str, mod: int = FP_MOD) -> str:
     )
 
 
+# --------------------------------------------------------- gram kernels
+
+
+def _gram_kernel(df, text_col, id_col, grams, mod, out_ddl, emit) -> DataFrame:
+    """The one tokenize-and-hash pass of every Arrow text kernel.
+
+    A ``mapInArrow`` over the non-NULL ``(id, text)`` rows of ``df``.  Per
+    batch it calls ``grams(text)`` for every row and hashes all of the
+    batch's grams with ONE ``poly_hash_batch(..., FP_BASE, mod)``.  Then
+    ``emit(row, h, lens)`` reduces them: ``row`` is the batch row of each
+    gram (ascending), ``h`` its hash, ``lens`` the gram count of each
+    batch row.  It returns ``(rows, cols)``: the batch row of each output
+    row, and ``{name: array}`` for the ``out_ddl`` columns after ``doc``.
+    A batch with no output rows yields nothing.
+
+    ``doc`` is a ``take(rows)`` of the input id column, which keeps the
+    id's declared type (a rebuilt Python list would infer int64 for int32
+    ids).
+    """
+    import pyarrow as pa
+
+    id_dt = df.select(id_col).schema.fields[0].dataType.simpleString()
+    pruned = df.select(id_col, text_col).where(F.col(text_col).isNotNull())
+
+    def gen(batches):
+        from ._batch import poly_hash_batch
+
+        for batch in batches:
+            per_row = [grams(t) for t in batch.column(1).to_pylist()]
+            lens = np.fromiter(map(len, per_row), dtype=np.int64, count=len(per_row))
+            h = poly_hash_batch([g for gs in per_row for g in gs], FP_BASE, mod)
+            row = np.repeat(np.arange(lens.size, dtype=np.int64), lens)
+            rows, cols = emit(row, h, lens)
+            if len(rows):
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(0).take(pa.array(rows, type=pa.int64()))]
+                    + [pa.array(c) for c in cols.values()],
+                    names=["doc", *cols],
+                )
+
+    return pruned.mapInArrow(gen, f"doc {id_dt}, {out_ddl}")
+
+
+def _segment_starts(lens: np.ndarray) -> np.ndarray:
+    """First gram index of every batch row that has grams (the
+    ``reduceat`` boundaries of a per-row reduction)."""
+    return (np.cumsum(lens) - lens)[lens > 0]
+
+
 # ------------------------------------------------------------ exact dedup
 
 
@@ -223,40 +274,18 @@ def shingle_hashes(
     SQL twin hashes with the identical polynomial, so results stay
     hash-exact (string collisions merge identically on both sides).
     """
-    import pyarrow as pa
 
-    id_dt = df.select(id_col).schema.fields[0].dataType.simpleString()
-    pruned = df.select(id_col, text_col).where(F.col(text_col).isNotNull())
+    def emit(row, h, lens):
+        # one lexsort; keep first of each (doc, hash) run
+        order = np.lexsort((h, row))
+        ds, hs = row[order], h[order]
+        keep = np.ones(ds.size, dtype=bool)
+        keep[1:] = (ds[1:] != ds[:-1]) | (hs[1:] != hs[:-1])
+        return ds[keep], {"s": hs[keep]}
 
-    def gen(batches):
-        from ._batch import poly_hash_batch
-
-        for batch in batches:
-            texts = batch.column(1).to_pylist()
-            doc_rep: list = []
-            all_shingles: list[str] = []
-            for i, t in enumerate(texts):
-                sh = py_shingles(t, n)
-                all_shingles.extend(sh)
-                doc_rep.extend([i] * len(sh))
-            if not all_shingles:
-                continue
-            h = poly_hash_batch(all_shingles, FP_BASE, SH_MOD)
-            d = np.asarray(doc_rep, dtype=np.int64)
-            # one lexsort; keep first of each (doc, hash) run
-            order = np.lexsort((h, d))
-            ds, hs = d[order], h[order]
-            keep = np.ones(ds.size, dtype=bool)
-            keep[1:] = (ds[1:] != ds[:-1]) | (hs[1:] != hs[:-1])
-            ds, hs = ds[keep], hs[keep]
-            # take() from the original Arrow column preserves the id type
-            # (a re-built python list would infer int64 for int32 ids)
-            out_ids = batch.column(0).take(pa.array(ds, type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                [out_ids, pa.array(hs, type=pa.int64())], names=["doc", "s"]
-            )
-
-    return pruned.mapInArrow(gen, f"doc {id_dt}, s long")
+    return _gram_kernel(
+        df, text_col, id_col, lambda t: py_shingles(t, n), SH_MOD, "s long", emit
+    )
 
 
 def positional_shingle_hashes(
@@ -268,38 +297,15 @@ def positional_shingle_hashes(
     :func:`shingle_hashes` (one poly_hash_batch pass per Arrow batch, no
     per-row Python hashing); ``pos`` is the 0-based index of the gram's
     first word under the shared tokenizer."""
-    import pyarrow as pa
 
-    id_dt = df.select(id_col).schema.fields[0].dataType.simpleString()
-    pruned = df.select(id_col, text_col).where(F.col(text_col).isNotNull())
+    def emit(row, h, lens):
+        starts = np.repeat(np.cumsum(lens) - lens, lens)
+        return row, {"pos": np.arange(h.size, dtype=np.int64) - starts, "g": h}
 
-    def gen(batches):
-        from ._batch import poly_hash_batch
-
-        for batch in batches:
-            texts = batch.column(1).to_pylist()
-            doc_rep: list = []
-            all_shingles: list[str] = []
-            lens: list[int] = []
-            for i, t in enumerate(texts):
-                sh = py_shingles(t, n)
-                all_shingles.extend(sh)
-                doc_rep.extend([i] * len(sh))
-                lens.append(len(sh))
-            if not all_shingles:
-                continue
-            h = poly_hash_batch(all_shingles, FP_BASE, SH_MOD)
-            d = np.asarray(doc_rep, dtype=np.int64)
-            ln = np.asarray(lens, dtype=np.int64)
-            starts = np.repeat(np.cumsum(ln) - ln, ln)
-            pos = np.arange(d.size, dtype=np.int64) - starts
-            out_ids = batch.column(0).take(pa.array(d, type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                [out_ids, pa.array(pos), pa.array(h, type=pa.int64())],
-                names=["doc", "pos", "g"],
-            )
-
-    return pruned.mapInArrow(gen, f"doc {id_dt}, pos long, g long")
+    return _gram_kernel(
+        df, text_col, id_col, lambda t: py_shingles(t, n), SH_MOD,
+        "pos long, g long", emit,
+    )
 
 
 def ngram_jaccard_pairs(
@@ -475,53 +481,25 @@ def minhash_signatures(
     a_vec = np.array(a_params, dtype=np.int64)
     b_vec = np.array(b_params, dtype=np.int64)
 
-    id_field = df.select(id_col).schema.fields[0]
-    id_dt = id_field.dataType.simpleString()
-    pruned = df.select(id_col, text_col).where(F.col(text_col).isNotNull())
+    def emit(row, h, lens):
+        # affine permutations + per-doc segment minima
+        starts = _segment_starts(lens)
+        sig = np.empty((starts.size, a_vec.size), dtype=np.int64)
+        for p in range(a_vec.size):
+            hp = (a_vec[p] * h + b_vec[p]) % MH_PRIME
+            sig[:, p] = np.minimum.reduceat(hp, starts)
+        offsets32 = np.arange(
+            0, (starts.size + 1) * a_vec.size, a_vec.size, dtype=np.int32
+        )
+        sig_arr = pa.ListArray.from_arrays(
+            pa.array(offsets32), pa.array(sig.ravel(), type=pa.int64())
+        )
+        return np.flatnonzero(lens), {"sig": sig_arr}
 
-    def gen(batches):
-        for batch in batches:
-            texts = batch.column(1).to_pylist()
-            doc_pos: list[int] = []
-            all_shingles: list[str] = []
-            doc_bounds = [0]
-            for i, t in enumerate(texts):
-                sh = py_shingles(t, n)
-                if not sh:
-                    continue
-                doc_pos.append(i)
-                all_shingles.extend(sh)
-                doc_bounds.append(doc_bounds[-1] + len(sh))
-            if not doc_pos:
-                continue
-            # column-wise polynomial hash over the whole batch's shingles
-            # (codepoints == SQL ascii())
-            from ._batch import poly_hash_batch
-
-            h = poly_hash_batch(all_shingles, FP_BASE, FP_MOD)
-            # affine permutations + per-doc segment minima
-            starts = np.asarray(doc_bounds[:-1])
-            sig = np.empty((len(doc_pos), a_vec.size), dtype=np.int64)
-            for p in range(a_vec.size):
-                hp = (a_vec[p] * h + b_vec[p]) % MH_PRIME
-                sig[:, p] = np.minimum.reduceat(hp, starts)
-            offsets32 = np.arange(
-                0, (len(doc_pos) + 1) * a_vec.size, a_vec.size, dtype=np.int32
-            )
-            sig_arr = pa.ListArray.from_arrays(
-                pa.array(offsets32), pa.array(sig.ravel(), type=pa.int64())
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    # take() keeps the declared id type (int32 ids would
-                    # otherwise be re-inferred as int64)
-                    batch.column(0).take(pa.array(doc_pos, type=pa.int64())),
-                    sig_arr,
-                ],
-                names=["doc", "sig"],
-            )
-
-    return pruned.mapInArrow(gen, f"doc {id_dt}, sig array<long>")
+    return _gram_kernel(
+        df, text_col, id_col, lambda t: py_shingles(t, n), FP_MOD,
+        "sig array<long>", emit,
+    )
 
 
 # ------------------------------------------- banded LSH candidate join
@@ -1081,53 +1059,36 @@ def simhash_signatures(
     per-doc ones-count, and set the signature bit where ones >= half the
     doc's word count (the majority-vote rule, ties -> 1, matching the
     classic formulation votes >= 0).  O(words) memory — the W x 64 bit
-    matrix is never materialized.
+    matrix is never materialized.  Every non-NULL doc gets a row; a doc
+    with no words keeps signature 0.
+
+    Words are deduplicated as strings (``set``), not by hash: two
+    distinct words whose 30-bit hashes collide still vote twice.
 
     No SQL oracle (bit-mixing isn't SQL-replicable); determinism is
     pinned by a pure-Python golden reference in tests plus the near-dup
     hamming-distance properties.
     """
-    import pyarrow as pa
 
-    id_field = df.select(id_col).schema.fields[0]
-    id_dt = id_field.dataType.simpleString()
-    pruned = df.select(id_col, text_col).where(F.col(text_col).isNotNull())
-
-    def gen(batches):
-        from ._batch import poly_hash_batch
-
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            m = len(texts)
-            out = np.zeros(m, dtype=np.int64)
-            doc_pos: list[int] = []
-            all_words: list[str] = []
-            bounds = [0]
-            for i, t in enumerate(texts):
-                words = set(py_words(t))
-                if not words:
-                    continue  # empty doc keeps signature 0
-                doc_pos.append(i)
-                all_words.extend(words)
-                bounds.append(bounds[-1] + len(words))
-            if doc_pos:
-                h = _simhash_word_hashes(poly_hash_batch(all_words), seed)
-                starts = np.asarray(bounds[:-1], dtype=np.int64)
-                seg_len = np.diff(bounds).astype(np.int64)
-                sig = np.zeros(len(doc_pos), dtype=np.uint64)
-                for k in range(64):
-                    bit = ((h >> np.uint64(k)) & np.uint64(1)).astype(np.int64)
-                    ones = np.add.reduceat(bit, starts)
-                    sig |= np.where(
-                        2 * ones >= seg_len, np.uint64(1) << np.uint64(k), np.uint64(0)
-                    )
-                out[np.asarray(doc_pos)] = sig.view(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out, type=pa.int64())], names=["doc", "simhash"]
+    def emit(row, h, lens):
+        h = _simhash_word_hashes(h, seed)
+        has = lens > 0
+        starts, seg_len = _segment_starts(lens), lens[has]
+        sig = np.zeros(starts.size, dtype=np.uint64)
+        for k in range(64):
+            bit = ((h >> np.uint64(k)) & np.uint64(1)).astype(np.int64)
+            ones = np.add.reduceat(bit, starts)
+            sig |= np.where(
+                2 * ones >= seg_len, np.uint64(1) << np.uint64(k), np.uint64(0)
             )
+        out = np.zeros(lens.size, dtype=np.int64)
+        out[has] = sig.view(np.int64)
+        return np.arange(lens.size), {"simhash": out}
 
-    return pruned.mapInArrow(gen, f"doc {id_dt}, simhash long")
+    return _gram_kernel(
+        df, text_col, id_col, lambda t: set(py_words(t)), FP_MOD,
+        "simhash long", emit,
+    )
 
 
 def _simhash_word_hashes(poly: np.ndarray, seed: int) -> np.ndarray:
@@ -1457,55 +1418,29 @@ def repetition_stats(
     space) merge identically on the SQL side, which counts by the same
     polynomial hash.
     """
-    import pyarrow as pa
 
-    id_dt = df.select(id_col).schema.fields[0].dataType.simpleString()
-    pruned = df.select(id_col, text_col).where(F.col(text_col).isNotNull())
+    def emit(row, h, lens):
+        order = np.lexsort((h, row))
+        ds, hs = row[order], h[order]
+        # run-lengths of identical (doc, hash) = per-gram counts
+        new_run = np.ones(ds.size, dtype=bool)
+        new_run[1:] = (ds[1:] != ds[:-1]) | (hs[1:] != hs[:-1])
+        run_starts = np.flatnonzero(new_run)
+        run_docs = ds[run_starts]
+        run_lens = np.diff(np.append(run_starts, ds.size))
+        # fold runs per document
+        new_doc = np.ones(run_docs.size, dtype=bool)
+        new_doc[1:] = run_docs[1:] != run_docs[:-1]
+        doc_starts = np.flatnonzero(new_doc)
+        return run_docs[doc_starts], {
+            "n_grams": np.add.reduceat(run_lens, doc_starts),
+            "n_distinct": np.diff(np.append(doc_starts, run_docs.size)),
+            "top_count": np.maximum.reduceat(run_lens, doc_starts),
+        }
 
-    def gen(batches):
-        from ._batch import poly_hash_batch
-
-        for batch in batches:
-            texts = batch.column(1).to_pylist()
-            doc_rep: list = []
-            all_sh: list[str] = []
-            for i, t in enumerate(texts):
-                sh = py_shingles(t, n)
-                all_sh.extend(sh)
-                doc_rep.extend([i] * len(sh))
-            if not all_sh:
-                continue
-            h = poly_hash_batch(all_sh, FP_BASE, SH_MOD)
-            d = np.asarray(doc_rep, dtype=np.int64)
-            order = np.lexsort((h, d))
-            ds, hs = d[order], h[order]
-            # run-lengths of identical (doc, hash) = per-gram counts
-            new_run = np.ones(ds.size, dtype=bool)
-            new_run[1:] = (ds[1:] != ds[:-1]) | (hs[1:] != hs[:-1])
-            run_starts = np.flatnonzero(new_run)
-            run_docs = ds[run_starts]
-            run_lens = np.diff(np.append(run_starts, ds.size))
-            # fold runs per document
-            new_doc = np.ones(run_docs.size, dtype=bool)
-            new_doc[1:] = run_docs[1:] != run_docs[:-1]
-            doc_starts = np.flatnonzero(new_doc)
-            docs_u = run_docs[doc_starts]
-            n_distinct = np.diff(np.append(doc_starts, run_docs.size))
-            n_grams = np.add.reduceat(run_lens, doc_starts)
-            top = np.maximum.reduceat(run_lens, doc_starts)
-            out_ids = batch.column(0).take(pa.array(docs_u, type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    out_ids,
-                    pa.array(n_grams.astype(np.int64)),
-                    pa.array(n_distinct.astype(np.int64)),
-                    pa.array(top.astype(np.int64)),
-                ],
-                names=["doc", "n_grams", "n_distinct", "top_count"],
-            )
-
-    return pruned.mapInArrow(
-        gen, f"doc {id_dt}, n_grams long, n_distinct long, top_count long"
+    return _gram_kernel(
+        df, text_col, id_col, lambda t: py_shingles(t, n), SH_MOD,
+        "n_grams long, n_distinct long, top_count long", emit,
     )
 
 

@@ -163,6 +163,16 @@ def test_respect_bounds():
         assert 0.0 <= d.quantile(q) <= 281.0
 
 
+def test_weighted_tails_read_exact_min_and_max():
+    # a heavy weighted point is a whole tail centroid: q=0/1 read its mean,
+    # not an extrapolation past it (go-tdigest reads 0.0488 and 16.55 here)
+    d = TDigest()
+    d.add_batch(np.array([1.0, 2.0, 3.0, 10.0]), np.array([40, 1, 1, 30]))
+    assert d.quantile(0.0) == 1.0 and d.quantile(1.0) == 10.0
+    est = d.quantile(np.linspace(0, 1, 201))
+    assert ((est >= 1.0) & (est <= 10.0)).all()
+
+
 def test_weights_equivalence():
     # tdigest_test.go:215-237 — weighted insert vs repeated inserts, both
     # checked against the exact oracle with range-scaled tolerances

@@ -656,47 +656,139 @@ def test_checkpoint_manifest_pins_input_listing(spark, tmp_path):
         job3.run(resume=True)
 
 
+def _ref_simhash(text: str, seed: int = 11) -> int:
+    """Pure-Python transcription of the SimHash definition (poly hash ->
+    splitmix64 -> majority vote over distinct words)."""
+    import re
+
+    # the library-wide tokenization rule: lowercase, ASCII-\s+ split,
+    # empties dropped (mirrors dedup.py_words independently)
+    words = {
+        w for w in re.split(r"\s+", text.lower(), flags=re.ASCII) if w
+    }
+    if not words:
+        return 0
+    mask = (1 << 64) - 1
+    votes = [0] * 64
+    for w in words:
+        h = _ref_poly_hash(w, 1_000_000_007)
+        h = (h + seed * 0x9E3779B97F4A7C15) & mask
+        h = ((h ^ (h >> 30)) * 0xBF58476D1CE4E5B9) & mask
+        h = ((h ^ (h >> 27)) * 0x94D049BB133111EB) & mask
+        h = h ^ (h >> 31)
+        for k in range(64):
+            votes[k] += 1 if (h >> k) & 1 else -1
+    sig = 0
+    for k in range(64):
+        if votes[k] >= 0:
+            sig |= 1 << k
+    return sig - (1 << 64) if sig >= (1 << 63) else sig
+
+
+def _ref_poly_hash(s: str, mod: int) -> int:
+    h = 0
+    for ch in s:
+        h = (h * 31 + ord(ch)) % mod
+    return h
+
+
 def test_simhash_golden_vs_python_reference(spark, docs):
     """The vectorized SimHash must be bit-identical to a direct pure-
     Python transcription of the definition (poly hash -> splitmix64 ->
     majority vote) — pins the batch kernel against drift."""
-
-    def ref_simhash(text: str, seed: int = 11) -> int:
-        import re
-
-        # the library-wide tokenization rule: lowercase, ASCII-\s+ split,
-        # empties dropped (mirrors dedup.py_words independently)
-        words = {
-            w for w in re.split(r"\s+", text.lower(), flags=re.ASCII) if w
-        }
-        if not words:
-            return 0
-        mask = (1 << 64) - 1
-        votes = [0] * 64
-        for w in words:
-            h = 0
-            for ch in w:
-                h = (h * 31 + ord(ch)) % 1_000_000_007
-            h = (h + seed * 0x9E3779B97F4A7C15) & mask
-            h = ((h ^ (h >> 30)) * 0xBF58476D1CE4E5B9) & mask
-            h = ((h ^ (h >> 27)) * 0x94D049BB133111EB) & mask
-            h = h ^ (h >> 31)
-            for k in range(64):
-                votes[k] += 1 if (h >> k) & 1 else -1
-        sig = 0
-        for k in range(64):
-            if votes[k] >= 0:
-                sig |= 1 << k
-        return sig - (1 << 64) if sig >= (1 << 63) else sig
-
     got = {
         r["doc"]: int(r["simhash"])
         for r in simhash_signatures(docs, "text", "doc_id").collect()
     }
     expect = {
-        r["doc_id"]: ref_simhash(r["text"]) for r in docs.collect()
+        r["doc_id"]: _ref_simhash(r["text"]) for r in docs.collect()
     }
     assert got == expect
+
+
+def _ref_text_kernel(kernel: str, doc: int, text: str, n: int) -> list[tuple]:
+    """Pure-Python rows of one text kernel for one non-NULL doc."""
+    from collections import Counter
+
+    from go_tdigest_spark.operators.dedup import (
+        FP_MOD,
+        MH_PRIME,
+        SH_MOD,
+        minhash_params,
+        py_shingles,
+    )
+
+    if kernel == "simhash":
+        return [(doc, _ref_simhash(text))]
+    grams = py_shingles(text, n)
+    if not grams:
+        return []
+    sh = [_ref_poly_hash(g, SH_MOD) for g in grams]
+    if kernel == "shingle":
+        return [(doc, h) for h in set(sh)]
+    if kernel == "positional":
+        return [(doc, i, h) for i, h in enumerate(sh)]
+    if kernel == "repetition":
+        c = Counter(sh)
+        return [(doc, len(sh), len(c), max(c.values()))]
+    fp = [_ref_poly_hash(g, FP_MOD) for g in grams]
+    a, b = minhash_params(16, 7)
+    return [(doc, tuple(min((x * h + y) % MH_PRIME for h in fp) for x, y in zip(a, b)))]
+
+
+@pytest.mark.parametrize(
+    "kernel", ["shingle", "positional", "repetition", "minhash", "simhash"]
+)
+def test_text_kernels_edge_rows_vs_python(spark, kernel):
+    """Every Arrow text kernel on hostile rows, int32 ids and 2-row Arrow
+    batches (so whole batches hold no grams): rows equal a pure-Python
+    reference (py_shingles + a per-gram polynomial hash), the id keeps
+    its int32 type, NULL text emits nothing, and SimHash emits one row
+    per non-NULL doc (0 when it has no words) where the others emit
+    nothing for a doc without grams."""
+    from pyspark.sql.types import IntegerType
+
+    from go_tdigest_spark.operators import (
+        positional_shingle_hashes,
+        repetition_stats,
+        shingle_hashes,
+    )
+
+    fn = {
+        "shingle": shingle_hashes,
+        "positional": positional_shingle_hashes,
+        "repetition": repetition_stats,
+        "minhash": lambda df, t, i, n: minhash_signatures(df, t, i, n=n),
+        "simhash": lambda df, t, i, n: simhash_signatures(df, t, i),
+    }[kernel]
+    rows = [
+        (1, None), (2, ""), (3, " \t\n "), (4, "one"), (5, "a\x0bb c"),
+        (6, "Grüße  ÉCOLE naïve 東京 tokyo"), (7, "a b a b a b a"), (8, None),
+        (9, "\x0b"), (10, "x"), (11, "Z z Z z Z"), (12, "the end"),
+    ]
+    # one partition in row order: the 2-row batches (2, 3) and (9, 10)
+    # hold no grams at n=2
+    df = spark.createDataFrame(rows, "doc_id int, text string").coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        for n in (1, 2, 3) if kernel != "simhash" else (1,):
+            out = fn(df, "text", "doc_id", n)
+            assert out.schema["doc"].dataType == IntegerType()
+            got = sorted(
+                tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in out.collect()
+            )
+            want = sorted(
+                r for d, t in rows if t is not None
+                for r in _ref_text_kernel(kernel, d, t, n)
+            )
+            assert got == want, (kernel, n)
+        if kernel == "simhash":
+            assert len(got) == sum(t is not None for _, t in rows)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_embedding_block_matrix_distributed(spark):

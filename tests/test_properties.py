@@ -139,6 +139,33 @@ def test_weighted_equals_repeated(values):
         assert abs(d_w.quantile(q) - d_r.quantile(q)) <= 0.1 * span
 
 
+@settings(max_examples=100, deadline=None)
+@given(
+    values=value_lists,
+    data=st.data(),
+    compression=compressions,
+    parts=st.integers(min_value=1, max_value=4),
+)
+def test_weighted_and_merged_quantiles_stay_in_range(values, data, compression, parts):
+    """A weighted digest, built in ``parts`` pieces and merged, reads the
+    exact min at q=0 and the exact max at q=1, and no quantile leaves
+    [min, max] — however heavy the tail points are."""
+    arr = np.asarray(values)
+    w = np.asarray(
+        data.draw(st.lists(st.integers(1, 1000), min_size=arr.size, max_size=arr.size)),
+        dtype=np.int64,
+    )
+    pieces = [
+        TDigest.from_values(v, c, compression=compression)
+        for v, c in zip(np.array_split(arr, parts), np.array_split(w, parts))
+        if v.size
+    ]
+    d = TDigest.merge_all(pieces)
+    est = d.quantile(np.linspace(0, 1, 101))
+    assert d.count == w.sum()
+    assert est[0] == arr.min() and est[-1] == arr.max()
+    assert ((est >= arr.min()) & (est <= arr.max())).all()
+
 def test_reset_keeps_config():
     d = TDigest(compression=42)
     d.add_batch(np.arange(100.0))

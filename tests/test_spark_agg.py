@@ -748,7 +748,7 @@ def test_weighted_rollup_exact_vs_sql(spark, op, null_keys):
     rows and the rolled-up NULL rows must both appear, apart."""
     import duckdb
 
-    from go_tdigest_spark.functions import td_count, td_trimmed_mean
+    from go_tdigest_spark.functions import td_count, td_quantile, td_trimmed_mean
     from go_tdigest_spark.operators import tdigest_cube, tdigest_rollup
 
     fn = {"rollup": tdigest_rollup, "cube": tdigest_cube}[op]
@@ -761,14 +761,11 @@ def test_weighted_rollup_exact_vs_sql(spark, op, null_keys):
     })
     key = ["l_returnflag", "l_linestatus"]
     d = fn(li, "l_extendedprice", key, weight_col="qty_w")
-    # a weighted digest's q=0/1 estimate extrapolates past a heavy tail
-    # point; the tail centroids themselves are the exact min and max
-    cents = td_centroids("digest")
     got = d.select(
         *key,
         td_count("digest").alias("w"),
-        F.element_at(cents, 1)["mean"].alias("lo"),
-        F.element_at(cents, -1)["mean"].alias("hi"),
+        td_quantile("digest", 0.0).alias("lo"),
+        td_quantile("digest", 1.0).alias("hi"),
         F.round(td_trimmed_mean("digest", 0.0, 1.0), 4).alias("w_mean"),
     ).toPandas()
     want = duckdb.sql(
