@@ -8,7 +8,7 @@ from typing import Callable, Iterator, Sequence
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType, StructField, StructType
 
@@ -72,6 +72,31 @@ def group_keys(df: DataFrame, by: Sequence[str]) -> list[Column]:
             )
         cols.append(col.alias(c))
     return cols
+
+
+def top_k(
+    df: DataFrame,
+    by: Sequence[str],
+    order: Sequence[Column],
+    k: int,
+    rank_col: str,
+) -> DataFrame:
+    """The ``k`` first rows of each ``by`` group of ``df`` in ``order``,
+    with their 1-based ``row_number`` as ``rank_col`` (appended last):
+    one shuffle on ``by`` and a rank-limit window, which Spark plans
+    with a WindowGroupLimit below the shuffle.  With no ``by`` it is
+    ``orderBy(*order).limit(k)`` and adds no rank column: that plans as
+    TakeOrderedAndProject (per-partition partial top-k, one k-row
+    merge), where an empty-keyed window would funnel every row into one
+    task.  An input column named ``rank_col`` is refused."""
+    if rank_col in df.columns:
+        raise ValueError(f"input column {rank_col!r} is reserved")
+    if not by:
+        return df.orderBy(*order).limit(k)
+    w = Window.partitionBy(*by).orderBy(*order)
+    return df.withColumn(rank_col, F.row_number().over(w)).where(
+        F.col(rank_col) <= k
+    )
 
 
 def _first_seen(codes: np.ndarray) -> np.ndarray:

@@ -22,7 +22,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from ._batch import top_k
 
 
 def hyperplanes(n_planes: int, dim: int) -> np.ndarray:
@@ -71,6 +72,15 @@ def _norm_frag(vec: str) -> str:
     return f"sqrt(aggregate({vec}, 0.0D, (a, x) -> a + CAST(x AS DOUBLE) * x))"
 
 
+def _rank(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` nearest neighbors of each query: cosine descending,
+    ties to the lower ``nn_id``."""
+    order = [F.desc("cosine"), F.asc("nn_id")]
+    return top_k(scored, ["query_id"], order, k, "rank").select(
+        "query_id", "rank", "nn_id", "cosine"
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     vec_col: str,
@@ -116,12 +126,7 @@ def cosine_topk(
         corpus.join(F.broadcast(queries), F.col("query_id") != F.col("nn_id"))
         .select("query_id", "nn_id", F.round(cos, 4).alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "nn_id", "cosine")
-    )
+    return _rank(scored, k)
 
 
 def cosine_topk_sql(
@@ -397,12 +402,7 @@ def lsh_ann_topk(
     scored = cosine_rerank(
         cand, ["query_id", "nn_id"], "qvec", "cvec", "qnrm", "cnrm", dim
     ).select("query_id", "nn_id", F.round("_cos_raw", 4).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "nn_id", "cosine")
-    )
+    return _rank(scored, k)
 
 
 # --------------------------------------------------------- IVF (coarse
@@ -579,9 +579,4 @@ def ivf_ann_topk(
     scored = cosine_rerank(
         cand, ["query_id", "nn_id"], "qvec", "cvec", "qnrm", "cnrm", dim
     ).select("query_id", "nn_id", F.round("_cos_raw", 4).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "nn_id", "cosine")
-    )
+    return _rank(scored, k)

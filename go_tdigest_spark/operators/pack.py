@@ -63,7 +63,7 @@ __all__ = [
     "pack_fragments_sql",
 ]
 
-_RESERVED = ("_pid", "start_pos", "end_pos", "bin_id", "bin_offset", "n_bins")
+_RESERVED = ("start_pos", "end_pos", "bin_id", "bin_offset", "n_bins")
 
 
 def _finalize(df: DataFrame, size_col: str, capacity: int) -> DataFrame:
@@ -127,15 +127,11 @@ def pack_chunks(
     # float) don't round-trip identically between collected Row values
     # and Arrow-side numpy values, which would silently break the range
     # path's base-offset dictionary keyed on group values
-    from .sample import _check_key_type
+    from .sample import _INTEGRAL, _check_key_type, _check_type
 
     for c in [key_col, *by]:
         _check_key_type(df, c, "pack_chunks")
-    size_dt = df.schema[size_col].dataType.simpleString()
-    if size_dt not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"pack_chunks: size_col must be integral, got {size_dt}"
-        )
+    _check_type(df, size_col, "pack_chunks", "size_col", _INTEGRAL, "integral")
 
     if method == "window":
         w = (
@@ -183,9 +179,12 @@ def _range_phase1(
     layout could disagree with these offsets, because
     ``repartitionByRange`` samples its boundaries.  ``persist=False``
     therefore requires an input that is deterministic end to end.  The
-    table is released by ``release_dedup_caches``."""
+    table is released by ``release_dedup_caches``.  An input column
+    named ``_pid`` is refused: every caller drops the tag."""
     from .dedup import _register_persisted
 
+    if "_pid" in df.columns:
+        raise ValueError(f"{ctx}: input column '_pid' is reserved")
     keys = [F.col(c) for c in (*by, *order)]
     nparts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     parts = (

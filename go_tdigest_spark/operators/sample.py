@@ -1,33 +1,42 @@
 """Deterministic sampling operators for training-data pipelines.
 
 Random sampling is the wrong tool at 100 TB: runs are not reproducible,
-stratified sizes drift, and an oracle cannot check the output.  Both
-operators here sample by a SEEDED CONTENT HASH of the key column, so
+stratified sizes drift, and an oracle cannot check the output.  Every
+operator here samples or orders by a SEEDED CONTENT HASH of the key
+column, so
 
   - the sample is a pure function of the data (re-runs, retries, and
     different partitionings produce the identical sample — the same
     determinism contract as the tokens source);
   - the DuckDB twin replicates the hash bit-for-bit, so the driver gate
     checks the sample EXACTLY (no rows-only waiver);
-  - membership is decided per row (fraction) or per group (top-k), so
-    the plan is a pushed-down filter / a single per-group selection —
-    no global shuffle for the fraction form.
+  - membership is decided per row (fraction, mixture, split) or per
+    group (top-k, weighted, token budget), so no operator needs a
+    global single-task sort.
 
 Hashing: the shared polynomial codepoint kernel (poly_hash_batch /
 shingle_hash_frag) over the key's string form with a seed prefix.  The
 Spark hot path stringifies each Arrow batch with a pyarrow C cast and
-hashes it column-wise in numpy (mapInArrow — the only Python per row is
-the list hand-off into the shared kernel); the SQL frag twin is
-generated beside it.  Keys are restricted to INTEGRAL or STRING columns
-(enforced): other types stringify differently across engines
-(bool True/true, double 1e+16/1.0E16), which would silently change
-sample membership vs the oracle.
+hashes it column-wise in numpy, in ONE map-side pass (``_hashed``) that
+every operator runs; the SQL frag twin is generated beside it.  Keys
+are restricted to INTEGRAL or STRING columns (enforced): other types
+stringify differently across engines (bool True/true, double
+1e+16/1.0E16), which would silently change sample membership vs the
+oracle.
 
-Scale notes: ``sample_fraction`` is map-only (scan -> hash -> filter);
-``sample_topk_per_group`` shuffles once on the group key and selects k
-smallest hashes per group via one struct-min-k aggregation-free window
-(row_number over (hash, key)) — the standard fixed-size stratified
-sample.
+Scale notes, per operator:
+
+  - ``sample_fraction``, ``sample_mixture``, ``sample_split``: map-only
+    (scan -> hash -> filter or label in the same Arrow pass).
+  - ``sample_topk_per_group``, ``sample_weighted``: bottom-k samples
+    over a per-row rank (the seeded hash, or the Efraimidis–Spirakis
+    priority ``-ln(u) / w``), selected by ``_batch.top_k``: one shuffle
+    on the group key and a rank-limit window, or TakeOrderedAndProject
+    when there is no group.
+  - ``deterministic_shuffle``, ``sample_token_budget``: the package's
+    two-phase distributed prefix sum (``pack._range_phase1`` and
+    ``pack._with_prefix``) over the hash order — one range shuffle,
+    never a global single-partition window.
 """
 
 from __future__ import annotations
@@ -35,8 +44,19 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.types import (
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from ._batch import top_k
 from .dedup import FP_BASE, SH_MOD, shingle_hash_frag
 from .pack import _range_phase1, _with_prefix
 
@@ -55,6 +75,8 @@ _DENOM = 1_000_000  # fraction resolution: 1e-6
 _MIX_A = 48271
 _MIX_P = 2_147_483_647  # 2^31 - 1
 
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+
 
 def _mix_frag(expr: str) -> str:
     h1 = f"(({expr}) % {_MIX_P})"
@@ -68,27 +90,51 @@ def _mix_batch(h):
     return (h * _MIX_A) % _MIX_P
 
 
+def _check_type(
+    df: DataFrame, col: str, ctx: str, what: str, ok: tuple, kinds: str,
+    why: str = "",
+) -> None:
+    """The one column-type check: ValueError when ``col`` is not in
+    ``df``, TypeError naming ``kinds`` when its type is not one of the
+    ``ok`` classes."""
+    if col not in df.columns:
+        raise ValueError(f"{ctx}: {what} {col!r} not in DataFrame")
+    dt = df.schema[col].dataType
+    if not isinstance(dt, ok):
+        raise TypeError(
+            f"{ctx}: {what} must be {kinds}, got {dt.simpleString()}{why}"
+        )
+
+
 def _check_key_type(df: DataFrame, key_col: str, ctx: str) -> None:
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
+    _check_type(
+        df, key_col, ctx, "key column", (*_INTEGRAL, StringType),
+        "integral or string",
+        " — other types stringify differently across engines (bool "
+        "True/true, double 1e+16/1.0E16)",
     )
 
-    matches = [f for f in df.schema.fields if f.name == key_col]
-    if not matches:
-        raise ValueError(f"{ctx}: key column {key_col!r} not in DataFrame")
-    dt = matches[0].dataType
-    if not isinstance(
-        dt, (ByteType, ShortType, IntegerType, LongType, StringType)
-    ):
-        raise TypeError(
-            f"{ctx}: key column must be integral or string, got "
-            f"{dt.simpleString()} — other types stringify differently "
-            "across engines (bool True/true, double 1e+16/1.0E16)"
+
+def _check_group_dict(
+    df: DataFrame, group_col: str, values: dict, ctx: str, what: str
+) -> None:
+    """Keys of a per-group dict must match ``group_col``'s Python type:
+    a str key against an int column silently misses the dict lookup on
+    the Spark side while the SQL twin's '5' = 5 COERCES and matches —
+    the engines would return different row sets with no error."""
+    want_str = isinstance(df.schema[group_col].dataType, StringType)
+    for g in values:
+        ok = (
+            isinstance(g, str)
+            if want_str
+            else isinstance(g, (int, np.integer)) and not isinstance(g, bool)
         )
+        if not ok:
+            raise TypeError(
+                f"{ctx}: {what} key {g!r} does not match the "
+                f"{'string' if want_str else 'integral'} group column "
+                f"{group_col!r}"
+            )
 
 
 def _seeded(var: str, seed: int) -> str:
@@ -110,9 +156,10 @@ def _hash_strings_batch(vals: list[str], seed: int) -> np.ndarray:
 def _batch_key_hashes(batch, key_idx: int, seed: int) -> np.ndarray:
     """The ONE stringify-then-hash contract every sampling operator
     shares (C-level stringify: int64 -> "123", identical to the SQL CAST
-    for the enforced integral/string key types; NULL -> '').  A behavior
-    change here forks sample membership across the whole family — that
-    is the point of having exactly one copy."""
+    for the enforced integral/string key types; NULL -> '').  Only the
+    hash pass ``_hashed`` calls it.  A behavior change here forks sample
+    membership across the whole family — that is the point of having
+    exactly one copy."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -123,31 +170,56 @@ def _batch_key_hashes(batch, key_idx: int, seed: int) -> np.ndarray:
     return _hash_strings_batch(vals, seed)
 
 
-def _with_key_hash(
-    df: DataFrame, key_col: str, seed: int, out_col: str = "_h"
+def _hashed(
+    df: DataFrame, key_col: str, seed: int, field: StructField | None,
+    emit, ctx: str,
 ) -> DataFrame:
-    """``df`` plus ``out_col``, the seeded key hash (int64), computed per
-    Arrow batch map-side — the order key of the top-k sample, the
-    deterministic shuffle and the token budget."""
+    """The seeded key-hash pass every sampling operator runs: one
+    ``mapInArrow`` that skips empty batches, hashes each batch's key
+    column once and yields ``emit(batch, h)``.  With ``field=None``
+    that is the batch to keep (a filter of it) and the schema is
+    ``df``'s; with a ``field``, ``emit`` returns the field's values,
+    appended as the last column.  The key type is checked here, and an
+    input column named like ``field`` is refused: the operator would
+    shadow or drop it."""
     import pyarrow as pa
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.pandas.types import to_arrow_type
 
+    _check_key_type(df, key_col, ctx)
     key_idx = df.columns.index(key_col)
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, LongType(), False)]
-    )
+    schema, typ = df.schema, None
+    if field is not None:
+        if field.name in df.columns:
+            raise ValueError(
+                f"{ctx}: input column {field.name!r} already exists; the "
+                "name is reserved for the output"
+            )
+        schema = StructType([*df.schema.fields, field])
+        typ = to_arrow_type(field.dataType)
 
-    def add_hash(batches):
+    def hash_pass(batches):
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            h = _batch_key_hashes(batch, key_idx, seed)
-            yield pa.RecordBatch.from_arrays(
-                [*batch.columns, pa.array(h, type=pa.int64())],
-                names=[*batch.schema.names, out_col],
-            )
+            out = emit(batch, _batch_key_hashes(batch, key_idx, seed))
+            if typ is not None:
+                out = pa.RecordBatch.from_arrays(
+                    [*batch.columns, pa.array(out, type=typ)],
+                    names=[*batch.schema.names, field.name],
+                )
+            yield out
 
-    return df.mapInArrow(add_hash, schema)
+    return df.mapInArrow(hash_pass, schema)
+
+
+def _with_key_hash(
+    df: DataFrame, key_col: str, seed: int, out_col: str, ctx: str
+) -> DataFrame:
+    """``df`` plus ``out_col``, the seeded key hash (int64) — the order
+    key of the top-k sample, the deterministic shuffle and the token
+    budget."""
+    field = StructField(out_col, LongType(), False)
+    return _hashed(df, key_col, seed, field, lambda batch, h: h, ctx)
 
 
 def sample_hash_frag(col: str, dialect: str, seed: int = 1) -> str:
@@ -179,22 +251,14 @@ def sample_fraction(
     """
     if not 0.0 <= fraction <= 1.0:
         raise ValueError("fraction must be in [0, 1]")
-    _check_key_type(df, key_col, "sample_fraction")
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     cutoff = int(round(fraction * _DENOM))
-    key_idx = df.columns.index(key_col)
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h = _batch_key_hashes(batch, key_idx, seed)
-            keep = (h % _DENOM) < cutoff
-            yield batch.filter(pa.array(keep))
+    def keep(batch, h):
+        return batch.filter(pa.array(h % _DENOM < cutoff))
 
-    return df.mapInArrow(gen, df.schema)
+    return _hashed(df, key_col, seed, None, keep, "sample_fraction")
 
 
 def sample_fraction_sql(
@@ -226,27 +290,9 @@ def sample_topk_per_group(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    _check_key_type(df, key_col, "sample_topk_per_group")
-    reserved = {"_sh", "_rn"} & set(df.columns)
-    if reserved:
-        raise ValueError(
-            f"input columns collide with reserved names: {sorted(reserved)}"
-        )
-    hashed = _with_key_hash(df, key_col, seed, "_sh")
-    if not by:
-        # global top-k: TakeOrderedAndProject (per-partition partial
-        # top-k, one k-row merge) — the sample_weighted shape.  An
-        # empty-keyed window would funnel every row into ONE task, and
-        # the SQL twin's bare PARTITION BY would not even parse.
-        return (
-            hashed.orderBy(F.asc("_sh"), F.asc(key_col)).limit(k).drop("_sh")
-        )
-    w = Window.partitionBy(*by).orderBy(F.asc("_sh"), F.asc(key_col))
-    return (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_sh", "_rn")
-    )
+    hashed = _with_key_hash(df, key_col, seed, "_sh", "sample_topk_per_group")
+    order = [F.asc("_sh"), F.asc(key_col)]
+    return top_k(hashed, by, order, k, "_rn").drop("_sh", "_rn")
 
 
 def sample_mixture(
@@ -269,54 +315,29 @@ def sample_mixture(
     partitionings/retries, duplicate keys travel together, and the
     DuckDB twin replicates the decision bit-for-bit.  Map-only plan.
     """
-    _check_key_type(df, key_col, "sample_mixture")
     _check_key_type(df, group_col, "sample_mixture (group)")
-    # fraction keys must match the group column's Python type: a str key
-    # against an int column silently misses the dict lookup on the Spark
-    # side while the SQL twin's '5' = 5 COERCES and matches — the
-    # engines would return different row sets with no error
-    from pyspark.sql.types import StringType
-
-    want_str = isinstance(df.schema[group_col].dataType, StringType)
-    for g in fractions:
-        ok = (
-            isinstance(g, str)
-            if want_str
-            else isinstance(g, (int, np.integer)) and not isinstance(g, bool)
-        )
-        if not ok:
-            raise TypeError(
-                f"sample_mixture: fraction key {g!r} does not match the "
-                f"{'string' if want_str else 'integral'} group column "
-                f"{group_col!r}"
-            )
+    _check_group_dict(df, group_col, fractions, "sample_mixture", "fraction")
     for g, f in fractions.items():
         if not 0.0 <= f <= 1.0:
             raise ValueError(f"fraction for group {g!r} must be in [0, 1]")
     if not 0.0 <= default_fraction <= 1.0:
         raise ValueError("default_fraction must be in [0, 1]")
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     cut = {g: int(round(f * _DENOM)) for g, f in fractions.items()}
     default_cut = int(round(default_fraction * _DENOM))
-    key_idx = df.columns.index(key_col)
     grp_idx = df.columns.index(group_col)
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h = _batch_key_hashes(batch, key_idx, seed) % _DENOM
-            groups = batch.column(grp_idx).to_pylist()
-            cuts = np.fromiter(
-                (cut.get(g, default_cut) for g in groups),
-                dtype=np.int64,
-                count=len(groups),
-            )
-            yield batch.filter(pa.array(h < cuts))
+    def keep(batch, h):
+        groups = batch.column(grp_idx).to_pylist()
+        cuts = np.fromiter(
+            (cut.get(g, default_cut) for g in groups),
+            dtype=np.int64,
+            count=len(groups),
+        )
+        return batch.filter(pa.array(h % _DENOM < cuts))
 
-    return df.mapInArrow(gen, df.schema)
+    return _hashed(df, key_col, seed, None, keep, "sample_mixture")
 
 
 def sample_mixture_sql(
@@ -329,15 +350,8 @@ def sample_mixture_sql(
 ) -> str:
     h = sample_hash_frag(key_col, "duck", seed)
     default_cut = int(round(default_fraction * _DENOM))
-    if fractions:
-        whens = " ".join(
-            f"WHEN {group_col} = {_sql_lit(g)} "
-            f"THEN {int(round(f * _DENOM))}"
-            for g, f in fractions.items()
-        )
-        cut = f"CASE {whens} ELSE {default_cut} END"
-    else:
-        cut = str(default_cut)
+    cuts = {g: int(round(f * _DENOM)) for g, f in fractions.items()}
+    cut = _case_sql(group_col, cuts, default_cut)
     return f"SELECT * FROM {table} WHERE ({h}) % {_DENOM} < ({cut})"
 
 
@@ -348,6 +362,19 @@ def _sql_lit(v) -> str:
     if isinstance(v, (int, np.integer)):
         return str(int(v))
     raise TypeError(f"mixture group literal must be str or int, got {type(v)}")
+
+
+def _case_sql(col: str, values: dict, default: int) -> str:
+    """DuckDB text of a per-group dict: ``CASE col WHEN key THEN value
+    ... ELSE default END`` (a NULL or unlisted group gets ``default``),
+    or the bare default for an empty dict — the mixture twin's cut and
+    the token-budget twin's cap."""
+    if not values:
+        return str(int(default))
+    whens = " ".join(
+        f"WHEN {_sql_lit(g)} THEN {int(v)}" for g, v in values.items()
+    )
+    return f"CASE {col} {whens} ELSE {int(default)} END"
 
 
 def _split_cutoffs(weights: dict[str, float]) -> list[tuple[str, int, int]]:
@@ -389,39 +416,22 @@ def sample_split(
     so doc-keyed corpora never leak a near-identical row from train into
     test by id.  Map-only plan: one hash kernel pass, one CASE chain.
     """
-    _check_key_type(df, key_col, "sample_split")
-    if split_col in df.columns:
-        raise ValueError(f"column {split_col!r} already exists")
     if "_split_h" in df.columns:
         # the SQL twin uses _split_h as its internal hash alias; the
         # Spark path reserves it too so both engines accept the same
         # inputs
         raise ValueError("input column _split_h collides with a reserved name")
     cut = _split_cutoffs(weights)
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql.types import StringType, StructField, StructType
 
-    key_idx = df.columns.index(key_col)
-    schema = StructType(
-        list(df.schema.fields) + [StructField(split_col, StringType(), False)]
-    )
+    def label(batch, h):
+        h = h % _DENOM
+        labels = np.empty(len(h), dtype=object)
+        for name, lo, hi in cut:
+            labels[(h >= lo) & (h < hi)] = name
+        return labels
 
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h = _batch_key_hashes(batch, key_idx, seed) % _DENOM
-            labels = np.empty(len(h), dtype=object)
-            for name, lo, hi in cut:
-                labels[(h >= lo) & (h < hi)] = name
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)]
-                + [pa.array(labels, type=pa.string())],
-                names=list(batch.schema.names) + [split_col],
-            )
-
-    return df.mapInArrow(gen, schema)
+    field = StructField(split_col, StringType(), False)
+    return _hashed(df, key_col, seed, field, label, "sample_split")
 
 
 def sample_split_sql(
@@ -475,33 +485,6 @@ def _nl_batch(h):
     return (x5 * _MIX_A) % _MIX_P
 
 
-_WEIGHT_OK_TYPES = (
-    "byte",
-    "short",
-    "int",
-    "integer",
-    "bigint",
-    "long",
-    "float",
-    "double",
-)
-
-
-def _check_weight_type(df: DataFrame, weight_col: str) -> None:
-    matches = [f for f in df.schema.fields if f.name == weight_col]
-    if not matches:
-        raise ValueError(
-            f"sample_weighted: weight column {weight_col!r} not in DataFrame"
-        )
-    s = matches[0].dataType.simpleString()
-    if s not in _WEIGHT_OK_TYPES:
-        raise TypeError(
-            f"sample_weighted: weight column must be integral or "
-            f"float/double, got {s} (decimal/other types do not convert "
-            "losslessly to the float64 priority kernel)"
-        )
-
-
 def sample_weighted(
     df: DataFrame,
     key_col: str,
@@ -545,60 +528,35 @@ def sample_weighted(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    _check_key_type(df, key_col, "sample_weighted")
-    _check_weight_type(df, weight_col)
-    reserved = {"_pri", "_rn"} & set(df.columns)
-    if reserved:
-        raise ValueError(
-            f"input columns collide with reserved names: {sorted(reserved)}"
-        )
-    import pyarrow as pa
-
-    key_idx = df.columns.index(key_col)
+    _check_type(
+        df, weight_col, "sample_weighted", "weight column",
+        (*_INTEGRAL, FloatType, DoubleType), "integral or float/double",
+        " (decimal/other types do not convert losslessly to the float64 "
+        "priority kernel)",
+    )
     w_idx = df.columns.index(weight_col)
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    schema_with_pri = StructType(
-        list(df.schema.fields) + [StructField("_pri", DoubleType(), False)]
-    )
-
-    def gen(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h = _batch_key_hashes(batch, key_idx, seed)
-            # nulls surface as NaN through the float cast and fail the
-            # finite check below — one code path for NULL/NaN/inf/<=0
-            w = np.asarray(
-                batch.column(w_idx).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            bad = ~np.isfinite(w) | (w <= 0.0)
-            if bad.any():
-                i = int(np.flatnonzero(bad)[0])
-                raise ValueError(
-                    "sample_weighted: weight must be finite and > 0, got "
-                    f"{batch.column(w_idx)[i].as_py()!r} for key "
-                    f"{batch.column(key_idx)[i].as_py()!r}"
-                )
-            pri = -np.log((_nl_batch(h) + 1.0) / _MIX_P) / w
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)]
-                + [pa.array(pri, type=pa.float64())],
-                names=list(batch.schema.names) + ["_pri"],
-            )
-
-    hashed = df.mapInArrow(gen, schema_with_pri)
-    if not by:
-        return (
-            hashed.orderBy(F.asc("_pri"), F.asc(key_col)).limit(k).drop("_pri")
+    def priority(batch, h):
+        # nulls surface as NaN through the float cast and fail the
+        # finite check below — one code path for NULL/NaN/inf/<=0
+        w = np.asarray(
+            batch.column(w_idx).to_numpy(zero_copy_only=False),
+            dtype=np.float64,
         )
-    w = Window.partitionBy(*by).orderBy(F.asc("_pri"), F.asc(key_col))
-    return (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_pri", "_rn")
-    )
+        bad = ~np.isfinite(w) | (w <= 0.0)
+        if bad.any():
+            i = int(np.flatnonzero(bad)[0])
+            raise ValueError(
+                "sample_weighted: weight must be finite and > 0, got "
+                f"{batch.column(w_idx)[i].as_py()!r} for key "
+                f"{batch.column(key_col)[i].as_py()!r}"
+            )
+        return -np.log((_nl_batch(h) + 1.0) / _MIX_P) / w
+
+    field = StructField("_pri", DoubleType(), False)
+    hashed = _hashed(df, key_col, seed, field, priority, "sample_weighted")
+    order = [F.asc("_pri"), F.asc(key_col)]
+    return top_k(hashed, by, order, k, "_rn").drop("_pri", "_rn")
 
 
 def sample_weighted_sql(
@@ -726,15 +684,12 @@ def deterministic_shuffle(
 
     SQL twin: :func:`deterministic_shuffle_sql`.
     """
-    _check_key_type(df, key_col, "deterministic_shuffle")
-    if pos_col in df.columns:
-        raise ValueError(
-            f"deterministic_shuffle: pos_col {pos_col!r} already in DataFrame"
-        )
     ctx = "deterministic_shuffle"
+    if pos_col in df.columns:
+        raise ValueError(f"{ctx}: pos_col {pos_col!r} already in DataFrame")
     parts, base = _range_phase1(
-        _with_key_hash(df, key_col, seed), [], ["_h", key_col], None,
-        num_partitions, persist, ctx,
+        _with_key_hash(df, key_col, seed, "_h", ctx), [], ["_h", key_col],
+        None, num_partitions, persist, ctx,
     )
     return _with_prefix(parts, [], None, base, pos_col, ctx).drop("_h", "_pid")
 
@@ -796,38 +751,29 @@ def sample_token_budget(
     SQL twin: :func:`sample_token_budget_sql` (the running-sum window
     form — the semantic definition the scale path must equal exactly).
     """
+    ctx = "sample_token_budget"
     by = list(by or [])
-    _check_key_type(df, key_col, "sample_token_budget")
     for c in by:
-        _check_key_type(df, c, "sample_token_budget")
+        _check_key_type(df, c, ctx)
     cap = _budget_cap(budget, by, "spark")
     if isinstance(budget, dict):
+        _check_group_dict(df, by[0], budget, ctx, "budget")
         if any(v < 0 for v in budget.values()):
-            raise ValueError("sample_token_budget: budgets must be >= 0")
+            raise ValueError(f"{ctx}: budgets must be >= 0")
     elif budget < 0:
-        raise ValueError("sample_token_budget: budget must be >= 0")
-    for c in ("_h", "_pid", "_pos"):
-        if c in df.columns:
-            raise ValueError(
-                f"sample_token_budget: input column {c!r} is reserved"
-            )
-    if size_col not in df.columns:
-        raise ValueError(f"column {size_col!r} not in DataFrame")
-    size_dt = df.schema[size_col].dataType.simpleString()
-    if size_dt not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"sample_token_budget: size_col must be integral, got {size_dt}"
-        )
+        raise ValueError(f"{ctx}: budget must be >= 0")
+    if "_pos" in df.columns:
+        raise ValueError(f"{ctx}: input column '_pos' is reserved")
+    _check_type(df, size_col, ctx, "size_col", _INTEGRAL, "integral")
 
     def budget_of(g: tuple) -> int:
         if isinstance(budget, dict):
             return int(budget.get(g[0], 0))
         return int(budget)
 
-    ctx = "sample_token_budget"
     parts, base = _range_phase1(
-        _with_key_hash(df, key_col, seed), by, ["_h", key_col], size_col,
-        num_partitions, persist, ctx,
+        _with_key_hash(df, key_col, seed, "_h", ctx), by, ["_h", key_col],
+        size_col, num_partitions, persist, ctx,
     )
     # prune partitions where EVERY group present already starts at or
     # past its budget: only each group's prefix reaches phase 2
@@ -855,10 +801,7 @@ def _budget_cap(budget: int | dict, by: list[str], dialect: str):
             "column (keys are that column's values)"
         )
     if dialect == "duck":
-        whens = " ".join(
-            f"WHEN {_sql_lit(k)} THEN {int(v)}" for k, v in budget.items()
-        )
-        return f"CASE {by[0]} {whens} ELSE 0 END"
+        return _case_sql(by[0], budget, 0)
     cases = [(F.col(by[0]) == F.lit(k), int(v)) for k, v in budget.items()]
     if not cases:
         return F.lit(0)

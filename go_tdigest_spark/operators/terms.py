@@ -39,9 +39,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._batch import top_k
 from .dedup import words_frag
 
 __all__ = [
@@ -105,12 +106,8 @@ def tfidf_topk_terms(
         # operand order mirrored in the SQL twin
         F.expr(f"round(tf * {n_docs}L * 1.0D / df, 4)").alias("tfidf"),
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("term").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    order = [F.col("tfidf").desc(), F.col("term").asc()]
+    return top_k(scored, ["doc_id"], order, k, "rank")
 
 
 def tfidf_topk_terms_sql(

@@ -827,3 +827,151 @@ def test_sample_token_budget_grouped(spark):
     with pytest.raises(ValueError, match=">= 0"):
         sample_token_budget(df, "k", "sz", {"src0": -1}, by=["g"])
     release_dedup_caches()
+
+
+def test_token_budget_dict_key_type_mismatch_is_loud(spark):
+    """A dict budget keyed by the wrong Python type raises, as
+    sample_mixture does: a str key against an int group column used to
+    miss the Spark-side partition pruning and keep nothing, while the
+    SQL twin's '1' = 1 coerced and kept the group."""
+    import duckdb
+    import pandas as pd
+
+    from go_tdigest_spark.operators import (
+        release_dedup_caches,
+        sample_token_budget,
+        sample_token_budget_sql,
+    )
+
+    pdf = pd.DataFrame(
+        {"doc": range(20), "grp": [i % 2 for i in range(20)], "sz": [3] * 20}
+    )
+    df = spark.createDataFrame(pdf)
+    got = sample_token_budget(df, "doc", "sz", {1: 12}, seed=3, by=["grp"])
+    con = duckdb.connect()
+    con.register("t", pdf)
+    want = con.execute(
+        sample_token_budget_sql("t", "doc", "sz", {1: 12}, seed=3, by=["grp"])
+    ).fetchall()
+    assert sorted(r["doc"] for r in got.collect()) == [5, 7, 11, 13]
+    assert sorted(r[0] for r in want) == [5, 7, 11, 13]
+    for bad in ({"1": 12}, {True: 12}):
+        with pytest.raises(TypeError, match="does not match"):
+            sample_token_budget(df, "doc", "sz", bad, seed=3, by=["grp"])
+    release_dedup_caches()
+
+
+def test_prefix_sum_and_hash_pass_reserve_their_columns(spark):
+    """An input column named like an internal one raises instead of
+    vanishing from the output (``_pid``) or failing late as an ambiguous
+    reference (``_h``)."""
+    from go_tdigest_spark.operators import (
+        deterministic_shuffle,
+        sample_token_budget,
+    )
+
+    df = spark.createDataFrame([(1, 7), (2, 8)], "k long, sz long")
+    for name in ("_pid", "_h"):
+        clash = df.withColumn(name, F.lit(0))
+        with pytest.raises(ValueError, match="reserved"):
+            deterministic_shuffle(clash, "k")
+        with pytest.raises(ValueError, match="reserved"):
+            sample_token_budget(clash, "k", "sz", 5)
+    with pytest.raises(ValueError, match="reserved"):
+        pack_chunks(
+            spark.createDataFrame([("d1", 3, 0)], "k string, n int, _pid int"),
+            "n", "k", 4, method="range",
+        )
+
+
+def _small_batch_case(op, df):
+    from go_tdigest_spark.operators import sample as S
+
+    if op == "fraction":
+        return (
+            S.sample_fraction(df, "k", 0.3, seed=4),
+            S.sample_fraction_sql("t", "k", 0.3, seed=4),
+        )
+    if op == "mixture":
+        fr = {"a": 0.7, "b": 0.1}
+        return (
+            S.sample_mixture(df, "k", "g", fr, seed=4, default_fraction=0.4),
+            S.sample_mixture_sql("t", "k", "g", fr, seed=4, default_fraction=0.4),
+        )
+    if op == "split":
+        wts = {"train": 0.6, "val": 0.3, "test": 0.1}
+        return (
+            S.sample_split(df, "k", wts, seed=4),
+            S.sample_split_sql("t", "k", wts, seed=4),
+        )
+    if op == "weighted":
+        return (
+            S.sample_weighted(df, "k", "w", 9, seed=4),
+            S.sample_weighted_sql("t", "k", "w", 9, seed=4),
+        )
+    return (
+        S.deterministic_shuffle(df, "k", seed=4, num_partitions=3),
+        S.deterministic_shuffle_sql("t", "k", seed=4),
+    )
+
+
+@pytest.mark.parametrize("key_type", ["string", "int"])
+@pytest.mark.parametrize(
+    "op", ["fraction", "mixture", "split", "weighted", "shuffle"]
+)
+def test_hash_pass_small_batches_match_duckdb(spark, op, key_type):
+    """Every operator on the seeded-hash pass, fed 2-row Arrow batches
+    from one partition (so the filters empty some batches completely),
+    with NULL keys and int32 or string keys, equals its DuckDB twin."""
+    import duckdb
+    import pandas as pd
+
+    from go_tdigest_spark.operators import release_dedup_caches
+
+    n = 40
+    # the two NULL-key rows tie on the hash; they differ only in v
+    nulls = (3, 23)
+    keys = [
+        None if i in nulls else (f"d{i}" if key_type == "string" else i * 37)
+        for i in range(n)
+    ]
+    pdf = pd.DataFrame(
+        {
+            "k": pd.array(keys, dtype="string" if key_type == "string" else "Int32"),
+            "g": [["a", "b", "c", None][i % 4] for i in range(n)],
+            "v": range(n),
+            "w": [(i % 5) + 0.5 for i in range(n)],
+        }
+    )
+    df = spark.createDataFrame(
+        list(zip(keys, pdf["g"], pdf["v"].tolist(), pdf["w"])),
+        f"k {key_type}, g string, v long, w double",
+    ).coalesce(1)
+    con = duckdb.connect()
+    con.register("t", pdf)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        out, sql = _small_batch_case(op, df)
+        res = con.execute(sql)
+        assert out.columns == [d[0] for d in res.description]
+        want_rows = res.fetchall()
+        v_at = out.columns.index("v")
+
+        def strip_v(rows):
+            return sorted(
+                (tuple(x for i, x in enumerate(r) if i != v_at) for r in rows),
+                key=repr,
+            )
+
+        got = strip_v(tuple(r) for r in out.collect())
+        assert got == strip_v(want_rows) and got
+        if op in ("fraction", "mixture"):
+            kept = {r[v_at] for r in want_rows}
+            assert any(
+                {2 * i, 2 * i + 1}.isdisjoint(kept) for i in range(n // 2)
+            )
+    finally:
+        spark.conf.set(key, old)
+        release_dedup_caches()
