@@ -8,6 +8,13 @@ group with *bounded reducer fan-in* at every level, which is what keeps
 a global or hot-key merge from funnelling 100k partials into a single
 python worker.
 
+Every keyed level's exchange is sized from the bytes it moves, as
+Spark's own aggregate exchange is: hash partitioning at
+``spark.sql.shuffle.partitions``, coalesced by adaptive execution, so a
+small aggregate merges (and is read) in one Python task, not one per
+core.  Only the salt-level count is taken from the partials' partition
+count.
+
 Salt derivation is deterministic at every level (advisor finding,
 round 1): level 0 uses ``spark_partition_id() % n_salts`` — a hard bound
 because each stage-1 partition contributes at most one partial per group —
@@ -56,7 +63,6 @@ def grouped_merge(
     group_cols: list[str],
     value_fields: Sequence[StructField],
     merge: TaskMerge,
-    n_upstream: int | None = None,
 ) -> DataFrame:
     """One-row-per-group merge via repartition + one task-level merge.
 
@@ -65,6 +71,19 @@ def grouped_merge(
     partition instead of one per group, and no per-group work outside
     ``merge``.  With no group columns every row goes to one partition
     and forms one group.
+
+    The keyed exchange is sized as Spark sizes its own ``groupBy``
+    exchange: ``repartition(*group_cols)`` hashes into
+    ``spark.sql.shuffle.partitions`` partitions, and adaptive execution
+    (on by default) coalesces them by the bytes they hold, so a handful
+    of partial rows is merged and read in one Python task instead of one
+    per core.  A coalesced read only joins whole hash partitions, so
+    each group still lands in one task.  With adaptive execution off the
+    width is ``spark.sql.shuffle.partitions``, and so it is for a
+    persisted result unless
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is
+    true (``session.session_config`` sets it).  Nothing runs while the
+    DataFrame is built.
 
     The output is ``df``'s ``group_cols`` fields + ``value_fields``.
     ``merge`` returns the value arrays except ``n_rows``: when
@@ -88,25 +107,7 @@ def grouped_merge(
     )
     if group_cols:
         df = df.withColumns(dict(zip(group_cols, group_keys(df, group_cols))))
-        # Merge-exchange width is DERIVED from the upstream partition
-        # count instead of pinned to spark.sql.shuffle.partitions: the
-        # partial tables carry at most (upstream partitions x groups)
-        # rows of O(compression) bytes, so min(shuffle.partitions,
-        # upstream) reducers is always enough — at scale upstream >>
-        # shuffle.partitions and the width is unchanged, while a small
-        # input stops scheduling one python-worker task per configured
-        # shuffle partition for a handful of partial rows (guide §2.2:
-        # size the exchange from the data, not the core count).
-        try:
-            n_shuffle = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            n_shuffle = df.sparkSession.sparkContext.defaultParallelism
-        if n_upstream is None:
-            n_upstream = df.rdd.getNumPartitions()
-        n_target = max(1, min(n_shuffle, n_upstream))
-        dist = df.repartition(n_target, *[F.col(c) for c in group_cols])
+        dist = df.repartition(*[F.col(c) for c in group_cols])
     else:
         # one group on one task; no exchange when the input already is a
         # single partition (e.g. the previous merge level's output), the
@@ -210,17 +211,8 @@ def tree_merge(
                 by + ["_salt"],
                 value_fields,
                 merge,
-                n_upstream=n_parts,
             )
             n_parts = n_salts
 
-    # final level (a global aggregate is one group on one reducer); after
-    # salt levels the upstream width is the last level's reducer count,
-    # fanin=None probes the plan directly
-    return grouped_merge(
-        partials,
-        by,
-        value_fields,
-        merge,
-        n_upstream=n_parts if fanin else None,
-    )
+    # final level (a global aggregate is one group on one reducer)
+    return grouped_merge(partials, by, value_fields, merge)

@@ -30,7 +30,12 @@ Scale notes (100 TB / 1000 executors):
     an input under cores x 16 MB is coalesced to one task per core
     (``_batch.partial_stage``), a larger one keeps its scan partitions;
   - stage 2 shuffles only digests, never raw data; with S salts a hot key
-    is spread over S reducers before the final S-way merge;
+    is spread over S reducers before the final S-way merge; each level's
+    exchange is sized like Spark's own aggregate exchange (hash
+    partitions at ``spark.sql.shuffle.partitions``, coalesced by
+    adaptive execution from the bytes shuffled), so a few partial rows
+    merge in one task and a large merge gets as many tasks as its bytes
+    need;
   - the scan keeps Catalyst pushdown because we ``select``/``where``
     before entering Python, and Arrow moves batches columnar.
 """

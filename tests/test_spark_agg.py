@@ -449,6 +449,114 @@ def test_stage1_runs_at_most_one_task_per_core(spark):
     assert build_partials(stream, "v", ["k"]).isStreaming
 
 
+def _run_in_group(spark, group, fn):
+    """Run ``fn()`` with its jobs in job group ``group``; return its
+    result and, for each job of the group in id order, the task count
+    of every stage that ran (skipped stages left out)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), jsc.statusStore()
+    tasks = []
+    for job in sorted(tracker.getJobIdsForGroup(group)):
+        stages = [store.lastStageAttempt(s) for s in tracker.getJobInfo(job).stageIds]
+        tasks.append(
+            [s.numTasks() for s in stages if s.status().toString() != "SKIPPED"]
+        )
+    return out, tasks
+
+
+def test_merge_builds_start_no_job_over_an_aggregated_input(spark):
+    """Building a one-level merge over an input with a shuffle of its own
+    (a ``groupBy().agg()``) runs nothing: the merge exchange is sized
+    by adaptive execution at run time, not from a partition-count probe
+    that would run the upstream stages while the DataFrame is built."""
+    from go_tdigest_spark.operators import exact_percentiles
+
+    def agg_input():
+        return (
+            spark.range(0, 20_000, 1, 4)
+            .groupBy((F.col("id") % 500).alias("u"))
+            .agg(F.count("*").alias("n"))
+            .selectExpr("u % 5 AS k", "CAST(n * u AS DOUBLE) AS v")
+        )
+
+    builds = {
+        "exact_percentiles": lambda: exact_percentiles(agg_input(), "v", [0.5], by=["k"]),
+        "tdigest_agg": lambda: tdigest_agg(agg_input(), "v", by=["k"], fanin=None),
+    }
+    for name, build in builds.items():
+        df, jobs = _run_in_group(spark, f"build:{name}", build)
+        assert jobs == [], (name, jobs)
+        assert df.count() == 5, name
+
+
+def test_merge_exchange_is_sized_by_adaptive_execution(spark):
+    """The merge exchange of a keyed level is Spark's own aggregate
+    exchange: hash partitioning on the key at
+    spark.sql.shuffle.partitions (``REPARTITION_BY_COL``), which adaptive
+    execution coalesces by bytes, so a small grouped aggregate merges and
+    is read in ONE task however many cores run stage 1.  Results equal a
+    one-partition build with adaptive execution on and off."""
+    import re
+
+    cores = spark.sparkContext.defaultParallelism
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = 40_000
+
+    def src(parts):
+        return spark.range(0, n, 1, parts).selectExpr(
+            "id % 4 AS k", "CAST((id * 7919) % 10007 AS DOUBLE) AS v"
+        )
+
+    def read(parts):
+        return tdigest_agg(src(parts), "v", by=["k"]).select(
+            "k", "n_rows", "total_weight", td_count("digest").alias("c"),
+            td_quantile("digest", 0.0).alias("lo"),
+            td_quantile("digest", 1.0).alias("hi"),
+        )
+
+    def by_key(rows):
+        return {r["k"]: tuple(r)[1:] for r in rows}
+
+    wide = read(3 * cores)
+    plan = wide._jdf.queryExecution().sparkPlan().toString()
+    exchanges = re.findall(r"Exchange (\w+)\((\w+)#\d+L?, (\d+)\), (\w+)", plan)
+    assert exchanges == [
+        ("hashpartitioning", "k", str(n_shuffle), "REPARTITION_BY_COL")
+    ], plan
+
+    rows, jobs = _run_in_group(spark, "merge-width", wide.collect)
+    # the last job is the merge + read stage, read from one coalesced
+    # shuffle partition
+    assert jobs[-1] == [1], jobs
+    expect = by_key(read(1).collect())
+    assert len(expect) == 4 and sum(e[0] for e in expect.values()) == n
+    assert by_key(rows) == expect
+
+    # a persisted result's last shuffle is coalesced too, because the
+    # session lets adaptive execution change a cached plan's partitioning
+    cached = tdigest_agg(src(3 * cores), "v", by=["k"]).persist()
+    try:
+        assert cached.count() == 4
+        assert cached.rdd.getNumPartitions() == 1
+    finally:
+        cached.unpersist()
+
+    key = "spark.sql.adaptive.enabled"
+    spark.conf.set(key, "false")
+    try:
+        assert by_key(read(3 * cores).collect()) == expect
+    finally:
+        spark.conf.unset(key)
+    assert spark.conf.get(key) == "true"
+
+
 def test_grouped_merge_exact_keys_beyond_2_53_with_nulls(spark):
     """Advisor r3 (medium): the merge stage's pandas-side split must
     group on EXACT key values.  A long group column containing ANY null
