@@ -1,5 +1,8 @@
-"""Shared Arrow-batch helpers, and the stage-1 driver every partial
-builder runs on (``partial_stage``)."""
+"""Shared Arrow-batch helpers and two ``mapInArrow`` passes: the
+row-wise pass every stateless kernel runs on (``map_rows``) and the
+stage-1 pass every partial builder runs on (``partial_stage``).  Every
+output schema is a Spark ``StructType``; its Arrow twin comes from
+``_arrow_schema``."""
 
 from __future__ import annotations
 
@@ -142,6 +145,81 @@ def _arrow_schema(schema: StructType) -> pa.Schema:
     from pyspark.sql.pandas.types import to_arrow_type
 
     return pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in schema])
+
+
+def _typed(values, typ: pa.DataType) -> pa.Array:
+    """``values`` (an Arrow or NumPy array or a list) as Arrow ``typ``."""
+    if isinstance(values, pa.Array):
+        return values.cast(typ)
+    return pa.array(values, type=typ)
+
+
+def map_rows(
+    df: DataFrame,
+    out: Sequence[str | tuple[str, str] | StructField],
+    fn: Callable[[pa.RecordBatch], tuple[object, dict]],
+    drop_null: str | None = None,
+) -> DataFrame:
+    """The one row-wise ``mapInArrow`` pass: each output batch is a
+    function of one input batch of ``df``.
+
+    ``out`` lists the output columns.  A ``StructField`` is a new column
+    computed by ``fn``.  A name, or a ``(name, src)`` pair, passes a
+    ``df`` column through (renamed to ``name``): it keeps its input
+    ``StructField`` and its Arrow buffers, and is never cast.
+
+    ``fn(batch)`` returns ``(sel, cols)``: ``sel`` picks the output rows
+    (``None`` for all, a boolean mask or row indices) and is applied to
+    the pass-through columns; ``cols`` maps each new column's name to
+    its values for those rows, converted here to the declared type.
+    Empty batches never reach ``fn``, and a batch that selects no row
+    yields nothing.  ``drop_null`` drops the rows where that column is
+    NULL before the pass; the schema is read from ``df`` as given.
+
+    Four ``mapInArrow`` shapes stay out, because their output batch is
+    not a function of one input batch: ``partial_stage`` groups rows
+    across a task's batches, ``_tree.grouped_merge`` merges a whole
+    partition, ``pack._with_prefix`` carries a prefix across batches,
+    and the ``sources`` generators turn one block id into one generated
+    block.
+    """
+    new = [isinstance(o, StructField) for o in out]
+    fields, srcs = [], []
+    for o in out:
+        if isinstance(o, StructField):
+            fields.append(o)
+            continue
+        name, src = (o, o) if isinstance(o, str) else o
+        srcs.append(df.columns.index(src))
+        f = df.schema.fields[srcs[-1]]
+        fields.append(StructField(name, f.dataType, f.nullable, f.metadata))
+    schema = StructType(fields)
+    types = _arrow_schema(schema).types
+    if drop_null is not None:
+        df = df.where(F.col(drop_null).isNotNull())
+
+    def rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            sel, cols = fn(batch)
+            kept = batch.select(srcs)
+            if sel is not None:
+                sel = np.asarray(sel)
+                kept = (
+                    kept.filter(pa.array(sel))
+                    if sel.dtype == bool
+                    else kept.take(pa.array(sel, type=pa.int64()))
+                )
+            passed = iter(kept.columns)
+            arrays = [
+                _typed(cols[f.name], t) if is_new else next(passed)
+                for f, t, is_new in zip(fields, types, new)
+            ]
+            if len(arrays[0]):
+                yield pa.RecordBatch.from_arrays(arrays, names=schema.names)
+
+    return df.mapInArrow(rows, schema)
 
 
 def partial_stage(

@@ -22,8 +22,16 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
-from ._batch import top_k
+from ._batch import map_rows, top_k
 
 
 def hyperplanes(n_planes: int, dim: int) -> np.ndarray:
@@ -198,6 +206,32 @@ def lsh_signature_col(vec_col: str, n_planes: int, dim: int):
     return F.expr(" + ".join(bit_terms))
 
 
+def _vector_codes(df, vec_col, id_col, dim, code, code_fn, code_first=False):
+    """The one vector-code pass of ``lsh_features`` and ``ivf_assign``:
+    ``nn_id, cvec, cnrm`` (id, vector, sequential norm) plus the ``code``
+    column (first or last), ``code_fn(mat)`` of each batch's ``(n, dim)``
+    matrix.  NULL and zero-norm vectors are dropped (no cosine is
+    defined for them)."""
+
+    def codes(batch):
+        mat = _vec_matrix(batch.column(1), batch.num_rows, dim)
+        # SEQUENTIAL fold, not numpy pairwise .sum(axis=1): the exactness
+        # contracts (lsh probe_all and ivf nprobe=n_cells == brute force,
+        # oracle hash-gated) need norms bit-identical to the _norm_frag
+        # expression order — see _seq_sq_norm
+        nrm = _seq_sq_norm(mat)
+        keep = nrm > 0
+        return keep, {"cnrm": nrm[keep], code.name: code_fn(mat)[keep]}
+
+    cols = [("nn_id", id_col), ("cvec", vec_col), StructField("cnrm", DoubleType())]
+    return map_rows(
+        df.select(id_col, vec_col),
+        [code, *cols] if code_first else [*cols, code],
+        codes,
+        drop_null=vec_col,
+    )
+
+
 def lsh_features(
     df: DataFrame,
     vec_col: str,
@@ -216,43 +250,16 @@ def lsh_features(
     The per-element dot order differs from the expression form only in
     float summation order; tests pin bucket equality on real data.
     """
-    import pyarrow as pa
-
     _check_n_planes(n_planes)
     planes = hyperplanes(n_planes, dim)  # (n_planes, dim)
     pow2 = (1 << np.arange(n_planes, dtype=np.int64)).astype(np.float64)
-    id_dt = df.select(id_col).schema.fields[0].dataType.simpleString()
-    vec_dt = df.select(vec_col).schema.fields[0].dataType.simpleString()
-    pruned = df.select(id_col, vec_col).where(F.col(vec_col).isNotNull())
 
-    def gen(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            vec_arr = batch.column(1)
-            mat = _vec_matrix(vec_arr, n, dim)
-            # SEQUENTIAL fold, not numpy pairwise .sum(axis=1): the
-            # probe_all exactness contract (lsh_ann_topk == brute
-            # force, driver hash-gated) needs norms bit-identical to
-            # the _norm_frag expression order — see _seq_sq_norm
-            nrm = _seq_sq_norm(mat)
-            bits = (mat @ planes.T) >= 0.0  # (n, n_planes) BLAS
-            bucket = (bits.astype(np.float64) @ pow2).astype(np.int64)
-            keep = nrm > 0
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).filter(pa.array(keep)),
-                    vec_arr.filter(pa.array(keep)),
-                    pa.array(nrm[keep], type=pa.float64()),
-                    pa.array(bucket[keep], type=pa.int64()),
-                ],
-                names=["nn_id", "cvec", "cnrm", "bucket"],
-            )
+    def bucket(mat):
+        bits = (mat @ planes.T) >= 0.0  # (n, n_planes) BLAS
+        return (bits.astype(np.float64) @ pow2).astype(np.int64)
 
-    return pruned.mapInArrow(
-        gen, f"nn_id {id_dt}, cvec {vec_dt}, cnrm double, bucket long"
-    )
+    code = StructField("bucket", LongType())
+    return _vector_codes(df, vec_col, id_col, dim, code, bucket)
 
 
 def cosine_rerank(
@@ -276,37 +283,24 @@ def cosine_rerank(
     so it is bit-identical to the expression twin's fold order — the
     golden test pins equality, not closeness.
     """
-    import pyarrow as pa
-
-    keep_dts = [
-        df.select(c).schema.fields[0].dataType.simpleString() for c in keep_cols
-    ]
     k = len(keep_cols)
-    pruned = df.select(*keep_cols, vec_a, vec_b, nrm_a, nrm_b)
 
-    def gen(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            A = _vec_matrix(batch.column(k), n, dim)
-            B = _vec_matrix(batch.column(k + 1), n, dim)
-            acc = np.zeros(n, dtype=np.float64)
-            for j in range(dim):
-                acc += A[:, j] * B[:, j]
-            na = batch.column(k + 2).to_numpy(zero_copy_only=False)
-            nb = batch.column(k + 3).to_numpy(zero_copy_only=False)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(k)]
-                + [pa.array(acc / (na * nb), type=pa.float64())],
-                names=list(keep_cols) + ["_cos_raw"],
-            )
+    def cosines(batch):
+        n = batch.num_rows
+        A = _vec_matrix(batch.column(k), n, dim)
+        B = _vec_matrix(batch.column(k + 1), n, dim)
+        acc = np.zeros(n, dtype=np.float64)
+        for j in range(dim):
+            acc += A[:, j] * B[:, j]
+        na = batch.column(k + 2).to_numpy(zero_copy_only=False)
+        nb = batch.column(k + 3).to_numpy(zero_copy_only=False)
+        return None, {"_cos_raw": acc / (na * nb)}
 
-    schema = (
-        ", ".join(f"{c} {dt}" for c, dt in zip(keep_cols, keep_dts))
-        + ", _cos_raw double"
+    return map_rows(
+        df.select(*keep_cols, vec_a, vec_b, nrm_a, nrm_b),
+        [*keep_cols, StructField("_cos_raw", DoubleType())],
+        cosines,
     )
-    return pruned.mapInArrow(gen, schema)
 
 
 def lsh_ann_topk(
@@ -462,39 +456,13 @@ def ivf_assign(
     nearest centroid's cell (max cosine; ties to the lowest cell id via
     argmax).  One ``V @ C.T`` BLAS product per Arrow batch — the same
     vectorized shape as lsh_features.  Zero-norm vectors are dropped."""
-    import pyarrow as pa
-
     C = np.asarray(centroids, dtype=np.float64)
-    dim = C.shape[1]
-    id_dt = df.select(id_col).schema.fields[0].dataType.simpleString()
-    vec_dt = df.select(vec_col).schema.fields[0].dataType.simpleString()
-    pruned = df.select(id_col, vec_col).where(F.col(vec_col).isNotNull())
 
-    def gen(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            vec_arr = batch.column(1)
-            mat = _vec_matrix(vec_arr, n, dim)
-            # sequential norm (see _seq_sq_norm): cnrm feeds the
-            # exactness-path cosine, so it must match _norm_frag's fold
-            nrm = _seq_sq_norm(mat)
-            keep = nrm > 0
-            cell = np.argmax(mat @ C.T, axis=1).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cell[keep], type=pa.int32()),
-                    batch.column(0).filter(pa.array(keep)),
-                    vec_arr.filter(pa.array(keep)),
-                    pa.array(nrm[keep], type=pa.float64()),
-                ],
-                names=["cell", "nn_id", "cvec", "cnrm"],
-            )
+    def cell(mat):
+        return np.argmax(mat @ C.T, axis=1)
 
-    return pruned.mapInArrow(
-        gen, f"cell int, nn_id {id_dt}, cvec {vec_dt}, cnrm double"
-    )
+    code = StructField("cell", IntegerType())
+    return _vector_codes(df, vec_col, id_col, C.shape[1], code, cell, True)
 
 
 def ivf_ann_topk(
@@ -543,7 +511,6 @@ def ivf_ann_topk(
         .select(id_col, vec_col)
         .collect()
     )
-    id_dt = df.select(id_col).schema.fields[0].dataType.simpleString()
     probe_rows = []
     for r in qrows:
         if r[1] is None:
@@ -564,10 +531,14 @@ def ivf_ann_topk(
         # stable sort: cosine ties resolve to the lower cell id
         for c in np.argsort(-sims, kind="stable")[:nprobe]:
             probe_rows.append((r[0], int(c), v.tolist(), nrm))
-    probes = spark.createDataFrame(
-        probe_rows,
-        f"query_id {id_dt}, cell int, qvec array<double>, qnrm double",
+    id_field = df.schema[id_col]
+    probe_schema = (
+        StructType([StructField("query_id", id_field.dataType, id_field.nullable)])
+        .add("cell", IntegerType())
+        .add("qvec", ArrayType(DoubleType()))
+        .add("qnrm", DoubleType())
     )
+    probes = spark.createDataFrame(probe_rows, probe_schema)
     # a corpus vector lives in exactly ONE cell and each query probes
     # distinct cells, so a (query, candidate) pair appears at most once
     # — no dedup pass needed

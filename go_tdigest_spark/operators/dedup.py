@@ -29,7 +29,10 @@ import threading
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField
 from pyspark.sql.window import Window
+
+from ._batch import map_rows, poly_hash_batch
 
 MH_PRIME = 2_147_483_647  # 2^31 - 1
 FP_MOD = 1_000_000_007
@@ -191,44 +194,32 @@ def shingle_hash_frag(var: str, dialect: str, mod: int = FP_MOD) -> str:
 # --------------------------------------------------------- gram kernels
 
 
-def _gram_kernel(df, text_col, id_col, grams, mod, out_ddl, emit) -> DataFrame:
-    """The one tokenize-and-hash pass of every Arrow text kernel.
+def _gram_kernel(df, text_col, id_col, grams, mod, fields, emit) -> DataFrame:
+    """The one tokenize-and-hash step of every Arrow text kernel, run
+    on ``_batch.map_rows`` over the non-NULL ``(id, text)`` rows of
+    ``df``; the output is ``doc`` (the id) plus ``fields``.
 
-    A ``mapInArrow`` over the non-NULL ``(id, text)`` rows of ``df``.  Per
-    batch it calls ``grams(text)`` for every row and hashes all of the
-    batch's grams with ONE ``poly_hash_batch(..., FP_BASE, mod)``.  Then
-    ``emit(row, h, lens)`` reduces them: ``row`` is the batch row of each
-    gram (ascending), ``h`` its hash, ``lens`` the gram count of each
-    batch row.  It returns ``(rows, cols)``: the batch row of each output
-    row, and ``{name: array}`` for the ``out_ddl`` columns after ``doc``.
-    A batch with no output rows yields nothing.
-
-    ``doc`` is a ``take(rows)`` of the input id column, which keeps the
-    id's declared type (a rebuilt Python list would infer int64 for int32
-    ids).
+    Per batch it calls ``grams(text)`` for every row and hashes all of
+    the batch's grams with ONE ``poly_hash_batch(..., FP_BASE, mod)``.
+    Then ``emit(row, h, lens)`` reduces them: ``row`` is the batch row of
+    each gram (ascending), ``h`` its hash, ``lens`` the gram count of
+    each batch row.  It returns ``(rows, cols)``: the batch row of each
+    output row (the shell takes the ``doc`` of each), and ``{name:
+    array}`` for ``fields``.
     """
-    import pyarrow as pa
+    def hashed(batch):
+        per_row = [grams(t) for t in batch.column(1).to_pylist()]
+        lens = np.fromiter(map(len, per_row), dtype=np.int64, count=len(per_row))
+        h = poly_hash_batch([g for gs in per_row for g in gs], FP_BASE, mod)
+        row = np.repeat(np.arange(lens.size, dtype=np.int64), lens)
+        return emit(row, h, lens)
 
-    id_dt = df.select(id_col).schema.fields[0].dataType.simpleString()
-    pruned = df.select(id_col, text_col).where(F.col(text_col).isNotNull())
-
-    def gen(batches):
-        from ._batch import poly_hash_batch
-
-        for batch in batches:
-            per_row = [grams(t) for t in batch.column(1).to_pylist()]
-            lens = np.fromiter(map(len, per_row), dtype=np.int64, count=len(per_row))
-            h = poly_hash_batch([g for gs in per_row for g in gs], FP_BASE, mod)
-            row = np.repeat(np.arange(lens.size, dtype=np.int64), lens)
-            rows, cols = emit(row, h, lens)
-            if len(rows):
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(0).take(pa.array(rows, type=pa.int64()))]
-                    + [pa.array(c) for c in cols.values()],
-                    names=["doc", *cols],
-                )
-
-    return pruned.mapInArrow(gen, f"doc {id_dt}, {out_ddl}")
+    return map_rows(
+        df.select(id_col, text_col),
+        [("doc", id_col), *fields],
+        hashed,
+        drop_null=text_col,
+    )
 
 
 def _segment_starts(lens: np.ndarray) -> np.ndarray:
@@ -284,7 +275,8 @@ def shingle_hashes(
         return ds[keep], {"s": hs[keep]}
 
     return _gram_kernel(
-        df, text_col, id_col, lambda t: py_shingles(t, n), SH_MOD, "s long", emit
+        df, text_col, id_col, lambda t: py_shingles(t, n), SH_MOD,
+        [StructField("s", LongType())], emit,
     )
 
 
@@ -304,7 +296,7 @@ def positional_shingle_hashes(
 
     return _gram_kernel(
         df, text_col, id_col, lambda t: py_shingles(t, n), SH_MOD,
-        "pos long, g long", emit,
+        [StructField("pos", LongType()), StructField("g", LongType())], emit,
     )
 
 
@@ -498,7 +490,7 @@ def minhash_signatures(
 
     return _gram_kernel(
         df, text_col, id_col, lambda t: py_shingles(t, n), FP_MOD,
-        "sig array<long>", emit,
+        [StructField("sig", ArrayType(LongType()))], emit,
     )
 
 
@@ -1087,7 +1079,7 @@ def simhash_signatures(
 
     return _gram_kernel(
         df, text_col, id_col, lambda t: set(py_words(t)), FP_MOD,
-        "simhash long", emit,
+        [StructField("simhash", LongType())], emit,
     )
 
 
@@ -1440,7 +1432,8 @@ def repetition_stats(
 
     return _gram_kernel(
         df, text_col, id_col, lambda t: py_shingles(t, n), SH_MOD,
-        "n_grams long, n_distinct long, top_count long", emit,
+        [StructField(c, LongType()) for c in ("n_grams", "n_distinct", "top_count")],
+        emit,
     )
 
 

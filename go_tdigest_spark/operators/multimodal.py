@@ -6,91 +6,79 @@ UDF signatures — is real and tested; the actual media decode is stubbed
 behind ``NotImplementedError`` (no image/audio libraries exist in this
 container) with a clearly-marked deterministic fake for tests.
 
-All feature extraction runs in ``mapInArrow`` so payload bytes stay in
-Arrow buffers until the numpy view; nothing is exploded row-by-row
-through Python objects.
+Every kernel is one row-wise Arrow pass (``_batch.map_rows``) over the
+non-NULL ``(id, payload)`` rows: payload bytes stay in Arrow buffers
+until the numpy view, and the id comes out as ``doc`` with its input
+field.  Each kernel keeps only its per-batch math.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, IntegerType, LongType, StructField
+
+from ._batch import map_rows
 
 CHECKSUM_MOD = 2_147_483_647
+
+
+def _payload_pass(df, bin_col, id_col, fields, fn) -> DataFrame:
+    """``doc`` (the id) plus ``fields``, computed by ``fn(payload)`` from
+    each batch's non-NULL payload column."""
+    return map_rows(
+        df.select(id_col, bin_col),
+        [("doc", id_col), *fields],
+        lambda batch: (None, fn(batch.column(1))),
+        drop_null=bin_col,
+    )
 
 
 def binary_features(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     """Per-payload metadata: byte length, additive checksum, head/tail
     bytes.  Vectorized over each Arrow batch (single numpy pass over the
     concatenated value buffer, sliced by offsets)."""
-    from pyspark.sql.pandas.types import to_arrow_type
 
-    id_field = df.select(id_col).schema.fields[0]
-    id_dt = id_field.dataType.simpleString()
-    out_schema = pa.schema(
-        [
-            # derive the Arrow type from the ACTUAL Spark id type: a
-            # bigint-or-string assumption made from_arrays silently cast
-            # int/short ids to strings while mapInArrow declared the
-            # original type — executor-side schema mismatch
-            pa.field("doc", to_arrow_type(id_field.dataType)),
-            pa.field("n_bytes", pa.int64()),
-            pa.field("checksum", pa.int64()),
-            pa.field("head_byte", pa.int32()),
-            pa.field("tail_byte", pa.int32()),
-        ]
-    )
-    pruned = df.select(id_col, bin_col).where(F.col(bin_col).isNotNull())
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0)
-            payload = batch.column(1)
-            n = len(payload)
-            # binary arrays: contiguous value buffer + offsets
-            data_buf = payload.buffers()[2]
-            buf = (
-                np.frombuffer(data_buf, dtype=np.uint8)
-                if data_buf is not None
-                else np.zeros(0, dtype=np.uint8)
+    def features(payload):
+        n = len(payload)
+        # binary arrays: contiguous value buffer + offsets
+        data_buf = payload.buffers()[2]
+        buf = (
+            np.frombuffer(data_buf, dtype=np.uint8)
+            if data_buf is not None
+            else np.zeros(0, dtype=np.uint8)
+        )
+        offsets = np.frombuffer(
+            payload.buffers()[1], dtype=np.int32, count=n + 1,
+            offset=payload.offset * 4,
+        ).astype(np.int64)
+        lengths = np.diff(offsets)
+        prefix = np.zeros(buf.size + 1, dtype=np.int64)
+        np.cumsum(buf, dtype=np.int64, out=prefix[1:])
+        csum = (prefix[offsets[1:]] - prefix[offsets[:-1]]) % CHECKSUM_MOD
+        if buf.size:
+            head = np.where(
+                lengths > 0, buf[np.minimum(offsets[:-1], buf.size - 1)], -1
             )
-            offsets = np.frombuffer(
-                payload.buffers()[1], dtype=np.int32, count=n + 1,
-                offset=payload.offset * 4,
-            ).astype(np.int64)
-            lengths = np.diff(offsets)
-            prefix = np.zeros(buf.size + 1, dtype=np.int64)
-            np.cumsum(buf, dtype=np.int64, out=prefix[1:])
-            csum = (prefix[offsets[1:]] - prefix[offsets[:-1]]) % CHECKSUM_MOD
-            if buf.size:
-                head = np.where(
-                    lengths > 0, buf[np.minimum(offsets[:-1], buf.size - 1)], -1
-                ).astype(np.int32)
-                tail = np.where(
-                    lengths > 0, buf[np.maximum(offsets[1:] - 1, 0)], -1
-                ).astype(np.int32)
-            else:
-                head = np.full(n, -1, dtype=np.int32)
-                tail = np.full(n, -1, dtype=np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(lengths, type=pa.int64()),
-                    pa.array(csum, type=pa.int64()),
-                    pa.array(head, type=pa.int32()),
-                    pa.array(tail, type=pa.int32()),
-                ],
-                schema=out_schema,
-            )
+            tail = np.where(lengths > 0, buf[np.maximum(offsets[1:] - 1, 0)], -1)
+        else:
+            head = tail = np.full(n, -1)
+        return {
+            "n_bytes": lengths,
+            "checksum": csum,
+            "head_byte": head,
+            "tail_byte": tail,
+        }
 
-    return pruned.mapInArrow(
-        gen,
-        f"doc {id_dt}, n_bytes long, checksum long, head_byte int, tail_byte int",
-    )
+    fields = [
+        StructField("n_bytes", LongType()),
+        StructField("checksum", LongType()),
+        StructField("head_byte", IntegerType()),
+        StructField("tail_byte", IntegerType()),
+    ]
+    return _payload_pass(df, bin_col, id_col, fields, features)
 
 
 def decode_media(
@@ -113,32 +101,18 @@ def decode_media(
             f"{media} decoding requires media libraries not present in this "
             "environment; pass fake=True for the deterministic test double"
         )
-    id_dt = df.select(id_col).schema.fields[0].dataType.simpleString()
-    pruned = df.select(id_col, bin_col).where(F.col(bin_col).isNotNull())
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0)
-            lengths = pa.compute.binary_length(batch.column(1)).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            # FAKE decode: dims derived from byte length, deterministic
-            width = (lengths % 640 + 1).astype(np.int32)
-            height = (lengths % 480 + 1).astype(np.int32)
-            channels = np.full(len(lengths), 3, dtype=np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(width),
-                    pa.array(height),
-                    pa.array(channels),
-                ],
-                names=["doc", "width", "height", "channels"],
-            )
+    def decode(payload):
+        lengths = pc.binary_length(payload).to_numpy(zero_copy_only=False)
+        # FAKE decode: dims derived from byte length, deterministic
+        return {
+            "width": lengths % 640 + 1,
+            "height": lengths % 480 + 1,
+            "channels": np.full(len(lengths), 3),
+        }
 
-    return pruned.mapInArrow(
-        gen, f"doc {id_dt}, width int, height int, channels int"
-    )
+    fields = [StructField(c, IntegerType()) for c in ("width", "height", "channels")]
+    return _payload_pass(df, bin_col, id_col, fields, decode)
 
 
 def frame_sample(df: DataFrame, bin_col: str, id_col: str, stride: int = 16) -> DataFrame:
@@ -148,19 +122,9 @@ def frame_sample(df: DataFrame, bin_col: str, id_col: str, stride: int = 16) -> 
         # fail on the driver: stride=0 would raise per-row inside
         # executors and a negative stride silently REVERSES the payload
         raise ValueError(f"stride must be >= 1, got {stride}")
-    id_dt = df.select(id_col).schema.fields[0].dataType.simpleString()
-    pruned = df.select(id_col, bin_col).where(F.col(bin_col).isNotNull())
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0)
-            sampled = [
-                None if v is None else bytes(bytes(v)[::stride])
-                for v in batch.column(1).to_pylist()
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(sampled, type=pa.binary())],
-                names=["doc", "frames"],
-            )
+    def sample(payload):
+        return {"frames": [v[::stride] for v in payload.to_pylist()]}
 
-    return pruned.mapInArrow(gen, f"doc {id_dt}, frames binary")
+    fields = [StructField("frames", BinaryType())]
+    return _payload_pass(df, bin_col, id_col, fields, sample)

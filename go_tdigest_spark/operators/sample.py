@@ -53,10 +53,9 @@ from pyspark.sql.types import (
     ShortType,
     StringType,
     StructField,
-    StructType,
 )
 
-from ._batch import top_k
+from ._batch import map_rows, top_k
 from .dedup import FP_BASE, SH_MOD, shingle_hash_frag
 from .pack import _range_phase1, _with_prefix
 
@@ -174,42 +173,27 @@ def _hashed(
     df: DataFrame, key_col: str, seed: int, field: StructField | None,
     emit, ctx: str,
 ) -> DataFrame:
-    """The seeded key-hash pass every sampling operator runs: one
-    ``mapInArrow`` that skips empty batches, hashes each batch's key
-    column once and yields ``emit(batch, h)``.  With ``field=None``
-    that is the batch to keep (a filter of it) and the schema is
-    ``df``'s; with a ``field``, ``emit`` returns the field's values,
-    appended as the last column.  The key type is checked here, and an
-    input column named like ``field`` is refused: the operator would
-    shadow or drop it."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-
+    """The seeded key-hash pass every sampling operator runs, on
+    ``_batch.map_rows``: it hashes each batch's key column once and
+    calls ``emit(batch, h)``.  With ``field=None`` that returns the rows
+    to keep (a boolean mask) and the schema is ``df``'s; with a
+    ``field``, it returns the field's values, appended as the last
+    column.  The key type is checked here, and an input column named
+    like ``field`` is refused: the operator would shadow or drop it."""
     _check_key_type(df, key_col, ctx)
     key_idx = df.columns.index(key_col)
-    schema, typ = df.schema, None
-    if field is not None:
-        if field.name in df.columns:
-            raise ValueError(
-                f"{ctx}: input column {field.name!r} already exists; the "
-                "name is reserved for the output"
-            )
-        schema = StructType([*df.schema.fields, field])
-        typ = to_arrow_type(field.dataType)
+    if field is not None and field.name in df.columns:
+        raise ValueError(
+            f"{ctx}: input column {field.name!r} already exists; the "
+            "name is reserved for the output"
+        )
 
-    def hash_pass(batches):
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            out = emit(batch, _batch_key_hashes(batch, key_idx, seed))
-            if typ is not None:
-                out = pa.RecordBatch.from_arrays(
-                    [*batch.columns, pa.array(out, type=typ)],
-                    names=[*batch.schema.names, field.name],
-                )
-            yield out
+    def hash_pass(batch):
+        out = emit(batch, _batch_key_hashes(batch, key_idx, seed))
+        return (out, {}) if field is None else (None, {field.name: out})
 
-    return df.mapInArrow(hash_pass, schema)
+    cols = [*df.columns] if field is None else [*df.columns, field]
+    return map_rows(df, cols, hash_pass)
 
 
 def _with_key_hash(
@@ -251,12 +235,11 @@ def sample_fraction(
     """
     if not 0.0 <= fraction <= 1.0:
         raise ValueError("fraction must be in [0, 1]")
-    import pyarrow as pa
 
     cutoff = int(round(fraction * _DENOM))
 
     def keep(batch, h):
-        return batch.filter(pa.array(h % _DENOM < cutoff))
+        return h % _DENOM < cutoff
 
     return _hashed(df, key_col, seed, None, keep, "sample_fraction")
 
@@ -322,7 +305,6 @@ def sample_mixture(
             raise ValueError(f"fraction for group {g!r} must be in [0, 1]")
     if not 0.0 <= default_fraction <= 1.0:
         raise ValueError("default_fraction must be in [0, 1]")
-    import pyarrow as pa
 
     cut = {g: int(round(f * _DENOM)) for g, f in fractions.items()}
     default_cut = int(round(default_fraction * _DENOM))
@@ -335,7 +317,7 @@ def sample_mixture(
             dtype=np.int64,
             count=len(groups),
         )
-        return batch.filter(pa.array(h % _DENOM < cuts))
+        return h % _DENOM < cuts
 
     return _hashed(df, key_col, seed, None, keep, "sample_mixture")
 

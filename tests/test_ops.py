@@ -736,8 +736,57 @@ def _ref_text_kernel(kernel: str, doc: int, text: str, n: int) -> list[tuple]:
     return [(doc, tuple(min((x * h + y) % MH_PRIME for h in fp) for x, y in zip(a, b)))]
 
 
+def _row_kernel_case(spark, kernel: str):
+    """(input, kernel call, id column, ids out) of one row-wise kernel on
+    int32 ids in one partition, in id order.  NULL payloads and vectors
+    are dropped before batching, so 2-row batches pair the zero-norm
+    vectors 2 and 3: that batch selects no row."""
+    from go_tdigest_spark.operators import ivf_assign, lsh_features
+    from go_tdigest_spark.operators.ann import cosine_rerank
+
+    if kernel in ("text_features", "binary", "media", "frame"):
+        texts = [None, "", "", "The cat, and the dog.", None, "東京 x", "a\x0bb", ""]
+        rows = [(i + 1, t, f"s{i % 2}") for i, t in enumerate(texts)]
+        df = spark.createDataFrame(rows, "doc_id int, text string, src string")
+        df = df.withColumn("payload", F.encode("text", "utf-8")).coalesce(1)
+        ids = [i for i, t, _ in rows if t is not None]
+        if kernel == "text_features":
+            run = lambda d: T.text_features(d, "text", "doc_id", ("src",))  # noqa: E731
+            return df, run, "doc_id", ids
+        fn = {
+            "binary": binary_features,
+            "media": lambda d, b, i: decode_media(d, b, i, fake=True),
+            "frame": lambda d, b, i: frame_sample(d, b, i, stride=2),
+        }[kernel]
+        return df, lambda d: fn(d, "payload", "doc_id"), "doc", ids
+    z, v = [0.0] * 4, [1.0, -2.0, 0.5, 3.0]
+    vecs = [None, z, z, v, v[::-1], z, None, [-x for x in v], z[:3] + [1.0], z]
+    rows = [(i + 1, x) for i, x in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "doc_id int, v array<double>").coalesce(1)
+    ids = [i for i, x in rows if x is not None and x != z]
+    if kernel == "lsh":
+        return df, lambda d: lsh_features(d, "v", "doc_id", 3, 4), "nn_id", ids
+    if kernel == "ivf":
+        cells = np.eye(4)[:3]
+        return df, lambda d: ivf_assign(d, "v", "doc_id", cells), "nn_id", ids
+    pairs = spark.createDataFrame(
+        [(a, b, v, x, 2.0, 3.0) for a, b, x in ((1, 2, v), (2, 3, v[::-1]), (3, 4, z))],
+        "a int, b int, va array<double>, vb array<double>, na double, nb double",
+    ).coalesce(1)
+    return (
+        pairs,
+        lambda d: cosine_rerank(d, ["a", "b"], "va", "vb", "na", "nb", 4),
+        "a",
+        [1, 2, 3],
+    )
+
+
 @pytest.mark.parametrize(
-    "kernel", ["shingle", "positional", "repetition", "minhash", "simhash"]
+    "kernel",
+    [
+        "shingle", "positional", "repetition", "minhash", "simhash",
+        "text_features", "binary", "media", "frame", "lsh", "ivf", "cosine",
+    ],
 )
 def test_text_kernels_edge_rows_vs_python(spark, kernel):
     """Every Arrow text kernel on hostile rows, int32 ids and 2-row Arrow
@@ -745,7 +794,14 @@ def test_text_kernels_edge_rows_vs_python(spark, kernel):
     reference (py_shingles + a per-gram polynomial hash), the id keeps
     its int32 type, NULL text emits nothing, and SimHash emits one row
     per non-NULL doc (0 when it has no words) where the others emit
-    nothing for a doc without grams."""
+    nothing for a doc without grams.
+
+    The other row-wise kernels (text features, the multimodal kernels,
+    the LSH and IVF vector codes, the cosine re-rank) run on NULL
+    payloads and vectors, zero-norm vectors and empty text: with 2-row
+    batches their rows equal a default-batch run, the id keeps its int32
+    type, and NULL payloads and NULL or zero-norm vectors emit nothing
+    (one batch selects no row)."""
     from pyspark.sql.types import IntegerType
 
     from go_tdigest_spark.operators import (
@@ -754,6 +810,27 @@ def test_text_kernels_edge_rows_vs_python(spark, kernel):
         shingle_hashes,
     )
 
+    def canon(out):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in out.collect()
+        )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if kernel not in ("shingle", "positional", "repetition", "minhash", "simhash"):
+        df, run, id_col, ids = _row_kernel_case(spark, kernel)
+        want = canon(run(df))
+        spark.conf.set(key, "2")
+        try:
+            out = run(df)
+            assert out.schema[id_col].dataType == IntegerType()
+            got = canon(out)
+        finally:
+            spark.conf.set(key, old)
+        assert got == want
+        assert sorted(r[out.columns.index(id_col)] for r in got) == ids
+        return
     fn = {
         "shingle": shingle_hashes,
         "positional": positional_shingle_hashes,
@@ -769,17 +846,12 @@ def test_text_kernels_edge_rows_vs_python(spark, kernel):
     # one partition in row order: the 2-row batches (2, 3) and (9, 10)
     # hold no grams at n=2
     df = spark.createDataFrame(rows, "doc_id int, text string").coalesce(1)
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
     spark.conf.set(key, "2")
     try:
         for n in (1, 2, 3) if kernel != "simhash" else (1,):
             out = fn(df, "text", "doc_id", n)
             assert out.schema["doc"].dataType == IntegerType()
-            got = sorted(
-                tuple(tuple(v) if isinstance(v, list) else v for v in r)
-                for r in out.collect()
-            )
+            got = canon(out)
             want = sorted(
                 r for d, t in rows if t is not None
                 for r in _ref_text_kernel(kernel, d, t, n)
@@ -789,6 +861,144 @@ def test_text_kernels_edge_rows_vs_python(spark, kernel):
             assert len(got) == sum(t is not None for _, t in rows)
     finally:
         spark.conf.set(key, old)
+
+
+def test_row_kernels_pass_any_column_name(spark):
+    """Pass-through columns keep their input field whatever their name: a
+    name that is not a DDL identifier (a space in it) comes back with
+    its type from text features' ``extra_cols`` and the re-rank's
+    ``keep_cols``."""
+    from pyspark.sql.types import ShortType, StringType
+
+    from go_tdigest_spark.operators.ann import cosine_rerank
+
+    df = spark.createDataFrame(
+        [(1, "the cat", "web", 3), (2, "a dog", "books", 4)],
+        "id int, text string, `src name` string, `n chars` smallint",
+    )
+    out = T.text_features(df, "text", "id", extra_cols=("src name", "n chars"))
+    assert out.schema["src name"].dataType == StringType()
+    assert out.schema["n chars"].dataType == ShortType()
+    assert sorted(r["src name"] for r in out.collect()) == ["books", "web"]
+
+    pairs = spark.createDataFrame(
+        [(1, 2, [1.0, 0.0], [1.0, 0.0], 1.0, 1.0)],
+        "`a id` smallint, `b id` smallint, va array<double>, vb array<double>, "
+        "na double, nb double",
+    )
+    cos = cosine_rerank(pairs, ["a id", "b id"], "va", "vb", "na", "nb", 2)
+    assert cos.schema["a id"].dataType == ShortType()
+    assert [tuple(r) for r in cos.collect()] == [(1, 2, 1.0)]
+
+
+# Output schema of every row-wise kernel; ``{id}`` is the input id's
+# nullability: pass-through columns keep their input field, new columns
+# are nullable unless the kernel declares otherwise.
+_ROW_KERNEL_SCHEMAS = {
+    "text_features": "doc_id BIGINT{id}, n_tokens INT, lang_guess STRING, "
+    "fingerprint BIGINT, source STRING, quality DOUBLE",
+    "binary_features": "doc BIGINT{id}, n_bytes BIGINT, checksum BIGINT, "
+    "head_byte INT, tail_byte INT",
+    "decode_media": "doc BIGINT{id}, width INT, height INT, channels INT",
+    "frame_sample": "doc BIGINT{id}, frames BINARY",
+    "lsh_features": "nn_id BIGINT{id}, cvec ARRAY<FLOAT>, cnrm DOUBLE, "
+    "bucket BIGINT",
+    "ivf_assign": "cell INT, nn_id BIGINT{id}, cvec ARRAY<FLOAT>, cnrm DOUBLE",
+    "cosine_rerank": "qa BIGINT{id}, qb BIGINT{id}, _cos_raw DOUBLE",
+    "shingle_hashes": "doc BIGINT{id}, s BIGINT",
+    "positional_shingle_hashes": "doc BIGINT{id}, pos BIGINT, g BIGINT",
+    "repetition_stats": "doc BIGINT{id}, n_grams BIGINT, n_distinct BIGINT, "
+    "top_count BIGINT",
+    "minhash_signatures": "doc BIGINT{id}, sig ARRAY<BIGINT>",
+    "simhash_signatures": "doc BIGINT{id}, simhash BIGINT",
+    "sample_fraction": "doc_id BIGINT{id}, text STRING, source STRING, "
+    "vec ARRAY<FLOAT>",
+    "sample_split": "doc_id BIGINT{id}, text STRING, source STRING, "
+    "vec ARRAY<FLOAT>, split STRING NOT NULL",
+}
+
+
+def test_row_kernel_output_schemas(spark):
+    """The schema rule of the row-wise pass, pinned per kernel on a
+    parquet input (every column nullable: the schemas the DDL-string
+    kernels declared) and on a ``spark.range`` id, which is not
+    nullable and stays so in every pass-through id column."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from go_tdigest_spark.operators import (
+        ivf_assign,
+        lsh_features,
+        positional_shingle_hashes,
+        repetition_stats,
+        sample_fraction,
+        sample_split,
+        shingle_hashes,
+    )
+    from go_tdigest_spark.operators.ann import cosine_rerank
+
+    docs = table(spark, SF_TINY, "documents").limit(64)
+    emb = table(spark, SF_TINY, "embeddings").limit(64)
+    parquet = docs.select("doc_id", "text", "source").join(
+        emb.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("vec")),
+        "doc_id",
+    )
+    # every column but the id nullable, as in the parquet input
+    word = F.concat(F.lit("w"), (F.col("id") % 7).cast("string"))
+    ranged = spark.range(64).select(
+        F.col("id").alias("doc_id"),
+        *[
+            F.when(F.col("id") >= 0, c).cast(t).alias(name)
+            for name, t, c in (
+                ("text", "string", F.concat_ws(" ", word, word, F.lit("x"))),
+                ("source", "string", F.col("id") % 3),
+                ("vec", "array<float>", F.array(*[F.col("id") + j for j in range(64)])),
+            )
+        ],
+    )
+    cells = np.eye(64)[:4]
+    kernels = {
+        "text_features": lambda d: T.text_features(d, "text", "doc_id", ("source",)),
+        "binary_features": lambda d: binary_features(d, "payload", "doc_id"),
+        "decode_media": lambda d: decode_media(d, "payload", "doc_id", fake=True),
+        "frame_sample": lambda d: frame_sample(d, "payload", "doc_id"),
+        "lsh_features": lambda d: lsh_features(d, "vec", "doc_id", 4, 64),
+        "ivf_assign": lambda d: ivf_assign(d, "vec", "doc_id", cells),
+        "cosine_rerank": lambda d: cosine_rerank(
+            d.select(
+                F.col("doc_id").alias("qa"), F.col("vec").alias("va"),
+                F.lit(1.0).alias("na"),
+            ).join(
+                d.select(
+                    F.col("doc_id").alias("qb"), F.col("vec").alias("vb"),
+                    F.lit(1.0).alias("nb"),
+                ),
+                F.col("qa") < F.col("qb"),
+            ),
+            ["qa", "qb"], "va", "vb", "na", "nb", 64,
+        ),
+        "shingle_hashes": lambda d: shingle_hashes(d, "text", "doc_id", 2),
+        "positional_shingle_hashes": lambda d: positional_shingle_hashes(
+            d, "text", "doc_id", 2
+        ),
+        "repetition_stats": lambda d: repetition_stats(d, "text", "doc_id", 2),
+        "minhash_signatures": lambda d: minhash_signatures(d, "text", "doc_id"),
+        "simhash_signatures": lambda d: simhash_signatures(d, "text", "doc_id"),
+        "sample_fraction": lambda d: sample_fraction(
+            d.drop("payload"), "doc_id", 0.5
+        ),
+        "sample_split": lambda d: sample_split(
+            d.drop("payload"), "doc_id", {"a": 0.5, "b": 0.5}
+        ),
+    }
+    for df, nullity in ((parquet, ""), (ranged, " NOT NULL")):
+        df = df.withColumn("payload", F.encode("text", "utf-8"))
+        for name, run in kernels.items():
+            want = _parse_datatype_string(
+                _ROW_KERNEL_SCHEMAS[name].format(id=nullity)
+            )
+            assert run(df).schema.json() == want.json(), (name, nullity)
+    one = kernels["text_features"](ranged)
+    assert one.count() == 64 and one.where(F.col("doc_id").isNull()).count() == 0
 
 
 def test_embedding_block_matrix_distributed(spark):
